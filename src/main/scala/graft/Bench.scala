@@ -101,21 +101,30 @@ object Bench {
     val errs = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
     val total = times.map(_._2).sum
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"n_ok":${times.size},"n_err":${errors.size},"probe_sec":${f"$probeSec%.3f"},"store_build_sec":${f"$storeSec%.3f"},"runs":$runs,"sf":"$sfDir"}"""
+    def record(queries: String, extra: String = "") =
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$queries,"errors":$errs,"n_ok":${times.size},"n_err":${errors.size},"probe_sec":${f"$probeSec%.3f"},"store_build_sec":${f"$storeSec%.3f"},"runs":$runs,"sf":"$sfDir"$extra}"""
+    val full = record(qs)
     println(full)
-    // The driver captures only a bounded TAIL of stdout; with 137
-    // per-query entries the full line is ~4.5 kB, so its opening `{`
-    // fell outside the window and the driver's parse failed EVERY
-    // round (PERF_r*.json all nulls, rounds 1-13). Measurement-output
-    // fix, disclosed in OPTIMIZATION_r14.md: keep the full line above
-    // (unchanged, the historical format), then (a) write the full
-    // per-query JSON to BENCH_LAST.json as a sidecar, and (b) print a
-    // COMPACT summary line (no per-query map, well under the capture
-    // window) as the final stdout line so the driver can parse totals.
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LAST.json"),
-      (full + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () } // read-only cwd: the lines still print
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":{},"errors":$errs,"n_ok":${times.size},"n_err":${errors.size},"probe_sec":${f"$probeSec%.3f"},"store_build_sec":${f"$storeSec%.3f"},"runs":$runs,"sf":"$sfDir","full":"BENCH_LAST.json"}""")
+    // A harness that keeps only a bounded TAIL of stdout loses the
+    // opening `{` of the ~4.5 kB full line. So the full line above
+    // (the historical format) also goes to BENCH_LAST_<cpus>.json —
+    // per core count, so runs at different widths keep their own
+    // records — and a COMPACT summary (no per-query map) is the very
+    // last stdout line, after spark.stop(); it names the sidecar only
+    // when the write worked.
+    val sidecar = s"BENCH_LAST_$cpus.json"
+    val written =
+      try {
+        java.nio.file.Files.write(java.nio.file.Paths.get(sidecar),
+          (full + "\n").getBytes("UTF-8"))
+        true
+      } catch {
+        case e: java.io.IOException =>
+          System.err.println(s"[bench] $sidecar not written: $e")
+          false
+      }
+    val fullRef = if (written) s""","full":"$sidecar"""" else ""
     spark.stop()
+    println(record("{}", fullRef))
   }
 }

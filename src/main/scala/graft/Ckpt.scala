@@ -35,18 +35,14 @@ object Ckpt {
   /** True when materializations are durable (executor-loss-safe). */
   def reliable(s: SparkSession): Boolean = confDir(s).isDefined
 
-  /** Eagerly materialize `df` with truncated lineage, honoring the
-    * configured durability mode. The checkpoint's carried-over origin
-    * STATISTICS are stripped (same RDD, partitioning, ordering kept):
-    * in iterative loops those estimates compound geometrically round
-    * over round until Catalyst's size estimator spends unbounded CPU
-    * on million-digit BigIntegers — see InternalBridge.stripOriginStats. */
   /** Optional storage level for LOCAL checkpoints, e.g.
     * `spark.graft.checkpointLevel=MEMORY_AND_DISK_SER` — the memory
     * dial for runs whose per-node data share is large relative to
     * heap (serialized blocks are 3-5× smaller than deserialized rows
     * at the cost of per-access deserialization). Unset = Spark's
-    * default (MEMORY_AND_DISK deserialized). */
+    * default (MEMORY_AND_DISK deserialized). Measured reason: node2vec
+    * at sf10 OOMs local[16]/24 g deserialized and completes serialized
+    * (SCALE.md). */
   val LevelKey = "spark.graft.checkpointLevel"
 
   /** Plan-audit hook: SPARK_GRAFT_EXPLAIN_MAT=1 prints every frame's
@@ -58,21 +54,12 @@ object Ckpt {
   private val explainMat: Boolean =
     sys.env.get("SPARK_GRAFT_EXPLAIN_MAT").contains("1")
 
-  /** Layout adoption dial (see InternalBridge.stripAndAdoptLayout):
-    * under AQE a local checkpoint records UnknownPartitioning even
-    * when its RDD is hash-partitioned + sorted on the loop key, so
-    * every round re-exchanges + re-sorts the state. "auto" (default)
-    * re-adopts the executed plan's layout when it is at least
-    * [[AdoptMinWidthKey]] partitions wide (default: the context's
-    * defaultParallelism = total cores) — at sf0.1 AQE coalesces the
-    * tiny states below any sane floor and nothing changes (the
-    * round-13 measurement that rejected unconditional adoption), at
-    * cluster scale the wide states keep their layout and the per-round
-    * state-side Exchange elides. "off" restores the historical
-    * behavior. */
-  val AdoptKey = "spark.graft.checkpoint.adoptLayout"
-  val AdoptMinWidthKey = "spark.graft.checkpoint.adoptMinWidth"
-
+  /** Eagerly materialize `df` with truncated lineage, honoring the
+    * configured durability mode. The checkpoint's carried-over origin
+    * STATISTICS are stripped (same RDD, partitioning, ordering kept):
+    * in iterative loops those estimates compound geometrically round
+    * over round until Catalyst's size estimator spends unbounded CPU
+    * on million-digit BigIntegers — see InternalBridge.stripOriginStats. */
   def mat(df: DataFrame): DataFrame = {
     if (explainMat) {
       println(s"---------- mat() plan ----------")
@@ -90,15 +77,7 @@ object Ckpt {
           case None => df.localCheckpoint()
         }
     }
-    if (df.sparkSession.conf.get(AdoptKey, "auto") == "off")
-      org.apache.spark.sql.graft.InternalBridge.stripOriginStats(ck)
-    else {
-      val minWidth = df.sparkSession.conf
-        .getOption(AdoptMinWidthKey).flatMap(_.toIntOption)
-        .getOrElse(df.sparkSession.sparkContext.defaultParallelism)
-      org.apache.spark.sql.graft.InternalBridge
-        .stripAndAdoptLayout(ck, df, math.max(2, minWidth))
-    }
+    org.apache.spark.sql.graft.InternalBridge.stripOriginStats(ck)
   }
 
   /** mat() unless the frame is ALREADY a bare materialized scan (its

@@ -63,11 +63,6 @@ object Adjacency {
     * memory-derived budget scales with the fleet, so a 1000-executor
     * cluster keeps caching exactly as long as it has the RAM for it. */
   val ConfCache = "spark.graft.adjacency.cache"
-  /** Conf key: optional hard cap (bytes) on the auto mode's EXPANDED
-    * estimate, for operators who want a tighter ceiling than the
-    * memory-derived budget (e.g. shared clusters where storage memory
-    * is contended). Unset = the memory budget alone decides. */
-  val ConfCacheMaxBytes = "spark.graft.adjacency.cacheMaxBytes"
   /** Deserialized bytes per compressed source-parquet byte. Measured:
     * sf30's 7.4 GB dataset became a ~34 GiB block-manager copy
     * (≈ 4.6×); 5 is the conservative planning figure. */
@@ -90,9 +85,7 @@ object Adjacency {
         // (driver + executors); scales the decision with the fleet
         val storage = spark.sparkContext.getExecutorMemoryStatus
           .values.map(_._1).sum
-        val cap = spark.conf.get(ConfCacheMaxBytes,
-          Long.MaxValue.toString).toLong
-        expanded <= math.min((storage * CacheBudgetFraction).toLong, cap)
+        expanded <= storage * CacheBudgetFraction
     }
 
   /** `keep` names that would collide with the frame's own (src, dst)

@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Ckpt.MatOps
 
@@ -1182,7 +1182,8 @@ object GraphAlgos {
     * fraction of walker|step) × total weight, step = first dst-ordered
     * candidate whose cumulative weight exceeds it. Step 1 seeds
     * prev = cur, which degenerates to uniform weights (every candidate
-    * is cur-adjacent) with no special-casing.
+    * is cur-adjacent) with no special-casing. The pick itself is exact
+    * for any positive weights (see [[pickFirstOver]]).
     *
     * Scale: per step one join on the current-position key, one
     * (prev, cand) existence left-join, and per-walker windows
@@ -1205,7 +1206,6 @@ object GraphAlgos {
 
   private def node2vecCore(simple0: DataFrame, starts: DataFrame, len: Int,
                            backW: Double, outW: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val TwoPow52 = 4503599627370496.0
     val stored = graft.traverse.Traverse.storedScanOnly(simple0) ||
       graft.traverse.Traverse.srcPartitioned(simple0)
@@ -1229,32 +1229,9 @@ object GraphAlgos {
           when(col("cand") === col("prev"), lit(backW))
             .when(col("pd").isNotNull, lit(1.0))
             .otherwise(lit(outW)).as("w"))
-      // ONE Window node per step (was three passes: running sum, a
-      // second max-over-partition window for the total, and a
-      // row_number pick): cw and tw share the same (partition, order)
-      // spec with different frames, so Catalyst plans them in a single
-      // Window operator; tw as the unbounded-frame sum equals the old
-      // max-of-running-sums bit-for-bit (weights are positive and
-      // WindowExec accumulates the unbounded frame in the same sort
-      // order, so it IS the last running sum). The first-over-threshold
-      // pick replaces the row_number window with a boundary filter:
-      // running sums are strictly increasing, so the picked row is
-      // exactly the one with cw > t and previous-cumulative = cw - w
-      // <= t — exact arithmetic because every weight is dyadic
-      // (0.25 / 1.0 defaults; see the node2vecWalks scaladoc) and the
-      // sums stay exact in IEEE double.
-      val ordered = Window.partitionBy("walker").orderBy("cand")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val whole = Window.partitionBy("walker").orderBy("cand")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val scored = wts
-        .withColumn("cw", sum(col("w")).over(ordered))
-        .withColumn("tw", sum(col("w")).over(whole))
-        .withColumn("t",
-          (conv(substring(md5(concat(col("walker"), lit(s"|$i"))), 1, 13),
-            16, 10).cast("double") / TwoPow52) * col("tw"))
-      val picked = scored.filter(col("cw") > col("t") &&
-        col("cw") - col("w") <= col("t"))
+      val picked = pickFirstOver(wts, tw =>
+        (conv(substring(md5(concat(col("walker"), lit(s"|$i"))), 1, 13),
+          16, 10).cast("double") / TwoPow52) * tw)
       // NOT freed (randomWalks posture): each step's frame stays
       // referenced by the accumulated output union until the i%8 re-mat
       cur = picked.select(col("walker"), col("cand").as("cur"),
@@ -1269,6 +1246,33 @@ object GraphAlgos {
       try { simple.unpersist(blocking = false) }
       catch { case _: Throwable => () }
     out
+  }
+
+  /** node2vec's weighted pick: per walker, the first cand-ordered row
+    * of `wts` (walker, cand, w, ...) whose running weight sum cw
+    * exceeds `threshold(tw)`, tw being the walker's total weight. ONE
+    * Window node: cw, prevCw (the running sum before the row) and tw
+    * share the (walker, cand) partition and order with different
+    * frames. tw as the unbounded-frame sum equals the last running sum
+    * bit-for-bit (WindowExec accumulates every frame in the same sort
+    * order), and prevCw is the previous row's cw bit-for-bit — lag(cw,
+    * 1, 0.0) without a second Window — so exactly one row has
+    * prevCw <= t < cw for any positive weights, dyadic or not (cw - w
+    * rounds away from the previous cw once sums are inexact). */
+  private[graft] def pickFirstOver(wts: DataFrame,
+                                   threshold: Column => Column): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val byCand = Window.partitionBy("walker").orderBy("cand")
+    val scored = wts
+      .withColumn("cw", sum(col("w")).over(
+        byCand.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("prevCw", coalesce(sum(col("w")).over(
+        byCand.rowsBetween(Window.unboundedPreceding, -1)), lit(0.0)))
+      .withColumn("tw", sum(col("w")).over(
+        byCand.rowsBetween(Window.unboundedPreceding,
+          Window.unboundedFollowing)))
+      .withColumn("t", threshold(col("tw")))
+    scored.filter(col("cw") > col("t") && col("prevCw") <= col("t"))
   }
 
   /** Weighted single-source shortest distances, `iters` synchronous

@@ -9,6 +9,9 @@ package graft.tck
 object TckCorpus {
   private val root = "/root/reference/tests/tck/features"
   private val oc = "/root/reference/tests/tck/openCypher/features"
+  /** The fixture spaces' CSVs (nba, student, ngdata), beside tck/. */
+  val dataDir: String =
+    java.nio.file.Paths.get(root).getParent.getParent.resolve("data").toString
   val features = Seq(
     s"$root/go/GO.feature",
     s"$root/fetch/FetchVertices.strVid.feature",

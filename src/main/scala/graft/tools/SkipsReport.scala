@@ -1,9 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import graft.graph.{GraphCatalog, MapCatalog}
-import graft.sources.CsvFixtures
-import graft.tck.{Divergences, TckCorpus, TckRunner}
+import graft.tck.{Divergences, TckCorpus, TckFixtures}
 
 /** Generates SKIPS.md: one line per residual TCK skip across the
   * ENTIRE wired corpus (graft.tck.TckCorpus — the same list the test
@@ -24,44 +22,7 @@ object SkipsReport {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val nba = "/root/reference/tests/data/nba"
-    val stu = "/root/reference/tests/data/student"
-    def strCatalog = MapCatalog(
-      tags = Map(
-        "player" -> CsvFixtures.load(spark, s"$nba/player.csv")
-          .unionByName(CsvFixtures.load(spark, s"$nba/null.csv"),
-            allowMissingColumns = true),
-        "team" -> CsvFixtures.load(spark, s"$nba/team.csv"),
-        "bachelor" -> CsvFixtures.load(spark, s"$nba/bachelor.csv")),
-      edges = Map(
-        "like" -> CsvFixtures.load(spark, s"$nba/like.csv"),
-        "serve" -> CsvFixtures.load(spark, s"$nba/serve.csv"),
-        "teammate" -> CsvFixtures.load(spark, s"$nba/teammate.csv")))
-    def intCatalog = {
-      val s = strCatalog
-      MapCatalog(
-        tags = s.tags.map { case (t, df) => t -> CsvFixtures.hashVids(df) },
-        edges = s.edges.map { case (e, df) => e -> CsvFixtures.hashVids(df) })
-    }
-    def studentCatalog = MapCatalog(
-      tags = Map(
-        "person" -> CsvFixtures.load(spark, s"$stu/person.csv"),
-        "teacher" -> CsvFixtures.load(spark, s"$stu/teacher.csv"),
-        "student" -> CsvFixtures.load(spark, s"$stu/student.csv")),
-      edges = Map(
-        "is_teacher" -> CsvFixtures.load(spark, s"$stu/is_teacher.csv"),
-        "is_schoolmate" -> CsvFixtures.load(spark, s"$stu/is_schoolmate.csv"),
-        "is_friend" -> CsvFixtures.load(spark, s"$stu/is_friend.csv"),
-        "is_colleagues" -> CsvFixtures.load(spark, s"$stu/is_colleagues.csv")))
-    def ngdataCatalog = {
-      val (t, e) = CsvFixtures.loadDir(spark,
-        "/root/reference/tests/data/ngdata")
-      MapCatalog(tags = t, edges = e)
-    }
-    val catalogs = Map[String, GraphCatalog](
-      "nba" -> strCatalog, "nba_int_vid" -> intCatalog,
-      "student" -> studentCatalog, "ngdata" -> ngdataCatalog)
-    val spaceRe = "Given a graph with space named \"([^\"]+)\"".r
+    val catalogs = TckFixtures.catalogs(spark)
 
     val sb = new StringBuilder
     sb ++= "# SKIPS — residual TCK skip ledger\n\n"
@@ -76,12 +37,8 @@ object SkipsReport {
     var tot = 0; var totDiv = 0; var totExec = 0; var totPass = 0
     val rows = scala.collection.mutable.ListBuffer.empty[(String, String, String)]
     TckCorpus.features.foreach { f =>
-      val text = java.nio.file.Files.readString(java.nio.file.Paths.get(f))
-      val space = spaceRe.findFirstMatchIn(text).map(_.group(1)).getOrElse("nba")
-      val fixtures =
-        if (space.startsWith("<")) catalogs + (space -> strCatalog)
-        else catalogs
-      val report = TckRunner.runAll(fixtures, space, text)
+      val report = TckFixtures.runFeature(catalogs,
+        java.nio.file.Files.readString(java.nio.file.Paths.get(f)))
       val short = f.split('/').takeRight(2).mkString("/")
       report.skips.foreach { case (q, why) => rows += ((short, q, why)) }
       tot += report.skipped; totDiv += report.diverged

@@ -1,14 +1,12 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import graft.graph.{GraphCatalog, MapCatalog}
-import graft.sources.CsvFixtures
-import graft.tck.TckRunner
+import graft.tck.{TckFixtures, TckRunner}
 
 /** Triage: run the TckRunner over feature files or whole directories
   * WITHOUT asserting, printing a per-file report line plus failures and
-  * errors. Mirrors TckRunnerSpec's catalog setup (nba / nba_int_vid /
-  * student). Usage:
+  * errors, against the same fixture catalogs as TckRunnerSpec
+  * (graft.tck.TckFixtures). Usage:
   *   runMain graft.tools.TckTriage <file-or-dir>...
   * Env: SPARK_GRAFT_TCK_DEBUG=1 for [tck-skip]/[tck-dead] reasons.
   */
@@ -21,46 +19,7 @@ object TckTriage {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val nba = "/root/reference/tests/data/nba"
-    val stu = "/root/reference/tests/data/student"
-    def strCatalog = MapCatalog(
-      tags = Map(
-        "player" -> CsvFixtures.load(spark, s"$nba/player.csv")
-          .unionByName(CsvFixtures.load(spark, s"$nba/null.csv"),
-            allowMissingColumns = true),
-        "team" -> CsvFixtures.load(spark, s"$nba/team.csv"),
-        "bachelor" -> CsvFixtures.load(spark, s"$nba/bachelor.csv")),
-      edges = Map(
-        "like" -> CsvFixtures.load(spark, s"$nba/like.csv"),
-        "serve" -> CsvFixtures.load(spark, s"$nba/serve.csv"),
-        "teammate" -> CsvFixtures.load(spark, s"$nba/teammate.csv")))
-    def intCatalog = {
-      val s = strCatalog
-      MapCatalog(
-        tags = s.tags.map { case (t, df) => t -> CsvFixtures.hashVids(df) },
-        edges = s.edges.map { case (e, df) => e -> CsvFixtures.hashVids(df) })
-    }
-    def studentCatalog = MapCatalog(
-      tags = Map(
-        "person" -> CsvFixtures.load(spark, s"$stu/person.csv"),
-        "teacher" -> CsvFixtures.load(spark, s"$stu/teacher.csv"),
-        "student" -> CsvFixtures.load(spark, s"$stu/student.csv")),
-      edges = Map(
-        "is_teacher" -> CsvFixtures.load(spark, s"$stu/is_teacher.csv"),
-        "is_schoolmate" -> CsvFixtures.load(spark, s"$stu/is_schoolmate.csv"),
-        "is_friend" -> CsvFixtures.load(spark, s"$stu/is_friend.csv"),
-        "is_colleagues" -> CsvFixtures.load(spark, s"$stu/is_colleagues.csv")))
-
-    def ngdataCatalog = {
-      val (t, e) = CsvFixtures.loadDir(spark,
-        "/root/reference/tests/data/ngdata")
-      MapCatalog(tags = t, edges = e)
-    }
-    val catalogs = Map[String, GraphCatalog](
-      "nba" -> strCatalog, "nba_int_vid" -> intCatalog,
-      "student" -> studentCatalog, "ngdata" -> ngdataCatalog)
-
-    val spaceRe = "Given a graph with space named \"([^\"]+)\"".r
+    val catalogs = TckFixtures.catalogs(spark)
     val files = args.toSeq.flatMap { a =>
       val f = new java.io.File(a)
       if (f.isDirectory)
@@ -70,11 +29,7 @@ object TckTriage {
     var te = 0; var tp = 0; var ts = 0; var terr = 0; var tf = 0
     files.foreach { f =>
       val text = java.nio.file.Files.readString(java.nio.file.Paths.get(f))
-      val space = spaceRe.findFirstMatchIn(text).map(_.group(1)).getOrElse("nba")
-      val fixtures =
-        if (space.startsWith("<")) catalogs + (space -> strCatalog)
-        else catalogs
-      val report = try TckRunner.runAll(fixtures, space, text) catch {
+      val report = try TckFixtures.runFeature(catalogs, text) catch {
         case e: Exception =>
           println(s"${f.split('/').takeRight(2).mkString("/")}: RUNNER-CRASH ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
           TckRunner.Report(0, 0, 0, Nil)

@@ -1,15 +1,12 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.AttributeSet
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** Narrow bridge into `private[sql]` surface. Two purposes:
+/** Narrow bridge into `private[sql]` surface: stripping ORIGIN
+  * STATISTICS from checkpointed frames.
   *
-  * 1. Stripping ORIGIN STATISTICS from checkpointed frames.
   * `Dataset.checkpoint`/`localCheckpoint` wrap the materialized RDD in
   * a `LogicalRDD` that CARRIES the pre-checkpoint plan's estimated
   * `Statistics`. In an iterative algorithm the round-r state is a
@@ -21,71 +18,17 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * rounds and Catalyst's size estimator burns unbounded CPU in
   * BigInteger multiplication during every planning pass (observed:
   * multi-level Louvain planning-hung at level 2). The stripped frame
-  * keeps the SAME checkpointed RDD — only `originStats` is dropped.
-  *
-  * 2. Re-adopting the EXECUTED plan's physical layout. Under adaptive
-  * execution, `Dataset.localCheckpoint` copies the partitioning of the
-  * un-executed `AdaptiveSparkPlanExec` wrapper — `UnknownPartitioning`
-  * — into the LogicalRDD, so EVERY iterative loop's per-round state
-  * checkpoint forgets that it is hash-partitioned (and sorted) on its
-  * join/aggregation key and the next round re-exchanges + re-sorts it
-  * (diagnosed round 13, adoption deferred pending a width gate). The
-  * checkpointed RDD's partitions ARE the executed plan's partitions,
-  * so when the checkpoint's partitioning is Unknown we rebuild the
-  * LogicalRDD with the executed adaptive plan's true partitioning and
-  * ordering — but ONLY when that layout is at least `minWidth`
-  * partitions wide: AQE coalesces a small state's exchange to a
-  * handful of partitions, and adopting a 2-wide layout makes the next
-  * round's whole aggregation pipeline run 2-wide instead of at full
-  * parallelism (measured round 13: louvain_ml 19 → 26 s with
-  * unconditional adoption at sf0.1). At cluster scale the states stay
-  * wide and the per-round state-side exchange elides outright.
-  * Safety: adopted expressions must reference only the LogicalRDD's
-  * own output attributes (exprIds are shared with the logical plan;
-  * anything else — e.g. a layout keyed on a pruned column — is
-  * skipped). */
+  * keeps the SAME checkpointed RDD, partitioning and ordering — only
+  * `originStats` (and the constraints) are dropped. */
 object InternalBridge {
   def stripOriginStats(df: DataFrame): DataFrame =
-    rebuild(df, None, 0)
-
-  /** stripOriginStats + layout adoption from `pre` (the pre-checkpoint
-    * frame whose QueryExecution just ran) gated on `minWidth`. */
-  def stripAndAdoptLayout(df: DataFrame, pre: DataFrame,
-                          minWidth: Int): DataFrame =
-    rebuild(df, Some(pre), minWidth)
-
-  private def rebuild(df: DataFrame, pre: Option[DataFrame],
-                      minWidth: Int): DataFrame =
     df.queryExecution.analyzed match {
       case l: LogicalRDD =>
-        var part = l.outputPartitioning
-        var ord = l.outputOrdering
-        if (part.isInstanceOf[UnknownPartitioning] && pre.isDefined) {
-          val out = AttributeSet(l.output)
-          val ep = pre.get.queryExecution.executedPlan match {
-            case a: AdaptiveSparkPlanExec => a.executedPlan
-            case p => p
-          }
-          ep.outputPartitioning match {
-            // HashPartitioning only: it is the one layout the loops'
-            // joins/aggregations can reuse, and its row→partition map
-            // is a pure function of the row (range bounds or single-
-            // partition layouts gain nothing here)
-            case h: HashPartitioning
-                if h.numPartitions >= minWidth &&
-                  h.references.subsetOf(out) =>
-              part = h
-              val o = ep.outputOrdering
-              if (o.nonEmpty && o.forall(_.references.subsetOf(out)))
-                ord = o
-            case _ => ()
-          }
-        }
-        // same RDD; originStats + constraints revert to None (second
-        // parameter list defaults)
+        // second parameter list defaults: originStats + constraints
+        // revert to None
         Dataset.ofRows(df.sparkSession.asInstanceOf[ClassicSession],
-          new LogicalRDD(l.output, l.rdd, part, ord,
-            l.isStreaming, l.stream)(
+          new LogicalRDD(l.output, l.rdd, l.outputPartitioning,
+            l.outputOrdering, l.isStreaming, l.stream)(
             df.sparkSession.asInstanceOf[ClassicSession]))
       case _ => df
     }

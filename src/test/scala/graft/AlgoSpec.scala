@@ -274,6 +274,42 @@ class AlgoSpec extends SparkSpec {
     }
   }
 
+  test("node2vecWalks: non-dyadic weights take exactly one step per walker") {
+    import spark.implicits._
+    // undirected ring of 12 with chords: every vertex has neighbors, so
+    // every walker must own exactly one row per step
+    val ring = (0 until 12).flatMap { i =>
+      Seq((i, (i + 1) % 12)) ++ (if (i % 3 == 0) Seq((i, (i + 5) % 12)) else Nil)
+    }.map { case (x, y) => (s"v$x", s"v$y") }
+    val und = ring.flatMap { case (x, y) => Seq((x, y), (y, x)) }
+      .toDF("src", "dst")
+    val starts = (0 until 12).map(i => s"v$i").toDF("vid")
+    val walks = GraphAlgos.node2vecWalks(und, starts, len = 6,
+      backW = 1.0 / 3, outW = 1.0 / 7)
+    val perStep = walks.groupBy("walker", "step").count()
+      .as[(String, Int, Long)].collect()
+    assert(perStep.length == 12 * 7, s"missing steps: ${perStep.length}")
+    assert(perStep.forall(_._3 == 1L),
+      s"forked walkers: ${perStep.filter(_._3 != 1L).mkString(", ")}")
+  }
+
+  test("node2vec pick: exact when the threshold sits on an inexact running sum") {
+    import spark.implicits._
+    // running sums 0.1, 0.1+0.2 = 0.30000000000000004, 0.6000000000000001;
+    // with t equal to the second, the third candidate is the pick —
+    // but cw - w = 0.3000000000000001 > t there, so a cw - w <= t
+    // boundary test picks nothing
+    val wts = Seq(("w", "a", 0.1), ("w", "b", 0.2), ("w", "c", 0.3))
+      .toDF("walker", "cand", "w")
+    val picked = GraphAlgos.pickFirstOver(wts, _ => lit(0.1 + 0.2))
+    assert(picked.select("cand").as[String].collect().toSeq == Seq("c"))
+    // cw, the running sum before the row, and the total share ONE Window
+    val windows = picked.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }
+    assert(windows.size == 1, s"${windows.size} Window nodes")
+  }
+
   test("betweenness: diamond splits dependency, chain accumulates it") {
     import spark.implicits._
     def bc(edges: Seq[(String, String)], seeds: Seq[String], steps: Int) =

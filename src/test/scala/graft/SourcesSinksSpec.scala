@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.sources.CsvFixtures
-import graft.operators.{Control, Mutations}
+import graft.operators.Mutations
 import java.nio.file.Files
 
 class SourcesSinksSpec extends SparkSpec {
@@ -98,17 +98,6 @@ class SourcesSinksSpec extends SparkSpec {
     t.delete(Seq(("a", "b", 0L)).toDF("src", "dst", "rank"))
     val left = t.read.as[(String, String, Long, Int)].collect()
     assert(left.length == 1 && left.head._3 == 1L) // rank-1 edge survives
-  }
-
-  test("Control: loop / select / unionAllVersions") {
-    val out = Control.loop(Seq(1).toDF("x") :: Nil, 5)(_.head.count() < 4) { dfs =>
-      dfs.head.withColumn("x", col("x") + 1).unionByName(dfs.head) :: dfs
-    }
-    assert(out.head.count() >= 4)
-    val sel = Control.select(cond = false)(Seq(1).toDF("x"))(Seq(2).toDF("x"))
-    assert(sel.as[Int].head() == 2)
-    val u = Control.unionAllVersions(Seq(Seq(1).toDF("x"), Seq(2).toDF("x")))
-    assert(u.as[Int].collect().sorted.sameElements(Array(1, 2)))
   }
 
   test("Udfs: scalar + aggregate registration in the SQL catalog") {

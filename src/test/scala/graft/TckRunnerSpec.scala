@@ -1,66 +1,19 @@
 package graft
 
-import graft.graph.{GraphCatalog, MapCatalog}
-import graft.sources.CsvFixtures
-import graft.tck.{TckCorpus, TckRunner}
+import graft.tck.{TckCorpus, TckFixtures, TckRunner}
 
 /** Runs the reference's OWN Gherkin TCK scenarios (tests/tck/features/)
-  * against the nba fixture graph through the nGQL parser. Contract:
-  * every scenario the subset can execute must match its golden table;
-  * unsupported syntax is skipped and counted.
-  *
-  * Each feature file's Background declares its space; the spec picks
-  * the matching catalog ("nba" string-vid, "nba_int_vid" = same CSVs
-  * with MurmurHash2 vids, the importer's `function: hash` convention —
-  * tests/data/nba_int_vid/config.yaml). */
+  * against its fixture graphs (graft.tck.TckFixtures) through the nGQL
+  * parser. Contract: every scenario the subset can execute must match
+  * its golden table; unsupported syntax is skipped and counted. Without
+  * the corpus every suite CANCELS with a clue naming the missing path. */
 
 trait TckSuiteBase extends SparkSpec {
-  private val nba = "/root/reference/tests/data/nba"
-
-  private def strCatalog = MapCatalog(
-    tags = Map(
-      "player" -> CsvFixtures.load(spark, s"$nba/player.csv")
-        .unionByName(CsvFixtures.load(spark, s"$nba/null.csv"),
-          allowMissingColumns = true),
-      "team" -> CsvFixtures.load(spark, s"$nba/team.csv"),
-      "bachelor" -> CsvFixtures.load(spark, s"$nba/bachelor.csv")),
-    edges = Map(
-      "like" -> CsvFixtures.load(spark, s"$nba/like.csv"),
-      "serve" -> CsvFixtures.load(spark, s"$nba/serve.csv"),
-      "teammate" -> CsvFixtures.load(spark, s"$nba/teammate.csv")))
-
-  private def intCatalog = {
-    val s = strCatalog
-    MapCatalog(
-      tags = s.tags.map { case (t, df) => t -> CsvFixtures.hashVids(df) },
-      edges = s.edges.map { case (e, df) => e -> CsvFixtures.hashVids(df) })
-  }
-
-  private def ngdataCatalog = {
-    val (t, e) = CsvFixtures.loadDir(spark,
-      "/root/reference/tests/data/ngdata")
-    MapCatalog(tags = t, edges = e)
-  }
-
-  private val stu = "/root/reference/tests/data/student"
-  private def studentCatalog = MapCatalog(
-    tags = Map(
-      "person" -> CsvFixtures.load(spark, s"$stu/person.csv"),
-      "teacher" -> CsvFixtures.load(spark, s"$stu/teacher.csv"),
-      "student" -> CsvFixtures.load(spark, s"$stu/student.csv")),
-    edges = Map(
-      "is_teacher" -> CsvFixtures.load(spark, s"$stu/is_teacher.csv"),
-      "is_schoolmate" -> CsvFixtures.load(spark, s"$stu/is_schoolmate.csv"),
-      "is_friend" -> CsvFixtures.load(spark, s"$stu/is_friend.csv"),
-      "is_colleagues" -> CsvFixtures.load(spark, s"$stu/is_colleagues.csv")))
-
-  private val spaceRe = "Given a graph with space named \"([^\"]+)\"".r
+  protected def assumeCorpus(): Unit = TckFixtures.missing.foreach(cancel(_))
 
   protected def runFeatures(fs: Seq[String]): Unit = {
-    assume(fs.forall(f => new java.io.File(f).exists()))
-    val catalogs = Map[String, GraphCatalog](
-      "nba" -> strCatalog, "nba_int_vid" -> intCatalog,
-      "student" -> studentCatalog, "ngdata" -> ngdataCatalog)
+    assumeCorpus()
+    val catalogs = TckFixtures.catalogs(spark)
     var executed = 0; var passed = 0; var skipped = 0; var diverged = 0
     // SPARK_GRAFT_TCK_ONLY=substr1,substr2 → run matching features only
     // (local iteration aid; the driver runs the full list)
@@ -71,16 +24,8 @@ trait TckSuiteBase extends SparkSpec {
       case None => fs
     }
     selected.foreach { f =>
-      val text = java.nio.file.Files.readString(java.nio.file.Paths.get(f))
-      val space = spaceRe.findFirstMatchIn(text).map(_.group(1)).getOrElse("nba")
-      // Scenario-Outline features parameterize the space
-      // ("<space_name>" with nba / nba_int_vid Examples rows): the
-      // runner expands EVERY Examples row, so both fixture spaces run;
-      // the `<...>` default below only covers the pre-expansion parse
-      val fixtures =
-        if (space.startsWith("<")) catalogs + (space -> strCatalog)
-        else catalogs
-      val report = TckRunner.runAll(fixtures, space, text)
+      val report = TckFixtures.runFeature(catalogs,
+        java.nio.file.Files.readString(java.nio.file.Paths.get(f)))
       info(s"${f.split('/').last}: executed=${report.executed} " +
         s"passed=${report.passed} skipped=${report.skipped} " +
         s"errored=${report.errored}" +
@@ -117,8 +62,8 @@ class TckRunnerSpec extends TckSuiteBase {
   }
 
   test("feature parsing finds a substantial scenario corpus") {
+    assumeCorpus()
     val go = TckCorpus.features.head
-    assume(new java.io.File(go).exists())
     val text = java.nio.file.Files.readString(java.nio.file.Paths.get(go))
     val cases = TckRunner.parseFeature(text)
     assert(cases.size >= 50, s"only ${cases.size} cases parsed from GO.feature")
