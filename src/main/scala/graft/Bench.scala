@@ -36,15 +36,7 @@ object Bench {
     // data-size-derived (Tune): identical to `cpus` at driver scale,
     // grows with the dataset so ladder runs aren't partition-starved
     val shuffleParts = Tune.shufflePartitions(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(s"local[$cpus]", shuffleParts)
     // JVM/codegen warmup so the first measured query doesn't absorb
     // Spark's one-time startup cost
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -56,11 +48,9 @@ object Bench {
     // attach-time cost a deployment pays once per dataset, not part of
     // any query's measured time (the first graph query would otherwise
     // absorb it nondeterministically by map order).
-    // SPARK_GRAFT_STORE=off reverts to flat parquet views (A/B runs).
     val storeSec =
-      if (sys.env.get("SPARK_GRAFT_STORE").contains("off")) 0.0
+      if (!Harness.attachStore(spark)) 0.0
       else {
-        sources.GraphStore.enableManaged(spark)
         val tStore = System.nanoTime()
         graft.graph.GraphModel(spark, sfDir).edges.limit(1).count()
         (System.nanoTime() - tStore) / 1e9
@@ -70,12 +60,7 @@ object Bench {
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
     var times = Vector.empty[(String, Double)]
     var errors = Vector.empty[(String, String)]
-    // SPARK_GRAFT_ONLY=q_a,q_b → time just those (local iteration aid)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
+    Harness.queries.foreach { case (name, fn) =>
       try {
         val best = (1 to runs).map { _ =>
           val t0 = System.nanoTime()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,51 +12,17 @@ object Verify {
     // parquet results against the DuckDB oracle HASHES, catching
     // partition-order/window-determinism bugs a single-JVM run hides.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions",
-        Tune.shufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // multi-executor runs exercise the durable checkpoint path (Ckpt):
-    // local checkpoints live in executor memory and die with executors.
-    // cleanCheckpoints lets the ContextCleaner delete files of freed
-    // checkpoints DURING the run; the shutdown hook removes the root
-    // afterwards (reliable files otherwise accumulate for all ~137
-    // queries' every iteration round).
-    if (master.startsWith("local-cluster")) {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try {
-          def rm(f: java.io.File): Unit = {
-            val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-            f.delete(); ()
-          }
-          rm(ckpt.toFile)
-        } catch { case _: Throwable => () }))
-      builder.config("spark.graft.checkpointDir", ckpt.toString)
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(master,
+      Tune.shufflePartitions(sfDir, cpus.toInt))
     // store-backing on: every graph query rides the bucketed layout,
     // built once per dataset (GraphStore.ensure) under a JVM-managed
-    // root (deleted on exit). SPARK_GRAFT_STORE=off (same knob as
-    // Bench) runs the WHOLE oracle gate against the flat parquet
-    // views instead — run it periodically so flat-path regressions
-    // are still caught by the DuckDB hashes, not only by unit tests.
-    if (!sys.env.get("SPARK_GRAFT_STORE").contains("off"))
-      sources.GraphStore.enableManaged(spark)
+    // root (deleted on exit). SPARK_GRAFT_STORE=off runs the WHOLE
+    // oracle gate against the flat parquet views instead — run it
+    // periodically so flat-path regressions are still caught by the
+    // DuckDB hashes, not only by unit tests.
+    Harness.attachStore(spark)
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q_a,q_b → dump just those (local iteration aid;
-    // the driver never sets it, so the full gate is unaffected)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
+    Harness.queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

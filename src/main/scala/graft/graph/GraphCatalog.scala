@@ -2,9 +2,10 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 
-/** Catalog abstraction the query surfaces (nql.Gql, plans.MatchBuilder)
-  * plan against: per-tag vertex tables `(vid, props...)`, per-type edge
-  * tables `(src, dst, rank, props...)`, and the union views. The
+/** Catalog abstraction the query surfaces (nql.Gql and its MATCH
+  * engine nql.MatchSeg) plan against: per-tag vertex tables
+  * `(vid, props...)`, per-type edge tables `(src, dst, rank,
+  * props...)`, and the union views. The
   * reference's equivalent is the meta-service schema catalog
   * (src/graph/service metad client); here a catalog is just a binding
   * of names to DataFrames, so ANY dataset (the TPC-H graph, the nba CSV

@@ -3,71 +3,63 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.GraphModel
-import graft.plans.MatchBuilder
-import graft.traverse.Traverse.In
+import graft.nql.Gql
+import graft.operators.Apply
 
-/** SparkEntry registrations for the MATCH clause-pipeline surface
-  * (SURVEY.md §3 entry point 1): label seek → expand → append props →
-  * where, plus OPTIONAL MATCH (left join connector) and pattern
-  * predicates (semi/anti) — all through graft.plans.MatchBuilder. */
+/** SparkEntry registrations for the MATCH surface (SURVEY.md §3 entry
+  * point 1): label seek → expand → append props → where, pattern
+  * predicates (anti join) and OPTIONAL MATCH (left join connector).
+  * Every pattern runs as text through nql.MatchSeg, except
+  * `q_match_optional`: its optional segment carries a predicate, and
+  * the grammar rejects WHERE inside OPTIONAL MATCH (as the reference's
+  * validator does), so it is the same left join written relationally. */
 object MatchQueries {
   type Q = (SparkSession, String) => DataFrame
 
   private def gm(s: SparkSession, dir: String) = GraphModel(s, dir)
 
   val queries: Map[String, Q] = Map(
-    // MATCH (c:customer {mktsegment})-[:placed]->(o:order) WHERE ...
-    "q_match_basic" -> ((s, dir) => {
-      val g = gm(s, dir)
-      MatchBuilder(g)
-        .seek("customer", "c", col("mktsegment") === "BUILDING")
-        .expand("c", "placed", "o")
-        .withProps("o", "order")
-        .where(col("o_totalprice") > 300000)
-        .ret(col("c"), col("c_name"), col("o"), col("o_totalprice"))
-    }),
+    "q_match_basic" -> ((s, dir) =>
+      Gql.run(gm(s, dir),
+        """MATCH (c:customer)-[:placed]->(o:order)
+          |WHERE c.customer.mktsegment == "BUILDING" AND o.order.totalprice > 300000
+          |RETURN id(c) AS c, c.customer.name AS c_name, id(o) AS o, o.order.totalprice AS o_totalprice""".stripMargin)),
 
     // MATCH (c:customer) OPTIONAL MATCH (c)-[:placed]->(o big) RETURN
     "q_match_optional" -> ((s, dir) => {
       val g = gm(s, dir)
       val bigOrders = g.placed.filter(col("totalprice") > 400000)
         .select(col("src").as("c"), col("dst").as("o"))
-      MatchBuilder(g)
-        .seek("customer", "c",
-          expr("CAST(substr(vid, 3, 10) AS BIGINT) <= 100"))
-        .optional(bigOrders, Seq("c"))
-        .ret(col("c"), col("o"))
+      val seek = g.customers
+        .filter(expr("CAST(substr(vid, 3, 10) AS BIGINT) <= 100"))
+        .select(col("vid").as("c"))
+      Apply.leftJoin(seek, bigOrders, Seq("c"))
     }),
 
-    // MATCH (p:part) WHERE NOT (p)<-[:has_part]-() — anti pattern pred
-    "q_match_pattern_pred" -> ((s, dir) => {
-      val g = gm(s, dir)
-      MatchBuilder(g)
-        .seek("part", "p")
-        .wherePattern("p", "has_part", anti = true, dir = In)
-        .ret(col("p"), col("p_name"))
-    }),
+    "q_match_pattern_pred" -> ((s, dir) =>
+      Gql.run(gm(s, dir),
+        """MATCH (p:part) WHERE NOT (p)<-[:has_part]-()
+          |RETURN id(p) AS p, p.part.name AS p_name""".stripMargin)),
 
-    // ---- MATCH as TEXT through the parser (nql.MatchSeg) ----
     // label seek + boolean WHERE + ORDER/LIMIT
     "q_nql_match_seek" -> ((s, dir) =>
-      graft.nql.Gql.run(gm(s, dir),
+      Gql.run(gm(s, dir),
         """MATCH (v:customer) WHERE v.customer.mktsegment == "BUILDING" AND v.customer.acctbal > 9000
           |RETURN v.customer.name AS name, v.customer.acctbal AS acctbal
           |ORDER BY acctbal DESC, name LIMIT 20""".stripMargin)),
     // one-hop typed pattern with edge var + prop predicate
     "q_nql_match_hop" -> ((s, dir) =>
-      graft.nql.Gql.run(gm(s, dir),
+      Gql.run(gm(s, dir),
         """MATCH (c:customer)-[p:placed]->(o:order) WHERE p.totalprice > 400000
           |RETURN id(c) AS c, o.order.status AS status, p.totalprice AS totalprice""".stripMargin)),
     // implicit grouping aggregation over a 2-hop pattern
     "q_nql_match_agg" -> ((s, dir) =>
-      graft.nql.Gql.run(gm(s, dir),
+      Gql.run(gm(s, dir),
         """MATCH (c:customer)-[:in_nation]->(n:nation)
           |RETURN n.nation.name AS nation, count(*) AS cnt ORDER BY nation""".stripMargin)),
     // var-length path counting (edge-unique enumeration)
     "q_nql_match_var" -> ((s, dir) =>
-      graft.nql.Gql.run(gm(s, dir),
+      Gql.run(gm(s, dir),
         """MATCH (n:nation)-[:in_region*1..1]->(r:region)
           |RETURN r.region.name AS region, count(*) AS nations ORDER BY region""".stripMargin))
   )

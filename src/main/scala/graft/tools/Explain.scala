@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Plan auditor: `.explain("formatted")` for selected queries (or a
@@ -14,7 +13,7 @@ object Explain {
       else Seq("q_lookup", "q_filter", "q_inner_join", "q_aggregate",
         "q_go_1", "q_cosine_topk", "q_dedup_exact")
     // session shape mirrors Bench: same master/core count, same
-    // Tune-derived shuffle partitions, same AQE posture — plans
+    // Tune-derived shuffle partitions, same Harness posture — plans
     // captured here must be the plans the bench actually runs (at
     // local[4]/4-partitions the hop joins broadcast where the bench's
     // local[32]/sf0.1 plans sort-merge, hiding exactly the plan
@@ -23,20 +22,11 @@ object Explain {
     // a NumberFormatException before any plan prints)
     val cpus = sys.env.get("SPARK_GRAFT_CPUS")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        graft.Tune.shufflePartitions(sfDir, cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(s"local[$cpus]",
+      graft.Tune.shufflePartitions(sfDir, cpus))
     // plans must reflect the bench/verify posture: store-backed unless
-    // SPARK_GRAFT_STORE=off (same knob as Bench/Verify)
-    if (!sys.env.get("SPARK_GRAFT_STORE").contains("off"))
-      graft.sources.GraphStore.enableManaged(spark)
+    // SPARK_GRAFT_STORE=off
+    graft.Harness.attachStore(spark)
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

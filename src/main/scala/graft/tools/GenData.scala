@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic-data generator mirroring the driver's
@@ -18,13 +18,8 @@ object GenData {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val scale = if (args.length > 1) args(1).toDouble else 1.0
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-gendata")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"), 32)
     import spark.implicits._
 
     // per-(table,row) deterministic doubles in [0,1) — a split-mix

@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   * dedup clustering, LDBC expansions) on `local-cluster[2,2,2048]` —
   * a real standalone master + 2 worker processes with separate
   * executor JVMs — under `spark.graft.checkpointDir` (the reliable
-  * mode, graft.Ckpt), then re-runs them on plain local[4] WITHOUT the
-  * flag and asserts identical row counts.
+  * mode, graft.Ckpt, set up by graft.Harness), then re-runs them on
+  * plain local[4] WITHOUT the flag and asserts identical row counts.
   *
   * It also proves the free-after-checkpoint contract directly: a
   * reliably-checkpointed frame is freed (unpersisted) and then
@@ -45,24 +45,10 @@ object LocalClusterCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft-reliable-ckpt").toString
 
-    // ---- pass 1: multi-executor, reliable checkpoints ----
-    val cluster = SparkSession.builder()
-      .master("local-cluster[2,2,2048]")
-      .appName("graft-local-cluster-check")
-      // worker-forked executor JVMs need the sbt classes on their
-      // classpath (the standalone worker only ships SPARK_HOME jars)
-      .config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path"))
-      .config("spark.graft.checkpointDir", ckptDir)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    cluster.sparkContext.setLogLevel("WARN")
+    // ---- pass 1: multi-executor, reliable checkpoints (Harness sets
+    // up the checkpoint dir and executor classpath for local-cluster) ----
+    val cluster = graft.Harness.session("local-cluster[2,2,2048]", 8)
     require(graft.Ckpt.reliable(cluster), "reliable mode not active")
 
     // free-after-checkpoint contract: a freed RELIABLE checkpoint is
@@ -95,15 +81,7 @@ object LocalClusterCheck {
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
 
     // ---- pass 2: plain local mode, default localCheckpoint path ----
-    val local = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-local-baseline")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    local.sparkContext.setLogLevel("WARN")
+    val local = graft.Harness.session("local[4]", 8)
     require(!graft.Ckpt.reliable(local), "local baseline unexpectedly reliable")
     IterativeQueries.foreach { name =>
       if (clusterCounts.contains(name)) {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.tck.{Divergences, TckCorpus, TckFixtures}
 
 /** Generates SKIPS.md: one line per residual TCK skip across the
@@ -15,12 +14,7 @@ import graft.tck.{Divergences, TckCorpus, TckFixtures}
 object SkipsReport {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "SKIPS.md"
-    val spark = SparkSession.builder()
-      .master("local[16]").appName("skips-report")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session("local[16]", 16)
 
     val catalogs = TckFixtures.catalogs(spark)
 

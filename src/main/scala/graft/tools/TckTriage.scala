@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.tck.{TckFixtures, TckRunner}
 
 /** Triage: run the TckRunner over feature files or whole directories
@@ -12,12 +11,7 @@ import graft.tck.{TckFixtures, TckRunner}
   */
 object TckTriage {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]").appName("tck-triage")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session("local[16]", 16)
 
     val catalogs = TckFixtures.catalogs(spark)
     val files = args.toSeq.flatMap { a =>

@@ -47,14 +47,8 @@ object Traverse {
   /** Rows below this count get an explicit broadcast hint on the hop
     * join. Conservative: a frontier of 5M vids (~a few hundred MB) still
     * broadcasts fine on real executors, but we stay well under driver
-    * memory in local mode too. Override per session with
-    * `spark.graft.broadcastFrontierRows` (0 disables the hint — the
-    * plan-shape tests use this to pin the sort-merge path). */
+    * memory in local mode too. */
   val BroadcastFrontierRows = 2000000L
-
-  private def broadcastCap(df: DataFrame): Long =
-    df.sparkSession.conf.get("spark.graft.broadcastFrontierRows",
-      BroadcastFrontierRows.toString).toLong
 
   /** Direction of edge traversal. REVERSELY/BIDIRECT mirror the GO
     * grammar (src/parser/parser.yy:1424). The reference stores both
@@ -178,18 +172,13 @@ object Traverse {
       }
     } catch { case _: Throwable => () }
 
-  private def persistIfMultiStep(e: DataFrame, steps: Int): DataFrame =
-    persistEdges(e, steps)
-
-  private def unpersistQuiet(e: DataFrame): Unit = releaseEdges(e, 2)
-
   /** Hint the hop join's build side when the frontier is small. Public:
     * PathFinder's BFS loops and subgraph's induced-edge semi-joins route
     * through the same gate so no loop ever broadcasts an unbounded
     * frontier (the reference bounds this with its memory tracker;
     * we bound it with BroadcastFrontierRows). */
   def maybeBroadcast(frontier: DataFrame, rows: Long): DataFrame =
-    if (rows > 0 && rows <= broadcastCap(frontier)) broadcast(frontier)
+    if (rows > 0 && rows <= BroadcastFrontierRows) broadcast(frontier)
     else frontier
 
   /** Deterministic per-src edge cap: keep at most `k` out-edges per
@@ -218,7 +207,7 @@ object Traverse {
          stepLimit: Int = 0): DataFrame = {
     require(m >= 1 && n >= m, s"bad step range $m..$n")
     val e0 = orient(edges, dir).select("src", "dst")
-    val e = persistIfMultiStep(
+    val e = persistEdges(
       if (stepLimit > 0) capPerSrc(e0, stepLimit) else e0, n)
     var (frontier, cnt) = materialize(
       seeds.select(col("vid").as("origin"), col("vid")))
@@ -240,7 +229,7 @@ object Traverse {
       step += 1
     }
     if (cnt == 0) freeCheckpoint(frontier) // empty tail frontier
-    if (n > 1) unpersistQuiet(e) // acc rows live in checkpointed blocks
+    releaseEdges(e, n) // acc rows live in checkpointed blocks
     if (acc == null)
       seeds.sparkSession.emptyDataFrame
         .withColumn("origin", lit("")).withColumn("vid", lit(""))
@@ -268,7 +257,7 @@ object Traverse {
           .unionByName(orient(edges, In).withColumn("__rev", lit(true)))
       case other => orient(edges, other)
     }
-    val e = persistIfMultiStep(oriented, n)
+    val e = persistEdges(oriented, n)
     var (frontier, cnt) = materialize(
       seeds.select(col("vid").as("origin"), col("vid")))
     var acc: DataFrame = null
@@ -312,7 +301,7 @@ object Traverse {
             stepLimit: Int = 0): DataFrame = {
     require(m >= 1 && n >= m, s"bad step range $m..$n")
     val e0 = orient(edges, dir).select("src", "dst")
-    val e = persistIfMultiStep(
+    val e = persistEdges(
       if (stepLimit > 0) capPerSrc(e0, stepLimit) else e0, n)
     var (frontier, cnt) = materialize(seeds.select(col("vid").as("origin"),
       array(col("vid")).as("path"), col("vid")))
@@ -335,7 +324,7 @@ object Traverse {
       step += 1
     }
     if (cnt == 0) freeCheckpoint(frontier) // empty tail frontier
-    if (n > 1) unpersistQuiet(e) // acc rows live in checkpointed blocks
+    releaseEdges(e, n) // acc rows live in checkpointed blocks
     if (acc == null)
       seeds.select(col("vid").as("origin"), array(col("vid")).as("path"),
         col("vid"), lit(0).as("step")).limit(0)
@@ -361,7 +350,7 @@ object Traverse {
     * frontier. */
   def shortestDistances(seeds: DataFrame, edges: DataFrame, maxSteps: Int,
                         dir: Direction = Out): DataFrame = {
-    val e = persistIfMultiStep(orient(edges, dir).select("src", "dst"), maxSteps)
+    val e = persistEdges(orient(edges, dir).select("src", "dst"), maxSteps)
     var (visited, _) = materialize(
       seeds.select(col("vid").as("origin"), col("vid"), lit(0).as("dist")))
     var frontier = visited
@@ -398,7 +387,7 @@ object Traverse {
       }
       step += 1
     }
-    if (maxSteps > 1) unpersistQuiet(e) // visited is fully checkpointed
+    releaseEdges(e, maxSteps) // visited is fully checkpointed
     // final frontier is superseded either way: empty (cnt==0) or its
     // rows were copied into the last visited checkpoint
     if (frontier ne visited) freeCheckpoint(frontier)

@@ -78,7 +78,7 @@ class DmlSpec extends SparkSpec {
 
   test("DML against an immutable catalog is unsupported, not silent") {
     val nba = "/root/reference/tests/data/nba"
-    assume(new java.io.File(s"$nba/player.csv").exists())
+    assumeFiles(s"$nba/player.csv", s"$nba/like.csv")
     val cat = MapCatalog(
       tags = Map("player" -> CsvFixtures.load(spark, s"$nba/player.csv")),
       edges = Map("like" -> CsvFixtures.load(spark, s"$nba/like.csv")))
@@ -165,7 +165,7 @@ class DmlSpec extends SparkSpec {
 
   test("fixture clone: mutations stay scenario-local") {
     val nba = "/root/reference/tests/data/nba"
-    assume(new java.io.File(s"$nba/player.csv").exists())
+    assumeFiles(s"$nba/player.csv", s"$nba/like.csv")
     val base = MapCatalog(
       tags = Map("player" -> CsvFixtures.load(spark, s"$nba/player.csv")),
       edges = Map("like" -> CsvFixtures.load(spark, s"$nba/like.csv")))

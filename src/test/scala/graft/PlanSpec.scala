@@ -10,20 +10,25 @@ import org.apache.spark.sql.execution.SparkPlan
 class PlanSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-  private def have = new java.io.File(s"$dir/lineitem.parquet").exists()
+  private def have(): Unit = assumeFiles(s"$dir/lineitem.parquet")
+
+  test("SparkEntry.entry: the flagship query returns rows") {
+    have()
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
 
   private def executed(name: String): SparkPlan =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan
 
   test("LOOKUP: predicate is pushed to the parquet scan") {
-    assume(have)
+    have()
     val plan = executed("q_lookup").toString
     assert(plan.contains("PushedFilters: [IsNotNull(c_acctbal), GreaterThan(c_acctbal,9900.0)"),
       s"no pushed filter in:\n$plan")
   }
 
   test("MATCH text seek: WHERE predicate reaches the parquet scan") {
-    assume(have)
+    have()
     val plan = executed("q_nql_match_seek").toString
     // the mktsegment equality from MATCH ... WHERE must be a scan-
     // level pushed filter, not a post-scan Filter only
@@ -33,14 +38,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("column pruning: project reads only needed columns") {
-    assume(have)
+    have()
     val plan = executed("q_limit_offset").toString
     assert(plan.contains("ReadSchema: struct<o_orderkey:bigint>"),
       s"scan not pruned to o_orderkey:\n$plan")
   }
 
   test("inner join plans as broadcast hash join under AQE") {
-    assume(have)
+    have()
     val df = SparkEntry.queries("q_inner_join")(spark, dir)
     df.collect() // let AQE finalize
     val finalPlan = df.queryExecution.executedPlan.toString
@@ -48,20 +53,20 @@ class PlanSpec extends SparkSpec {
   }
 
   test("TopN compiles to TakeOrderedAndProject (bounded heap, no global sort)") {
-    assume(have)
+    have()
     val plan = executed("q_topn").toString
     assert(plan.contains("TakeOrderedAndProject"), s"no TOAP in:\n$plan")
   }
 
   test("aggregation is partial (map-side combine before the exchange)") {
-    assume(have)
+    have()
     val plan = executed("q_aggregate").toString
     assert(plan.contains("partial_count") || plan.contains("partial_sum"),
       s"no partial aggregation in:\n$plan")
   }
 
   test("traversal frontier lineage is truncated (constant plan depth)") {
-    assume(have)
+    have()
     // a 2-step go's plan must hang off a checkpointed RDD scan, not a
     // 2-join-deep tree (the round-1 scale bug)
     val plan = SparkEntry.queries("q_go_1to2")(spark, dir)
@@ -124,7 +129,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("metadata-only multimodal inspect does not read the payload column") {
-    assume(have)
+    have()
     val df = graft.pipeline.Multimodal.assetsFromText(
         Tables.load(spark, dir, "documents"), "doc_id", "text", "image")
       .select("asset_id", "media_type")
@@ -135,7 +140,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("fulltext BM25: no explode/keyed shuffle; stats broadcast; bounded top-k") {
-    assume(have)
+    have()
     val plan = executed("q_fulltext_search").toString
     // the 1-row corpus stats (N, avgdl, per-term df) broadcast back;
     // per-doc scoring is a projection — never a shuffle keyed on the
@@ -152,7 +157,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("triangle counting: equi-joins only, never a cartesian wedge") {
-    assume(have)
+    have()
     val plan = executed("q_algo_triangles").toString
     // degree-ordered orientation makes every stage an equi-join —
     // a CartesianProduct would mean the wedge enumeration regressed
@@ -174,7 +179,7 @@ class PlanSpec extends SparkSpec {
     }.flatten
 
   test("re-bound MATCH var seeds from the prior binding, not an all-vertex scan") {
-    assume(have)
+    have()
     // `(a)` in the second clause is already bound — the seed must come
     // from the first clause's frame, NOT g.allVertices (a 6-table
     // union whose branches can't be pruned at plan time). part/region
@@ -194,7 +199,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("variable id() seed prunes the second MATCH with a semi join") {
-    assume(have)
+    have()
     val df = SparkEntry.queries("q_ldbc_varseed")(spark, dir)
     val plan = df.queryExecution.optimizedPlan.toString
     assert(plan.contains("LeftSemi"),
@@ -247,7 +252,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bucketed store: 2-hop expansion joins with ZERO exchange") {
-    assume(have)
+    have()
     import graft.sources.GraphStore
     val g = graft.graph.GraphModel(spark, dir)
     val store = java.nio.file.Files.createTempDirectory("graft-gstore-spec")
@@ -271,7 +276,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bucketed store: frontier expand shuffles only the frontier side") {
-    assume(have)
+    have()
     import graft.sources.GraphStore
     // reuses the store written by the previous test if present;
     // otherwise writes it (test ordering safety)
@@ -316,12 +321,11 @@ class PlanSpec extends SparkSpec {
     }.size
 
   test("stored graph under GO: hop joins exchange only the frontier, persist skipped") {
-    assume(have)
+    have()
     import graft.sources.GraphStore
     import graft.traverse.Traverse
     val s2 = spark.newSession()
     GraphStore.enableManaged(s2)
-    s2.conf.set("spark.graft.broadcastFrontierRows", "0") // pin the SMJ path
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s2.conf.set("spark.sql.adaptive.enabled", "false") // unwrapped plan tree
     val g = graft.graph.GraphModel(s2, dir)
@@ -371,7 +375,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("stored adjacency: algorithm message joins never exchange the edge side") {
-    assume(have)
+    have()
     import graft.sources.GraphStore
     val s2 = spark.newSession()
     GraphStore.enableManaged(s2)
@@ -403,7 +407,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("stored und adjacency: undirected algorithm sends never exchange the edge side") {
-    assume(have)
+    have()
     import graft.sources.GraphStore
     val s2 = spark.newSession()
     GraphStore.enableManaged(s2)
@@ -438,7 +442,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("stored directed adjacencies: sssp weights and betweenness dedup stay exchange-free") {
-    assume(have)
+    have()
     import graft.sources.GraphStore
     val s2 = spark.newSession()
     GraphStore.enableManaged(s2)
@@ -472,7 +476,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("stored edgesByType: typed read prunes to its etype partition") {
-    assume(have)
+    have()
     import graft.sources.GraphStore
     val s2 = spark.newSession()
     GraphStore.enableManaged(s2)
@@ -507,7 +511,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("adjacency cache dial: uncached sides still plan zero edge-side exchange") {
-    assume(have)
+    have()
     import graft.sources.GraphStore
     val s2 = spark.newSession()
     GraphStore.enableManaged(s2)
@@ -543,7 +547,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("adjacency auto cache: expanded estimate vs storage budget") {
-    assume(have)
+    have()
     import graft.algo.Adjacency
     val s2 = spark.newSession()
     // tiny dataset: expanded estimate (5× source) is far inside any
@@ -557,7 +561,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("stored edge props: MATCH hop frames are pure views over bucketed scans") {
-    assume(have)
+    have()
     import graft.sources.GraphStore
     import graft.traverse.Traverse
     val s2 = spark.newSession()
@@ -590,7 +594,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("jaccard: pair join is an equi join on the shared neighbor, no cartesian") {
-    assume(have)
+    have()
     // the hub-cap semi join itself sits behind the localCheckpoint
     // lineage cut (Scan ExistingRDD), so assert the downstream shape:
     // the pair enumeration joins on dst — never a cartesian
@@ -604,7 +608,7 @@ class PlanSpec extends SparkSpec {
   // ---- round 13: build-once / attach-many ------------------------
 
   test("store attach: a fresh catalog registers from the meta marker, no rewrite") {
-    assume(have)
+    have()
     import graft.sources.GraphStore
     val g = graft.graph.GraphModel(spark, dir)
     val root = java.nio.file.Files.createTempDirectory("graft-gstore-attach")

@@ -51,7 +51,7 @@ class SourcesSinksSpec extends SparkSpec {
 
   test("CsvFixtures: loads the reference nba fixture when present") {
     val nba = "/root/reference/tests/data/nba/serve.csv"
-    assume(new java.io.File(nba).exists())
+    assumeFiles(nba)
     val df = CsvFixtures.load(spark, nba)
     assert(df.columns.toSeq == Seq("src", "dst", "rank", "start_year", "end_year"))
     assert(df.count() > 100)

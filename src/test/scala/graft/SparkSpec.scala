@@ -10,16 +10,16 @@ import org.scalatest.BeforeAndAfterAll
   * the fixtures are tiny, so per-query task count matters more than
   * per-query parallelism. */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session("local[8]", 2)
 }
 
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
   override def afterAll(): Unit = () // session shared across suites
+
+  /** Cancel, naming the first absent fixture file, instead of running a
+    * test whose input is not on disk. */
+  protected def assumeFiles(paths: String*): Unit =
+    paths.find(p => !new java.io.File(p).exists())
+      .foreach(p => cancel(s"$p not found: test needs this fixture"))
 }

@@ -63,7 +63,7 @@ class StreamingSpec extends SparkSpec {
 
   test("dedupEvents plans watermarked within-horizon dedup (streaming-only op)") {
     val dir = "/root/testdata/sf0.001"
-    assume(new java.io.File(s"$dir/events.parquet").exists())
+    assumeFiles(s"$dir/events.parquet")
     val src = EventStream.readEvents(spark, s"$dir/events.parquet",
       schemaFrom = s"$dir/events.parquet")
     val dd = EventStream.dedupEvents(src)
@@ -76,7 +76,7 @@ class StreamingSpec extends SparkSpec {
 
   test("readEvents: ns-timestamp parquet streams with µs truncation") {
     val dir = "/root/testdata/sf0.001"
-    assume(new java.io.File(s"$dir/events.parquet").exists())
+    assumeFiles(s"$dir/events.parquet")
     val src = EventStream.readEvents(spark, s"$dir/events.parquet",
       schemaFrom = s"$dir/events.parquet")
     assert(src.isStreaming)

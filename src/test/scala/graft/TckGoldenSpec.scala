@@ -15,7 +15,8 @@ class TckGoldenSpec extends SparkSpec {
   import spark.implicits._
 
   private val nba = "/root/reference/tests/data/nba"
-  private def have = new java.io.File(s"$nba/like.csv").exists()
+  private def haveNba(): Unit =
+    assumeFiles(Seq("like", "serve", "player", "null").map(t => s"$nba/$t.csv"): _*)
 
   private def like = CsvFixtures.load(spark, s"$nba/like.csv")
   private def serve = CsvFixtures.load(spark, s"$nba/serve.csv")
@@ -50,30 +51,30 @@ class TckGoldenSpec extends SparkSpec {
   }
 
   test("""GO FROM "Tim Duncan" OVER like | YIELD COUNT(*) == 2""") {
-    assume(have)
+    haveNba()
     assert(Traverse.goYield(seed("Tim Duncan"), like, 1, 1).count() == 2L)
   }
 
   test("""GO 3 STEPS FROM "Tim Duncan" OVER like | YIELD COUNT(*) == 5""") {
-    assume(have)
+    haveNba()
     assert(Traverse.goYield(seed("Tim Duncan"), like, 3, 3).count() == 5L)
   }
 
   test("""GO 1 TO 3 STEPS FROM "Tony Parker" OVER serve BIDIRECT YIELD DISTINCT id($$) == 41""") {
-    assume(have)
+    haveNba()
     val r = Traverse.go(seed("Tony Parker"), serve, 1, 3, dir = Both)
       .select("vid").distinct().count()
     assert(r == 41L)
   }
 
   test("MATCH (v:player) RETURN COUNT(*) == 56") {
-    assume(have)
+    haveNba()
     assert(player.count() == 56L)
   }
 
   test("""GO FROM "Tim Duncan" OVER serve YIELD serve._dst == ["Spurs"]""") {
     // GO.feature "one step"
-    assume(have)
+    haveNba()
     val r = Traverse.goYield(seed("Tim Duncan"), serve, 1, 1)
       .select("dst").as[String].collect()
     assert(r.sameElements(Array("Spurs")))
@@ -81,7 +82,7 @@ class TckGoldenSpec extends SparkSpec {
 
   test("""GO FROM 'Thunders' OVER serve REVERSELY == 6 players""") {
     // GO.feature:136 golden
-    assume(have)
+    haveNba()
     val r = Traverse.goYield(seed("Thunders"), serve, 1, 1,
         dir = Traverse.In)
       .select("dst").as[String].collect().toSet
@@ -91,7 +92,7 @@ class TckGoldenSpec extends SparkSpec {
 
   test("piped GO chain keeps bag semantics (Boris Diaw like->like->serve)") {
     // GO.feature "one step" pipe golden: 7 rows, 5x Spurs
-    assume(have)
+    haveNba()
     val g1 = Traverse.goYield(seed("Boris Diaw"), like, 1, 1)
       .select(col("dst").as("vid"))
     val g2 = Traverse.goYield(g1, like, 1, 1).select(col("dst").as("vid"))
@@ -102,7 +103,7 @@ class TckGoldenSpec extends SparkSpec {
 
   test("multi-tag vertex: Tim Duncan is player AND bachelor (outer join on vid)") {
     // SURVEY §7.4 hard part 4: MATCH (v) without label sees all tags
-    assume(have)
+    haveNba()
     val bachelor = CsvFixtures.load(spark, s"$nba/bachelor.csv")
     val joined = player.join(
       bachelor.withColumnRenamed("name", "b_name"), Seq("vid"), "full_outer")
