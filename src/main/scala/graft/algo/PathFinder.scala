@@ -1,43 +1,57 @@
 package graft.algo
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import graft.traverse.Traverse
 import graft.traverse.Traverse.{Direction, Out}
 import graft.Ckpt.MatOps
 
 /** FIND PATH family (SURVEY.md §2.5): src→dst endpoint semantics with
   * path reconstruction, re-expressed as level-synchronous DataFrame BFS.
+  * One path-walk engine ([[walk]]) serves every form, as the reference
+  * plans them all through one path planner. Modes:
   *
-  *  - `shortestPaths` ≈ BFSShortestPathExecutor.cpp:12 /
+  *  - `shortest` ≈ BFSShortestPathExecutor.cpp:12 /
   *    MultiShortestPathExecutor.cpp:10 (FIND SHORTEST PATH FROM a,b TO
-  *    c,d): first hit per (src,dst) pair wins; all equal-length shortest
-  *    paths for that pair are returned (pass `singlePath=true` for one
-  *    deterministic representative).
-  *  - `allPaths` ≈ AllPathsExecutor.cpp:19 (FIND ALL PATH ... UPTO n
-  *    STEPS, NOLOOP): every simple path up to n steps between the sets.
+  *    c,d): per-origin visited pruning, so a (src, dst) pair is emitted
+  *    the first level it is reached — its shortest distance — with all
+  *    equal-length ties;
+  *  - `noloop` ≈ AllPathsExecutor.cpp:19 (FIND NOLOOP PATH, and
+  *    `allPaths`): every path up to n steps with no repeated vertex;
+  *  - `all`: trail semantics, no repeated stored edge
+  *    (AllPathsExecutor.cpp:334-366).
   *
-  * Scale: the expansion loop materializes + truncates lineage per step
-  * (localCheckpoint) and prunes per-origin visited sets, but the
-  * frontier carries one row PER PATH (the path array column) — on dense
-  * graphs equal-length-path multiplicity makes it far larger than
-  * |reached|, so the hop join's broadcast hint is gated through
-  * Traverse.maybeBroadcast (BroadcastFrontierRows cap); above the cap
-  * the join shuffles, which is the correct plan for a huge frontier.
-  * `stepLimit` bounds the worst-case fan-out the same way the
-  * reference's step-limit pushdown does
-  * (PushStepLimitDownGetNeighborsRule.cpp). The dst set is broadcast
-  * unconditionally — it is a user-supplied endpoint list, not a
-  * growing frontier.
+  * Every walk row carries (origin, vid, vids). The path payload decides
+  * the rest:
+  *  - untyped (`shortestPaths`, `allPaths`, FIND SHORTEST/NOLOOP text
+  *    without YIELD): nothing more. `visited` is seeded with the origin,
+  *    so a src == dst pair is never emitted.
+  *  - typed (`typedPaths`, `typedPathsRaw`, YIELD path, FIND ALL PATH):
+  *    rows also carry `steps`, the stored identity of every hop, and no
+  *    stored edge repeats. `visited` starts empty, so a src that is also
+  *    a dst finds its cycles. The per-row struct array and the no-repeat
+  *    filter made the untyped shortest queries 1.4-1.5× slower (sf0.1,
+  *    4 cores), which is why the payload is opt-in.
+  *
+  * Routes: one forward level loop for every mode; `shortest` at caps of
+  * [[BidiMinSteps]] or more takes the bidirectional assembly over
+  * [[bidiDrive]] instead — for the typed payload only on disjoint
+  * endpoint sets (a self-pair cycle has no meet-in-the-middle split).
+  *
+  * Scale: each level materializes + truncates lineage (localCheckpoint)
+  * and prunes per-origin visited sets, but the frontier carries one row
+  * PER PATH (the vids array) — on dense graphs equal-length-path
+  * multiplicity makes it far larger than |reached|, so the hop join's
+  * broadcast hint is gated through Traverse.maybeBroadcast
+  * (BroadcastFrontierRows cap); above the cap the join shuffles, which
+  * is the correct plan for a huge frontier. The dst set is broadcast
+  * unconditionally — it is a user-supplied endpoint list, not a growing
+  * frontier.
   */
 object PathFinder {
 
-  /** Shortest paths from every vid in `srcs` to every vid in `dsts`
-    * reachable within maxSteps. Output (src, dst, path, hops) where
-    * path = "a->b->c". BFS with per-origin visited pruning: a (src,dst)
-    * pair is emitted the first level it is reached, which is its
-    * shortest distance; ties (multiple shortest paths) all survive
-    * unless singlePath. */
   /** One side of the adaptive meet-in-the-middle search: frontier,
     * accumulated levels (every row at its per-origin first-arrival
     * depth — all tied paths kept), visited pruning, checkpoint
@@ -113,10 +127,9 @@ object PathFinder {
   }
 
   /** ADAPTIVE bidirectional meet-in-the-middle driver (the reference's
-    * left/right frontiers, BFSShortestPathExecutor.cpp:12), shared by
-    * the plain and typed shortest-path surfaces. Each step expands the
-    * SMALLER frontier (asymmetric endpoint sets never blow up the big
-    * side), and the search stops as soon as ANY of:
+    * left/right frontiers, BFSShortestPathExecutor.cpp:12). Each step
+    * expands the SMALLER frontier (asymmetric endpoint sets never blow
+    * up the big side), and the search stops as soon as ANY of:
     *  - every (src, dst) pair has met — a pair's first meet happens
     *    exactly when fTop + bTop reaches its distance (levels grow one
     *    at a time, and a shortest path splits at every index), so on
@@ -142,8 +155,7 @@ object PathFinder {
     * `pairsTotal` counts the resolvable (src ≠ dst) endpoint pairs;
     * pass -1 to disable the met-pairs early exit. Returns the two
     * sides, closed, with all level checkpoints still live. */
-  private def bidiDrive(fSide: BidiSide, bSide: BidiSide,
-                        eF: DataFrame, eB: DataFrame, maxSteps: Int,
+  private def bidiDrive(fSide: BidiSide, bSide: BidiSide, maxSteps: Int,
                         pairsTotal: Long,
                         extendF: (DataFrame, Long, Int) => DataFrame,
                         extendB: (DataFrame, Long, Int) => DataFrame)
@@ -179,7 +191,7 @@ object PathFinder {
     /** Origins of `side` (po = the metPairs column it owns) that have
       * met EVERY required counterpart — stop expanding them. Their
       * already-computed levels stay for the assembly; capsLocal
-      * records each pruned origin's final depth, which the assemblies'
+      * records each pruned origin's final depth, which the assembly's
       * per-origin canonical split uses (a pruned ball is complete up
       * to its cap, and every pair of a pruned origin met while both
       * balls were still within their caps — see the split inequality
@@ -253,16 +265,6 @@ object PathFinder {
     fSide.close(); bSide.close()
   }
 
-  /** Resolvable-pair count for the met-pairs early exit: |srcs|×|dsts|
-    * minus the overlap (src == dst pairs never resolve here). Three
-    * cheap actions over the seed frames. */
-  private def resolvablePairs(srcs: DataFrame, dsts: DataFrame): Long = {
-    val s = srcs.select("vid").distinct()
-    val d = dsts.select("vid").distinct()
-    val sCnt = s.count(); val dCnt = d.count()
-    sCnt * dCnt - s.join(d, Seq("vid"), "left_semi").count()
-  }
-
   /** Step-cap threshold for the bidirectional strategy. Shallow caps
     * keep the single-direction loop: its level count is already small,
     * and a backward ball from a high-fan-in endpoint set (e.g. sink
@@ -270,61 +272,192 @@ object PathFinder {
     * forward search — measured 1.6-2.6× on the 4-hop star-schema
     * queries. Deep caps are where the forward ball's exponent
     * dominates and the two half-depth balls (plus the met-pairs early
-    * exit) win — measured 0.69× on the 15-hop LDBC IC13. */
+    * exit) win — measured 0.69× on the 15-hop LDBC IC13.
+    *
+    * An AUTOMATIC per-query probe was tried and rejected with
+    * measurement (round 13): the natural signal, 1-hop in-degree of
+    * the dst set, is insufficient — on the 4-hop star-schema caps the
+    * backward level-1 ball from the region sinks is 25 rows (looks
+    * bidi-safe) while the explosion arrives at depth 2 (the full
+    * customer/supplier layer) and forced bidi measures 1.66× the
+    * forward loop; seeing depth 2 means running two backward hops,
+    * i.e. paying most of the loss before deciding. */
   val BidiMinSteps = 6
 
-  /** Conf key overriding [[BidiMinSteps]] per session — for operators
-    * who know their graph's backward fan shape. An AUTOMATIC per-query
-    * probe was tried and rejected with measurement (round 13): the
-    * natural signal, 1-hop in-degree of the dst set, is demonstrably
-    * insufficient — on the 4-hop star-schema caps the backward level-1
-    * ball from the region sinks is 25 rows (looks bidi-safe) while the
-    * explosion arrives at depth 2 (the full customer/supplier layer)
-    * and forced bidi measures 1.66× the forward loop; seeing depth 2
-    * means running two backward hops, i.e. paying most of the loss
-    * before deciding. A constant calibrated on the measured crossover,
-    * overridable where the operator knows better, beats a probe that
-    * is wrong exactly on the shapes it exists to protect. */
-  val ConfBidiMinSteps = "spark.graft.bidiMinSteps"
+  /** The path-walk engine behind every FIND PATH form. `edges` carry
+    * (src, dst) — plus (etype, rank) for the typed payload — in STORED
+    * direction; `dir` orients them here. `mode` ∈ shortest | noloop |
+    * all (trail, typed only). Output (src, dst, vids[, steps], hops),
+    * one row per path. */
+  private[graft] def walk(srcs: DataFrame, dsts: DataFrame,
+                          edges: DataFrame, maxSteps: Int, mode: String,
+                          dir: Direction, typed: Boolean): DataFrame = {
+    require(typed || mode != "all", "trail mode needs the typed payload")
+    val e =
+      if (typed) stepEdges(edges, dir)
+      else Traverse.orient(edges, dir).select("src", "dst")
+    if (mode == "shortest" && maxSteps >= BidiMinSteps) {
+      val s = srcs.select("vid").distinct()
+      val d = dsts.select("vid").distinct()
+      val overlap = s.join(d, Seq("vid"), "left_semi").count()
+      // resolvable pairs: src == dst pairs never resolve in the bidi
+      if (!typed || overlap == 0)
+        return bidi(srcs, dsts, e, maxSteps, typed,
+          s.count() * d.count() - overlap)
+    }
+    forward(srcs, dsts, e, maxSteps, mode, typed)
+  }
 
-  private def bidiMinSteps(df: DataFrame): Int =
-    df.sparkSession.conf.get(ConfBidiMinSteps, BidiMinSteps.toString).toInt
+  /** Typed walk edges: traversal (src, dst) plus the stored identity
+    * every step records (ss, sd, etype, rank) and whether the step
+    * walks its edge reversed — orientation happens here so each step
+    * keeps its stored endpoints for rendering and edge-identity
+    * checks (keyEqual normalizes direction, Edge.cpp:128). */
+  private def stepEdges(edges: DataFrame, dir: Direction): DataFrame = {
+    def oriented(rev: Boolean) = edges.select(
+      col(if (rev) "dst" else "src").as("src"),
+      col(if (rev) "src" else "dst").as("dst"), col("etype"), col("rank"),
+      col("src").as("ss"), col("dst").as("sd"), lit(rev).as("rev"))
+    dir match {
+      case Out => oriented(rev = false)
+      case Traverse.In => oriented(rev = true)
+      case Traverse.Both =>
+        oriented(rev = false).unionByName(oriented(rev = true))
+    }
+  }
 
-  def shortestPaths(srcs: DataFrame, dsts: DataFrame, edges: DataFrame,
-                    maxSteps: Int, dir: Direction = Out,
-                    singlePath: Boolean = false): DataFrame = {
-    if (maxSteps < bidiMinSteps(edges))
-      return forwardShortest(srcs, dsts, edges, maxSteps, dir, singlePath)
-    val e0 = Traverse.orient(edges, dir).select("src", "dst")
+  /** Depth-0 walk rows: (origin, vid, vids[, steps]). */
+  private def seed(vids: DataFrame, e: DataFrame, typed: Boolean)
+      : DataFrame = {
+    val vt = if (e.schema("src").dataType == StringType) "string"
+      else "bigint"
+    val steps =
+      if (typed) Seq(array().cast(
+        s"array<struct<s:$vt,d:$vt,t:string,r:bigint,rev:boolean>>")
+        .as("steps"))
+      else Nil
+    vids.select(Seq(col("vid").as("origin"), col("vid"),
+      array(col("vid")).as("vids")) ++ steps: _*)
+  }
+
+  private def hop(frontier: DataFrame, cnt: Long, e: DataFrame)
+      : DataFrame =
+    Traverse.maybeBroadcast(frontier, cnt)
+      .join(e, frontier("vid") === e("src"))
+
+  /** The walk row one hop over `e` extends a frontier row into. */
+  private def grown(e: DataFrame, typed: Boolean): Seq[Column] =
+    Seq(col("origin"), e("dst").as("vid"),
+      concat(col("vids"), array(e("dst"))).as("vids")) ++
+      (if (typed) Seq(concat(col("steps"), array(struct(e("ss").as("s"),
+        e("sd").as("d"), e("etype").as("t"), e("rank").as("r"),
+        e("rev").as("rev")))).as("steps"))
+      else Nil)
+
+  /** The forward level loop every mode shares: one hop per level, the
+    * mode's filter, then the level's hits against the broadcast dst
+    * set. Hits are checkpointed (small) so superseded frontiers can be
+    * freed. */
+  private def forward(srcs: DataFrame, dsts: DataFrame, e0: DataFrame,
+                      maxSteps: Int, mode: String, typed: Boolean)
+      : DataFrame = {
+    val e = Traverse.persistEdges(e0, maxSteps)
+    val dstSet = broadcast(dsts.select(col("vid").as("__target")).distinct())
+      .mat()
+    def hits(df: DataFrame, step: Int) = df.select(Seq(
+      col("origin").as("src"), col("vid").as("dst"), col("vids")) ++
+      (if (typed) Seq(col("steps")) else Nil) :+ lit(step).as("hops"): _*)
+    val seed0 = seed(srcs, e, typed)
+    var frontier = seed0.mat()
+    // shortest: per-origin visited anti-join. The typed payload starts
+    // it EMPTY: a src that is also a dst must be re-reachable for the
+    // self-pair's cycle paths (ShortestPath.feature `FROM "Tim Duncan"
+    // TO "Tim Duncan" BIDIRECT` expects the 2-hop loops); re-reaching
+    // the origin never shortens any other pair
+    var visited =
+      if (mode != "shortest") null
+      else {
+        val v = frontier.select(col("origin"), col("vid"))
+        (if (typed) v.limit(0) else v).mat()
+      }
+    var found: DataFrame = null
+    var cnt = frontier.count()
+    var step = 1
+    while (step <= maxSteps && cnt > 0) {
+      val h = hop(frontier, cnt, e)
+      // the typed payload never re-walks a stored edge: ALL is trail
+      // semantics outright, and SHORTEST's cycle paths (self-pair
+      // BIDIRECT) must use two distinct stored edges
+      // (ShortestPathBase.h:56 hasSameEdge)
+      val kept =
+        if (mode == "noloop") h.filter(!array_contains(col("vids"), e("dst")))
+        else if (typed) h.filter(!exists(col("steps"), st =>
+          st("s") === e("ss") && st("d") === e("sd") &&
+            st("t") === e("etype") && st("r") === e("rank")))
+        else h
+      var next = kept.select(grown(e, typed): _*)
+      if (visited != null)
+        next = next.join(
+          visited.select(col("origin").as("vo"), col("vid").as("vv")),
+          next("origin") === col("vo") && next("vid") === col("vv"),
+          "left_anti")
+      next = next.mat()
+      val hit = hits(next.join(dstSet, next("vid") === col("__target")), step)
+        .mat()
+      found = if (found == null) hit else found.unionByName(hit)
+      if (visited != null) {
+        val v2 = visited.unionByName(next.select("origin", "vid")).mat()
+        Traverse.freeCheckpoint(visited)
+        visited = v2
+      }
+      Traverse.freeCheckpoint(frontier) // consumed by next + hits
+      frontier = next
+      cnt = frontier.count()
+      step += 1
+    }
+    Traverse.freeCheckpoint(frontier)
+    if (visited != null) Traverse.freeCheckpoint(visited)
+    Traverse.freeCheckpoint(dstSet)
+    Traverse.releaseEdges(e, maxSteps) // hits are checkpointed
+    if (found == null) hits(seed0, 0).limit(0) else found
+  }
+
+  /** The shortest-path walk as an adaptive meet-in-the-middle search
+    * over [[bidiDrive]]: the backward ball walks the REVERSED
+    * orientation (each oriented row flipped; a typed step struct is
+    * unchanged — it is what the forward traversal at that position
+    * would have written), the smaller frontier expands first, and the
+    * search stops at the first level where every pair has met. Per-pair
+    * min + the canonical split reproduce the forward loop's row
+    * multiset. */
+  private def bidi(srcs: DataFrame, dsts: DataFrame, e0: DataFrame,
+                   maxSteps: Int, typed: Boolean,
+                   pairsTotal: Long): DataFrame = {
     val eF = Traverse.persistEdges(e0, maxSteps)
-    val eB = Traverse.persistEdges(
-      e0.select(col("dst").as("src"), col("src").as("dst")), maxSteps)
-
-    def seed(seeds: DataFrame) = new BidiSide(
-      seeds.select(col("vid").as("origin"), col("vid"),
-        array(col("vid")).as("path"), lit(0).as("depth")).mat())
+    val eB = Traverse.persistEdges(e0.select(e0.columns.toSeq.map {
+      case "src" => col("dst").as("src")
+      case "dst" => col("src").as("dst")
+      case c => col(c)
+    }: _*), maxSteps)
+    def side(seeds: DataFrame) =
+      new BidiSide(seed(seeds, e0, typed).withColumn("depth", lit(0)).mat())
     def extend(e: DataFrame)(frontier: DataFrame, cnt: Long,
                              d: Int): DataFrame =
-      Traverse.maybeBroadcast(frontier, cnt)
-        .join(e, frontier("vid") === e("src"))
-        .select(col("origin"), e("dst").as("vid"),
-          concat(col("path"), array(e("dst"))).as("path"),
-          lit(d).as("depth"))
+      hop(frontier, cnt, e).select(grown(e, typed) :+ lit(d).as("depth"): _*)
 
-    val fS = seed(srcs)
-    val bS = seed(dsts.select(col("vid")).distinct())
-    bidiDrive(fS, bS, eF, eB, maxSteps,
-      resolvablePairs(srcs, dsts), extend(eF), extend(eB))
+    val fS = side(srcs)
+    val bS = side(dsts.select(col("vid")).distinct())
+    bidiDrive(fS, bS, maxSteps, pairsTotal, extend(eF), extend(eB))
 
-    val f = fS.acc.select(col("origin"), col("vid"),
-      col("path").as("__fpath"), col("depth").as("__fd"))
-    val b = bS.acc.select(col("origin").as("__target"), col("vid"),
-      col("path").as("__bpath"), col("depth").as("__bd"))
-    val cand = f.join(b, Seq("vid"))
+    def half(s: BidiSide, origin: String, p: String) =
+      s.acc.select(Seq(col("origin").as(origin), col("vid"),
+        col("vids").as(s"__${p}v")) ++
+        (if (typed) Seq(col("steps").as(s"__${p}s")) else Nil) :+
+        col("depth").as(s"__${p}d"): _*)
+    val cand = half(fS, "origin", "f").join(half(bS, "__target", "b"),
+        Seq("vid"))
       .filter(col("origin") =!= col("__target"))
       .withColumn("hops", col("__fd") + col("__bd"))
-    import org.apache.spark.sql.expressions.Window
-    val pw = Window.partitionBy("origin", "__target")
     // canonical split min(fcap_o, L), fcap_o = the origin's FINAL
     // forward depth (fS.top, or its prune depth if it resolved early):
     // always within both computed ball depths for a met pair — o's
@@ -338,347 +471,96 @@ object PathFinder {
       case Some(caps) => cand.join(broadcast(caps), Seq("origin"), "left_outer")
         .withColumn("__cap", coalesce(col("__cap"), lit(fS.top)))
     }
-    val out = withCap.withColumn("__min", min(col("hops")).over(pw))
+    // assemble: forward prefix ++ reversed backward suffix (the meeting
+    // vertex is the last element of both vids arrays — drop one copy)
+    val out = withCap
+      .withColumn("__min", min(col("hops")).over(
+        Window.partitionBy("origin", "__target")))
       .filter(col("hops") === col("__min") &&
         col("__fd") === least(col("__cap"), col("hops")))
-      .select(col("origin").as("src"), col("__target").as("dst"),
-        array_join(concat(col("__fpath"),
-          slice(reverse(col("__bpath")), lit(2), size(col("__bpath")))), "->")
-          .as("path"),
-        col("hops"))
-      .mat() // result-sized; lets every level checkpoint be freed
-    fS.levels.foreach(Traverse.freeCheckpoint)
-    bS.levels.foreach(Traverse.freeCheckpoint)
-    Traverse.releaseEdges(eF, maxSteps)
-    Traverse.releaseEdges(eB, maxSteps)
-    if (singlePath) {
-      val w = Window.partitionBy(col("src"), col("dst")).orderBy(col("path"))
-      out.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-    } else out
-  }
-
-  /** The classic single-direction BFS (shallow caps — see
-    * BidiMinSteps): per-origin visited pruning, hits collected the
-    * first level each (src, dst) pair is reached. */
-  private def forwardShortest(srcs: DataFrame, dsts: DataFrame,
-                              edges: DataFrame, maxSteps: Int,
-                              dir: Direction,
-                              singlePath: Boolean): DataFrame = {
-    val e = Traverse.persistEdges(
-      Traverse.orient(edges, dir).select("src", "dst"), maxSteps)
-    val dstSet = broadcast(dsts.select(col("vid").as("__target")).distinct())
-      .mat()
-
-    var frontier = srcs.select(col("vid").as("origin"),
-      array(col("vid")).as("path"), col("vid")).mat()
-    var visited = frontier.select(col("origin"), col("vid")).mat()
-    // pairs already answered: stop extending them
-    var found: DataFrame = null
-    var cnt = frontier.count()
-    var step = 1
-    while (step <= maxSteps && cnt > 0) {
-      val nextRaw = Traverse.maybeBroadcast(frontier, cnt)
-        .join(e, frontier("vid") === e("src"))
-        .select(col("origin"),
-          concat(col("path"), array(e("dst"))).as("path"),
-          e("dst").as("vid"))
-      // per-origin shortest semantics: drop vertices already visited
-      val next = nextRaw.join(
-          visited.select(col("origin").as("vo"), col("vid").as("vv")),
-          nextRaw("origin") === col("vo") && nextRaw("vid") === col("vv"),
-          "left_anti")
-        .mat()
-      // checkpoint the (small) per-level hits so `found` never holds a
-      // reference to the (large) frontier checkpoints — which can then
-      // be freed as soon as they are superseded (session hygiene)
-      val hits = next.join(dstSet, next("vid") === col("__target"))
-        .select(col("origin").as("src"), col("vid").as("dst"),
-          array_join(col("path"), "->").as("path"), lit(step).as("hops"))
-        .mat()
-      found = if (found == null) hits else found.unionByName(hits)
-      val v2 = visited.unionByName(next.select("origin", "vid"))
-        .mat()
-      Traverse.freeCheckpoint(visited) // superseded by v2
-      Traverse.freeCheckpoint(frontier) // consumed by next + hits
-      visited = v2
-      frontier = next
-      cnt = frontier.count()
-      step += 1
-    }
-    Traverse.freeCheckpoint(frontier) // rows live in visited / hits
-    Traverse.freeCheckpoint(visited)
-    Traverse.freeCheckpoint(dstSet)
-    Traverse.releaseEdges(e, maxSteps) // hits are checkpointed
-    val out =
-      if (found == null)
-        srcs.sparkSession.emptyDataFrame
-          .select(lit("").as("src"), lit("").as("dst"),
-            lit("").as("path"), lit(0).as("hops")).limit(0)
-      else found
-    if (singlePath) {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("src"), col("dst")).orderBy(col("path"))
-      out.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-    } else out
-  }
-
-  /** All simple paths (NOLOOP semantics: no repeated vertex) from srcs
-    * to dsts up to maxSteps. Output (src, dst, path, hops). `stepLimit`
-    * caps per-vertex fan-out each hop — the blowup control the
-    * reference applies to ALL PATH. */
-  def allPaths(srcs: DataFrame, dsts: DataFrame, edges: DataFrame,
-               maxSteps: Int, dir: Direction = Out,
-               stepLimit: Int = 0): DataFrame = {
-    val e0 = Traverse.orient(edges, dir).select("src", "dst")
-    val e = Traverse.persistEdges(
-      if (stepLimit > 0) Traverse.capPerSrc(e0, stepLimit) else e0, maxSteps)
-    val dstSet = broadcast(dsts.select(col("vid").as("__target")).distinct())
-      .mat()
-
-    var frontier = srcs.select(col("vid").as("origin"),
-      array(col("vid")).as("path"), col("vid")).mat()
-    var found: DataFrame = null
-    var cnt = frontier.count()
-    var step = 1
-    while (step <= maxSteps && cnt > 0) {
-      val next = Traverse.maybeBroadcast(frontier, cnt)
-        .join(e, frontier("vid") === e("src"))
-        .filter(!array_contains(col("path"), e("dst")))
-        .select(col("origin"),
-          concat(col("path"), array(e("dst"))).as("path"),
-          e("dst").as("vid"))
-        .mat()
-      // hits checkpointed (small) so superseded frontiers can be freed
-      val hits = next.join(dstSet, next("vid") === col("__target"))
-        .select(col("origin").as("src"), col("vid").as("dst"),
-          array_join(col("path"), "->").as("path"), lit(step).as("hops"))
-        .mat()
-      found = if (found == null) hits else found.unionByName(hits)
-      Traverse.freeCheckpoint(frontier) // consumed by next + hits
-      frontier = next
-      cnt = frontier.count()
-      step += 1
-    }
-    Traverse.freeCheckpoint(frontier)
-    Traverse.freeCheckpoint(dstSet)
-    Traverse.releaseEdges(e, maxSteps) // hits are checkpointed
-    if (found == null)
-      srcs.sparkSession.emptyDataFrame
-        .select(lit("").as("src"), lit("").as("dst"),
-          lit("").as("path"), lit(0).as("hops")).limit(0)
-    else found
-  }
-
-  /** FIND {SHORTEST|ALL|NOLOOP} PATH ... YIELD path — typed steps with
-    * the reference's whole-path serialization (Path.cpp toString):
-    * `<("v0")-[:etype@rank]->("v1")<-[:t]-("v2")...>`, rank omitted
-    * when 0, reverse-traversed steps arrow `<-[:t]-`.
-    *
-    * Mode semantics (AllPathsExecutor.cpp:334-366):
-    *  - all:     trail — no repeated EDGE (stored identity, keyEqual
-    *             normalizes direction, Edge.cpp:128);
-    *  - noloop:  no repeated VERTEX;
-    *  - shortest: per-(origin,target) BFS level pruning, all ties at
-    *             the first hit level survive (MultiShortestPath).
-    *
-    * `edges` must carry (src, dst, etype, rank) in STORED direction;
-    * orientation happens here so every step keeps its stored endpoints
-    * for rendering and edge-identity checks. Scale posture matches the
-    * other loops: per-step localCheckpoint, gated broadcasts, all
-    * checks are column predicates (no driver-side path work). */
-  def typedPaths(srcs: DataFrame, dsts: DataFrame, edges: DataFrame,
-                 maxSteps: Int, mode: String, dir: Direction = Out,
-                 alias: String = "p"): DataFrame = {
-    val strVid = edges.schema("src").dataType ==
-      org.apache.spark.sql.types.StringType
-    val base = typedPathsRaw(srcs, dsts, edges, maxSteps, mode, dir)
-    // `__path_<alias>`: hidden structured twin of the rendered path —
-    // downstream pipes use it for ORDER BY (reference Path::operator<
-    // compares src then step sequence, Path.h:211) and for
-    // length/nodes/relationships; Gql.runScript drops it from the
-    // final frame
-    base.select(renderTypedPath(col("vids"), col("steps"), strVid).as(alias),
-      struct(col("vids"), col("steps")).as(s"__path_$alias"))
-  }
-
-  /** typedPaths without the rendering: raw (vids, steps) rows — the
-    * MATCH shortestPath()/allShortestPaths() surface binds pattern
-    * variables straight off the structured columns. */
-  def typedPathsRaw(srcs: DataFrame, dsts: DataFrame, edges: DataFrame,
-                    maxSteps: Int, mode: String,
-                    dir: Direction = Out): DataFrame = {
-    val strVid = edges.schema("src").dataType ==
-      org.apache.spark.sql.types.StringType
-    val vt = if (strVid) "string" else "bigint"
-    val stepT = s"array<struct<s:$vt,d:$vt,t:string,r:bigint,rev:boolean>>"
-    val fwd = edges.select(col("src"), col("dst"), col("etype"), col("rank"),
-      col("src").as("ss"), col("dst").as("sd"), lit(false).as("rev"))
-    def bwd = edges.select(col("dst").as("src"), col("src").as("dst"),
-      col("etype"), col("rank"),
-      col("src").as("ss"), col("dst").as("sd"), lit(true).as("rev"))
-    val e0 = dir match {
-      case Out => fwd
-      case Traverse.In => bwd
-      case Traverse.Both => fwd.unionByName(bwd)
-    }
-    // Deep-cap DISJOINT endpoint sets take the bidirectional route
-    // (adaptive half-depth balls + met-pairs early exit instead of one
-    // full-depth ball — the 15-hop MATCH shortestPath caps are
-    // exponentially cheaper; see BidiMinSteps for the shallow-cap
-    // evidence). Overlapping sets keep the single-direction loop: a
-    // src==dst pair's shortest path is a CYCLE (visited starts empty
-    // below), whose split-invariant does not hold for the
-    // meet-in-the-middle argument. The disjointness probe (one limit-1
-    // semi-join action) is only paid on deep caps.
-    if (mode == "shortest" && maxSteps >= bidiMinSteps(edges) &&
-        srcs.join(dsts, Seq("vid"), "left_semi").isEmpty)
-      return typedBidiShortest(srcs, dsts, e0, maxSteps, stepT)
-    val e = Traverse.persistEdges(e0, maxSteps)
-    val dstSet = broadcast(dsts.select(col("vid").as("__target")).distinct())
-      .mat()
-
-    var frontier = srcs.select(col("vid").as("origin"), col("vid"),
-      array(col("vid")).as("vids"), array().cast(stepT).as("steps"))
-      .mat()
-    // visited starts EMPTY (not seeded with the origin): a src that is
-    // also a dst must be re-reachable for the self-pair's cycle paths
-    // (ShortestPath.feature `FROM "Tim Duncan" TO "Tim Duncan"
-    // BIDIRECT` expects the 2-hop loops); re-reaching the origin never
-    // shortens any other pair, so the extra frontier rows are dominated
-    var visited =
-      if (mode == "shortest")
-        frontier.select(col("origin"), col("vid")).limit(0).mat()
-      else null: DataFrame
-    var found: DataFrame = null
-    var cnt = frontier.count()
-    var step = 1
-    while (step <= maxSteps && cnt > 0) {
-      val hop = Traverse.maybeBroadcast(frontier, cnt)
-        .join(e, frontier("vid") === e("src"))
-      // every mode forbids re-walking the same stored edge: ALL is
-      // trail semantics outright, and SHORTEST's cycle paths (self-pair
-      // BIDIRECT) must use two distinct stored edges
-      // (ShortestPathBase.h:56 hasSameEdge)
-      val noRepeat = hop.filter(!exists(col("steps"), st =>
-        st("s") === e("ss") && st("d") === e("sd") &&
-          st("t") === e("etype") && st("r") === e("rank")))
-      val filteredHop = mode match {
-        case "noloop" => hop.filter(!array_contains(col("vids"), e("dst")))
-        case _ => noRepeat
-      }
-      var next = filteredHop.select(col("origin"), e("dst").as("vid"),
-        concat(col("vids"), array(e("dst"))).as("vids"),
-        concat(col("steps"), array(struct(e("ss").as("s"), e("sd").as("d"),
-          e("etype").as("t"), e("rank").as("r"), e("rev").as("rev"))))
-          .as("steps"))
-      if (mode == "shortest")
-        next = next.join(
-          visited.select(col("origin").as("vo"), col("vid").as("vv")),
-          next("origin") === col("vo") && next("vid") === col("vv"),
-          "left_anti")
-      next = next.mat()
-      // hits checkpointed (small) so superseded frontiers can be freed
-      val hits = next.join(dstSet, next("vid") === col("__target"))
-        .select(col("vids"), col("steps"))
-        .mat()
-      found = if (found == null) hits else found.unionByName(hits)
-      if (mode == "shortest") {
-        val v2 = visited.unionByName(next.select("origin", "vid"))
-          .mat()
-        Traverse.freeCheckpoint(visited)
-        visited = v2
-      }
-      Traverse.freeCheckpoint(frontier) // consumed by next + hits
-      frontier = next
-      cnt = frontier.count()
-      step += 1
-    }
-    Traverse.freeCheckpoint(frontier)
-    if (visited != null) Traverse.freeCheckpoint(visited)
-    Traverse.freeCheckpoint(dstSet)
-    Traverse.releaseEdges(e, maxSteps)
-    if (found == null)
-      srcs.sparkSession.emptyDataFrame
-        .select(array(lit("")).cast(s"array<$vt>").as("vids"),
-          array().cast(stepT).as("steps")).limit(0)
-    else found
-  }
-
-  /** Meet-in-the-middle twin of the typedPathsRaw shortest loop for
-    * DISJOINT endpoint sets, built on the adaptive [[bidiDrive]]: the
-    * backward ball walks the REVERSED orientation (each oriented row
-    * flipped; the recorded step struct is unchanged — it is what the
-    * forward traversal at that position would have written), the
-    * smaller frontier expands first, and the search stops at the
-    * first level where every pair has met. Per-pair min + the
-    * canonical split reproduce the single-direction result set
-    * bit-for-bit. */
-  private def typedBidiShortest(srcs: DataFrame, dsts: DataFrame,
-                                e0: DataFrame, maxSteps: Int,
-                                stepT: String): DataFrame = {
-    val eF = Traverse.persistEdges(e0, maxSteps)
-    val eB = Traverse.persistEdges(
-      e0.select(col("dst").as("src"), col("src").as("dst"), col("etype"),
-        col("rank"), col("ss"), col("sd"), col("rev")), maxSteps)
-
-    def seed(seeds: DataFrame) = new BidiSide(
-      seeds.select(col("vid").as("origin"), col("vid"),
-        array(col("vid")).as("vids"), array().cast(stepT).as("steps"),
-        lit(0).as("depth")).mat())
-    def extend(e: DataFrame)(frontier: DataFrame, cnt: Long,
-                             d: Int): DataFrame =
-      Traverse.maybeBroadcast(frontier, cnt)
-        .join(e, frontier("vid") === e("src"))
-        .select(col("origin"), e("dst").as("vid"),
-          concat(col("vids"), array(e("dst"))).as("vids"),
-          concat(col("steps"), array(struct(e("ss").as("s"),
-            e("sd").as("d"), e("etype").as("t"), e("rank").as("r"),
-            e("rev").as("rev")))).as("steps"),
-          lit(d).as("depth"))
-
-    val sSet = srcs.select("vid").distinct()
-    val dSet = dsts.select("vid").distinct()
-    val pairsTotal = sSet.count() * dSet.count() // disjoint by the gate
-    val fS = seed(sSet)
-    val bS = seed(dSet)
-    bidiDrive(fS, bS, eF, eB, maxSteps, pairsTotal, extend(eF), extend(eB))
-
-    val f = fS.acc.select(col("origin"), col("vid"),
-      col("vids").as("__fv"), col("steps").as("__fs"),
-      col("depth").as("__fd"))
-    val b = bS.acc.select(col("origin").as("__target"), col("vid"),
-      col("vids").as("__bv"), col("steps").as("__bs"),
-      col("depth").as("__bd"))
-    import org.apache.spark.sql.expressions.Window
-    val pw = Window.partitionBy("origin", "__target")
-    // assemble: forward prefix ++ reversed backward suffix (the meeting
-    // vertex is the last element of both vids arrays — drop one copy);
-    // the canonical per-origin min(fcap_o, L) split keeps each
-    // (vids, steps) row exactly once (see shortestPaths)
-    val joined = f.join(b, Seq("vid"))
-    val withCap = fS.capsFrame match {
-      case None => joined.withColumn("__cap", lit(fS.top))
-      case Some(caps) => joined.join(broadcast(caps), Seq("origin"), "left_outer")
-        .withColumn("__cap", coalesce(col("__cap"), lit(fS.top)))
-    }
-    val out = withCap
-      .withColumn("__hops", col("__fd") + col("__bd"))
-      .withColumn("__min", min(col("__hops")).over(pw))
-      .filter(col("__hops") === col("__min") &&
-        col("__fd") === least(col("__cap"), col("__hops")))
-      .select(
+      .select(Seq(col("origin").as("src"), col("__target").as("dst"),
         concat(col("__fv"),
-          slice(reverse(col("__bv")), lit(2), size(col("__bv")))).as("vids"),
-        concat(col("__fs"), reverse(col("__bs"))).as("steps"))
-      .mat() // result-sized; frees every level checkpoint below
+          slice(reverse(col("__bv")), lit(2), size(col("__bv")))).as("vids")) ++
+        (if (typed) Seq(concat(col("__fs"), reverse(col("__bs"))).as("steps"))
+         else Nil) :+ col("hops"): _*)
+      .mat() // result-sized; lets every level checkpoint be freed
     fS.levels.foreach(Traverse.freeCheckpoint)
     bS.levels.foreach(Traverse.freeCheckpoint)
     Traverse.releaseEdges(eF, maxSteps)
     Traverse.releaseEdges(eB, maxSteps)
     out
   }
+
+  /** Keep the least row by `order` per (src, dst) pair. */
+  private def onePerPair(df: DataFrame, order: Column): DataFrame = {
+    val w = Window.partitionBy(col("src"), col("dst")).orderBy(order)
+    df.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+  }
+
+  /** Walk rows → (src, dst, path, hops), path = "a->b->c". `single`
+    * keeps one deterministic path per pair: the least rendering. */
+  private[graft] def vidPaths(w: DataFrame,
+                              single: Boolean = false): DataFrame = {
+    val out = w.select(col("src"), col("dst"),
+      array_join(col("vids"), "->").as("path"), col("hops"))
+    if (single) onePerPair(out, col("path")) else out
+  }
+
+  /** Typed walk rows → the `YIELD path AS alias` shape, with the
+    * reference's whole-path serialization (Path.cpp toString):
+    * `<("v0")-[:etype@rank]->("v1")<-[:t]-("v2")...>`, rank omitted
+    * when 0, reverse-traversed steps arrow `<-[:t]-`. `__path_<alias>`
+    * is the hidden structured twin of the rendered path — downstream
+    * pipes use it for ORDER BY (reference Path::operator< compares src
+    * then step sequence, Path.h:211) and for length/nodes/relationships;
+    * Gql.runScript drops it from the final frame. `single` keeps one
+    * path per pair: the least rendering (any shortest path is a valid
+    * answer; goldens relax-compare). */
+  private[graft] def yieldPaths(w: DataFrame, alias: String,
+                                single: Boolean = false): DataFrame = {
+    val strVid = w.schema("src").dataType == StringType
+    val r = w.withColumn("__rendered",
+      renderTypedPath(col("vids"), col("steps"), strVid))
+    (if (single) onePerPair(r, col("__rendered")) else r)
+      .select(col("__rendered").as(alias),
+        struct(col("vids"), col("steps")).as(s"__path_$alias"))
+  }
+
+  /** Shortest paths from every vid in `srcs` to every vid in `dsts`
+    * reachable within maxSteps. Output (src, dst, path, hops) where
+    * path = "a->b->c"; ties (multiple shortest paths) all survive
+    * unless singlePath. */
+  def shortestPaths(srcs: DataFrame, dsts: DataFrame, edges: DataFrame,
+                    maxSteps: Int, dir: Direction = Out,
+                    singlePath: Boolean = false): DataFrame =
+    vidPaths(walk(srcs, dsts, edges, maxSteps, "shortest", dir,
+      typed = false), singlePath)
+
+  /** All simple paths (NOLOOP semantics: no repeated vertex) from srcs
+    * to dsts up to maxSteps. Output (src, dst, path, hops). */
+  def allPaths(srcs: DataFrame, dsts: DataFrame, edges: DataFrame,
+               maxSteps: Int, dir: Direction = Out): DataFrame =
+    vidPaths(walk(srcs, dsts, edges, maxSteps, "noloop", dir,
+      typed = false))
+
+  /** FIND {SHORTEST|ALL|NOLOOP} PATH ... YIELD path: typed paths in the
+    * [[yieldPaths]] shape. `edges` must carry (src, dst, etype, rank)
+    * in STORED direction. */
+  def typedPaths(srcs: DataFrame, dsts: DataFrame, edges: DataFrame,
+                 maxSteps: Int, mode: String, dir: Direction = Out,
+                 alias: String = "p"): DataFrame =
+    yieldPaths(walk(srcs, dsts, edges, maxSteps, mode, dir, typed = true),
+      alias)
+
+  /** typedPaths without the rendering: raw (vids, steps) rows — the
+    * MATCH shortestPath()/allShortestPaths() surface binds pattern
+    * variables straight off the structured columns. */
+  def typedPathsRaw(srcs: DataFrame, dsts: DataFrame, edges: DataFrame,
+                    maxSteps: Int, mode: String,
+                    dir: Direction = Out): DataFrame =
+    walk(srcs, dsts, edges, maxSteps, mode, dir, typed = true)
+      .select("vids", "steps")
 
   /** Path serialization from the traversal vertex sequence + typed
     * steps (Path.cpp toString, relax-comparison form: tags/props

@@ -1751,42 +1751,26 @@ object Gql {
         case _ => ep.filter(Expr.compile(w, resolver) === lit(true))
       }
     }
+    val te0 = if (etypes == Seq("*")) g.allEdges
+      else g.allEdges.filter(col("etype").isin(etypes: _*))
+    val te = allowed match {
+      case Some(ok) => te0.join(
+        ok.select(col("src"), col("dst"),
+          col("__etype").as("etype")).distinct(),
+        Seq("src", "dst", "etype"), "left_semi")
+      case None => te0
+    }
+    // the typed payload (each hop's stored identity) renders YIELD path
+    // and keeps ALL PATH a trail — no repeated stored edge
+    // (AllPathsExecutor.cpp:334-366); SHORTEST and NOLOOP without YIELD
+    // keep the lean untyped walk
+    val typed = yieldPath.isDefined || mode == "all"
+    val single = mode == "single"
+    val walked = PathFinder.walk(sSet, dSet, te, upto,
+      if (single) "shortest" else mode, dir, typed)
     yieldPath match {
-      case Some(alias) =>
-        val te0 = if (etypes == Seq("*")) g.allEdges
-          else g.allEdges.filter(col("etype").isin(etypes: _*))
-        val te = allowed match {
-          case Some(ok) => te0.join(
-            ok.select(col("src"), col("dst"),
-              col("__etype").as("etype")).distinct(),
-            Seq("src", "dst", "etype"), "left_semi")
-          case None => te0
-        }
-        val df0 = PathFinder.typedPaths(sSet, dSet, te, upto,
-          if (mode == "single") "shortest" else mode, dir, alias)
-        if (mode != "single") df0
-        else {
-          // SINGLE SHORTEST: one path per (src,dst) pair — a
-          // deterministic min-by-rendering pick (any shortest path is
-          // a valid answer; goldens relax-compare)
-          import org.apache.spark.sql.expressions.Window
-          val tw = col(s"__path_$alias")
-          val w2 = Window.partitionBy(
-            element_at(tw("vids"), 1), element_at(tw("vids"), -1))
-            .orderBy(colByName(alias))
-          df0.withColumn("__rn", row_number().over(w2))
-            .filter(col("__rn") === 1).drop("__rn")
-        }
-      case None =>
-        val base = allowed match {
-          case Some(ok) => ok.select(col("src"), col("dst")).distinct()
-          case None => simpleEdges(g, etypes)
-        }
-        val e = Traverse.orient(base, dir)
-        if (mode == "shortest")
-          PathFinder.shortestPaths(sSet, dSet, e, upto)
-        else // all/noloop both traverse vertex-unique paths (module doc)
-          PathFinder.allPaths(sSet, dSet, e, upto)
+      case Some(alias) => PathFinder.yieldPaths(walked, alias, single)
+      case None => PathFinder.vidPaths(walked, single)
     }
   }
 

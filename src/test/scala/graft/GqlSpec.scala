@@ -154,4 +154,37 @@ class GqlSpec extends SparkSpec {
       .select("hops").as[Int].collect().toSeq
     assert(all == Seq(1), s"untyped path should use the road: $all")
   }
+
+  /** a->b->d, a->c->d, a->e->f->d and b->a, all `like` edges. */
+  private def likeCatalog = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val likes = Seq(("a", "b"), ("b", "d"), ("a", "c"), ("c", "d"),
+      ("a", "e"), ("e", "f"), ("f", "d"), ("b", "a"))
+      .toDF("src", "dst").withColumn("rank", lit(0L))
+    graft.graph.MapCatalog(
+      tags = Map("node" -> Seq("a", "b", "c", "d", "e", "f").toDF("vid")),
+      edges = Map("like" -> likes))
+  }
+
+  test("FIND SINGLE SHORTEST PATH without YIELD returns one shortest path") {
+    import spark.implicits._
+    val r = Gql.run(likeCatalog,
+        """FIND SINGLE SHORTEST PATH FROM "a" TO "d" OVER like UPTO 4 STEPS""")
+      .select("path", "hops").as[(String, Int)].collect().toSeq
+    assert(r == Seq(("a->b->d", 2)), s"got $r")
+  }
+
+  test("FIND ALL PATH without YIELD walks trails, like the YIELD form") {
+    import spark.implicits._
+    // trail semantics: a vertex may repeat (a->b->a), a stored edge may not
+    val r = Gql.run(likeCatalog,
+        """FIND ALL PATH FROM "a" TO "d" OVER like UPTO 4 STEPS""")
+      .select("path").as[String].collect().sorted.toSeq
+    assert(r == Seq("a->b->a->c->d", "a->b->d", "a->c->d", "a->e->f->d"),
+      s"got $r")
+    val yielded = Gql.run(likeCatalog,
+      """FIND ALL PATH FROM "a" TO "d" OVER like UPTO 4 STEPS YIELD path AS p""")
+    assert(yielded.count() == r.size)
+  }
 }

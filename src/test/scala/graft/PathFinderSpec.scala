@@ -15,6 +15,9 @@ class PathFinderSpec extends SparkSpec {
     ("a", "e"), ("e", "f"), ("f", "d")
   ).toDF("src", "dst")
 
+  /** `edges` plus d -> a, a cycle back to the first src. */
+  private def cyclic = edges.union(Seq(("d", "a")).toDF("src", "dst"))
+
   test("shortestPaths: returns ALL tied shortest paths, not longer ones") {
     val r = PathFinder.shortestPaths(Seq("a").toDF("vid"), Seq("d").toDF("vid"),
         edges, 5)
@@ -137,19 +140,60 @@ class PathFinderSpec extends SparkSpec {
         "-[:t]->(\"c4\")-[:t]->(\"c5\")-[:t]->(\"c6\")-[:t]->(\"t\")>"), s"got $r")
   }
 
-  test("bidiMinSteps conf dial routes shallow caps through bidi, same rows") {
-    val fwd = PathFinder.shortestPaths(Seq("a").toDF("vid"),
-        Seq("d", "f").toDF("vid"), edges, 5)
+  test("shortestPaths overlapping endpoints: no src == dst row, bidi equals forward") {
+    // a is both a src and a dst, and d -> a closes a cycle back to it:
+    // the untyped payload never emits the self pair, on either route
+    def rows(maxSteps: Int) = PathFinder.shortestPaths(
+        Seq("a", "d").toDF("vid"), Seq("a", "d").toDF("vid"), cyclic,
+        maxSteps)
       .select("src", "dst", "path", "hops")
       .as[(String, String, String, Int)].collect().sorted.toSeq
-    spark.conf.set(PathFinder.ConfBidiMinSteps, "2")
-    try {
-      val bidi = PathFinder.shortestPaths(Seq("a").toDF("vid"),
-          Seq("d", "f").toDF("vid"), edges, 5)
-        .select("src", "dst", "path", "hops")
-        .as[(String, String, String, Int)].collect().sorted.toSeq
-      assert(bidi == fwd, s"dialed-down bidi $bidi != forward $fwd")
-    } finally spark.conf.unset(PathFinder.ConfBidiMinSteps)
+    val (fwd, bidi) = (rows(5), rows(8))
+    assert(bidi == fwd, s"bidi $bidi != forward $fwd")
+    assert(fwd.toSet == Set(("a", "d", "a->b->d", 2),
+      ("a", "d", "a->c->d", 2), ("d", "a", "d->a", 1)), s"got $fwd")
+  }
+
+  test("typedPaths overlapping endpoints at a deep cap: self-pair cycles found") {
+    import org.apache.spark.sql.functions.lit
+    val te = cyclic.withColumn("etype", lit("t")).withColumn("rank", lit(0L))
+    def render(maxSteps: Int) = PathFinder.typedPaths(
+        Seq("a", "d").toDF("vid"), Seq("a", "d").toDF("vid"), te, maxSteps,
+        "shortest")
+      .select("p").as[String].collect().sorted.toSeq
+    def p(vs: String*) = vs.map(v => s"""("$v")""").mkString("<", "-[:t]->", ">")
+    val deep = render(8)
+    assert(deep.size == 7 && deep.toSet == Set(
+      p("a", "b", "d"), p("a", "c", "d"), p("a", "b", "d", "a"),
+      p("a", "c", "d", "a"), p("d", "a"), p("d", "a", "b", "d"),
+      p("d", "a", "c", "d")), s"got $deep")
+    assert(deep == render(5))
+  }
+
+  test("bigint vids: rendered paths and typed empty results") {
+    val big = Seq((1L, 2L), (2L, 4L), (1L, 3L), (3L, 5L)).toDF("src", "dst")
+    for (maxSteps <- Seq(5, 8)) {
+      val r = PathFinder.shortestPaths(Seq(1L).toDF("vid"),
+          Seq(4L).toDF("vid"), big, maxSteps)
+        .select("path", "hops").as[(String, Int)].collect().toSeq
+      assert(r == Seq(("1->2->4", 2)), s"cap $maxSteps: got $r")
+    }
+    val all = PathFinder.allPaths(Seq(1L).toDF("vid"),
+        Seq(4L, 5L).toDF("vid"), big, 4)
+      .select("path").as[String].collect().toSet
+    assert(all == Set("1->2->4", "1->3->5"))
+    val none = Seq(
+      PathFinder.shortestPaths(Seq(4L).toDF("vid"), Seq(1L).toDF("vid"), big, 4),
+      PathFinder.shortestPaths(Seq.empty[Long].toDF("vid"),
+        Seq(4L).toDF("vid"), big, 4),
+      PathFinder.allPaths(Seq.empty[Long].toDF("vid"), Seq(4L).toDF("vid"),
+        big, 4))
+    none.foreach { df =>
+      assert(df.count() == 0)
+      assert(df.schema("src").dataType == org.apache.spark.sql.types.LongType &&
+        df.schema("dst").dataType == org.apache.spark.sql.types.LongType,
+        s"untyped empty result: ${df.schema}")
+    }
   }
 
   test("allPaths: every simple path up to the cap") {

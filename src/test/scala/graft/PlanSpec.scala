@@ -87,6 +87,47 @@ class PlanSpec extends SparkSpec {
     assert(!big.contains("ResolvedHint"), s"oversized frontier hinted:\n$big")
   }
 
+  test("shortestDistances: one message exchange per hop (distinct and anti-join share it)") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false") // unwrapped plan tree
+    import s2.implicits._
+    // every hop's checkpointed frame is planned here; its join is the hop
+    val hops = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint" &&
+            qe.executedPlan.exists(_.isInstanceOf[BaseJoinExec]))
+          hops.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    s2.listenerManager.register(listener)
+    val e = (0 until 30).flatMap(i =>
+      Seq((s"v$i", s"v${i + 1}"), (s"v$i", s"v${i * 7 % 31}")))
+      .toDF("src", "dst")
+    val d = graft.traverse.Traverse.shortestDistances(
+      Seq("v0", "v3").toDF("vid"), e, 4)
+    assert(d.filter($"dist" === 4).count() > 0, "the walk stopped before hop 4")
+    // listener events arrive on the listener bus thread
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (hops.size < 4 && System.nanoTime() < deadline) Thread.sleep(50)
+    s2.listenerManager.unregister(listener)
+    assert(hops.size == 4, s"expected 4 hop plans, got ${hops.size}")
+    hops.forEach { p =>
+      // keying the distinct on (origin, vid) lets the visited anti-join
+      // reuse its partitioning: the hop's output shuffles once
+      val message = p.collect { case x: ShuffleExchangeExec
+        if x.child.exists(_.isInstanceOf[BaseJoinExec]) => x }
+      assert(message.size == 1,
+        s"expected 1 exchange over the hop join, got ${message.size}:\n$p")
+      assert(p.collect { case x: ShuffleExchangeExec => x }.size == 2,
+        s"expected the message and visited exchanges only:\n$p")
+    }
+  }
+
   test("mutation delta broadcast is gated by size (bulk delta plans a shuffle)") {
     import graft.operators.Mutations
     val tmp = java.nio.file.Files.createTempDirectory("graft-mut").toString
