@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Between-query session cleanup for long-lived drivers (Bench,
   * Verify, a notebook session). Iterative operators checkpoint
-  * per-step state and free what they can prove superseded
-  * (Traverse.freeCheckpoint), but the RESULT of a query keeps its
+  * per-step state with `Ckpt.mat` and free what they can prove
+  * superseded with `Ckpt.free`, but the RESULT of a query keeps its
   * final checkpointed blocks alive until the JVM GC notices the
   * DataFrame is unreachable — tens of queries deep, a bounded block
   * manager fills up and later iterative queries thrash (round-4

@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Ckpt
 import graft.Ckpt.MatOps
 
 /** Whole-graph analytics (the capability set of the reference
@@ -93,7 +94,7 @@ object GraphAlgos {
       if (untilConverged)
         changed = upd.filter(col("label") =!= col("__old")).count()
       // the new checkpoint holds every row — free the superseded one
-      graft.traverse.Traverse.freeCheckpoint(labels)
+      Ckpt.free(labels)
       labels = upd.drop("__old")
       round += 1
     }
@@ -145,7 +146,7 @@ object GraphAlgos {
         .mat()
       if (tol > 0.0)
         delta = upd.agg(max(abs(col("pr") - col("__old")))).head.getDouble(0)
-      graft.traverse.Traverse.freeCheckpoint(pr) // superseded by upd
+      Ckpt.free(pr) // superseded by upd
       pr = upd.drop("__old")
       round += 1
     }
@@ -256,7 +257,7 @@ object GraphAlgos {
       val c2 = upd.count()
       converged = c2 == cnt
       cnt = c2
-      graft.traverse.Traverse.freeCheckpoint(und)
+      Ckpt.free(und)
       und = upd
       round += 1
     }
@@ -306,7 +307,7 @@ object GraphAlgos {
       val upd = labels.join(pick, Seq("vid"), "left_outer")
         .select(col("vid"), coalesce(col("nlabel"), col("label")).as("label"))
         .mat()
-      graft.traverse.Traverse.freeCheckpoint(labels)
+      Ckpt.free(labels)
       labels = upd
       round += 1
     }
@@ -344,7 +345,7 @@ object GraphAlgos {
     try sccPinnedLoop(vertices, adjOut, adjIn, phases, rounds)
     finally {
       adjOut.release(); adjIn.release()
-      graft.traverse.Traverse.freeCheckpoint(e)
+      Ckpt.free(e)
     }
   }
 
@@ -390,7 +391,7 @@ object GraphAlgos {
             least(col("color"), coalesce(col("__nc"), col("color")))
               .as("color"))
           .mat()
-        graft.traverse.Traverse.freeCheckpoint(color)
+        Ckpt.free(color)
         color = upd
         r += 1
       }
@@ -405,24 +406,24 @@ object GraphAlgos {
           .filter(col("c2") === col("root"))
           .select(col("vid"), col("root"))
         val upd = reach.unionByName(step).distinct().mat()
-        graft.traverse.Traverse.freeCheckpoint(reach)
+        Ckpt.free(reach)
         reach = upd
         r += 1
       }
       val assigned = reach.select(col("vid"), col("root").as("scc_id")).mat()
-      graft.traverse.Traverse.freeCheckpoint(reach)
+      Ckpt.free(reach)
       acc = if (acc == null) assigned
             else {
               val u = acc.unionByName(assigned).mat()
-              graft.traverse.Traverse.freeCheckpoint(acc)
+              Ckpt.free(acc)
               u
             }
       val rem2 = rem.join(assigned.select("vid"), Seq("vid"), "left_anti").mat()
-      graft.traverse.Traverse.freeCheckpoint(rem)
-      graft.traverse.Traverse.freeCheckpoint(color)
+      Ckpt.free(rem)
+      Ckpt.free(color)
       // acc's union checkpoint copied assigned's rows (unless aliased on
       // the first phase) — mirror sccUntilConverged's release
-      if (assigned ne acc) graft.traverse.Traverse.freeCheckpoint(assigned)
+      if (assigned ne acc) Ckpt.free(assigned)
       rem = rem2
       remCnt = rem.count()
       p += 1
@@ -444,7 +445,7 @@ object GraphAlgos {
     try sccConvergedLoop(vertices, adjOut, adjIn, maxRounds)
     finally {
       adjOut.release(); adjIn.release()
-      graft.traverse.Traverse.freeCheckpoint(e)
+      Ckpt.free(e)
     }
   }
 
@@ -469,7 +470,7 @@ object GraphAlgos {
               .as("color"))
           .mat()
         changed = upd.filter(col("color") =!= col("__old")).count()
-        graft.traverse.Traverse.freeCheckpoint(color)
+        Ckpt.free(color)
         color = upd.drop("__old")
         guard += 1
       }
@@ -490,7 +491,7 @@ object GraphAlgos {
         val upd = reach.unionByName(step).distinct().mat()
         val c2 = upd.count()
         grew = c2 - cnt; cnt = c2
-        graft.traverse.Traverse.freeCheckpoint(reach)
+        Ckpt.free(reach)
         reach = upd
         guard += 1
       }
@@ -500,14 +501,14 @@ object GraphAlgos {
       acc = if (acc == null) assigned
             else {
               val u = acc.unionByName(assigned).mat()
-              graft.traverse.Traverse.freeCheckpoint(acc)
+              Ckpt.free(acc)
               u
             }
       val rem2 = rem.join(assigned.select("vid"), Seq("vid"), "left_anti").mat()
-      graft.traverse.Traverse.freeCheckpoint(rem)
-      graft.traverse.Traverse.freeCheckpoint(reach)
-      graft.traverse.Traverse.freeCheckpoint(color)
-      if (assigned ne acc) graft.traverse.Traverse.freeCheckpoint(assigned)
+      Ckpt.free(rem)
+      Ckpt.free(reach)
+      Ckpt.free(color)
+      if (assigned ne acc) Ckpt.free(assigned)
       rem = rem2
       remCnt = rem.count()
     }
@@ -578,11 +579,11 @@ object GraphAlgos {
           coalesce(col("nlabel"), col("label")).as("label"),
           coalesce(col("nscore"), col("score")).as("score"))
         .mat()
-      graft.traverse.Traverse.freeCheckpoint(state)
+      Ckpt.free(state)
       state = upd
       round += 1
     }
-    graft.traverse.Traverse.freeCheckpoint(deg)
+    Ckpt.free(deg)
     state
   }
 
@@ -615,7 +616,7 @@ object GraphAlgos {
     // capped is fully superseded once enriched is materialized (deg was
     // computed during that materialization; nothing reads capped again)
     // — free its blocks now instead of holding them for the session
-    graft.traverse.Traverse.freeCheckpoint(capped)
+    Ckpt.free(capped)
     val common = enriched.as("x").join(enriched.as("y"),
         col("x.dst") === col("y.dst") && col("x.src") < col("y.src"))
       .groupBy(col("x.src").as("a"), col("y.src").as("b"))
@@ -772,7 +773,7 @@ object GraphAlgos {
           when(gate && col("nc").isNotNull, col("nc"))
             .otherwise(col("c")).as("c"))
         .mat()
-      graft.traverse.Traverse.freeCheckpoint(assign)
+      Ckpt.free(assign)
       assign = upd
       round += 1
     }
@@ -787,8 +788,8 @@ object GraphAlgos {
     try { both.unpersist(blocking = false) } catch { case _: Throwable => () }
     // undM passed in pre-materialized belongs to the caller (the
     // multi-level driver still contracts over it)
-    if (undM ne und) graft.traverse.Traverse.freeCheckpoint(undM)
-    graft.traverse.Traverse.freeCheckpoint(deg)
+    if (undM ne und) Ckpt.free(undM)
+    Ckpt.free(deg)
     (assign, improving)
   }
 
@@ -865,7 +866,7 @@ object GraphAlgos {
             .join(a.select(col("vid").as("__mid2"), col("c")),
               col("__mid") === col("__mid2"))
             .select(col("vid"), col("c")).mat()
-          graft.traverse.Traverse.freeCheckpoint(mapping)
+          Ckpt.free(mapping)
           m2
         }
       if (l < levels && !done) {
@@ -890,19 +891,19 @@ object GraphAlgos {
           .select(col("c").as("vid"), col("sw")))
         val allSelf = rolledPrior.map(intra.unionByName(_)).getOrElse(intra)
           .groupBy("vid").agg(sum("sw").as("sw")).mat()
-        selfW.foreach(graft.traverse.Traverse.freeCheckpoint)
-        graft.traverse.Traverse.freeCheckpoint(curM)
+        selfW.foreach(Ckpt.free)
+        Ckpt.free(curM)
         selfW = Some(allSelf)
         cur = superUnd
-        if (prevMapping != null) graft.traverse.Traverse.freeCheckpoint(a)
+        if (prevMapping != null) Ckpt.free(a)
       }
       l += 1
     }
     // release the LAST level's frames: the unfolded mapping is a
     // self-contained checkpoint (lastA aliases mapping when levels==1)
-    if (lastA ne mapping) graft.traverse.Traverse.freeCheckpoint(lastA)
-    graft.traverse.Traverse.freeCheckpoint(cur) // no-op when still lazy
-    selfW.foreach(graft.traverse.Traverse.freeCheckpoint)
+    if (lastA ne mapping) Ckpt.free(lastA)
+    Ckpt.free(cur) // no-op when still lazy
+    selfW.foreach(Ckpt.free)
     mapping
   }
 
@@ -1009,7 +1010,7 @@ object GraphAlgos {
     // every per-step cur was checkpointed EAGERLY, so neither the
     // adjacency nor the degree frame is in any live lineage — release
     // the stored-path persist and the degree checkpoint
-    graft.traverse.Traverse.freeCheckpoint(od)
+    Ckpt.free(od)
     if (stored)
       try { adj.unpersist(blocking = false) } catch { case _: Throwable => () }
     out
@@ -1100,13 +1101,13 @@ object GraphAlgos {
         levels :+= nxt
         levelRows :+= frontierRows
         val v2 = visited.unionByName(nxt.select("origin", "vid")).mat()
-        graft.traverse.Traverse.freeCheckpoint(visited)
+        Ckpt.free(visited)
         visited = v2
         visitedRows += frontierRows
-      } else graft.traverse.Traverse.freeCheckpoint(nxt) // terminating empty frontier
+      } else Ckpt.free(nxt) // terminating empty frontier
       step += 1
     }
-    graft.traverse.Traverse.freeCheckpoint(visited)
+    Ckpt.free(visited)
     // ---- backward: dependency accumulation, deepest level first ----
     // every computed level 1..deepest contributes rows (the deepest
     // with δ = 0 — endpoints carry no dependency), so the output lists
@@ -1116,7 +1117,7 @@ object GraphAlgos {
       acc = if (acc == null) dl
             else {
               val u = acc.unionByName(dl).mat()
-              graft.traverse.Traverse.freeCheckpoint(acc)
+              Ckpt.free(acc)
               u
             }
     var deltaAbove = levels.last.withColumn("delta", lit(0.0))
@@ -1154,14 +1155,14 @@ object GraphAlgos {
       // answers from, and must not re-free the one accAdd just
       // released (on the first backward round deltaAbove == old acc)
       if ((deltaAbove ne acc) && (deltaAbove ne accBefore))
-        graft.traverse.Traverse.freeCheckpoint(deltaAbove)
-      graft.traverse.Traverse.freeCheckpoint(levels(l)) // consumed
+        Ckpt.free(deltaAbove)
+      Ckpt.free(levels(l)) // consumed
       deltaAbove = dl
       l -= 1
     }
-    if (deltaAbove ne acc) graft.traverse.Traverse.freeCheckpoint(deltaAbove)
-    graft.traverse.Traverse.freeCheckpoint(levels.head)
-    if (levels.size >= 2) graft.traverse.Traverse.freeCheckpoint(levels.last)
+    if (deltaAbove ne acc) Ckpt.free(deltaAbove)
+    Ckpt.free(levels.head)
+    if (levels.size >= 2) Ckpt.free(levels.last)
     if (acc == null)
       seeds.sparkSession.emptyDataFrame
         .withColumn("vid", lit("")).withColumn("bc", lit(0.0)).limit(0)
@@ -1314,7 +1315,7 @@ object GraphAlgos {
       val upd = dist.unionByName(ext)
         .groupBy("vid").agg(min(col("dist")).as("dist"))
         .mat()
-      graft.traverse.Traverse.freeCheckpoint(dist)
+      Ckpt.free(dist)
       dist = upd
       round += 1
     }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import graft.traverse.Traverse
 import graft.traverse.Traverse.{Direction, Out}
+import graft.Ckpt
 import graft.Ckpt.MatOps
 
 /** FIND PATH family (SURVEY.md §2.5): src→dst endpoint semantics with
@@ -89,14 +90,14 @@ object PathFinder {
         // union-of-distincts stays distinct without a global re-dedup
         val v2 = visited
           .unionByName(next.select("origin", "vid").distinct()).mat()
-        Traverse.freeCheckpoint(visited)
+        Ckpt.free(visited)
         visited = v2
         levels :+= next
         acc = acc.unionByName(next)
         frontier = next
         top += 1
         next
-      } else { Traverse.freeCheckpoint(next); null }
+      } else { Ckpt.free(next); null }
     }
     /** Stop expanding fully-resolved origins: record their final
       * depth (= current top) and filter them out of the frontier with
@@ -123,7 +124,7 @@ object PathFinder {
       Some(spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema))
     }
-    def close(): Unit = Traverse.freeCheckpoint(visited)
+    def close(): Unit = Ckpt.free(visited)
   }
 
   /** ADAPTIVE bidirectional meet-in-the-middle driver (the reference's
@@ -236,7 +237,7 @@ object PathFinder {
           met += freshCnt
           val m2 = (if (metPairs == null) fresh
                     else metPairs.unionByName(fresh)).mat()
-          if (metPairs != null) Traverse.freeCheckpoint(metPairs)
+          if (metPairs != null) Ckpt.free(metPairs)
           metPairs = m2
           // new meets may have fully resolved some endpoints: stop
           // expanding them (seeded many-pair searches otherwise keep
@@ -246,7 +247,7 @@ object PathFinder {
             pruneResolved(bSide, "__pt", needBm)
           }
         }
-        Traverse.freeCheckpoint(fresh)
+        Ckpt.free(fresh)
       }
     while (fSide.top + bSide.top < maxSteps &&
            fSide.cnt > 0 && bSide.cnt > 0 &&
@@ -261,7 +262,7 @@ object PathFinder {
         recordMeets(nl, fSide, newIsFwd = false)
       }
     }
-    if (metPairs != null) Traverse.freeCheckpoint(metPairs)
+    if (metPairs != null) Ckpt.free(metPairs)
     fSide.close(); bSide.close()
   }
 
@@ -407,17 +408,17 @@ object PathFinder {
       found = if (found == null) hit else found.unionByName(hit)
       if (visited != null) {
         val v2 = visited.unionByName(next.select("origin", "vid")).mat()
-        Traverse.freeCheckpoint(visited)
+        Ckpt.free(visited)
         visited = v2
       }
-      Traverse.freeCheckpoint(frontier) // consumed by next + hits
+      Ckpt.free(frontier) // consumed by next + hits
       frontier = next
       cnt = frontier.count()
       step += 1
     }
-    Traverse.freeCheckpoint(frontier)
-    if (visited != null) Traverse.freeCheckpoint(visited)
-    Traverse.freeCheckpoint(dstSet)
+    Ckpt.free(frontier)
+    if (visited != null) Ckpt.free(visited)
+    Ckpt.free(dstSet)
     Traverse.releaseEdges(e, maxSteps) // hits are checkpointed
     if (found == null) hits(seed0, 0).limit(0) else found
   }
@@ -484,8 +485,8 @@ object PathFinder {
         (if (typed) Seq(concat(col("__fs"), reverse(col("__bs"))).as("steps"))
          else Nil) :+ col("hops"): _*)
       .mat() // result-sized; lets every level checkpoint be freed
-    fS.levels.foreach(Traverse.freeCheckpoint)
-    bS.levels.foreach(Traverse.freeCheckpoint)
+    fS.levels.foreach(Ckpt.free)
+    bS.levels.foreach(Ckpt.free)
     Traverse.releaseEdges(eF, maxSteps)
     Traverse.releaseEdges(eB, maxSteps)
     out

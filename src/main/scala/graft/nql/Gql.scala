@@ -344,7 +344,7 @@ object Gql {
                       dstRef: Option[InRef] = None,
                       where: Option[Expr.E] = None) extends Stmt
   case class Subgraph(steps: Int, seeds: Seq[Any], etypes: Seq[String],
-                      dir: Direction, yieldEdges: Boolean) extends Stmt
+                      dir: Direction) extends Stmt
   /** GET SUBGRAPH with an explicit YIELD — the reference's step-row
     * output: row i = (vertices first reached at step i, edges walked
     * expanding step i), as rendered lists. `specs` = the
@@ -913,8 +913,8 @@ object Gql {
         require(sgWhere.isEmpty, "GET SUBGRAPH WHERE needs the YIELD form")
         require(seedsRef.isEmpty, "GET SUBGRAPH $-. seeds need YIELD")
         specs.toSeq match {
-          case Seq((d, ets)) => Subgraph(steps, seeds, ets, d, yieldEdges = false)
-          case Seq() => Subgraph(steps, seeds, Seq("*"), Both, yieldEdges = false)
+          case Seq((d, ets)) => Subgraph(steps, seeds, ets, d)
+          case Seq() => Subgraph(steps, seeds, Seq("*"), Both)
           case mixed =>
             // per-direction edge lists without YIELD output the
             // default columns (SubgraphBeforePipe `OUT serve BOTH
@@ -1375,10 +1375,9 @@ object Gql {
         execFetchEdge(g, fe, pairs)
       case fp: FindPath => execFindPath(g, fp, None, env)
       case sg: SubgraphY => execSubgraphY(g, sg, None, env)
-      case Subgraph(steps, seeds, etypes, dir, yieldEdges) =>
-        val res = Traverse.subgraph(seedsDf(spark, seeds),
-          simpleEdges(g, etypes), steps, dir)
-        if (yieldEdges) res.edges else res.vertices
+      case Subgraph(steps, seeds, etypes, dir) =>
+        Traverse.subgraph(seedsDf(spark, seeds), simpleEdges(g, etypes),
+          steps, dir).select(col("vid"), col("step").as("depth"))
       case Unwind(e, alias) =>
         spark.range(1).select(
           explode(Expr.compile(e, Expr.noResolver)).as(alias))
@@ -1601,36 +1600,15 @@ object Gql {
     // a WHERE clause filters edges on their props (and $$ dst-tag
     // props) during expansion — needs the property-carrying edge view
     val needProps = where.isDefined
-    def orientCols(b: DataFrame, swap: Boolean): DataFrame = {
-      val others = b.columns.filterNot(Seq("src", "dst").contains).map(col)
-      if (!swap)
-        b.select(Seq(col("src"), col("dst"), col("src").as("ss"),
-          col("dst").as("sd")) ++ others: _*)
-      else
-        b.select(Seq(col("dst").as("src"), col("src").as("dst"),
-          col("src").as("ss"), col("dst").as("sd")) ++ others: _*)
-    }
     val allTypes = specs.flatMap { case (_, l) =>
       if (l == Seq("*")) g.edgeTypeNames else l }.distinct
-    // persist the STORED base per spec: the BFS inside subgraphSteps
-    // scans the oriented view once per hop plus once for the edge
-    // emission, and a Both-direction orientation derives both halves
-    // from ONE cached copy instead of materializing the doubled union
-    val bases = specs.map { case (d, list) =>
+    val oriented0 = specs.map { case (d, list) =>
       val ets = if (list == Seq("*")) g.edgeTypeNames else list
       val base =
         if (needProps) g.edgesWithProps(ets).withColumnRenamed("__etype", "etype")
         else if (list == Seq("*")) g.allEdges
         else g.allEdges.filter(col("etype").isin(list: _*))
-      (d, Traverse.persistEdges(base, steps = steps + 1))
-    }
-    val oriented0 = bases.map { case (d, base) =>
-      d match {
-        case Out => orientCols(base, swap = false)
-        case In => orientCols(base, swap = true)
-        case Both => orientCols(base, swap = false)
-          .unionByName(orientCols(base, swap = true))
-      }
+      Traverse.orientCols(base, d)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
     val oriented = where match {
       case Some(w) =>
@@ -1660,15 +1638,13 @@ object Gql {
           .select("src", "dst", "etype", "rank", "ss", "sd")
       case None => oriented0
     }
-    val (verts, edges) = Traverse.subgraphSteps(seedFrame, oriented, steps)
-    // both outputs are checkpointed inside subgraphSteps — safe to
-    // release the base caches immediately
-    bases.foreach { case (_, b) => Traverse.releaseEdges(b, steps = steps + 1) }
+    val verts = Traverse.subgraph(seedFrame, oriented, steps, Out)
     val strVid = seedFrame.schema("vid").dataType ==
       org.apache.spark.sql.types.StringType
     val vRows = verts.groupBy("step")
       .agg(collect_list(renderNode(col("vid"), strVid)).as("__v"))
-    val eRows =
+    lazy val eRows = {
+      val edges = Traverse.inducedEdges(verts, oriented)
       (if (steps == 0) edges.limit(0) else edges) // 0 STEPS: vertices only
         .groupBy("step")
         .agg(
@@ -1681,20 +1657,14 @@ object Gql {
           // (round-4 VERDICT #1: render-then-regex anti-pattern)
           collect_list(struct(col("ss").as("src"), col("sd").as("dst"),
             col("etype"), col("rank"))).as("__estruct"))
-    val eStructT = org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("src",
-          edges.schema("ss").dataType),
-        org.apache.spark.sql.types.StructField("dst",
-          edges.schema("sd").dataType),
-        org.apache.spark.sql.types.StructField("etype",
-          edges.schema("etype").dataType),
-        org.apache.spark.sql.types.StructField("rank",
-          edges.schema("rank").dataType))))
-    val joined = vRows.join(eRows, Seq("step"), "left")
-      .withColumn("__e", coalesce(col("__e"), array().cast("array<string>")))
-      .withColumn("__estruct", coalesce(col("__estruct"),
-        array().cast(eStructT)))
+    }
+    // a vertices-only YIELD never reads the induced edges: skip the pass
+    val joined =
+      if (!yields.exists(_._1 == "edges")) vRows
+      else vRows.join(eRows, Seq("step"), "left")
+        .withColumn("__e", coalesce(col("__e"), array().cast("array<string>")))
+        .withColumn("__estruct", coalesce(col("__estruct"),
+          array().cast(eRows.schema("__estruct").dataType)))
     joined.select(yields.flatMap { case (what, alias) =>
       if (what == "vertices") Seq(col("__v").as(alias))
       else Seq(col("__e").as(alias), col("__estruct").as(s"__edges_$alias"))

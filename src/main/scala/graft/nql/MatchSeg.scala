@@ -1005,55 +1005,30 @@ object MatchSeg {
         baseF.select(col("src"), col("dst"), eidCol.as("__eid"),
           estruct.as("__es"))
       else baseF.select(col("src"), col("dst"), eidCol.as("__eid"))
-    // lazy persist, NOT localCheckpoint: the property-carrying edge
-    // table is the biggest frame in the system — an eager checkpoint
-    // copies all of it before the first hop even runs (round-4 VERDICT
-    // #3); persist materializes lazily, partition by partition, as the
-    // hop joins touch it, and is released at loop exit
     // orientDedup drops reversed self-loops instead of a whole-frame
     // distinct (same rule as the single-hop path), keeping the frame a
-    // shuffle-free view over stored scans so persistEdges can skip the
-    // block-manager copy (SelfReflectiveEdges.feature stays green)
-    val oriented = Traverse.orientDedup(base, rel.dir)
-    val e = Traverse.persistEdges(oriented, math.max(n, 2))
-
-    val seeds = binding.select(col(fromVar).as("__o")).distinct()
-    val empty = array().cast("array<string>")
-    val emptyEdges = array().cast(
-      s"array<${e.schema.find(_.name == "__es").map(_.dataType.sql).getOrElse("string")}>")
-    def zero(df: DataFrame): DataFrame = {
-      val b2 = df.select(col("__o"), col("__o").as("__v"), empty.as("__ep"))
-      if (withEdges) b2.withColumn("__edges", emptyEdges) else b2
+    // shuffle-free view over stored scans so Traverse.expand's lazy
+    // persistEdges can skip the block-manager copy — never an eager
+    // checkpoint of the property-carrying edge table (round-4 VERDICT
+    // #3; SelfReflectiveEdges.feature stays green)
+    val e = Traverse.orientDedup(base, rel.dir)
+    val origins = binding.select(col(fromVar).as("origin")).distinct()
+    val seed0 = origins.select(col("origin"), col("origin").as("vid"),
+      array().cast("array<string>").as("__ep"))
+    val seed =
+      if (withEdges) seed0.withColumn("__edges",
+        array().cast(s"array<${base.schema("__es").dataType.sql}>"))
+      else seed0
+    val levels = Traverse.expand(seed, e, n, keep = m to n) { (hop, _) =>
+      hop.filter(!array_contains(col("__ep"), col("__eid")))
+        .select(Seq(col("origin"), col("dst").as("vid"),
+          concat(col("__ep"), array(col("__eid"))).as("__ep")) ++
+          (if (withEdges)
+            Seq(concat(col("__edges"), array(col("__es"))).as("__edges"))
+          else Nil): _*)
     }
-    var frontier = zero(seeds).mat()
-    var cnt = frontier.count()
-    var acc: DataFrame = if (m == 0) zero(seeds) else null
-    var step = 1
-    while (step <= n && cnt > 0) {
-      val sel = Seq(col("__o"), e("dst").as("__v2"),
-        concat(col("__ep"), array(e("__eid"))).as("__ep")) ++
-        (if (withEdges)
-          Seq(concat(col("__edges"), array(e("__es"))).as("__edges"))
-        else Nil)
-      val next = Traverse.maybeBroadcast(frontier, cnt)
-        .join(e, col("__v") === e("src"))
-        .filter(!array_contains(col("__ep"), e("__eid")))
-        .select(sel: _*)
-        .withColumnRenamed("__v2", "__v")
-      val mat = next.mat()
-      cnt = mat.count()
-      // frontiers below step m never reach acc — free once superseded
-      if (step <= math.max(m, 1)) Traverse.freeCheckpoint(frontier)
-      frontier = mat
-      if (step >= math.max(m, 1) && cnt > 0) {
-        acc = if (acc == null) frontier else acc.unionByName(frontier)
-      }
-      step += 1
-    }
-    if (cnt == 0) Traverse.freeCheckpoint(frontier) // empty tail
-    Traverse.releaseEdges(e, math.max(n, 2))
-    val out = if (acc == null) zero(seeds).limit(0) else acc
-    val outCols = Seq(col("__o").as(fromVar), col("__v").as("__vl_to"),
+    val out = Traverse.unionLevels(levels).getOrElse(seed.limit(0))
+    val outCols = Seq(col("origin").as(fromVar), col("vid").as("__vl_to"),
       col("__ep").as("__vl_ep")) ++
       (if (withEdges) Seq(col("__edges").as("__vl_edges")) else Nil)
     out.select(outCols: _*)

@@ -290,14 +290,17 @@ object GraphQueries {
     "q_subgraph_vertices" -> ((s, dir) => {
       val g = gm(s, dir)
       Traverse.subgraph(g.customers.filter(col("vid") === "c:1").select("vid"),
-        g.edges, 2, Both).vertices
+        g.edges, 2, Both).select(col("vid"), col("step").as("depth"))
     }),
 
     // ...and induced edges (DataCollect kSubgraph, Query.h:1423-1432)
     "q_subgraph_edges" -> ((s, dir) => {
       val g = gm(s, dir)
-      Traverse.subgraph(g.customers.filter(col("vid") === "c:1").select("vid"),
-        g.edges, 2, Both).edges
+      val reached = Traverse.subgraph(
+        g.customers.filter(col("vid") === "c:1").select("vid"), g.edges, 2, Both)
+      Traverse.inducedEdges(reached, Traverse.orientCols(g.edges, Both))
+        .select(col("ss").as("src"), col("sd").as("dst"), col("etype"),
+          col("rank"))
     })
   )
 

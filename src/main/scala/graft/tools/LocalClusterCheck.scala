@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   *
   * `local[k]` hides two cluster failure modes: (1) localCheckpoint
   * blocks live in executor JVMs and vanish with them, and (2)
-  * `Traverse.freeCheckpoint` unpersists RDDs that — locally — can
+  * `Ckpt.free` unpersists RDDs that — locally — can
   * never be recomputed. This main runs the ITERATIVE query subset
   * (traversals, shortest paths, subgraph, the whole-graph algorithms,
   * dedup clustering, LDBC expansions) on `local-cluster[2,2,2048]` —
@@ -56,7 +56,7 @@ object LocalClusterCheck {
     // unrecoverable for a freed localCheckpoint)
     val probe = graft.Ckpt.mat(cluster.range(1000).toDF("id"))
     val before = probe.count()
-    graft.traverse.Traverse.freeCheckpoint(probe)
+    graft.Ckpt.free(probe)
     val after = probe.count()
     require(before == after && after == 1000L,
       s"freed reliable checkpoint not recomputable: $before vs $after")

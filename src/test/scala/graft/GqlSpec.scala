@@ -88,6 +88,27 @@ class GqlSpec extends SparkSpec {
     assert(yields == Seq(("vertices", "v"), ("edges", "e")))
   }
 
+  test("GET SUBGRAPH: the YIELD and plain forms reach the same vertex rings") {
+    import spark.implicits._
+    // a cycle a->c->d->a, a self-loop on b, an in-edge x->a the OUT walk
+    // never takes, and d->y one hop past the 2-step limit
+    val g = graft.graph.MapCatalog(
+      Map("v" -> Seq("a", "b", "c", "d", "x", "y").toDF("vid")),
+      Map("e" -> Seq(("a", "c"), ("c", "d"), ("d", "a"), ("b", "b"),
+        ("x", "a"), ("d", "y")).toDF("src", "dst")
+        .withColumn("rank", org.apache.spark.sql.functions.lit(0L))))
+    val plain = Gql.run(g, """GET SUBGRAPH 2 STEPS FROM "a", "b" OUT e""")
+      .as[(String, Int)].collect().toMap
+    assert(plain == Map("a" -> 0, "b" -> 0, "c" -> 1, "d" -> 2))
+    // the YIELD form has one row per step, listing that step's
+    // vertices rendered as ("vid")
+    val rings = Gql.run(g,
+      """GET SUBGRAPH 2 STEPS FROM "a", "b" OUT e YIELD VERTICES AS v""")
+      .as[Seq[String]].collect().map(_.map(_.stripPrefix("(\"")
+        .stripSuffix("\")")).toSet).toSet
+    assert(rings == plain.groupBy(_._2).values.map(_.keySet).toSet)
+  }
+
   test("set sentences: UNION / UNION ALL / INTERSECT / MINUS (left-assoc)") {
     val SetOp("minus", _, SetOp("union", false, _, _), _) = Gql.parse(
       """GO FROM "a" OVER like YIELD vid UNION GO FROM "b" OVER like YIELD vid MINUS GO FROM "c" OVER like YIELD vid"""): @unchecked

@@ -52,7 +52,7 @@ class TraverseSpec extends SparkSpec {
   test("go: edge-multiplicity mode keeps duplicate rows") {
     val dup = edges.unionByName(Seq(("a", "b")).toDF("src", "dst"))
     val ded = Traverse.go(seeds("a"), dup, 1, 1).count()
-    val bag = Traverse.go(seeds("a"), dup, 1, 1, dedupPerStep = false).count()
+    val bag = Traverse.goYield(seeds("a"), dup, 1, 1).count()
     assert(ded == 2 && bag == 3)
   }
 
@@ -63,12 +63,6 @@ class TraverseSpec extends SparkSpec {
     assert(r.forall(p => p.split("-").distinct.length == p.split("-").length))
     assert(r.contains("a-b-c-d"))
     assert(!r.exists(_.endsWith("-a"))) // cycle back to a is cut
-  }
-
-  test("paths: noLoop=false allows revisits up to n") {
-    val r = Traverse.paths(seeds("a"), edges, 4, 4, noLoop = false)
-      .select(array_join(col("path"), "-").as("p")).as[String].collect().toSet
-    assert(r.contains("a-b-c-d-a")) // walk returning to origin survives
   }
 
   test("appendVertices: prefixes prop columns, colliding names survive") {
@@ -88,19 +82,71 @@ class TraverseSpec extends SparkSpec {
     assert(r == Map("a" -> 0, "b" -> 1, "c" -> 1, "d" -> 2))
   }
 
+  private def typed(e: org.apache.spark.sql.DataFrame) =
+    e.withColumn("etype", lit("e")).withColumn("rank", lit(0L))
+
   test("subgraph: returns vertices with depth AND induced edges") {
-    val sg = Traverse.subgraph(seeds("a"), edges, 1, Out)
-    val vs = sg.vertices.as[(String, Int)].collect().toMap
+    val verts = Traverse.subgraph(seeds("a"), edges, 1, Out)
+    val vs = verts.as[(String, Int)].collect().toMap
     assert(vs == Map("a" -> 0, "b" -> 1, "c" -> 1))
-    val es = sg.edges.select("src", "dst").as[(String, String)].collect().toSet
+    val es = Traverse.inducedEdges(verts, Traverse.orientCols(typed(edges), Out))
+      .select("ss", "sd").as[(String, String)].collect().toSet
     // only edges with BOTH endpoints reached: a->b, a->c, b->c
     assert(es == Set(("a", "b"), ("a", "c"), ("b", "c")))
   }
 
-  test("capPerSrc: bounds per-source fan-out deterministically") {
-    val r1 = Traverse.capPerSrc(edges, 1)
-    assert(r1.groupBy("src").count().select(max("count")).as[Long].head() == 1L)
-    val r2 = Traverse.capPerSrc(edges, 1).collect().toSet
-    assert(r2 == r1.collect().toSet) // deterministic across evaluations
+  /** Checkpoints and caches created while `body` runs on this thread that
+    * are still live after it. Suites share the session and run
+    * concurrently, so only RDDs whose creation site is this call's tag
+    * are counted. */
+  private def liveAfter(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val site = s"live-check-${java.util.UUID.randomUUID}"
+    sc.setCallSite(site)
+    try body finally sc.clearCallSite()
+    sc.getPersistentRDDs.values.count(_.toString.endsWith(s" at $site"))
+  }
+
+  test("level checkpoints: only the levels a result reads stay live") {
+    // goYield's step-3 rows are the lazy hop out of level 2: one level
+    assert(liveAfter(Traverse.goYield(seeds("a"), edges, 3, 3).collect()) == 1)
+    // subgraph's vertices are the visited checkpoint; its edges are lazy
+    assert(liveAfter {
+      val v = Traverse.subgraph(seeds("a"), edges, 2, Out)
+      v.collect()
+      Traverse.inducedEdges(v, Traverse.orientCols(typed(edges), Out)).collect()
+    } == 1)
+  }
+
+  test("differential: go, goYield, shortestDistances and subgraph agree") {
+    // a cycle a->b->c->a, a self-loop c->c, parallel a->b edges with
+    // different ranks, and z: an isolated vertex
+    val g = Seq(("a", "b", 0L), ("a", "b", 1L), ("b", "c", 0L),
+      ("c", "a", 0L), ("c", "c", 0L), ("c", "d", 0L))
+      .toDF("src", "dst", "rank").withColumn("etype", lit("e"))
+    val from = seeds("a", "d", "z")
+    for (dir <- Seq(Out, In, Both); (m, n) <- Seq((1, 1), (1, 3), (2, 3))) {
+      val ctx = s"$dir $m..$n"
+      val go = Traverse.go(from, g, m, n, dir)
+        .as[(String, String, Int)].collect().toSet
+      val yielded = Traverse.goYield(from, g, m, n, dir)
+        .select("origin", "dst", "step").as[(String, String, Int)]
+        .collect().toSet
+      assert(go == yielded, ctx)
+      if (m == 1) {
+        val dist = Traverse.shortestDistances(from, g, n, dir)
+          .as[(String, String, Int)].collect()
+          .map { case (o, v, d) => (o, v) -> d }.toMap
+        val minStep = go.groupBy { case (o, v, _) => (o, v) }
+          .map { case (k, rows) => k -> rows.map(_._3).min } ++
+          Seq("a", "d", "z").map(s => (s, s) -> 0)
+        assert(dist == minStep, ctx)
+        val depth = Traverse.subgraph(from, g, n, dir)
+          .as[(String, Int)].collect().toMap
+        val minOverOrigins = dist.groupBy(_._1._2)
+          .map { case (v, ds) => v -> ds.values.min }
+        assert(depth == minOverOrigins, ctx)
+      }
+    }
   }
 }
