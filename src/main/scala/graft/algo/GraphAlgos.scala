@@ -15,12 +15,57 @@ import graft.Ckpt.MatOps
   * is also the production-sane choice: convergence detection costs an
   * extra action per round).
   *
+  * One loop: WCC, PageRank, k-core, LPA, HANP, SSSP, the Louvain move
+  * rounds and SCC's colour and reach rounds all run on [[iterate]], the
+  * vertex-state driver (GraphX's Pregel plays this part): each round
+  * materializes the caller's step, runs an optional exit probe on the
+  * checkpoint and frees the superseded state. The walk-style loops
+  * (random walks, node2vec, betweenness, the Louvain level loop) keep
+  * their own, since they accumulate output or per-level frames.
+  *
   * Scale: each iteration is one shuffle on dst (message aggregation)
   * + one join on vid (state update), with the state frame
   * checkpointed per round — same posture as the traversal loops.
   * PageRank contributions use map-side combine via groupBy.sum.
   */
 object GraphAlgos {
+
+  /** The vertex-state driver: round r materializes `step(state, r)`,
+    * runs `exit` (if any) on the materialized frame, drops the probe's
+    * `__old` column, frees the superseded state, and stops after
+    * `rounds` rounds or once `exit` fires. Returns the final state and
+    * whether `exit` fired. */
+  private def iterate(init: DataFrame, rounds: Int,
+                      exit: Option[DataFrame => Boolean] = None)(
+      step: (DataFrame, Int) => DataFrame): (DataFrame, Boolean) = {
+    var state = init
+    var fired = false
+    var round = 0
+    while (round < rounds && !fired) {
+      val upd = step(state, round).mat()
+      fired = exit.exists(_(upd))
+      Ckpt.free(state)
+      state = if (upd.columns.contains("__old")) upd.drop("__old") else upd
+      round += 1
+    }
+    (state, fired)
+  }
+
+  /** Exit probe for label loops: no `c` value differs from its `__old`
+    * copy (one count per round against the checkpoint). */
+  private def unchanged(c: String): DataFrame => Boolean =
+    _.filter(col(c) =!= col("__old")).count() == 0
+
+  /** Exit probe for monotone loops: the round kept the previous round's
+    * row count (one count of `init` now, one per round after). */
+  private def sameRowCount(init: DataFrame): DataFrame => Boolean = {
+    var cnt = init.count()
+    upd => { val c = upd.count(); val same = c == cnt; cnt = c; same }
+  }
+
+  /** Run `f` on `adj`, then release the adjacency's cache. */
+  private def using[T](adj: Adjacency)(f: Adjacency => T): T =
+    try f(adj) finally adj.release()
 
   /** In/out degree per vertex (0-degree vertices kept). */
   def degrees(vertices: DataFrame, edges: DataFrame): DataFrame = {
@@ -50,16 +95,14 @@ object GraphAlgos {
     * `iters` as the safety cap — correct on ANY diameter. */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
                           iters: Int,
-                          untilConverged: Boolean = false): DataFrame = {
+                          untilConverged: Boolean = false): DataFrame =
     // pre-partitioned on the per-round join key: the cached layout
     // satisfies the join's distribution, so each round shuffles only
     // the (small) label state, never the big edge frame
-    val adj = new FrameAdjacency(
+    using(new FrameAdjacency(
       edges.select(col("src"), col("dst"))
-        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))))
-    try ccLoop(vertices, adj, iters, untilConverged)
-    finally adj.release()
-  }
+        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))))(
+      connectedComponents(vertices, _, iters, untilConverged))
 
   /** WCC over a pre-built [[Adjacency]] (both directions already
     * encoded) — the GraphStore path: a [[StoredAdjacency]] of the
@@ -69,54 +112,36 @@ object GraphAlgos {
     * bit-identical to the frame path. */
   def connectedComponents(vertices: DataFrame, adj: Adjacency,
                           iters: Int, untilConverged: Boolean): DataFrame =
-    ccLoop(vertices, adj, iters, untilConverged)
-
-  private def ccLoop(vertices: DataFrame, adj: Adjacency,
-                     iters: Int, untilConverged: Boolean): DataFrame = {
-    var labels = vertices.select(col("vid"), col("vid").as("label"))
-      .mat()
-    var round = 0
-    var changed = 1L
     // A fixpoint early-exit in oracle mode was tried and reverted with
     // measurement (round 13): the bench graph's iteration counts are
     // tuned to the diameter, so the exit never fires and the per-round
     // changed-count is pure cost. `untilConverged` keeps paying it
     // because there it IS the loop condition.
-    while (round < iters && (!untilConverged || changed > 0)) {
+    iterate(vertices.select(col("vid"), col("vid").as("label")).mat(), iters,
+      if (untilConverged) Some(unchanged("label")) else None) { (labels, _) =>
       val fromNbrs = adj.send(labels, Seq(col("label")))
         .groupBy("vid")
         .agg(min(col("label")).as("nbr_label"))
-      val upd = labels.join(fromNbrs, Seq("vid"), "left_outer")
+      labels.join(fromNbrs, Seq("vid"), "left_outer")
         .select(col("vid"), col("label").as("__old"),
           least(col("label"), coalesce(col("nbr_label"), col("label")))
             .as("label"))
-        .mat()
-      if (untilConverged)
-        changed = upd.filter(col("label") =!= col("__old")).count()
-      // the new checkpoint holds every row — free the superseded one
-      Ckpt.free(labels)
-      labels = upd.drop("__old")
-      round += 1
-    }
-    labels
-  }
+    }._1
 
   /** PageRank, `iters` synchronous rounds, damping 0.85:
     * pr' = (1-d) + d·Σ_in pr/out_deg  (unnormalized Brin-Page form;
     * dangling vertices contribute nothing, matching the classic
-    * iterative formulation). */
-  /** `tol > 0` adds convergence detection: stop when the max absolute
-    * rank change in a round falls below `tol` (`iters` stays the
-    * safety cap); `tol = 0` replays exactly `iters` rounds. */
+    * iterative formulation). `tol > 0` adds convergence detection:
+    * stop when the max absolute rank change in a round falls below
+    * `tol` (`iters` stays the safety cap); `tol = 0` replays exactly
+    * `iters` rounds. */
   def pageRank(vertices: DataFrame, edges: DataFrame, iters: Int,
-               damping: Double = 0.85, tol: Double = 0.0): DataFrame = {
+               damping: Double = 0.85, tol: Double = 0.0): DataFrame =
     // pre-partitioned by src (see connectedComponents): per-round joins
     // against the rank state reuse the cached layout instead of
     // re-shuffling the edge frame
-    val adj = new FrameAdjacency(edges.select("src", "dst"))
-    try prLoop(vertices, adj, iters, damping, tol)
-    finally adj.release()
-  }
+    using(new FrameAdjacency(edges.select("src", "dst")))(
+      pageRank(vertices, _, iters, damping, tol))
 
   /** PageRank over a pre-built directed [[Adjacency]] — the GraphStore
     * path: a [[StoredAdjacency]] of the bucketed out table keeps every
@@ -125,31 +150,22 @@ object GraphAlgos {
     * round) instead of into the edge frame; the contribution multiset
     * is identical. */
   def pageRank(vertices: DataFrame, adj: Adjacency, iters: Int,
-               damping: Double, tol: Double): DataFrame =
-    prLoop(vertices, adj, iters, damping, tol)
-
-  private def prLoop(vertices: DataFrame, adj: Adjacency, iters: Int,
-                     damping: Double, tol: Double): DataFrame = {
+               damping: Double, tol: Double): DataFrame = {
     val outDeg = adj.outDegrees.mat()
-    var pr = vertices.select(col("vid"), lit(1.0).as("pr")).mat()
-    var round = 0
-    var delta = Double.MaxValue
-    while (round < iters && (tol <= 0.0 || delta > tol)) {
+    val converged: DataFrame => Boolean = upd =>
+      !(upd.agg(max(abs(col("pr") - col("__old")))).head.getDouble(0) > tol)
+    val (pr, _) = iterate(vertices.select(col("vid"), lit(1.0).as("pr")).mat(),
+        iters, if (tol > 0.0) Some(converged) else None) { (pr, _) =>
       // inner join: dangling vertices (no out-edges) contribute nothing
       val withOd = pr.join(outDeg, Seq("vid"))
       val contrib = adj.send(withOd, Seq((col("pr") / col("od")).as("c")))
         .groupBy("vid").agg(sum(col("c")).as("inflow"))
-      val upd = pr.join(contrib, Seq("vid"), "left_outer")
+      pr.join(contrib, Seq("vid"), "left_outer")
         .select(col("vid"), col("pr").as("__old"),
           (lit(1.0 - damping) +
             lit(damping) * coalesce(col("inflow"), lit(0.0))).as("pr"))
-        .mat()
-      if (tol > 0.0)
-        delta = upd.agg(max(abs(col("pr") - col("__old")))).head.getDouble(0)
-      Ckpt.free(pr) // superseded by upd
-      pr = upd.drop("__old")
-      round += 1
     }
+    Ckpt.free(outDeg) // every round's state is its own checkpoint
     pr
   }
 
@@ -234,35 +250,33 @@ object GraphAlgos {
     * semi-joins on the edge keys, state checkpointed so plan depth
     * stays constant — the same loop shape as WCC. */
   def kCore(edges: DataFrame, k: Int, iters: Int): DataFrame = {
-    var und = canonicalUndirected(edges).mat()
+    val und0 = canonicalUndirected(edges).mat()
     // peeling is monotone (each round's edge set ⊆ the previous), so a
     // round that drops nothing is the fixpoint and every later round
     // is an identity pass — skip them. The convergence signal is one
     // count() per round against the ALREADY-materialized checkpoint
     // (~free) vs three shuffles of the edge set per skipped round.
     // Result-identical to running all `iters` rounds.
-    var cnt = und.count()
-    var round = 0
-    var converged = false
-    while (round < iters && !converged) {
+    val (und, _) = iterate(und0, iters, Some(sameRowCount(und0))) { (und, _) =>
       val deg = und.select(col("a").as("vid"))
         .unionAll(und.select(col("b").as("vid")))
         .groupBy("vid").agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select("vid")
-      val upd = und
+      und
         .join(keep.withColumnRenamed("vid", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("vid", "b"), Seq("b"), "left_semi")
         .select("a", "b")
-        .mat()
-      val c2 = upd.count()
-      converged = c2 == cnt
-      cnt = c2
-      Ckpt.free(und)
-      und = upd
-      round += 1
     }
     und.select(col("a").as("vid")).unionAll(und.select(col("b").as("vid")))
       .distinct()
+  }
+
+  /** Both orientations of the simple undirected view, cached once. */
+  private def undirectedAdjacency(edges: DataFrame): FrameAdjacency = {
+    val und = canonicalUndirected(edges)
+    new FrameAdjacency(
+      und.select(col("a").as("src"), col("b").as("dst"))
+        .unionAll(und.select(col("b").as("src"), col("a").as("dst"))))
   }
 
   /** Synchronous label propagation, `iters` fixed rounds over the
@@ -273,14 +287,8 @@ object GraphAlgos {
     * one argmin aggregation per round (no per-vertex windows: min_by
     * over a (−count, label) key keeps the partial-aggregation path). */
   def labelPropagation(vertices: DataFrame, edges: DataFrame,
-                       iters: Int): DataFrame = {
-    val und = canonicalUndirected(edges)
-    val adj = new FrameAdjacency(
-      und.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(und.select(col("b").as("src"), col("a").as("dst"))))
-    try lpaLoop(vertices, adj, iters)
-    finally adj.release()
-  }
+                       iters: Int): DataFrame =
+    using(undirectedAdjacency(edges))(labelPropagation(vertices, _, iters))
 
   /** LPA over a pre-built simple-undirected [[Adjacency]] — the
     * GraphStore path: a [[StoredAdjacency]] of the bucketed `_und`
@@ -290,29 +298,17 @@ object GraphAlgos {
     * bit-identical to the frame path. */
   def labelPropagation(vertices: DataFrame, adj: Adjacency,
                        iters: Int): DataFrame =
-    lpaLoop(vertices, adj, iters)
-
-  private def lpaLoop(vertices: DataFrame, adj: Adjacency,
-                      iters: Int): DataFrame = {
-    var labels = vertices.select(col("vid"), col("vid").as("label"))
-      .mat()
-    var round = 0
-    while (round < iters) {
+    iterate(vertices.select(col("vid"), col("vid").as("label")).mat(),
+        iters) { (labels, _) =>
       val counted = adj.send(labels, Seq(col("label")))
         .groupBy("vid", "label")
         .agg(count(lit(1)).as("cnt"))
       val pick = counted.groupBy("vid")
         .agg(min_by(col("label"),
           struct((-col("cnt")).as("nc"), col("label").as("l"))).as("nlabel"))
-      val upd = labels.join(pick, Seq("vid"), "left_outer")
+      labels.join(pick, Seq("vid"), "left_outer")
         .select(col("vid"), coalesce(col("nlabel"), col("label")).as("label"))
-        .mat()
-      Ckpt.free(labels)
-      labels = upd
-      round += 1
-    }
-    labels
-  }
+    }._1
 
   /** Strongly connected components — the FW-BW coloring scheme
     * (Orzan's coloring / the same family as GraphX's SCC), run as
@@ -331,23 +327,12 @@ object GraphAlgos {
     * Exact when the rounds cover the color diameters and every color
     * holds one SCC layer per phase — `sccUntilConverged` below loops
     * both to fixpoint for the exact answer; AlgoSpec pins them equal
-    * on known graphs. Each round is one join + one min-aggregation on
-    * the remaining set — the BFS shuffle shape, frames checkpointed. */
+    * on known and generated graphs. Each round is one join + one
+    * min-aggregation on the remaining set — the BFS shuffle shape,
+    * frames checkpointed. */
   def sccPinned(vertices: DataFrame, edges: DataFrame,
-                phases: Int, rounds: Int): DataFrame = {
-    // checkpoint the dedup ONCE: both direction views read the same
-    // materialized frame instead of re-running the distinct shuffle
-    // per adjacency persist
-    val e = edges.select("src", "dst").distinct().mat()
-    val adjOut = new FrameAdjacency(e)
-    val adjIn = new FrameAdjacency(
-      e.select(col("dst").as("src"), col("src").as("dst")))
-    try sccPinnedLoop(vertices, adjOut, adjIn, phases, rounds)
-    finally {
-      adjOut.release(); adjIn.release()
-      Ckpt.free(e)
-    }
-  }
+                phases: Int, rounds: Int): DataFrame =
+    withSccViews(edges)(sccPinned(vertices, _, _, phases, rounds))
 
   /** sccPinned over pre-built forward/backward [[Adjacency]] views (the
     * GraphStore path: distinct bucketed out table + its reversed in
@@ -360,11 +345,35 @@ object GraphAlgos {
     * edge copies. */
   def sccPinned(vertices: DataFrame, adjOut: Adjacency, adjIn: Adjacency,
                 phases: Int, rounds: Int): DataFrame =
-    sccPinnedLoop(vertices, adjOut, adjIn, phases, rounds)
+    sccPhases(vertices, adjOut, adjIn, phases, rounds, exact = false)
 
-  private def sccPinnedLoop(vertices: DataFrame, adjOut: Adjacency,
-                            adjIn: Adjacency, phases: Int,
-                            rounds: Int): DataFrame = {
+  /** Exact SCC: the same scheme with both loops run to fixpoint and
+    * phases repeated until every vertex is assigned. */
+  def sccUntilConverged(vertices: DataFrame, edges: DataFrame,
+                        maxRounds: Int = 64): DataFrame =
+    withSccViews(edges)(sccPhases(vertices, _, _, Int.MaxValue, maxRounds,
+      exact = true))
+
+  /** Forward and backward views of the distinct edge set. The dedup is
+    * checkpointed ONCE: both views read the same materialized frame
+    * instead of re-running the distinct shuffle per adjacency persist. */
+  private def withSccViews(edges: DataFrame)(
+      f: (Adjacency, Adjacency) => DataFrame): DataFrame = {
+    val e = edges.select("src", "dst").distinct().mat()
+    try using(new FrameAdjacency(e))(adjOut =>
+      using(new FrameAdjacency(
+        e.select(col("dst").as("src"), col("src").as("dst"))))(f(adjOut, _)))
+    finally Ckpt.free(e)
+  }
+
+  /** The SCC phase loop. Pinned (`exact = false`): at most `phases`
+    * phases of exactly `rounds` colour and reach rounds. Exact: phases
+    * until every vertex is assigned, each loop run to its fixpoint
+    * (a changed-colour count and a reach row count per round) with
+    * `rounds` as the cap a non-converging loop fails on. */
+  private def sccPhases(vertices: DataFrame, adjOut: Adjacency,
+                        adjIn: Adjacency, phases: Int, rounds: Int,
+                        exact: Boolean): DataFrame = {
     var rem = vertices.select("vid").distinct().mat()
     var remCnt = rem.count()
     var acc: DataFrame = null
@@ -375,41 +384,41 @@ object GraphAlgos {
     // phase over ∅ assigns ∅.
     while (p < phases && remCnt > 0) {
       // forward min-color over the remaining set. (Per-round
-      // changed-count fixpoint exits were tried and reverted with
-      // measurement, round 13: the pinned rounds rarely converge early
-      // on the bench graph and 24 extra count actions cost ~1.5 s.)
-      var color = rem.select(col("vid"), col("vid").as("color")).mat()
-      var r = 0
-      while (r < rounds) {
+      // changed-count exits in the pinned form were tried and reverted
+      // with measurement, round 13: the pinned rounds rarely converge
+      // early on the bench graph and 24 extra count actions cost ~1.5 s.)
+      val (color, colored) = iterate(
+          rem.select(col("vid"), col("vid").as("color")).mat(), rounds,
+          if (exact) Some(unchanged("color")) else None) { (color, _) =>
         // WCC's update shape: the left join both aggregates the
         // messages into the existing state AND restricts them to the
         // remaining set (color holds exactly rem) — no extra semi-join
         val fromNbrs = adjOut.send(color, Seq(col("color")))
           .groupBy("vid").agg(min(col("color")).as("__nc"))
-        val upd = color.join(fromNbrs, Seq("vid"), "left_outer")
-          .select(col("vid"),
+        val old = if (exact) Seq(col("color").as("__old")) else Nil
+        color.join(fromNbrs, Seq("vid"), "left_outer")
+          .select((col("vid") +: old :+
             least(col("color"), coalesce(col("__nc"), col("color")))
-              .as("color"))
-          .mat()
-        Ckpt.free(color)
-        color = upd
-        r += 1
+              .as("color")): _*)
       }
+      // silent truncation here would SHATTER a >rounds-diameter SCC
+      // into wrong components — exactness demands a loud failure
+      require(!exact || colored,
+        s"scc coloring did not converge within $rounds rounds — raise maxRounds")
       // backward reach from roots, within color (the inner join on the
       // rem-only color frame keeps the walk inside the remaining set)
-      var reach = color.filter(col("vid") === col("color"))
+      val roots = color.filter(col("vid") === col("color"))
         .select(col("vid"), col("vid").as("root")).mat()
-      r = 0
-      while (r < rounds) {
+      val (reach, reached) = iterate(roots, rounds,
+          if (exact) Some(sameRowCount(roots)) else None) { (reach, _) =>
         val step = adjIn.send(reach, Seq(col("root")))
           .join(color.select(col("vid"), col("color").as("c2")), Seq("vid"))
           .filter(col("c2") === col("root"))
           .select(col("vid"), col("root"))
-        val upd = reach.unionByName(step).distinct().mat()
-        Ckpt.free(reach)
-        reach = upd
-        r += 1
+        reach.unionByName(step).distinct()
       }
+      require(!exact || reached,
+        s"scc backward reach did not converge within $rounds rounds — raise maxRounds")
       val assigned = reach.select(col("vid"), col("root").as("scc_id")).mat()
       Ckpt.free(reach)
       acc = if (acc == null) assigned
@@ -422,7 +431,7 @@ object GraphAlgos {
       Ckpt.free(rem)
       Ckpt.free(color)
       // acc's union checkpoint copied assigned's rows (unless aliased on
-      // the first phase) — mirror sccUntilConverged's release
+      // the first phase)
       if (assigned ne acc) Ckpt.free(assigned)
       rem = rem2
       remCnt = rem.count()
@@ -432,91 +441,6 @@ object GraphAlgos {
     // acc is null only when the input vertex set was empty (the phase
     // loop never ran) — the result is the empty singleton frame
     if (acc == null) singletons else acc.unionByName(singletons)
-  }
-
-  /** Exact SCC: the same scheme with both loops run to fixpoint and
-    * phases repeated until every vertex is assigned. */
-  def sccUntilConverged(vertices: DataFrame, edges: DataFrame,
-                        maxRounds: Int = 64): DataFrame = {
-    val e = edges.select("src", "dst").distinct().mat() // see sccPinned
-    val adjOut = new FrameAdjacency(e)
-    val adjIn = new FrameAdjacency(
-      e.select(col("dst").as("src"), col("src").as("dst")))
-    try sccConvergedLoop(vertices, adjOut, adjIn, maxRounds)
-    finally {
-      adjOut.release(); adjIn.release()
-      Ckpt.free(e)
-    }
-  }
-
-  private def sccConvergedLoop(vertices: DataFrame, adjOut: Adjacency,
-                               adjIn: Adjacency,
-                               maxRounds: Int): DataFrame = {
-    var rem = vertices.select("vid").distinct().mat()
-    var remCnt = rem.count()
-    var acc: DataFrame = null
-    while (remCnt > 0) {
-      var color = rem.select(col("vid"), col("vid").as("color")).mat()
-      var changed = 1L
-      var guard = 0
-      while (changed > 0 && guard < maxRounds) {
-        // WCC's update shape — the left join aggregates AND restricts
-        // to the remaining set in one pass (see sccPinnedLoop)
-        val fromNbrs = adjOut.send(color, Seq(col("color")))
-          .groupBy("vid").agg(min(col("color")).as("__nc"))
-        val upd = color.join(fromNbrs, Seq("vid"), "left_outer")
-          .select(col("vid"), col("color").as("__old"),
-            least(col("color"), coalesce(col("__nc"), col("color")))
-              .as("color"))
-          .mat()
-        changed = upd.filter(col("color") =!= col("__old")).count()
-        Ckpt.free(color)
-        color = upd.drop("__old")
-        guard += 1
-      }
-      // silent truncation here would SHATTER a >maxRounds-diameter SCC
-      // into wrong components — exactness demands a loud failure
-      require(changed == 0,
-        s"scc coloring did not converge within $maxRounds rounds — raise maxRounds")
-      var reach = color.filter(col("vid") === col("color"))
-        .select(col("vid"), col("vid").as("root")).mat()
-      var grew = 1L
-      var cnt = reach.count()
-      guard = 0
-      while (grew > 0 && guard < maxRounds) {
-        val step = adjIn.send(reach, Seq(col("root")))
-          .join(color.select(col("vid"), col("color").as("c2")), Seq("vid"))
-          .filter(col("c2") === col("root"))
-          .select(col("vid"), col("root"))
-        val upd = reach.unionByName(step).distinct().mat()
-        val c2 = upd.count()
-        grew = c2 - cnt; cnt = c2
-        Ckpt.free(reach)
-        reach = upd
-        guard += 1
-      }
-      require(grew == 0,
-        s"scc backward reach did not converge within $maxRounds rounds — raise maxRounds")
-      val assigned = reach.select(col("vid"), col("root").as("scc_id")).mat()
-      acc = if (acc == null) assigned
-            else {
-              val u = acc.unionByName(assigned).mat()
-              Ckpt.free(acc)
-              u
-            }
-      val rem2 = rem.join(assigned.select("vid"), Seq("vid"), "left_anti").mat()
-      Ckpt.free(rem)
-      Ckpt.free(reach)
-      Ckpt.free(color)
-      if (assigned ne acc) Ckpt.free(assigned)
-      rem = rem2
-      remCnt = rem.count()
-    }
-    // adjacency lifecycle belongs to the OWNING wrapper (matching
-    // sccPinnedLoop): sccUntilConverged's finally releases both views;
-    // releasing here too would drop caches on caller-owned adjacencies
-    // if an Adjacency-taking overload is ever added
-    acc
   }
 
   /** HANP — Hop Attenuation & Node Preference label propagation
@@ -532,14 +456,8 @@ object GraphAlgos {
     * argmax bit-for-bit. Same per-round shuffle shape as LPA (one
     * message aggregation + one state join), state checkpointed. */
   def hanp(vertices: DataFrame, edges: DataFrame, iters: Int,
-           delta: Double = 0.0625): DataFrame = {
-    val und = canonicalUndirected(edges)
-    val adj = new FrameAdjacency(
-      und.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(und.select(col("b").as("src"), col("a").as("dst"))))
-    try hanpLoop(vertices, adj, iters, delta)
-    finally adj.release()
-  }
+           delta: Double = 0.0625): DataFrame =
+    using(undirectedAdjacency(edges))(hanp(vertices, _, iters, delta))
 
   /** HANP over a pre-built simple-undirected [[Adjacency]] (the
     * GraphStore `_und` path — see labelPropagation). The sender degree
@@ -548,16 +466,11 @@ object GraphAlgos {
     * scored-vote multiset is identical, and every sum is dyadic-exact,
     * so results are bit-identical to the frame path. */
   def hanp(vertices: DataFrame, adj: Adjacency, iters: Int,
-           delta: Double): DataFrame =
-    hanpLoop(vertices, adj, iters, delta)
-
-  private def hanpLoop(vertices: DataFrame, adj: Adjacency, iters: Int,
-                       delta: Double): DataFrame = {
+           delta: Double): DataFrame = {
     val deg = adj.outDegrees.mat() // (vid, od) — static across rounds
-    var state = vertices.select(col("vid"), col("vid").as("label"),
-      lit(1.0).as("score")).mat()
-    var round = 0
-    while (round < iters) {
+    val (state, _) = iterate(vertices.select(col("vid"),
+        col("vid").as("label"), lit(1.0).as("score")).mat(), iters) {
+        (state, _) =>
       // inner join: a vertex with no edges sends no messages anyway
       val withDeg = state.join(deg, Seq("vid"))
       val msgs = adj.send(withDeg, Seq(col("label"),
@@ -574,14 +487,10 @@ object GraphAlgos {
           struct((-col("f")).as("nf"), col("label").as("l"))).as("__w"))
         .select(col("vid"), col("__w.label").as("nlabel"),
           greatest(col("__w.smax") - delta, lit(0.0)).as("nscore"))
-      val upd = state.join(pick, Seq("vid"), "left_outer")
+      state.join(pick, Seq("vid"), "left_outer")
         .select(col("vid"),
           coalesce(col("nlabel"), col("label")).as("label"),
           coalesce(col("nscore"), col("score")).as("score"))
-        .mat()
-      Ckpt.free(state)
-      state = upd
-      round += 1
     }
     Ckpt.free(deg)
     state
@@ -688,12 +597,11 @@ object GraphAlgos {
     val selfSum = selfW.map(_.agg(coalesce(sum("sw"), lit(0L)))
       .head.getLong(0)).getOrElse(0L)
     val m2 = (wSum + selfSum) * 2
-    val both = undM.select(col("a").as("src"), col("b").as("dst"), col("w"))
-      .unionAll(undM.select(col("b").as("src"), col("a").as("dst"), col("w")))
-      .repartition(col("src")) // see connectedComponents
-      .sortWithinPartitions("src") // elide the per-round join Sort
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nbrDeg = both.groupBy(col("src").as("vid")).agg(sum("w").as("k0"))
+    val adj = new FrameAdjacency(
+      undM.select(col("a").as("src"), col("b").as("dst"), col("w"))
+        .unionAll(undM.select(col("b").as("src"), col("a").as("dst"), col("w"))),
+      keep = Seq("w"))
+    val nbrDeg = adj.bySrc(Seq(sum("w").as("k0")))
     val deg = (selfW match {
       case None => nbrDeg.select(col("vid"), col("k0").as("k"))
       case Some(sw) =>
@@ -704,15 +612,14 @@ object GraphAlgos {
           .select(col("vid"), (coalesce(col("k0"), lit(0L)) +
             lit(2L) * coalesce(col("sw"), lit(0L))).as("k"))
     }).mat()
-    var assign = deg.select(col("vid"), col("vid").as("c")).mat()
 
     // candidate scores WITH the staying score folded in — one pass
     // over the message join per round instead of two (the historical
     // split cand/stay formulation re-ran the whole kin subtree — edge
     // join + aggregation — a second time for `stay`; guide §1.2: fix
     // the distributed algorithm first). Exact equivalences used:
-    //  - `both` is orientation-symmetric (und ∪ reversed), so joining
-    //    the assignment on SRC and delivering to DST yields the same
+    //  - the adjacency is orientation-symmetric (und ∪ reversed), so
+    //    sending the assignment along src → dst yields the same
     //    (receiver, community, w) multiset as the historical dst-join
     //    — and src is the cached frame's partition key, so the edge
     //    side never exchanges or sorts per round;
@@ -723,8 +630,7 @@ object GraphAlgos {
     //    replaces the second kin pass. All-long arithmetic throughout,
     //    so every comparison is bit-identical to the split form.
     def scoredCand(assign: DataFrame): DataFrame = {
-      val nbrC = both.join(assign, both("src") === assign("vid"))
-        .select(both("dst").as("vid"), col("c"), col("w"))
+      val nbrC = adj.send(assign, Seq(col("c"), col("w")))
       val kin = nbrC.groupBy("vid", "c").agg(sum("w").as("kin"))
       // community size and Σtot in ONE aggregation pass (they key on
       // the same c over the same assign⋈deg rows — deg covers every
@@ -754,8 +660,8 @@ object GraphAlgos {
           col("stay0")))
     }
 
-    var round = 0
-    while (round < iters) {
+    val (assign, _) = iterate(deg.select(col("vid"), col("vid").as("c")).mat(),
+        iters) { (assign, round) =>
       val scored = scoredCand(assign)
       // hill-climb: move only on strictly positive gain over staying
       val pick = scored
@@ -767,15 +673,11 @@ object GraphAlgos {
       val gate = pmod(conv(substring(
         md5(concat(col("vid"), lit(s"$gateTag|$round"))), 1, 15), 16, 10)
         .cast("long"), lit(2L)) === 0L
-      val upd = assign
+      assign
         .join(pick, Seq("vid"), "left_outer")
         .select(col("vid"),
           when(gate && col("nc").isNotNull, col("nc"))
             .otherwise(col("c")).as("c"))
-        .mat()
-      Ckpt.free(assign)
-      assign = upd
-      round += 1
     }
     // improving-move probe over the FINAL assignment (auto-depth mode
     // only): exact — a strictly-positive-gain candidate counts whether
@@ -785,7 +687,7 @@ object GraphAlgos {
         .filter(col("c") =!= col("c_i") && col("score") > col("stay"))
         .isEmpty
     }
-    try { both.unpersist(blocking = false) } catch { case _: Throwable => () }
+    adj.release()
     // undM passed in pre-materialized belongs to the caller (the
     // multi-level driver still contracts over it)
     if (undM ne und) Ckpt.free(undM)
@@ -1054,11 +956,9 @@ object GraphAlgos {
     * the backward pass consumes them. Returns (vid, bc), rows only for
     * vertices on at least one counted path. */
   def betweenness(seeds: DataFrame, edges: DataFrame,
-                  maxSteps: Int): DataFrame = {
-    val adj = new FrameAdjacency(edges.select("src", "dst").distinct())
-    try bcLoop(seeds, adj, maxSteps)
-    finally adj.release()
-  }
+                  maxSteps: Int): DataFrame =
+    using(new FrameAdjacency(edges.select("src", "dst").distinct()))(
+      betweenness(seeds, _, maxSteps))
 
   /** Betweenness over a pre-built DISTINCT directed [[Adjacency]] (the
     * GraphStore path: the simple-view dedup is an exchange-free local
@@ -1067,11 +967,7 @@ object GraphAlgos {
     * multiset-determined per (origin, vid), so results match the frame
     * path. */
   def betweenness(seeds: DataFrame, adj: Adjacency,
-                  maxSteps: Int): DataFrame =
-    bcLoop(seeds, adj, maxSteps)
-
-  private def bcLoop(seeds: DataFrame, adj: Adjacency,
-                     maxSteps: Int): DataFrame = {
+                  maxSteps: Int): DataFrame = {
     // ---- forward: BFS levels with path counts ----
     // Per-level row counts ride along (the loop counts every frontier
     // anyway), so the growing per-level joins below can gate a
@@ -1284,13 +1180,11 @@ object GraphAlgos {
     * the state frame checkpointed per round so plan depth stays
     * constant. Path sums associate left-to-right, so an external
     * oracle replays them bit-for-bit. */
-  def sssp(edges: DataFrame, source: String, iters: Int): DataFrame = {
-    val adj = new FrameAdjacency(
+  def sssp(edges: DataFrame, source: String, iters: Int): DataFrame =
+    using(new FrameAdjacency(
       edges.select(col("src"), col("dst"),
-        col("weight").cast("double").as("w")), keep = Seq("w"))
-    try ssspLoop(edges.sparkSession, adj, source, iters, col("w"))
-    finally adj.release()
-  }
+        col("weight").cast("double").as("w")), keep = Seq("w")))(
+      sssp(edges.sparkSession, _, source, iters, col("w")))
 
   /** SSSP over a pre-built directed [[Adjacency]] that `keep`s the
     * columns `w` references (the GraphStore path: weight derived from
@@ -1301,24 +1195,10 @@ object GraphAlgos {
   def sssp(spark: org.apache.spark.sql.SparkSession, adj: Adjacency,
            source: String, iters: Int,
            w: org.apache.spark.sql.Column): DataFrame =
-    ssspLoop(spark, adj, source, iters, w)
-
-  private def ssspLoop(spark: org.apache.spark.sql.SparkSession,
-                       adj: Adjacency, source: String, iters: Int,
-                       w: org.apache.spark.sql.Column): DataFrame = {
-    var dist = spark.range(1)
-      .select(lit(source).as("vid"), lit(0.0).as("dist"))
-      .mat()
-    var round = 0
-    while (round < iters) {
+    iterate(spark.range(1).select(lit(source).as("vid"), lit(0.0).as("dist"))
+        .mat(), iters) { (dist, _) =>
       val ext = adj.send(dist, Seq((col("dist") + w).as("dist")))
-      val upd = dist.unionByName(ext)
+      dist.unionByName(ext)
         .groupBy("vid").agg(min(col("dist")).as("dist"))
-        .mat()
-      Ckpt.free(dist)
-      dist = upd
-      round += 1
-    }
-    dist
-  }
+    }._1
 }

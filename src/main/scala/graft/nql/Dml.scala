@@ -1035,16 +1035,61 @@ object Dml {
       throw new IllegalArgumentException(s"unsupported DML expr $other")
   }
 
-  private def num2(x: Any, y: Any): Option[(Double, Double, Boolean)] = {
-    def d(v: Any): Option[(Double, Boolean)] = v match {
-      case n: Long => Some((n.toDouble, true))
-      case n: Int => Some((n.toDouble, true))
-      case f: Double => Some((f, false))
+  /** Both operands integral (Long/Int), as Longs. */
+  private def long2(x: Any, y: Any): Option[(Long, Long)] = (x, y) match {
+    case (a: Long, b: Long) => Some((a, b))
+    case (a: Long, b: Int) => Some((a, b.toLong))
+    case (a: Int, b: Long) => Some((a.toLong, b))
+    case (a: Int, b: Int) => Some((a.toLong, b.toLong))
+    case _ => None
+  }
+
+  /** Both operands numeric, as Doubles (for any pair `long2` rejects). */
+  private def num2(x: Any, y: Any): Option[(Double, Double)] = {
+    def d(v: Any): Option[Double] = v match {
+      case n: Long => Some(n.toDouble)
+      case n: Int => Some(n.toDouble)
+      case f: Double => Some(f)
       case _ => None
     }
-    (d(x), d(y)) match {
-      case (Some((a, ai)), Some((b, bi))) => Some((a, b, ai && bi))
-      case _ => None
+    for (a <- d(x); b <- d(y)) yield (a, b)
+  }
+
+  private def rel[T](op: String, a: T, b: T)(implicit o: Ordering[T]): Boolean =
+    op match {
+      case "==" => o.equiv(a, b); case "!=" => !o.equiv(a, b)
+      case "<" => o.lt(a, b); case "<=" => o.lteq(a, b)
+      case ">" => o.gt(a, b); case ">=" => o.gteq(a, b)
+    }
+
+  /** A numeric comparison: exact on two integers (longs above 2^53
+    * stay distinct), IEEE on anything involving a double. */
+  private def numRel(op: String, x: Any, y: Any): Option[Boolean] =
+    long2(x, y).map { case (a, b) => rel(op, a, b) }.orElse(
+      num2(x, y).map { case (a, b) => rel(op, a, b)(Ordering.Double.IeeeOrdering) })
+
+  /** Arithmetic on two integers stays Long and raises on overflow with
+    * the YIELD path's message (Expr.compile); a double operand makes
+    * it Double arithmetic. */
+  private def arith(op: String, x: Any, y: Any): Any = long2(x, y) match {
+    case Some((a, b)) =>
+      if ((op == "/" || op == "%") && b == 0) throw new DmlError("division by zero")
+      try op match {
+        case "+" => Math.addExact(a, b)
+        case "-" => Math.subtractExact(a, b)
+        case "*" => Math.multiplyExact(a, b)
+        case "/" => if (b == -1) Math.negateExact(a) else a / b
+        case "%" => a % b
+      } catch { case _: ArithmeticException =>
+        throw new DmlError(s"result of ($a$op$b) cannot be represented as an integer")
+      }
+    case None => num2(x, y) match {
+      case Some((a, b)) => op match {
+        case "+" => a + b; case "-" => a - b; case "*" => a * b
+        case "/" => a / b; case "%" => a % b
+      }
+      case None => throw new DmlError(
+        if (op == "+") s"cannot add $x + $y" else s"cannot $op $x $y")
     }
   }
 
@@ -1068,56 +1113,23 @@ object Dml {
       case _ => null
     }
     case "==" | "=" =>
-      if (x == null || y == null) null
-      else num2(x, y).map { case (a, b, _) => a == b }.getOrElse(x == y)
+      if (x == null || y == null) null else numRel("==", x, y).getOrElse(x == y)
     case "!=" | "<>" =>
-      if (x == null || y == null) null
-      else num2(x, y).map { case (a, b, _) => a != b }.getOrElse(x != y)
+      if (x == null || y == null) null else numRel("!=", x, y).getOrElse(x != y)
     case "<" | "<=" | ">" | ">=" =>
       if (x == null || y == null) null
-      else num2(x, y) match {
-        case Some((a, b, _)) => op match {
-          case "<" => a < b; case "<=" => a <= b
-          case ">" => a > b; case ">=" => a >= b
-        }
-        case None => (x, y) match {
-          case (a: String, b: String) => op match {
-            case "<" => a < b; case "<=" => a <= b
-            case ">" => a > b; case ">=" => a >= b
-          }
-          case _ => throw new DmlError(s"cannot compare $x $op $y")
-        }
-      }
+      else numRel(op, x, y).getOrElse((x, y) match {
+        case (a: String, b: String) => rel(op, a, b)
+        case _ => throw new DmlError(s"cannot compare $x $op $y")
+      })
     case "+" => (x, y) match {
       case (a: Seq[_], b: Seq[_]) => a ++ b
       case (a: String, b: String) => a + b
       case (null, _) | (_, null) => null
-      case _ => num2(x, y) match {
-        case Some((a, b, true)) => a.toLong + b.toLong
-        case Some((a, b, false)) => a + b
-        case None => throw new DmlError(s"cannot add $x + $y")
-      }
+      case _ => arith(op, x, y)
     }
     case "-" | "*" | "/" | "%" =>
-      if (x == null || y == null) null
-      else num2(x, y) match {
-        case Some((a, b, bothInt)) =>
-          if (bothInt) {
-            val (ai, bi) = (a.toLong, b.toLong)
-            op match {
-              case "-" => ai - bi
-              case "*" => ai * bi
-              case "/" =>
-                if (bi == 0) throw new DmlError("division by zero") else ai / bi
-              case "%" =>
-                if (bi == 0) throw new DmlError("division by zero") else ai % bi
-            }
-          } else op match {
-            case "-" => a - b; case "*" => a * b
-            case "/" => a / b; case "%" => a % b
-          }
-        case None => throw new DmlError(s"cannot $op $x $y")
-      }
+      if (x == null || y == null) null else arith(op, x, y)
     case other =>
       throw new IllegalArgumentException(s"unsupported DML operator $other")
   }

@@ -310,6 +310,125 @@ class AlgoSpec extends SparkSpec {
     assert(windows.size == 1, s"${windows.size} Window nodes")
   }
 
+  test("node2vecWalks: each step's materialized plan holds exactly one Window") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false") // unwrapped plan tree
+    import s2.implicits._
+    // a step frame is (walker, cur, prev) planned over a join; the
+    // seed frame has the same columns but no join
+    val steps = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint" &&
+            qe.analyzed.output.map(_.name) == Seq("walker", "cur", "prev") &&
+            qe.executedPlan.exists(_.isInstanceOf[BaseJoinExec]))
+          steps.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    s2.listenerManager.register(listener)
+    val und = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"))
+      .flatMap { case (x, y) => Seq((x, y), (y, x)) }.toDF("src", "dst")
+    GraphAlgos.node2vecWalks(und, Seq("a", "d").toDF("vid"), len = 3)
+      .collect()
+    // listener events arrive on the listener bus thread
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (steps.size < 3 && System.nanoTime() < deadline) Thread.sleep(50)
+    s2.listenerManager.unregister(listener)
+    assert(steps.size == 3, s"expected 3 step plans, got ${steps.size}")
+    steps.forEach { p =>
+      val windows = p.collect { case w: WindowExec => w }
+      assert(windows.size == 1, s"${windows.size} Window nodes in a step:\n$p")
+    }
+  }
+
+  test("differential: converted loops against in-test references and across adjacencies") {
+    // hundreds of tiny jobs: compiling each plan costs more than
+    // interpreting it
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.codegen.wholeStage", "false")
+    import s2.implicits._
+    import AlgoSpec._
+    import graft.algo.{Adjacency, FrameAdjacency, StoredAdjacency}
+    import org.apache.spark.sql.{DataFrame, Row}
+    val t0 = System.nanoTime()
+    def rows[V](df: DataFrame)(f: Row => (String, V)): Seq[(String, V)] =
+      df.collect().map(f).toSeq.sortBy(_._1)
+    def str2(r: Row) = (r.getString(0), r.getString(1))
+    // one oriented frame, three adjacency postures: their results
+    def across[T](frame: DataFrame)(run: Adjacency => T): Seq[(String, T)] =
+      Seq[(String, () => Adjacency)](
+        "frame" -> (() => new FrameAdjacency(frame)),
+        "stored" -> (() => new StoredAdjacency(Seq(frame), cacheSides = false)),
+        "stored+cache" -> (() => new StoredAdjacency(Seq(frame)))
+      ).map { case (name, mk) =>
+        val adj = mk()
+        try name -> run(adj) finally adj.release()
+      }
+    def checks(g: G): Seq[() => Unit] = {
+      val n = g.verts.size max 1
+      val verts = g.verts.toDF("vid")
+      val edges = g.edges.toDF("src", "dst", "rank", "weight")
+      val clue = s"${g.shape}: verts ${g.verts.mkString(",")} edges ${
+        g.edges.map(e => s"${e._1}->${e._2}@${e._3}:${e._4}").mkString(" ")}"
+      Seq(
+        () => {
+          val wcc = wccRef(g)
+          assert(rows(GraphAlgos.connectedComponents(verts, edges, n))(str2) ==
+            wcc, s"fixed-round WCC, $clue")
+          assert(rows(GraphAlgos.connectedComponents(verts, edges, n + 1,
+            untilConverged = true))(str2) == wcc, s"converged WCC, $clue")
+        },
+        () => Seq(1, n).foreach { rounds =>
+          assert(rows(GraphAlgos.sssp(edges, "v0", rounds))(r =>
+            (r.getString(0), r.getDouble(1))) == ssspRef(g, "v0", rounds),
+            s"SSSP $rounds rounds, $clue")
+        },
+        () => {
+          val scc = rows(GraphAlgos.sccUntilConverged(verts, edges))(str2)
+          assert(scc == tarjanRef(g), s"exact SCC, $clue")
+          assert(rows(GraphAlgos.sccPinned(verts, edges, phases = n,
+            rounds = n))(str2) == scc, s"pinned SCC, $clue")
+        },
+        () => assert(GraphAlgos.kCore(edges, 2, iters = n + 1).as[String]
+          .collect().toSet == kCoreRef(g, 2), s"2-core, $clue"),
+        () => {
+          val lpa = across(undirectedSimple(g).toDF("src", "dst"))(adj =>
+            rows(GraphAlgos.labelPropagation(verts, adj, iters = 2))(str2))
+          assert(lpa.map(_._2).distinct.size == 1, s"LPA postures $lpa, $clue")
+        },
+        () => {
+          val hanp = across(undirectedSimple(g).toDF("src", "dst"))(adj =>
+            rows(GraphAlgos.hanp(verts, adj, iters = 2, delta = 0.0625))(r =>
+              (r.getString(0), (r.getString(1), r.getDouble(2)))))
+          assert(hanp.map(_._2).distinct.size == 1, s"HANP postures $hanp, $clue")
+        },
+        () => {
+          // contribution sums may associate differently per layout:
+          // equal to the last few ulps
+          val pr = across(edges.select("src", "dst"))(adj =>
+            rows(GraphAlgos.pageRank(verts, adj, iters = 2, damping = 0.85,
+              tol = 0.0))(r => (r.getString(0), r.getDouble(1))))
+          pr.tail.foreach { case (name, ranks) =>
+            assert(ranks.map(_._1) == pr.head._2.map(_._1) &&
+              ranks.zip(pr.head._2).forall { case ((_, a), (_, b)) =>
+                math.abs(a - b) <= 1e-12 },
+              s"PageRank $name $ranks vs frame ${pr.head._2}, $clue")
+          }
+        })
+    }
+    // the checks are independent chains of tiny jobs: run them
+    // concurrently on the shared session
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    sample.flatMap(checks).map(c => Future(c()))
+      .foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
+    info(f"${sample.size} graphs in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+  }
+
   test("betweenness: diamond splits dependency, chain accumulates it") {
     import spark.implicits._
     def bc(edges: Seq[(String, String)], seeds: Seq[String], steps: Int) =
@@ -378,5 +497,142 @@ class AlgoSpec extends SparkSpec {
         pmod(hash(frame.columns.map(col): _*), lit(8)))
       .filter($"k" === "hot").select("__salt").distinct().count()
     assert(buckets > 1, s"hot key not scattered: $buckets bucket(s)")
+  }
+}
+
+/** Small generated graphs for the differential test and the in-test
+  * references it checks the engine against. */
+object AlgoSpec {
+  import org.scalacheck.Gen
+  import org.scalacheck.rng.Seed
+
+  /** Vertex ids v0..v(n-1) (single digits, so string order is index
+    * order) and directed edge rows (src, dst, rank, weight). */
+  final case class G(shape: String, verts: Seq[String],
+                     edges: Seq[(String, String, Long, Double)])
+
+  private def v(i: Int) = s"v$i"
+  private val weight = Gen.choose(1, 5).map(_.toDouble)
+  private def edge(n: Int): Gen[(String, String, Long, Double)] = for {
+    a <- Gen.choose(0, n - 1); b <- Gen.choose(0, n - 1); w <- weight
+  } yield (v(a), v(b), 0L, w)
+  private def extra(n: Int, max: Int) =
+    Gen.choose(0, max).flatMap(Gen.listOfN(_, edge(n)))
+
+  /** A ring v0 → … → v(n-1) → v0 plus a few chords. */
+  val cycle: Gen[G] = for {
+    n <- Gen.choose(2, 5); ws <- Gen.listOfN(n, weight); ch <- extra(n, 2)
+  } yield G("cycle", (0 until n).map(v),
+    (0 until n).map(i => (v(i), v((i + 1) % n), 0L, ws(i))) ++ ch)
+
+  /** Hub v0 with spokes of random direction, one spoke maybe doubled
+    * back. */
+  val star: Gen[G] = for {
+    n <- Gen.choose(3, 5); out <- Gen.listOfN(n - 1, Gen.oneOf(true, false))
+    ws <- Gen.listOfN(n - 1, weight); back <- Gen.oneOf(true, false)
+  } yield G("star", (0 until n).map(v),
+    (1 until n).map { i =>
+      if (out(i - 1)) (v(0), v(i), 0L, ws(i - 1))
+      else (v(i), v(0), 0L, ws(i - 1))
+    } ++ (if (back) Seq((v(1), v(0), 0L, 1.0), (v(0), v(1), 0L, 2.0))
+          else Nil))
+
+  /** Random edges plus at least one self-loop. */
+  val selfLoops: Gen[G] = for {
+    n <- Gen.choose(1, 5); es <- extra(n, n + 2)
+    loops <- Gen.nonEmptyListOf(Gen.choose(0, n - 1)); w <- weight
+  } yield G("self-loops", (0 until n).map(v),
+    es ++ loops.distinct.map(i => (v(i), v(i), 0L, w)))
+
+  /** Every edge twice, at ranks 0 and 1 with different weights. */
+  val parallel: Gen[G] = for {
+    n <- Gen.choose(2, 5); es <- Gen.nonEmptyListOf(edge(n)).map(_.take(6))
+  } yield G("ranked parallel edges", (0 until n).map(v),
+    es.flatMap { case (a, b, _, w) => Seq((a, b, 0L, w), (a, b, 1L, w + 2)) })
+
+  /** Edges among the first half of the vertices only. */
+  val isolated: Gen[G] = for {
+    n <- Gen.choose(3, 6); es <- extra((n + 1) / 2, n)
+  } yield G("isolated vertices", (0 until n).map(v), es)
+
+  /** No edges, possibly no vertices either. */
+  val empty: Gen[G] =
+    Gen.choose(0, 2).map(n => G("empty", (0 until n).map(v), Nil))
+
+  /** One fixed-seed sample per shape. */
+  lazy val sample: Seq[G] =
+    Seq(cycle, star, selfLoops, parallel, isolated, empty).zipWithIndex
+      .map { case (g, i) =>
+        g.pureApply(Gen.Parameters.default, Seed(20261018L + i))
+      }
+
+  /** Union-find: each vertex's label is its component's min vid. */
+  def wccRef(g: G): Seq[(String, String)] = {
+    val parent = scala.collection.mutable.Map(g.verts.map(x => x -> x): _*)
+    def find(x: String): String =
+      if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+    g.edges.foreach { case (a, b, _, _) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(if (ra < rb) rb else ra) = if (ra < rb) ra else rb
+    }
+    g.verts.map(x => x -> find(x)).sortBy(_._1)
+  }
+
+  /** Bellman-Ford, `rounds` synchronous relaxations from `src`. */
+  def ssspRef(g: G, src: String, rounds: Int): Seq[(String, Double)] = {
+    var d = Map(src -> 0.0)
+    (1 to rounds).foreach { _ =>
+      val ext = g.edges.flatMap { case (a, b, _, w) => d.get(a).map(da => b -> (da + w)) }
+      d = (d.toSeq ++ ext).groupMapReduce(_._1)(_._2)(math.min)
+    }
+    d.toSeq.sortBy(_._1)
+  }
+
+  /** Tarjan: each vertex's label is its SCC's min vid. */
+  def tarjanRef(g: G): Seq[(String, String)] = {
+    val succ = g.edges.groupMap(_._1)(_._2)
+    val index = scala.collection.mutable.Map[String, Int]()
+    val low = scala.collection.mutable.Map[String, Int]()
+    val onStack = scala.collection.mutable.Set[String]()
+    var stack = List.empty[String]
+    val out = scala.collection.mutable.Map[String, String]()
+    def visit(x: String): Unit = {
+      index(x) = index.size; low(x) = index(x)
+      stack ::= x; onStack += x
+      succ.getOrElse(x, Nil).foreach { y =>
+        if (!index.contains(y)) { visit(y); low(x) = low(x) min low(y) }
+        else if (onStack(y)) low(x) = low(x) min index(y)
+      }
+      if (low(x) == index(x)) {
+        val (comp, rest) = stack.span(_ != x)
+        val members = x :: comp
+        stack = rest.tail
+        onStack --= members
+        members.foreach(out(_) = members.min)
+      }
+    }
+    g.verts.foreach(x => if (!index.contains(x)) visit(x))
+    g.verts.map(x => x -> out(x)).sortBy(_._1)
+  }
+
+  /** Both orientations of the simple undirected view (no self-loops,
+    * no duplicate pairs). */
+  def undirectedSimple(g: G): Seq[(String, String)] =
+    g.edges.collect { case (a, b, _, _) if a != b => (if (a < b) a else b, if (a < b) b else a) }
+      .distinct.flatMap(p => Seq(p, p.swap))
+
+  /** Peel vertices of degree < k to the fixpoint; the endpoints of the
+    * surviving edges. */
+  def kCoreRef(g: G, k: Int): Set[String] = {
+    var und = undirectedSimple(g).filter { case (a, b) => a < b }
+    var done = false
+    while (!done) {
+      val deg = und.flatMap(p => Seq(p._1, p._2)).groupBy(identity)
+        .map { case (x, xs) => x -> xs.size }
+      val kept = und.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
+      done = kept.size == und.size
+      und = kept
+    }
+    und.flatMap(p => Seq(p._1, p._2)).toSet
   }
 }

@@ -47,6 +47,33 @@ class DmlSpec extends SparkSpec {
     assert(cat.tagRows("t")("v").head == 1L) // SET not half-applied
   }
 
+  test("integer SET/WHEN arithmetic is exact: no Double rounding, overflow raises") {
+    val cat = fresh()
+    Gql.runScript(cat,
+      """CREATE TAG t(x int);
+        |INSERT VERTEX t(x) VALUES "a":(9007199254740993), "b":(9223372036854775807);
+        |""".stripMargin)
+    // 2^53 + 1 is not a Double: x + 0 must not round it to 2^53
+    Gql.runScript(cat, """UPDATE VERTEX ON t "a" SET x = x + 0""")
+    assert(cat.tagRows("t")("a").head == 9007199254740993L)
+    // Long.MaxValue + 1 raises the YIELD path's overflow error and
+    // leaves the row as it was
+    val err = intercept[DmlError] {
+      Gql.runScript(cat, """UPDATE VERTEX ON t "b" SET x = x + 1""")
+    }
+    assert(err.getMessage.contains(
+      "result of (9223372036854775807+1) cannot be represented as an integer"),
+      err.getMessage)
+    assert(cat.tagRows("t")("b").head == Long.MaxValue)
+    // two longs above 2^53 compare as longs: == is false, > is true
+    Gql.runScript(cat,
+      """UPDATE VERTEX ON t "a" SET x = 1 WHEN x == 9007199254740992""")
+    assert(cat.tagRows("t")("a").head == 9007199254740993L)
+    Gql.runScript(cat,
+      """UPDATE VERTEX ON t "a" SET x = 2 WHEN x > 9007199254740992""")
+    assert(cat.tagRows("t")("a").head == 2L)
+  }
+
   test("upsert on a missing key inserts from defaults, WHEN ignored") {
     val cat = fresh()
     Gql.runScript(cat,
