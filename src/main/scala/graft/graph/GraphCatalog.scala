@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Catalog abstraction the query surfaces (nql.Gql and its MATCH
   * engine nql.MatchSeg) plan against: per-tag vertex tables
@@ -11,6 +11,9 @@ import org.apache.spark.sql.DataFrame
   * of names to DataFrames, so ANY dataset (the TPC-H graph, the nba CSV
   * fixtures, a Delta lakehouse) can serve the same query language. */
 trait GraphCatalog {
+  /** The session the catalog's frames live in. Cheap: reaching it
+    * builds no frame, so every statement can start from it. */
+  def session: SparkSession
   def vertexTable(tag: String): DataFrame
   def edgesByType(etype: String): DataFrame
   /** Union view (src, dst, etype, rank) — `OVER *`. */
@@ -44,6 +47,8 @@ trait GraphCatalog {
 final case class MapCatalog(tags: Map[String, DataFrame],
                             edges: Map[String, DataFrame]) extends GraphCatalog {
   import org.apache.spark.sql.functions._
+  lazy val session: SparkSession =
+    (tags.values ++ edges.values).head.sparkSession
   def vertexTable(tag: String): DataFrame =
     tags.getOrElse(tag, throw new IllegalArgumentException(s"unknown tag $tag"))
   def edgesByType(etype: String): DataFrame =

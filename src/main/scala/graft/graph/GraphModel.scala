@@ -18,17 +18,29 @@ import graft.Tables
   *    traversal (`GO ... OVER *`) and the path algorithms; per-type tables
   *    keep their properties for property-projecting traversals.
   *
-  * Scale notes: every derived frame is a narrow projection over a parquet
-  * scan — column pruning reaches the reader, no materialization. On a real
-  * cluster these would be bucketed by src (Nebula partitions by
-  * hash(vid), NebulaKeyUtils.h:58-111); in local mode we rely on
-  * shuffle-on-key + AQE which is plan-equivalent.
+  * Scale notes: each source table is resolved once per model (file
+  * listing and footer read — about 100 ms and one Spark job each), the
+  * way the reference's validator resolves schemas from graphd's meta
+  * cache; the model's input is immutable, as the GraphStore already
+  * assumes. Every derived frame is a narrow projection over that
+  * resolved scan, built per call — column pruning reaches the reader,
+  * no materialization. On a real cluster these would be bucketed by src
+  * (Nebula partitions by hash(vid), NebulaKeyUtils.h:58-111); in local
+  * mode we rely on shuffle-on-key + AQE which is plan-equivalent.
   */
 class GraphModel(val spark: SparkSession, sfDir: String) extends GraphCatalog {
   import GraphModel._
   import spark.implicits._
 
-  private def t(name: String): DataFrame = Tables.load(spark, sfDir, name)
+  def session: SparkSession = spark
+
+  // one resolved relation per source table; concurrent clients share
+  // the model, so the memo is a concurrent map
+  private val tables =
+    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+
+  private def t(name: String): DataFrame =
+    tables.computeIfAbsent(name, n => Tables.load(spark, sfDir, n))
 
   // ---- per-tag vertex tables: (vid, props...) ----
   def customers: DataFrame = t("customer")

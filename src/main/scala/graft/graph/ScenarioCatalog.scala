@@ -28,6 +28,8 @@ final class ScenarioCatalog(val spark: SparkSession,
     extends GraphCatalog {
   import ScenarioCatalog.PropDef
 
+  def session: SparkSession = spark
+
   val tagDefs = mutable.LinkedHashMap.empty[String, Vector[PropDef]]
   val edgeDefs = mutable.LinkedHashMap.empty[String, Vector[PropDef]]
   /** schema → (ttl_col, ttl_duration seconds). Rows whose ttl column

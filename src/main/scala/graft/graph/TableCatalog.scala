@@ -24,6 +24,8 @@ final class TableCatalog(val spark: SparkSession, val root: String,
     extends GraphCatalog {
   import ScenarioCatalog.PropDef
 
+  def session: SparkSession = spark
+
   val tagDefs = mutable.LinkedHashMap.empty[String, Vector[PropDef]]
   val edgeDefs = mutable.LinkedHashMap.empty[String, Vector[PropDef]]
 

@@ -1307,12 +1307,6 @@ object Dml {
       "DML needs a mutable (scenario) catalog")
   }
 
-  private def sparkOf(g: GraphCatalog): SparkSession =
-    g match {
-      case s: ScenarioCatalog => s.spark
-      case other => other.allVertices.sparkSession
-    }
-
   /** DESCRIBE's rendering of a declared type (meta DESC output):
     * int aliases widen to int64; containers print list_/set_ prefix. */
   /** TTL config validation (meta SchemaUtil): the column must exist
@@ -1951,7 +1945,7 @@ object Dml {
   private def execScenario(g0: GraphCatalog, d: DStmt,
                            env: Map[String, DataFrame],
                            input: Option[DataFrame]): DataFrame = {
-    val spark = sparkOf(g0)
+    val spark = g0.session
     d match {
       case AdminNoop(_) => emptyOk(spark)
       case CreateSchema(isTag, name, props, ifNotExists, ttlDur, ttlCol,

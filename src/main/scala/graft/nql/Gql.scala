@@ -1103,7 +1103,7 @@ object Gql {
   def exec(g: GraphCatalog, stmt: Stmt): DataFrame = exec(g, stmt, Map.empty)
 
   def exec(g: GraphCatalog, stmt: Stmt, env: Map[String, DataFrame]): DataFrame = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.session
     stmt match {
       case m: MatchSeg.MStmt => MatchSeg.exec(g, m)
       case d: Dml.DStmt => Dml.exec(g, d, env, None)
@@ -1565,7 +1565,7 @@ object Gql {
   private def execSubgraphY(g: GraphCatalog, sg: SubgraphY,
                             input: Option[DataFrame],
                             env: Map[String, DataFrame]): DataFrame = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.session
     val SubgraphY(steps, seeds, seedsRef, specs0, yields, where) = sg
     val seedFrame = seedsRef match {
       case Some(InRef(None, c)) =>
@@ -1677,7 +1677,7 @@ object Gql {
   private def execFindPath(g: GraphCatalog, fp: FindPath,
                            input: Option[DataFrame],
                            env: Map[String, DataFrame]): DataFrame = {
-    val spark = g.allVertices.sparkSession
+    val spark = g.session
     val FindPath(mode, srcs, dsts, etypes, dir, upto, yieldPath,
       srcRef, dstRef, fpWhere) = fp
     // PathValidator parity: every named edge type must exist
@@ -1899,10 +1899,11 @@ object Gql {
     val ys = withVidTwins(f.yields); val dist = f.distinct
     // GetPropProcessor semantics: a vid that EXISTS (under any tag)
     // but lacks this tag yields a row of NULL props; a vid absent
-    // from the space yields no row (DeleteTag.feature goldens)
+    // from the space yields no row (DeleteTag.feature goldens). A semi
+    // join keeps each left row once however often its vid repeats on
+    // the right, so the union of tag tables needs no distinct.
     val rows = bag
-      .join(g.allVertices.select(col("vid")).distinct(), Seq("vid"),
-        "left_semi")
+      .join(g.allVertices.select(col("vid")), Seq("vid"), "left_semi")
       .join(g.vertexTable(tag), Seq("vid"), "left")
     val strVid = rows.schema("vid").dataType ==
       org.apache.spark.sql.types.StringType

@@ -2298,7 +2298,7 @@ object MatchSeg {
     // WITH/UNWIND-headed pipelines start from one empty row
     def base(): DataFrame =
       if (binding != null) binding
-      else g.allVertices.sparkSession.range(1).drop("id")
+      else g.session.range(1).drop("id")
     // a later MATCH stage references the piped binding MORE THAN ONCE
     // (the re-seek seed frame derived from it + the shared-var join
     // back into it), so a lazy aggregating WITH boundary gets its

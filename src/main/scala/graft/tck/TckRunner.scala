@@ -949,7 +949,7 @@ object TckRunner {
     // comparisons/casts produce typed nulls (Value.cpp), which ANSI
     // mode would turn into runtime errors. Scope ANSI off to TCK
     // execution and restore after.
-    val conf = fixtures.values.head.allVertices.sparkSession.conf
+    val conf = fixtures.values.head.session.conf
     val ansiBefore = conf.get("spark.sql.ansi.enabled", "true")
     conf.set("spark.sql.ansi.enabled", "false")
     try runInner(fixtures, defaultSpace, featureText)
@@ -996,7 +996,7 @@ object TckRunner {
       (System.identityHashCode(g), space),
       {
         val c = graft.graph.ScenarioCatalog.fromCatalog(
-          g.allVertices.sparkSession, g,
+          g.session, g,
           space.toLowerCase.contains("int_vid"))
         // the nba fixture space pre-declares indexes in its importer
         // schema (tests/data/nba/config.yaml) — register them so
@@ -1033,7 +1033,7 @@ object TckRunner {
     def skip1(q: String, why: String): Unit = {
       skipped += 1; skipDetails += q -> why
     }
-    val spark = fixtures.values.head.allVertices.sparkSession
+    val spark = fixtures.values.head.session
 
     parseScenarios(featureText, defaultSpace).foreach { sc =>
       val goldenSteps = sc.steps.collect { case s: SQuery => s }
