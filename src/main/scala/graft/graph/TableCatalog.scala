@@ -9,9 +9,12 @@ import graft.operators.Mutations
 /** A PARQUET-BACKED mutable space: the at-scale twin of
   * ScenarioCatalog. Tags and edges are `Mutations.KeyedTable`s
   * (staged-commit parquet dirs keyed on vid / src,dst,rank), so the
-  * nGQL DML text surface (INSERT / UPDATE / DELETE, piped `$-` refs)
-  * executes as DataFrame merges — anti/semi joins with the delta
-  * broadcast when small — instead of driver-side row maps. This is
+  * nGQL DML text surface (INSERT / UPDATE / UPSERT / DELETE, literal
+  * keys or piped `$-` refs, `Dml.execTable`) executes as one keyed
+  * DataFrame merge per table — anti/semi joins with the delta
+  * broadcast when small, one row per key — instead of driver-side row
+  * maps. Schemas live on the driver (`tagDefs` / `edgeDefs`); TTL is
+  * rejected at CREATE. This is
   * the catalog a 100 TB space would use; ScenarioCatalog stays the
   * driver-side tool for TCK scenario spaces (tens of rows).
   *

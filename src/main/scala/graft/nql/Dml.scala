@@ -22,7 +22,10 @@ final class DmlError(msg: String) extends RuntimeException(msg)
   * ScenarioCatalog (driver-side scenario space — TCK runner, small
   * sessions) or a parquet-backed `graph.TableCatalog` (the AT-SCALE
   * route: every mutation plans as a Mutations.KeyedTable merge, and
-  * piped `$-` refs stay DataFrames — see execTable). */
+  * piped `$-` refs stay DataFrames — see execTable). Both executors
+  * read a statement's key set the same way: literal key tuples, or
+  * the key frame one resolver (pipedKeys) builds from piped refs; an
+  * UPDATE/UPSERT in vertex or edge form is one `Update` over it. */
 object Dml {
   import Gql.{P, Stmt, Item, InRef, Word, Sym, Str, Num}
 
@@ -106,13 +109,33 @@ object Dml {
                         rows: Vector[(Any, Any, Long, Vector[Expr.E])],
                         ifNotExists: Boolean,
                         ignoreIndex: Boolean = false) extends DStmt
+  /** UPDATE / UPSERT in either form, as the one keyed write both map
+    * onto (UpdateExecutor.cpp:40): a target tag or edge type, and its
+    * key set — literal key tuples (`vid`, or `src, dst, rank`) or the
+    * piped refs that name those columns. */
+  sealed trait Update extends DStmt {
+    def isTag: Boolean
+    def target: String
+    def keyRows: Seq[Seq[Any]]
+    def keyRefs: Option[Seq[InRef]]
+    def sets: Vector[(String, Expr.E)]
+    def when: Option[Expr.E]
+    def yields: Option[Seq[Item]]
+    def upsert: Boolean
+    def sentence: String = if (isTag) "UPDATE VERTEX" else "UPDATE EDGE"
+  }
   case class UpdateVertex(tag: String, vids: Seq[Any],
                           sets: Vector[(String, Expr.E)],
                           when: Option[Expr.E], yields: Option[Seq[Item]],
                           upsert: Boolean,
                           /** piped vid set: `UPDATE VERTEX ON t $-.id
                             * SET ...` (lookup/LookUpUpdate.feature). */
-                          ref: Option[InRef] = None) extends DStmt
+                          ref: Option[InRef] = None) extends Update {
+    def isTag = true
+    def target: String = tag
+    def keyRows: Seq[Seq[Any]] = vids.map(Seq(_))
+    def keyRefs: Option[Seq[InRef]] = ref.map(Seq(_))
+  }
   case class UpdateEdge(etype: String, keys: Seq[(Any, Any, Long)],
                         sets: Vector[(String, Expr.E)],
                         when: Option[Expr.E], yields: Option[Seq[Item]],
@@ -120,7 +143,15 @@ object Dml {
                         /** piped edge keys: `UPDATE EDGE ON e
                           * $-.src -> $-.dst @ $-.rank SET ...`. */
                         refKeys: Option[(InRef, InRef, Option[InRef])] =
-                          None) extends DStmt
+                          None) extends Update {
+    def isTag = false
+    def target: String = etype
+    def keyRows: Seq[Seq[Any]] = keys.map { case (s, d, r) => Seq(s, d, r) }
+    def keyRefs: Option[Seq[InRef]] = refKeys.map(edgeRefs)
+  }
+  /** An edge's piped key refs in key-column order: src, dst [, rank]. */
+  private def edgeRefs(k: (InRef, InRef, Option[InRef])): Seq[InRef] =
+    Seq(k._1, k._2) ++ k._3
   case class DeleteVertex(vids: Seq[Any], ref: Option[InRef],
                           withEdge: Boolean) extends DStmt
   case class DeleteEdge(etype: String,
@@ -793,19 +824,9 @@ object Dml {
       val etype = p.word()
       // ref form: DELETE EDGE t $-.src -> $-.dst [@$-.rank]
       if (p.peek.contains(Sym("$"))) {
-        def ref(): InRef = {
-          p.expectSym("$")
-          p.peek match {
-            case Some(Sym("-")) =>
-              p.next(); p.expectSym("."); InRef(None, p.word())
-            case Some(Word(v)) =>
-              p.next(); p.expectSym("."); InRef(Some(v), p.word())
-            case t => throw new IllegalArgumentException(s"bad ref $t")
-          }
-        }
-        val s = ref(); p.expectSym("-"); p.expectSym(">")
-        val d = ref()
-        val r = if (p.sym("@")) Some(ref()) else None
+        val s = inRef(p); p.expectSym("-"); p.expectSym(">")
+        val d = inRef(p)
+        val r = if (p.sym("@")) Some(inRef(p)) else None
         DeleteEdge(etype, Seq.empty, Some((s, d, r)))
       } else {
         val keys = mutable.ListBuffer.empty[(Any, Any, Long)]
@@ -1522,6 +1543,22 @@ object Dml {
       case _ => coerce(v, dt, prop)
     }
 
+  /** A CREATE TAG/EDGE prop spec as a catalog PropDef. A wall-clock
+    * default stays an expression (evaluated per write); any other
+    * default is evaluated and coerced once, here. */
+  private def propDef(spec: PropSpec): ScenarioCatalog.PropDef = {
+    val proto = ScenarioCatalog.PropDef(spec.name, dataTypeOf(spec.tpe),
+      spec.notNull, typeName = describeTypeName(spec.tpe),
+      comment = spec.comment)
+    spec.default match {
+      case Some(e) if isDynDefault(e) =>
+        proto.copy(hasDefault = true, default = DynDefault(Expr.text(e), e))
+      case Some(e) =>
+        proto.copy(hasDefault = true, default = coerceDef(evalConst(e), proto))
+      case None => proto
+    }
+  }
+
   private def propDefs(g: ScenarioCatalog, isTag: Boolean, name: String) =
     (if (isTag) g.tagDefs else g.edgeDefs).getOrElse(name,
       throw new DmlError(
@@ -1687,15 +1724,44 @@ object Dml {
     case _ => execScenario(g0, d, env, input)
   }
 
+  /** The key frame of a piped DML sentence, for both executors: one
+    * `$-.c` / `$var.c` ref gives a `vid` column, an edge's
+    * `$-.s -> $-.d [@ $-.r]` gives `src, dst, rank` (rank cast to
+    * bigint, 0 when absent). The rows come from the first ref's frame:
+    * the pipe input or the named variable. Vids are left as they come;
+    * the table space casts them to its vid type, the scenario space
+    * type-checks the collected values (evalVid). */
+  private def pipedKeys(sentence: String, refs: Seq[InRef],
+                        env: Map[String, DataFrame],
+                        input: Option[DataFrame]): DataFrame = {
+    val frame = refs.head.varName match {
+      case None => input.getOrElse(throw new IllegalArgumentException(
+        s"$sentence $$-. needs a pipe"))
+      case Some(v) => env.getOrElse(v, throw new IllegalArgumentException(
+        s"undefined $$$v"))
+    }
+    val keyCols = refs match {
+      case Seq(id) => Seq(col(id.colName).as("vid"))
+      case Seq(s, d, rank @ _*) => Seq(col(s.colName).as("src"),
+        col(d.colName).as("dst"),
+        rank.headOption.fold(lit(0L))(r => col(r.colName).cast(LongType))
+          .as("rank"))
+    }
+    frame.select(keyCols: _*)
+  }
+
   /** DML against a parquet-backed TableCatalog — the AT-SCALE path.
-    * Literal rows become DataFrames merged through Mutations
-    * .KeyedTable (staged-commit anti/semi joins); piped `$-`/`$var`
-    * refs STAY DataFrames end to end — a `LOOKUP ... | DELETE VERTEX
-    * $-.id` plans one anti join per table, never a driver collect
-    * (round-5 verdict "What's wrong" #1). Sentence subset = what a
-    * bulk pipeline issues (schema DDL + INSERT/UPDATE/DELETE);
-    * scenario-only surfaces (UPSERT row defaults, UPDATE...YIELD,
-    * TTL DDL) stay on ScenarioCatalog. */
+    * Each sentence is a keyed write through Mutations.KeyedTable
+    * (staged-commit anti/semi joins) on the target's key columns: `vid`
+    * for a tag, `src, dst, rank` for an edge type. Vertex and edge
+    * forms share the INSERT and UPDATE/UPSERT code. Literal rows become
+    * DataFrames with one row per key; piped `$-`/`$var` key sets
+    * (pipedKeys) STAY DataFrames end to end — a `LOOKUP ... | DELETE
+    * VERTEX $-.id` plans one anti join per table, never a driver
+    * collect. Sentence subset = what a bulk pipeline issues (schema DDL
+    * + INSERT/UPDATE/UPSERT/DELETE); scenario-only surfaces
+    * (UPDATE...YIELD, multi-tag INSERT, TTL DDL) stay on
+    * ScenarioCatalog. */
   private def execTable(tc: graft.graph.TableCatalog, d: DStmt,
                         env: Map[String, DataFrame],
                         input: Option[DataFrame]): DataFrame = {
@@ -1707,8 +1773,24 @@ object Dml {
       case (other, _) =>
         throw new DmlError(s"vid $other does not match the space vid type")
     }
-    def vidDt: org.apache.spark.sql.types.DataType =
-      if (tc.vidIsInt) LongType else StringType
+    def vidDt: DataType = if (tc.vidIsInt) LongType else StringType
+    // a literal key tuple in the space's types: vids checked, rank kept
+    def key(k: Seq[Any]): Seq[Any] = k match {
+      case Seq(s, d2, r) => Seq(vid(s), vid(d2), r)
+      case vs => vs.map(vid)
+    }
+    def literalKeys(cols: Seq[String], keys: Seq[Seq[Any]]): DataFrame =
+      spark.createDataFrame(keys.map(k => Row.fromSeq(key(k))).asJava,
+        StructType(cols.map(c =>
+          StructField(c, if (c == "rank") LongType else vidDt))))
+    // a piped key set with vids cast to the space's vid type,
+    // materialized (a block-store checkpoint, not a collect) before the
+    // first table swap: it may read the very files the write replaces
+    def pipedKeySet(sentence: String, refs: Seq[InRef]): DataFrame = {
+      val ks = pipedKeys(sentence, refs, env, input)
+      ks.select(ks.columns.toSeq.map(c =>
+        if (c == "rank") col(c) else col(c).cast(vidDt).as(c)): _*).mat()
+    }
     // typed scenario values flatten to their storage rendering
     def plain(v: Any): Any = v match {
       case GeoVal(w, _) => w
@@ -1716,10 +1798,25 @@ object Dml {
       case dv: DurVal => dv.toString
       case other => other
     }
-    def coerced(defs: Vector[ScenarioCatalog.PropDef],
-                names: Option[Vector[String]],
-                vals: Vector[Expr.E]): Seq[Any] =
-      buildRow(defs, names, vals.map(evalConst)).toSeq.map(plain)
+    // one literal row per key, as the scenario space applies them: the
+    // last INSERT row for a key wins, the first under IF NOT EXISTS
+    def insertRows(kt: graft.operators.Mutations.KeyedTable,
+                   schema: StructType, defs: Vector[ScenarioCatalog.PropDef],
+                   names: Option[Vector[String]],
+                   rows: Seq[(Seq[Any], Vector[Expr.E])],
+                   ifNotExists: Boolean): DataFrame = {
+      val byKey = mutable.LinkedHashMap.empty[Seq[Any], Row]
+      rows.foreach { case (k0, vals) =>
+        val k = key(k0)
+        val props =
+          buildRow(defs, names, vals.map(evalConst)).toSeq.map(plain)
+        if (!(ifNotExists && byKey.contains(k)))
+          byKey(k) = Row.fromSeq(k ++ props)
+      }
+      val df = spark.createDataFrame(byKey.values.toSeq.asJava, schema)
+      if (ifNotExists) kt.insertIfNotExists(df) else kt.insert(df)
+      emptyOk(spark)
+    }
     def setResolver(schema: String): Expr.Resolver = {
       case Expr.Ref(List(t, p)) if t == schema => Some(col(p))
       case Expr.Ref(List(p)) => Some(col(p))
@@ -1729,20 +1826,7 @@ object Dml {
       case CreateSchema(isTag, name, props, ifNotExists, ttlDur, ttlCol, _) =>
         require(ttlDur.isEmpty && ttlCol.isEmpty,
           "unsupported TTL on a table space")
-        val defs = props.map { spec =>
-          val dt = dataTypeOf(spec.tpe)
-          val proto = ScenarioCatalog.PropDef(spec.name, dt,
-            spec.notNull, typeName = describeTypeName(spec.tpe))
-          spec.default match {
-            case Some(e) if isDynDefault(e) =>
-              proto.copy(hasDefault = true,
-                default = DynDefault(Expr.text(e), e))
-            case Some(e) =>
-              proto.copy(hasDefault = true,
-                default = coerceDef(evalConst(e), proto))
-            case None => proto
-          }
-        }
+        val defs = props.map(propDef)
         val m = if (isTag) tc.tagDefs else tc.edgeDefs
         if (m.contains(name)) {
           if (!ifNotExists) throw new DmlError(s"Existed schema $name")
@@ -1754,150 +1838,66 @@ object Dml {
         val (t, names) = tags.head
         val defs = tc.tagDefs.getOrElse(t,
           throw new DmlError(s"unknown tag $t"))
-        val data = rows.map { case (v, vals) =>
-          Row.fromSeq(vid(v) +: coerced(defs, names, vals))
-        }
-        val df = spark.createDataFrame(data.asJava, tc.tagSchema(t))
-        if (ifNotExists) tc.tagTable(t).insertIfNotExists(df)
-        else tc.tagTable(t).insert(df)
-        emptyOk(spark)
+        insertRows(tc.tagTable(t), tc.tagSchema(t), defs, names,
+          rows.map { case (v, vals) => (Seq(v), vals) }, ifNotExists)
       case InsertEdge(etype, names, rows, ifNotExists, _) =>
         val defs = tc.edgeDefs.getOrElse(etype,
           throw new DmlError(s"unknown edge $etype"))
-        val data = rows.map { case (s, d2, r, vals) =>
-          Row.fromSeq(Seq(vid(s), vid(d2), r) ++ coerced(defs, names, vals))
-        }
-        val df = spark.createDataFrame(data.asJava, tc.edgeSchema(etype))
-        if (ifNotExists) tc.edgeTable(etype).insertIfNotExists(df)
-        else tc.edgeTable(etype).insert(df)
-        emptyOk(spark)
-      case UpdateVertex(tag, vids, sets, when, yields, upsert, Some(r)) =>
-        // piped vid set on the AT-SCALE route: the `$-`/`$var` frame
-        // stays a DataFrame — membership is a marker join inside
-        // updateByKeys, never a collect
-        require(yields.forall(_.isEmpty),
+        insertRows(tc.edgeTable(etype), tc.edgeSchema(etype), defs, names,
+          rows.map { case (s, d2, r, vals) => (Seq(s, d2, r), vals) },
+          ifNotExists)
+      case u: Update =>
+        require(u.yields.forall(_.isEmpty),
           "unsupported UPDATE...YIELD on a table space")
-        require(tc.tagDefs.contains(tag), s"unknown tag $tag")
-        val src = r match {
-          case InRef(None, c) =>
-            input.getOrElse(throw new IllegalArgumentException(
-              "UPDATE VERTEX $-. needs a pipe")).select(col(c))
-          case InRef(Some(v), c) =>
-            env.getOrElse(v, throw new IllegalArgumentException(
-              s"undefined $$$v")).select(col(c))
-        }
-        // materialized before the table swap (may read the very
-        // parquet files the update rewrites)
-        val ids = src.select(col(src.columns.head).cast(vidDt).as("vid"))
-          .mat()
-        val whenC = when.map(w => Expr.compile(w, setResolver(tag)))
+        val (kt, schema, defs) =
+          if (u.isTag) (tc.tagTable(u.target), tc.tagSchema(u.target),
+            tc.tagDefs(u.target))
+          else (tc.edgeTable(u.target), tc.edgeSchema(u.target),
+            tc.edgeDefs(u.target))
+        val whenC = u.when.map(w => Expr.compile(w, setResolver(u.target)))
           .getOrElse(lit(true))
-        val assigns = sets.map { case (p, e) =>
-          p -> Expr.compile(e, setResolver(tag)) }
-        val seed =
-          if (!upsert) ids
-          else {
-            val schema = tc.tagSchema(tag)
-            val defVals = defaultRow(tc.tagDefs(tag)).map(plain)
-            ids.select(col("vid") +:
-              schema.fields.drop(1).zip(defVals).map { case (f2, v) =>
-                lit(v).cast(f2.dataType).as(f2.name) }.toSeq: _*)
-          }
-        tc.tagTable(tag).updateByKeys(seed, insertMissing = upsert,
-          whenC, assigns: _*)
-        emptyOk(spark)
-      case UpdateVertex(tag, vids, sets, when, yields, upsert, None) =>
-        require(yields.forall(_.isEmpty),
-          "unsupported UPDATE...YIELD on a table space")
-        require(tc.tagDefs.contains(tag), s"unknown tag $tag")
-        val cond = col("vid").isin(vids.map(vid): _*) &&
-          when.map(w => Expr.compile(w, setResolver(tag))).getOrElse(lit(true))
-        val assigns = sets.map { case (p, e) =>
-          p -> Expr.compile(e, setResolver(tag)) }
-        if (upsert) {
-          // UPSERT: seed missing vids with schema defaults, then the
-          // SET applies over the merged frame — one staged write
-          val defs = tc.tagDefs(tag)
-          val seedProps = defaultRow(defs).map(plain)
-          val data = vids.map(v => Row.fromSeq(vid(v) +: seedProps))
-          val seed = spark.createDataFrame(data.asJava, tc.tagSchema(tag))
-          tc.tagTable(tag).upsertWith(seed, cond, assigns: _*)
-        } else tc.tagTable(tag).update(cond, assigns: _*)
-        emptyOk(spark)
-      case UpdateEdge(etype, keys, sets, when, yields, upsert,
-                      Some((sr, dr, rr))) =>
-        // piped edge-key set, join-based like the vertex form above
-        require(yields.forall(_.isEmpty),
-          "unsupported UPDATE...YIELD on a table space")
-        require(tc.edgeDefs.contains(etype), s"unknown edge $etype")
-        val src = (sr, input) match {
-          case (InRef(None, _), Some(in)) => in
-          case (InRef(Some(v), _), _) =>
-            env.getOrElse(v, throw new IllegalArgumentException(
-              s"undefined $$$v"))
-          case _ => throw new IllegalArgumentException(
-            "UPDATE EDGE $-. needs a pipe")
+        val assigns = u.sets.map { case (p, e) =>
+          p -> Expr.compile(e, setResolver(u.target)) }
+        u.keyRefs match {
+          // Literal keys stay a predicate over the table rather than a
+          // key-set join: on a 750-row parquet table (local[4], median
+          // of 5 second-round runs) a single-key UPDATE planned 2 Spark
+          // jobs and 241 ms this way, and 5 jobs and 560 ms as
+          // updateByKeys' marker join. A repeated key is one key.
+          case None =>
+            val keys = u.keyRows.map(key).distinct
+            val keyCond = kt.keys match {
+              case Seq(c) => col(c).isin(keys.map(_.head): _*)
+              case cs => keys.map(k => cs.zip(k).map { case (c, v) =>
+                col(c) === lit(v) }.reduce(_ && _)).reduce(_ || _)
+            }
+            val cond = keyCond && whenC
+            if (u.upsert) {
+              // missing keys are seeded with schema defaults, then the
+              // SET applies over the merged frame — one staged write
+              val seedProps = defaultRow(defs).map(plain)
+              val seed = spark.createDataFrame(
+                keys.map(k => Row.fromSeq(k ++ seedProps)).asJava, schema)
+              kt.upsertWith(seed, cond, assigns: _*)
+            } else kt.update(cond, assigns: _*)
+          // piped keys: membership is a marker join inside
+          // updateByKeys, never a collect
+          case Some(refs) =>
+            val ks = pipedKeySet(u.sentence, refs)
+            val seed =
+              if (!u.upsert) ks
+              else ks.select(ks.columns.toSeq.map(col) ++
+                schema.fields.toSeq.drop(kt.keys.size)
+                  .zip(defaultRow(defs).map(plain)).map { case (f2, v) =>
+                    lit(v).cast(f2.dataType).as(f2.name) }: _*)
+            kt.updateByKeys(seed, insertMissing = u.upsert, whenC,
+              assigns: _*)
         }
-        val keySet = src.select(
-          col(sr.colName).cast(vidDt).as("src"),
-          col(dr.colName).cast(vidDt).as("dst"),
-          rr.map(x => col(x.colName).cast(LongType))
-            .getOrElse(lit(0L)).as("rank")).mat()
-        val whenC = when.map(w => Expr.compile(w, setResolver(etype)))
-          .getOrElse(lit(true))
-        val assigns = sets.map { case (p, e) =>
-          p -> Expr.compile(e, setResolver(etype)) }
-        val seed =
-          if (!upsert) keySet
-          else {
-            val schema = tc.edgeSchema(etype)
-            val defVals = defaultRow(tc.edgeDefs(etype)).map(plain)
-            keySet.select(Seq(col("src"), col("dst"), col("rank")) ++
-              schema.fields.drop(3).zip(defVals).map { case (f2, v) =>
-                lit(v).cast(f2.dataType).as(f2.name) }: _*)
-          }
-        tc.edgeTable(etype).updateByKeys(seed, insertMissing = upsert,
-          whenC, assigns: _*)
-        emptyOk(spark)
-      case UpdateEdge(etype, keys, sets, when, yields, upsert, None) =>
-        require(yields.forall(_.isEmpty),
-          "unsupported UPDATE...YIELD on a table space")
-        require(tc.edgeDefs.contains(etype), s"unknown edge $etype")
-        val keyCond = keys.map { case (s, d2, r) =>
-          col("src") === lit(vid(s)) && col("dst") === lit(vid(d2)) &&
-            col("rank") === lit(r)
-        }.reduce(_ || _)
-        val cond = keyCond && when.map(w =>
-          Expr.compile(w, setResolver(etype))).getOrElse(lit(true))
-        val assigns = sets.map { case (p, e) =>
-          p -> Expr.compile(e, setResolver(etype)) }
-        if (upsert) {
-          val defs = tc.edgeDefs(etype)
-          val seedProps = defaultRow(defs).map(plain)
-          val data = keys.map { case (s, d2, r) =>
-            Row.fromSeq(Seq(vid(s), vid(d2), r) ++ seedProps)
-          }
-          val seed = spark.createDataFrame(data.asJava, tc.edgeSchema(etype))
-          tc.edgeTable(etype).upsertWith(seed, cond, assigns: _*)
-        } else tc.edgeTable(etype).update(cond, assigns: _*)
         emptyOk(spark)
       case DeleteVertex(vids, ref, withEdge) =>
-        // a piped id set is MATERIALIZED (block-store checkpoint, not
-        // a driver collect) before the first table swap: it may read
-        // the very parquet files the deletes replace
-        val ids: DataFrame = ref match {
-          case Some(InRef(None, c)) =>
-            input.getOrElse(throw new IllegalArgumentException(
-              "DELETE VERTEX $-. needs a pipe")).select(col(c).as("vid"))
-              .mat()
-          case Some(InRef(Some(v), c)) =>
-            env.getOrElse(v, throw new IllegalArgumentException(
-              s"undefined $$$v")).select(col(c).as("vid"))
-              .mat()
-          case None =>
-            spark.createDataFrame(
-              vids.map(v => Row(vid(v))).asJava,
-              StructType(Seq(StructField("vid", vidDt))))
+        val ids = ref match {
+          case Some(r) => pipedKeySet("DELETE VERTEX", Seq(r))
+          case None => literalKeys(Seq("vid"), vids.map(Seq(_)))
         }
         tc.tagNames.foreach { t =>
           val tb = tc.tagTable(t); if (tb.exists) tb.delete(ids)
@@ -1909,30 +1909,12 @@ object Dml {
         }
         emptyOk(spark)
       case DeleteEdge(etype, keys, refKeys) =>
-        require(tc.edgeDefs.contains(etype), s"unknown edge $etype")
-        val keyDf: DataFrame = refKeys match {
-          case Some((sr, dr, rr)) =>
-            val df = (sr, input) match {
-              case (InRef(None, _), Some(in)) => in
-              case (InRef(Some(v), _), _) =>
-                env.getOrElse(v, throw new IllegalArgumentException(
-                  s"undefined $$$v"))
-              case _ => throw new IllegalArgumentException(
-                "DELETE EDGE $-. needs a pipe")
-            }
-            df.select(col(sr.colName).as("src"),
-              col(dr.colName).as("dst"),
-              rr.map(r => col(r.colName).cast("long"))
-                .getOrElse(lit(0L)).as("rank"))
-              .mat() // decouple from the files we swap
-          case None =>
-            spark.createDataFrame(
-              keys.map { case (s, d2, r) =>
-                Row(vid(s), vid(d2), r) }.asJava,
-              StructType(Seq(StructField("src", vidDt),
-                StructField("dst", vidDt), StructField("rank", LongType))))
-        }
         val tb = tc.edgeTable(etype)
+        val keyDf = refKeys match {
+          case Some(k) => pipedKeySet("DELETE EDGE", edgeRefs(k))
+          case None => literalKeys(tb.keys,
+            keys.map { case (s, d2, r) => Seq(s, d2, r) })
+        }
         if (tb.exists) tb.delete(keyDf)
         emptyOk(spark)
       case other =>
@@ -1946,6 +1928,10 @@ object Dml {
                            env: Map[String, DataFrame],
                            input: Option[DataFrame]): DataFrame = {
     val spark = g0.session
+    // a piped key set collects: scenario spaces are driver-sized (tens
+    // of rows); the at-scale DML route is TableCatalog / execTable
+    def collectKeys(sentence: String, refs: Seq[InRef]): Seq[Seq[Any]] =
+      pipedKeys(sentence, refs, env, input).collect().toSeq.map(_.toSeq)
     d match {
       case AdminNoop(_) => emptyOk(spark)
       case CreateSchema(isTag, name, props, ifNotExists, ttlDur, ttlCol,
@@ -1954,25 +1940,7 @@ object Dml {
         // repeated prop name is a conflict (meta SchemaUtil check)
         if (props.map(_.name).distinct.size != props.size)
           throw new DmlError(s"duplicate prop in $name")
-        val defs = props.map { spec =>
-          val dt = dataTypeOf(spec.tpe)
-          val tn = describeTypeName(spec.tpe)
-          spec.default match {
-            case Some(e) =>
-              val proto = ScenarioCatalog.PropDef(spec.name, dt, spec.notNull,
-                typeName = tn, comment = spec.comment)
-              if (isDynDefault(e))
-                proto.copy(hasDefault = true,
-                  default = DynDefault(Expr.text(e), e))
-              else {
-                val v = coerceDef(evalConst(e), proto)
-                proto.copy(hasDefault = true, default = v)
-              }
-            case None =>
-              ScenarioCatalog.PropDef(spec.name, dt, spec.notNull,
-                typeName = tn, comment = spec.comment)
-          }
-        }
+        val defs = props.map(propDef)
         validateTtl(defs, ttlDur, ttlCol)
         if (isTag) g.createTag(name, defs, ifNotExists)
         else g.createEdge(name, defs, ifNotExists)
@@ -2470,8 +2438,7 @@ object Dml {
               ScenarioCatalog.PropDef(spec.name, dt, spec.notNull,
                 hasDefault = true, default = dv,
                 typeName = describeTypeName(spec.tpe), comment = spec.comment)
-            case None => ScenarioCatalog.PropDef(spec.name, dt, spec.notNull,
-              typeName = describeTypeName(spec.tpe), comment = spec.comment)
+            case None => propDef(spec)
           }
         }
         val keepIdx = cur.zipWithIndex.filterNot { case (d2, _) =>
@@ -2562,89 +2529,45 @@ object Dml {
           }
         }
         emptyOk(spark)
-      case UpdateVertex(tag, vidEs0, sets, when, yields, upsert, ref) =>
+      case u: Update =>
         val g = cat(g0)
-        // piped vid set: scenario spaces are driver-sized (same
-        // documented collect boundary as piped DELETE below)
-        val vidEs: Seq[Any] = ref match {
-          case Some(InRef(None, c)) =>
-            input.getOrElse(throw new IllegalArgumentException(
-              "UPDATE VERTEX $-. needs a pipe"))
-              .select(c).collect().map(_.get(0)).toSeq
-          case Some(InRef(Some(v), c)) =>
-            env.getOrElse(v, throw new IllegalArgumentException(
-              s"undefined $$$v")).select(c).collect().map(_.get(0)).toSeq
-          case None => vidEs0
-        }
-        // $$ (destination) is a GO-pipeline reference; invalid in
-        // UPDATE VERTEX ($^ legally names the updated vertex itself)
-        (sets.map(_._2) ++ when.toList ++
-            yields.toList.flatten.map(_.e)).foreach { e =>
+        val keys = u.keyRefs.fold(u.keyRows)(collectKeys(u.sentence, _))
+        (u.sets.map(_._2) ++ u.when.toList ++
+            u.yields.toList.flatten.map(_.e)).foreach { e =>
           Expr.collect(e) {
-            case Expr.Param("dst", _, _) =>
+            // $$ (destination) is a GO-pipeline reference; invalid in
+            // UPDATE VERTEX ($^ legally names the updated vertex itself)
+            case Expr.Param("dst", _, _) if u.isTag =>
               throw new DmlError("$$ reference not allowed in UPDATE")
-          }
-        }
-        val defs = propDefs(g, isTag = true, tag)
-        val m = g.tagRows(tag)
-        val outs = vidEs.map { vidE =>
-          val vid = evalVid(g, vidE)
-          applyUpdate(spark, defs, m.get(vid), sets, when, yields, upsert,
-            what = s"vertex $vid on tag $tag") match {
-            case (Some(work), out) =>
-              m(vid) = work; g.noteWrite(isTag = true, tag, vid); out
-            case (None, out) => out
-          }
-        }
-        if (outs.isEmpty) emptyOk(spark)
-        else outs.reduceLeft((a, b) =>
-          if (a.columns.isEmpty) b
-          else if (b.columns.isEmpty) a
-          else a.unionByName(b))
-      case UpdateEdge(etype, keyEs0, sets, when, yields, upsert, refKeys) =>
-        val g = cat(g0)
-        // piped edge-key set (same scenario-scale collect boundary)
-        val keyEs: Seq[(Any, Any, Long)] = refKeys match {
-          case Some((sr, dr, rr)) =>
-            val df = (sr, input) match {
-              case (InRef(None, _), Some(in)) => in
-              case (InRef(Some(v), _), _) =>
-                env.getOrElse(v, throw new IllegalArgumentException(
-                  s"undefined $$$v"))
-              case _ => throw new IllegalArgumentException(
-                "UPDATE EDGE $-. needs a pipe")
-            }
-            val cols = Seq(sr.colName, dr.colName) ++ rr.map(_.colName)
-            df.select(cols.head, cols.tail: _*).collect().toSeq.map { r =>
-              val rank = if (rr.isDefined) r.get(2) match {
-                case l: Long => l; case i: Int => i.toLong
-                case other => other.toString.toLong
-              } else 0L
-              (r.get(0), r.get(1), rank)
-            }
-          case None => keyEs0
-        }
-        // vertex-prop refs ($^ / $$) are invalid anywhere in UPDATE
-        // EDGE — storage updates one edge row and has no vertex at
-        // hand (Update.IntVid.feature:393 "Has wrong expr")
-        (sets.map(_._2) ++ when.toList ++
-            yields.toList.flatten.map(_.e)).foreach { e =>
-          Expr.collect(e) {
-            case p @ Expr.Param("src" | "dst", _, _) =>
+            // vertex-prop refs ($^ / $$) are invalid anywhere in UPDATE
+            // EDGE — storage updates one edge row and has no vertex at
+            // hand (Update.IntVid.feature:393 "Has wrong expr")
+            case p @ Expr.Param("src" | "dst", _, _) if !u.isTag =>
               throw new DmlError(s"Has wrong expr in `${Expr.text(p)}'")
           }
         }
-        val defs = propDefs(g, isTag = false, etype)
-        val m = g.edgeRows(etype)
-        val outs = keyEs.map { case (srcE, dstE, rank) =>
-          val key = (evalVid(g, srcE), evalVid(g, dstE), rank)
-          applyUpdate(spark, defs, m.get(key), sets, when, yields, upsert,
-            what = s"edge $key on $etype") match {
-            case (Some(work), out) =>
-              m(key) = work; g.noteWrite(isTag = false, etype, key); out
-            case (None, out) => out
+        val defs = propDefs(g, u.isTag, u.target)
+        // one per-key loop for both forms: each key's update commits
+        // as it is applied, and the YIELD frames union
+        def updateEach[K](m: mutable.Map[K, Array[Any]],
+                          keyOf: Seq[Any] => K,
+                          what: K => String): Seq[DataFrame] =
+          keys.map { k0 =>
+            val k = keyOf(k0)
+            applyUpdate(spark, defs, m.get(k), u.sets, u.when, u.yields,
+              u.upsert, what(k)) match {
+              case (Some(work), out) =>
+                m(k) = work; g.noteWrite(u.isTag, u.target, k); out
+              case (None, out) => out
+            }
           }
-        }
+        val outs =
+          if (u.isTag) updateEach[Any](g.tagRows(u.target),
+            k => evalVid(g, k.head), v => s"vertex $v on tag ${u.target}")
+          else updateEach[(Any, Any, Long)](g.edgeRows(u.target),
+            { case Seq(s, d2, r) =>
+              (evalVid(g, s), evalVid(g, d2), r.asInstanceOf[Long]) },
+            k => s"edge $k on ${u.target}")
         if (outs.isEmpty) emptyOk(spark)
         else outs.reduceLeft((a, b) =>
           if (a.columns.isEmpty) b
@@ -2652,42 +2575,17 @@ object Dml {
           else a.unionByName(b))
       case DeleteVertex(vids, ref, withEdge) =>
         val g = cat(g0)
-        val targets: Seq[Any] = ref match {
-          case Some(InRef(None, c)) =>
-            input.getOrElse(throw new IllegalArgumentException(
-              "DELETE VERTEX $-. needs a pipe"))
-              .select(c).collect().map(_.get(0)).toSeq
-          case Some(InRef(Some(v), c)) =>
-            env.getOrElse(v, throw new IllegalArgumentException(
-              s"undefined $$$v")).select(c).collect().map(_.get(0)).toSeq
-          case None => vids
-        }
+        val targets = ref.fold(vids)(r =>
+          collectKeys("DELETE VERTEX", Seq(r)).map(_.head))
         targets.foreach(v => g.deleteVertex(evalVid(g, v), withEdge))
         emptyOk(spark)
       case DeleteEdge(etype, keys, refKeys) =>
         val g = cat(g0)
         val m = g.edgeRows.getOrElse(etype,
           throw new DmlError(s"unknown edge $etype"))
-        val resolved: Seq[(Any, Any, Long)] = refKeys match {
-          case Some((sr, dr, rr)) =>
-            val df = (sr, input) match {
-              case (InRef(None, _), Some(in)) => in
-              case (InRef(Some(v), _), _) =>
-                env.getOrElse(v, throw new IllegalArgumentException(
-                  s"undefined $$$v"))
-              case _ => throw new IllegalArgumentException(
-                "DELETE EDGE $-. needs a pipe")
-            }
-            val cols = Seq(sr.colName, dr.colName) ++ rr.map(_.colName)
-            df.select(cols.head, cols.tail: _*).collect().toSeq.map { r =>
-              val rank = if (rr.isDefined) r.get(2) match {
-                case l: Long => l; case i: Int => i.toLong
-                case other => other.toString.toLong
-              } else 0L
-              (r.get(0), r.get(1), rank)
-            }
-          case None => keys
-        }
+        val resolved = refKeys.fold(keys)(k =>
+          collectKeys("DELETE EDGE", edgeRefs(k)).map { case Seq(s, d2, r) =>
+            (s, d2, r.asInstanceOf[Long]) })
         // endpoint vids go through the same storage-side validation
         // as inserts (overlong FIXED_STRING vid → ExecutionError)
         resolved.foreach { case (s2, d2, _) =>
@@ -2711,19 +2609,8 @@ object Dml {
         spark.createDataFrame(rows.asJava, schema)
       case DeleteTag(tags, vids, ref) =>
         val g = cat(g0)
-        // scenario-catalog path: ref id sets collect like DeleteVertex
-        // (driver-side spaces, tens of rows — the at-scale DML route
-        // is TableCatalog/execTable)
-        val targets: Seq[Any] = ref match {
-          case Some(InRef(None, c)) =>
-            input.getOrElse(throw new IllegalArgumentException(
-              "DELETE TAG $-. needs a pipe"))
-              .select(c).collect().map(_.get(0)).toSeq
-          case Some(InRef(Some(v), c)) =>
-            env.getOrElse(v, throw new IllegalArgumentException(
-              s"undefined $$$v")).select(c).collect().map(_.get(0)).toSeq
-          case None => vids
-        }
+        val targets = ref.fold(vids)(r =>
+          collectKeys("DELETE TAG", Seq(r)).map(_.head))
         val ts = if (tags == Seq("*")) g.tagNames else tags
         ts.foreach { t =>
           val m = g.tagRows.getOrElse(t,

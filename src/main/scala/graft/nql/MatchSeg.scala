@@ -246,69 +246,15 @@ object MatchSeg {
     Part(pathVar, nodes.toList, rels.toList, sp)
   }
 
-  /** A prop-map value: a driver-foldable constant, or a bare variable
-    * reference (`{name: a}` with `a` from an earlier WITH) kept as its
-    * Expr.Ref marker for the clause-WHERE hoist in parseClause. */
+  /** A prop-map value: a driver-foldable constant (Expr.tryConst —
+    * inline props like `{age: (4 * 20) + 5}` or `{age: $p.a}`,
+    * FoldConstantExprVisitor), or a bare variable reference
+    * (`{name: a}` with `a` from an earlier WITH) kept as its Expr.Ref
+    * marker for the clause-WHERE hoist in parseClause. */
   private def litValue(p: P): Any = Expr.parse(p) match {
     case r @ Expr.Ref(List(_)) => r
-    case e => constFold(e)
-  }
-
-  /** Driver-side fold of constant expressions — inline props like
-    * `{age: (4 * 20) + 5}` (FoldConstantExprVisitor). */
-  private def constFold(e: Expr.E): Any = e match {
-    case Expr.Lit(v) => v
-    case Expr.ParamLit(_, v) => constFold(v)
-    // nested parameter access ($p7.a.b.c / $p5[0]) folds element-wise
-    case Expr.Attr(x, name) => constFold(x) match {
-      case m: Map[_, _] =>
-        m.asInstanceOf[Map[String, Any]].getOrElse(name,
-          throw new IllegalArgumentException(s"no key $name"))
-      case other =>
-        throw new IllegalArgumentException(s"cannot access .$name of $other")
-    }
-    case Expr.Subscript(x, i) => (constFold(x), constFold(i)) match {
-      case (l: List[_], n: Long) => l.lift(n.toInt).getOrElse(
-        throw new IllegalArgumentException(s"index $n out of range"))
-      case (a, b) =>
-        throw new IllegalArgumentException(s"cannot subscript $a by $b")
-    }
-    case Expr.MapLit(entries) =>
-      entries.map { case (k, v) => k -> constFold(v) }.toMap
-    case Expr.ListLit(items) => items.map(constFold)
-    case Expr.Un("neg", x) => constFold(x) match {
-      case n: Long => -n
-      case d: Double => -d
-      case other =>
-        throw new IllegalArgumentException(s"cannot negate $other")
-    }
-    case Expr.Bin(op, a, b) =>
-      (constFold(a), constFold(b)) match {
-        case (x: Long, y: Long) => op match {
-          case "+" => x + y; case "-" => x - y; case "*" => x * y
-          case "/" => x / y; case "%" => x % y
-          case other =>
-            throw new IllegalArgumentException(s"non-constant op $other")
-        }
-        case (x: String, y: String) if op == "+" => x + y
-        case (xa, ya) =>
-          val (x, y) = (toD(xa), toD(ya))
-          op match {
-            case "+" => x + y; case "-" => x - y; case "*" => x * y
-            case "/" => x / y
-            case other =>
-              throw new IllegalArgumentException(s"non-constant op $other")
-          }
-      }
-    case other =>
-      throw new IllegalArgumentException(s"expected literal, got ${Expr.text(other)}")
-  }
-
-  private def toD(v: Any): Double = v match {
-    case n: Long => n.toDouble
-    case d: Double => d
-    case other =>
-      throw new IllegalArgumentException(s"not numeric: $other")
+    case e => Expr.tryConst(e).getOrElse(throw new IllegalArgumentException(
+      s"expected literal, got ${Expr.text(e)}"))
   }
 
   private def parseProps(p: P): List[(String, Any)] =

@@ -74,7 +74,10 @@ object Mutations {
       read.join(gatedKeys(rows), keys, "left_anti").unionByName(rows)
 
     /** INSERT (reference default: overwrite existing keys —
-      * InsertExecutor "insert or overwrite" semantics). */
+      * InsertExecutor "insert or overwrite" semantics, i.e. Delta
+      * MERGE's WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT). `rows`
+      * must hold one row per key, as must the rows of insertIfNotExists
+      * and the seed of upsertWith: a repeated key is written twice. */
     def insert(rows: DataFrame): Unit =
       if (!exists) write(rows)
       else write(insertPlan(rows))
@@ -91,11 +94,6 @@ object Mutations {
           keys, "left_anti")
         write(existing.unionByName(fresh))
       }
-
-    /** UPSERT = update matched keys with new values, insert the rest —
-      * the reference's UpsertExecutor, and Delta MERGE's canonical
-      * WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT. */
-    def upsert(rows: DataFrame): Unit = insert(rows)
 
     /** nGQL `UPSERT ... SET` semantics in ONE staged write: keys
       * missing from the table are seeded from `seed` (schema defaults
@@ -186,11 +184,4 @@ object Mutations {
   /** Edge identity includes rank (NebulaKeyUtils.h:61). */
   def edgeTable(spark: SparkSession, path: String): KeyedTable =
     KeyedTable(spark, path, Seq("src", "dst", "rank"))
-
-  /** TTL read-filter (SURVEY §1.3; storage/CommonUtils.cpp:17-29):
-    * rows expire when ttlCol + ttlSeconds < now. Injected at read
-    * time, like the reference's compaction-filter approach. */
-  def withTtl(df: DataFrame, ttlCol: String, ttlSeconds: Long): DataFrame =
-    df.filter(col(ttlCol) + expr(s"INTERVAL $ttlSeconds SECONDS") >=
-      current_timestamp())
 }

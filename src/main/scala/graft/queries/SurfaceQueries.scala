@@ -30,7 +30,7 @@ object SurfaceQueries {
         .select(col("c_custkey").cast("long").as("vid"),
           col("c_acctbal").as("acctbal"))
       t.insert(base)
-      t.upsert(
+      t.insert(
         s.range(1, 11).select(col("id").as("vid"), lit(999.0).as("acctbal"))
           .unionByName(s.range(9001, 9006)
             .select(col("id").as("vid"), lit(1.0).as("acctbal"))))

@@ -103,7 +103,7 @@ object GraphIngest {
       .select(table.keys.map(col): _*)
     // cheap row-existence probes on the (already planned) filters so
     // an all-delete batch doesn't rewrite the table with a no-op union
-    if (!ins.isEmpty) table.upsert(ins)
+    if (!ins.isEmpty) table.insert(ins)
     if (table.exists && !dels.isEmpty) table.delete(dels)
   }
 }

@@ -175,6 +175,107 @@ class DmlSpec extends SparkSpec {
       .head.getLong(0) == 10L)
   }
 
+  test("table space: a key repeated in one statement writes one row") {
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("graft-td").toString
+    val tc = new graft.graph.TableCatalog(spark, root, vidIsInt = true)
+    Gql.runScript(tc,
+      """CREATE TAG account(balance double DEFAULT 0.0);
+        |CREATE EDGE paid(amount int DEFAULT 0);
+        |INSERT VERTEX account(balance) VALUES 5:(5.0), 5:(6.0);
+        |INSERT VERTEX IF NOT EXISTS account(balance) VALUES 7:(7.0), 7:(8.0);
+        |UPSERT VERTEX ON account 9, 9 SET balance = balance + 1.0;
+        |INSERT EDGE paid(amount) VALUES 1->2:(10), 1->2:(11);
+        |UPSERT EDGE ON paid 2->1, 2->1 SET amount = amount + 1;""".stripMargin)
+    def balances(v: Long) = tc.vertexTable("account").filter(col("vid") === v)
+      .select("balance").collect().map(_.getDouble(0)).toSeq
+    def amounts(s: Long, d: Long) = tc.edgesByType("paid")
+      .filter(col("src") === s && col("dst") === d)
+      .select("amount").collect().map(_.getLong(0)).toSeq
+    assert(balances(5) == Seq(6.0)) // INSERT: the last row wins
+    assert(balances(7) == Seq(7.0)) // IF NOT EXISTS: the first row wins
+    assert(balances(9) == Seq(1.0)) // UPSERT: one key, SET applied once
+    assert(amounts(1, 2) == Seq(11L))
+    assert(amounts(2, 1) == Seq(1L))
+  }
+
+  test("table space: UPSERT EDGE inserts missing keys from defaults, literal and piped") {
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("graft-tue").toString
+    val tc = new graft.graph.TableCatalog(spark, root, vidIsInt = true)
+    Gql.runScript(tc,
+      """CREATE EDGE paid(amount int DEFAULT 5, note string DEFAULT "x");
+        |CREATE EDGE knows();
+        |INSERT EDGE paid(amount, note) VALUES 1->2:(10, "a"), 2->3:(20, "b"),
+        |  4->5:(12, "c"), 4->6:(30, "d");
+        |INSERT EDGE knows() VALUES 4->5:(), 4->6:(), 4->7:();""".stripMargin)
+    def edges = tc.edgesByType("paid").select("src", "dst", "amount", "note")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getString(3))).toSet
+    // literal keys: 1->2 passes WHEN and updates, 2->3 fails WHEN and
+    // stays, 3->4 is missing and is inserted from the defaults (5, "x")
+    // with the SET applied
+    Gql.runScript(tc,
+      """UPSERT EDGE ON paid 1->2, 2->3, 3->4
+        |  SET amount = amount + 100 WHEN amount < 15""".stripMargin)
+    assert(edges == Set((1L, 2L, 110L, "a"), (2L, 3L, 20L, "b"),
+      (3L, 4L, 105L, "x"), (4L, 5L, 12L, "c"), (4L, 6L, 30L, "d")))
+    // piped keys: 4->5 passes WHEN, 4->6 fails it, 4->7 is missing
+    Gql.runScript(tc,
+      """GO FROM 4 OVER knows YIELD knows._src AS s, knows._dst AS d, knows._rank AS r
+        || UPSERT EDGE ON paid $-.s -> $-.d @ $-.r
+        |  SET amount = amount + 100 WHEN amount < 15""".stripMargin)
+    assert(edges == Set((1L, 2L, 110L, "a"), (2L, 3L, 20L, "b"),
+      (3L, 4L, 105L, "x"), (4L, 5L, 112L, "c"), (4L, 6L, 30L, "d"),
+      (4L, 7L, 105L, "x")))
+    assert(tc.edgesByType("paid").filter(col("rank") =!= 0).count() == 0)
+  }
+
+  test("scenario space: piped UPDATE and DELETE change exactly the piped keys") {
+    val cat = fresh()
+    Gql.runScript(cat,
+      """CREATE TAG account(balance double); CREATE TAG vip(level int);
+        |CREATE EDGE paid(amount int);
+        |INSERT VERTEX account(balance) VALUES "a":(1.0), "b":(2.0), "c":(3.0), "d":(4.0);
+        |INSERT VERTEX vip(level) VALUES "a":(1), "b":(1), "c":(1), "d":(1);
+        |INSERT EDGE paid(amount) VALUES "a"->"b":(10), "a"->"c":(20), "b"->"d":(30),
+        |  "c"->"d"@1:(40);""".stripMargin)
+    def balances = cat.tagRows("account").map { case (v, r) => v -> r.head }.toMap
+    def amounts = cat.edgeRows("paid").map { case (k, r) => k -> r.head }.toMap
+    Gql.runScript(cat,
+      """GO FROM "a" OVER paid YIELD paid._dst AS id
+        || UPDATE VERTEX ON account $-.id SET balance = balance + 100.0""".stripMargin)
+    assert(balances == Map("a" -> 1.0, "b" -> 102.0, "c" -> 103.0, "d" -> 4.0))
+    Gql.runScript(cat,
+      """GO FROM "a" OVER paid YIELD paid._src AS s, paid._dst AS d, paid._rank AS r
+        || UPDATE EDGE ON paid $-.s -> $-.d @ $-.r SET amount = amount + 1""".stripMargin)
+    assert(amounts == Map(("a", "b", 0L) -> 11L, ("a", "c", 0L) -> 21L,
+      ("b", "d", 0L) -> 30L, ("c", "d", 1L) -> 40L))
+    Gql.runScript(cat,
+      """GO FROM "b" OVER paid YIELD paid._src AS s, paid._dst AS d
+        || DELETE EDGE paid $-.s -> $-.d""".stripMargin)
+    assert(amounts.keySet == Set(("a", "b", 0L), ("a", "c", 0L), ("c", "d", 1L)))
+    Gql.runScript(cat,
+      """$v = GO FROM "c" OVER paid YIELD paid._dst AS id;
+        |DELETE TAG vip FROM $v.id""".stripMargin)
+    assert(cat.tagRows("vip").keySet == Set("a", "b", "c"))
+    assert(cat.tagRows("account").contains("d"))
+    Gql.runScript(cat,
+      """GO FROM "c" OVER paid YIELD paid._dst AS id
+        || DELETE VERTEX $-.id WITH EDGE""".stripMargin)
+    assert(balances.keySet == Set("a", "b", "c"))
+    assert(amounts.keySet == Set(("a", "b", 0L), ("a", "c", 0L)))
+    val noPipe = intercept[IllegalArgumentException] {
+      Gql.runScript(cat, "DELETE VERTEX $-.id")
+    }
+    assert(noPipe.getMessage.contains("DELETE VERTEX $-. needs a pipe"),
+      noPipe.getMessage)
+    val noVar = intercept[IllegalArgumentException] {
+      Gql.runScript(cat, "DELETE VERTEX $nope.id")
+    }
+    assert(noVar.getMessage.contains("undefined $nope"), noVar.getMessage)
+  }
+
   test("table-space piped DML never collects to the driver") {
     // guard at the source level, like PlanSpec's localCheckpoint rule:
     // the execTable region of Dml.scala (TableCatalog route) must not

@@ -43,4 +43,19 @@ class MatchSegSpec extends SparkSpec {
     assert(e.getMessage.contains(
       "Where clause in optional match is not supported."))
   }
+
+  test("inline prop maps fold constant expressions and parameter access") {
+    val aged = MapCatalog(
+      tags = Map("person" -> Seq(("a", "Ann", 85L), ("b", "Bo", 30L))
+        .toDF("vid", "name", "age")),
+      edges = Map("knows" -> Seq(("a", "b", 0L)).toDF("src", "dst", "rank")))
+    def ages(props: String) =
+      Gql.runScript(aged,
+        s"MATCH (v:person$props) RETURN id(v) AS v, v.person.name AS name",
+        Map("p" -> "{a: 85}")).as[(String, String)].collect().toSet
+    val literal = ages("{age: 85}")
+    assert(literal == Set(("a", "Ann")))
+    assert(ages("{age: (4 * 20) + 5}") == literal)
+    assert(ages("{age: $p.a}") == literal)
+  }
 }
