@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** Lineage-truncation policy for every iterative loop (traversals,
   * BFS/shortest paths, the whole-graph algorithms, LSH dedup stages).
@@ -18,6 +21,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partition from the checkpoint files. This is the Spark equivalent of
   * the reference's Raft-replicated storage layer
   * (src/kvstore/Part.h — a storaged restart does not lose state).
+  *
+  * Loops that gate on a checkpoint's size take it from `counted`: the
+  * count is an observed metric of the job that writes the checkpoint,
+  * so it costs no second action (a `count()` on a checkpoint starts 2
+  * more jobs).
   *
   * Every loop frees what it materialized through `free`, the other
   * half of the lifecycle. Freeing stays SAFE in reliable mode even for
@@ -80,6 +88,23 @@ object Ckpt {
     }
     org.apache.spark.sql.graft.InternalBridge.stripOriginStats(ck)
   }
+
+  /** mat() that also returns `rows` (default: the row count), an
+    * aggregate observed on the materializing job itself
+    * (`Dataset.observe`) in every durability mode — no extra job. The
+    * materialized plan gains one CollectMetrics node. `rows` must
+    * evaluate to a non-null Long (`count`, `count_if`). */
+  def counted(df: DataFrame, rows: Column = count(lit(1))): (DataFrame, Long) = {
+    val obs = Observation()
+    val ck = mat(df.observe(obs, rows.as("rows")))
+    (ck, Await.result(obs.future, ObservedWait).getAs[Long]("rows"))
+  }
+
+  /** How long `counted` waits, after the job returned, for the metric
+    * the listener bus delivers (normally well under a millisecond): a
+    * bus that dropped the event fails the query here instead of
+    * blocking its loop forever. */
+  private val ObservedWait = 60.seconds
 
   /** mat() unless the frame is ALREADY a bare materialized scan (its
     * analyzed plan is a single LogicalRDD leaf) — re-checkpointing

@@ -11,15 +11,13 @@ import graft.Ckpt.MatOps
   *
   * Determinism: WCC and PageRank run a FIXED number of synchronous
   * iterations of an exactly-specified update rule, so an external
-  * oracle can replay them step for step (and a fixed iteration count
-  * is also the production-sane choice: convergence detection costs an
-  * extra action per round).
+  * oracle can replay them step for step.
   *
   * One loop: WCC, PageRank, k-core, LPA, HANP, SSSP, the Louvain move
   * rounds and SCC's colour and reach rounds all run on [[iterate]], the
   * vertex-state driver (GraphX's Pregel plays this part): each round
-  * materializes the caller's step, runs an optional exit probe on the
-  * checkpoint and frees the superseded state. The walk-style loops
+  * materializes the caller's step, observes an optional exit metric on
+  * that same job and frees the superseded state. The walk-style loops
   * (random walks, node2vec, betweenness, the Louvain level loop) keep
   * their own, since they accumulate output or per-level frames.
   *
@@ -30,20 +28,29 @@ import graft.Ckpt.MatOps
   */
 object GraphAlgos {
 
+  /** An exit probe of [[iterate]]: `metric`, a Long aggregate observed
+    * on each round's materializing job (`Ckpt.counted`, no extra
+    * action), and `fired`, the test on its value. */
+  private final case class Exit(metric: Column, fired: Long => Boolean)
+
   /** The vertex-state driver: round r materializes `step(state, r)`,
-    * runs `exit` (if any) on the materialized frame, drops the probe's
-    * `__old` column, frees the superseded state, and stops after
+    * observing `exit`'s metric (if any) on that same job, drops the
+    * probe's `__old` column, frees the superseded state, and stops after
     * `rounds` rounds or once `exit` fires. Returns the final state and
     * whether `exit` fired. */
   private def iterate(init: DataFrame, rounds: Int,
-                      exit: Option[DataFrame => Boolean] = None)(
+                      exit: Option[Exit] = None)(
       step: (DataFrame, Int) => DataFrame): (DataFrame, Boolean) = {
     var state = init
     var fired = false
     var round = 0
     while (round < rounds && !fired) {
-      val upd = step(state, round).mat()
-      fired = exit.exists(_(upd))
+      val next = step(state, round)
+      val upd = exit.fold(next.mat()) { x =>
+        val (ck, v) = Ckpt.counted(next, x.metric)
+        fired = x.fired(v)
+        ck
+      }
       Ckpt.free(state)
       state = if (upd.columns.contains("__old")) upd.drop("__old") else upd
       round += 1
@@ -52,15 +59,15 @@ object GraphAlgos {
   }
 
   /** Exit probe for label loops: no `c` value differs from its `__old`
-    * copy (one count per round against the checkpoint). */
-  private def unchanged(c: String): DataFrame => Boolean =
-    _.filter(col(c) =!= col("__old")).count() == 0
+    * copy (a null comparison counts as unchanged, as a filter drops it). */
+  private def unchanged(c: String): Exit =
+    Exit(count_if(col(c) =!= col("__old")), _ == 0)
 
   /** Exit probe for monotone loops: the round kept the previous round's
-    * row count (one count of `init` now, one per round after). */
-  private def sameRowCount(init: DataFrame): DataFrame => Boolean = {
-    var cnt = init.count()
-    upd => { val c = upd.count(); val same = c == cnt; cnt = c; same }
+    * row count (`initRows` is the initial state's). */
+  private def sameRowCount(initRows: Long): Exit = {
+    var cnt = initRows
+    Exit(count(lit(1)), c => { val same = c == cnt; cnt = c; same })
   }
 
   /** Run `f` on `adj`, then release the adjacency's cache. */
@@ -90,8 +97,8 @@ object GraphAlgos {
     * when iters ≥ graph diameter.
     *
     * `untilConverged=true` (production mode): a changed-label count
-    * (one cheap action per round against the already-checkpointed
-    * state) stops the loop as soon as a round changes nothing, with
+    * (observed on each round's materializing job, no extra action)
+    * stops the loop as soon as a round changes nothing, with
     * `iters` as the safety cap — correct on ANY diameter. */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
                           iters: Int,
@@ -113,10 +120,10 @@ object GraphAlgos {
   def connectedComponents(vertices: DataFrame, adj: Adjacency,
                           iters: Int, untilConverged: Boolean): DataFrame =
     // A fixpoint early-exit in oracle mode was tried and reverted with
-    // measurement (round 13): the bench graph's iteration counts are
-    // tuned to the diameter, so the exit never fires and the per-round
-    // changed-count is pure cost. `untilConverged` keeps paying it
-    // because there it IS the loop condition.
+    // measurement (round 13), when the changed-count was a separate
+    // action per round: the bench graph's iteration counts are tuned to
+    // the diameter, so the exit never fires. `untilConverged` observes
+    // the count because there it IS the loop condition.
     iterate(vertices.select(col("vid"), col("vid").as("label")).mat(), iters,
       if (untilConverged) Some(unchanged("label")) else None) { (labels, _) =>
       val fromNbrs = adj.send(labels, Seq(col("label")))
@@ -152,8 +159,8 @@ object GraphAlgos {
   def pageRank(vertices: DataFrame, adj: Adjacency, iters: Int,
                damping: Double, tol: Double): DataFrame = {
     val outDeg = adj.outDegrees.mat()
-    val converged: DataFrame => Boolean = upd =>
-      !(upd.agg(max(abs(col("pr") - col("__old")))).head.getDouble(0) > tol)
+    // converged: no rank moved by more than tol this round
+    val converged = Exit(count_if(abs(col("pr") - col("__old")) > tol), _ == 0)
     val (pr, _) = iterate(vertices.select(col("vid"), lit(1.0).as("pr")).mat(),
         iters, if (tol > 0.0) Some(converged) else None) { (pr, _) =>
       // inner join: dangling vertices (no out-edges) contribute nothing
@@ -250,14 +257,14 @@ object GraphAlgos {
     * semi-joins on the edge keys, state checkpointed so plan depth
     * stays constant — the same loop shape as WCC. */
   def kCore(edges: DataFrame, k: Int, iters: Int): DataFrame = {
-    val und0 = canonicalUndirected(edges).mat()
+    val (und0, und0Rows) = Ckpt.counted(canonicalUndirected(edges))
     // peeling is monotone (each round's edge set ⊆ the previous), so a
     // round that drops nothing is the fixpoint and every later round
-    // is an identity pass — skip them. The convergence signal is one
-    // count() per round against the ALREADY-materialized checkpoint
-    // (~free) vs three shuffles of the edge set per skipped round.
+    // is an identity pass — skip them. The convergence signal is the
+    // round's row count, observed on its materializing job (free) vs
+    // three shuffles of the edge set per skipped round.
     // Result-identical to running all `iters` rounds.
-    val (und, _) = iterate(und0, iters, Some(sameRowCount(und0))) { (und, _) =>
+    val (und, _) = iterate(und0, iters, Some(sameRowCount(und0Rows))) { (und, _) =>
       val deg = und.select(col("a").as("vid"))
         .unionAll(und.select(col("b").as("vid")))
         .groupBy("vid").agg(count(lit(1)).as("deg"))
@@ -374,8 +381,7 @@ object GraphAlgos {
   private def sccPhases(vertices: DataFrame, adjOut: Adjacency,
                         adjIn: Adjacency, phases: Int, rounds: Int,
                         exact: Boolean): DataFrame = {
-    var rem = vertices.select("vid").distinct().mat()
-    var remCnt = rem.count()
+    var (rem, remCnt) = Ckpt.counted(vertices.select("vid").distinct())
     var acc: DataFrame = null
     var p = 0
     // an exhausted remainder makes every later phase a no-op over
@@ -407,10 +413,11 @@ object GraphAlgos {
         s"scc coloring did not converge within $rounds rounds — raise maxRounds")
       // backward reach from roots, within color (the inner join on the
       // rem-only color frame keeps the walk inside the remaining set)
-      val roots = color.filter(col("vid") === col("color"))
-        .select(col("vid"), col("vid").as("root")).mat()
+      val (roots, rootRows) = Ckpt.counted(
+        color.filter(col("vid") === col("color"))
+          .select(col("vid"), col("vid").as("root")))
       val (reach, reached) = iterate(roots, rounds,
-          if (exact) Some(sameRowCount(roots)) else None) { (reach, _) =>
+          if (exact) Some(sameRowCount(rootRows)) else None) { (reach, _) =>
         val step = adjIn.send(reach, Seq(col("root")))
           .join(color.select(col("vid"), col("color").as("c2")), Seq("vid"))
           .filter(col("c2") === col("root"))
@@ -427,14 +434,15 @@ object GraphAlgos {
               Ckpt.free(acc)
               u
             }
-      val rem2 = rem.join(assigned.select("vid"), Seq("vid"), "left_anti").mat()
+      val (rem2, rem2Cnt) =
+        Ckpt.counted(rem.join(assigned.select("vid"), Seq("vid"), "left_anti"))
       Ckpt.free(rem)
       Ckpt.free(color)
       // acc's union checkpoint copied assigned's rows (unless aliased on
       // the first phase)
       if (assigned ne acc) Ckpt.free(assigned)
       rem = rem2
-      remCnt = rem.count()
+      remCnt = rem2Cnt
       p += 1
     }
     val singletons = rem.select(col("vid"), col("vid").as("scc_id"))
@@ -969,30 +977,30 @@ object GraphAlgos {
   def betweenness(seeds: DataFrame, adj: Adjacency,
                   maxSteps: Int): DataFrame = {
     // ---- forward: BFS levels with path counts ----
-    // Per-level row counts ride along (the loop counts every frontier
-    // anyway), so the growing per-level joins below can gate a
-    // BROADCAST of the small side exactly like every other reach-set
+    // Per-level row counts ride along (observed on each level's
+    // materializing job), so the growing per-level joins below can gate
+    // a BROADCAST of the small side exactly like every other reach-set
     // join in the engine (Traverse.maybeBroadcast): while the visited /
     // above sets fit the frontier cap, the anti-join and the backward
     // dependency join run build-side-broadcast with ZERO extra
     // exchange of the message set; past the cap they fall back to the
     // historical sort-merge shape — no new scale risk (guide §3.1).
-    var levels = Vector(
-      seeds.select(col("vid").as("origin"), col("vid"),
-        lit(1L).as("sigma")).mat())
-    var levelRows = Vector(levels.head.count())
+    val (root, rootRows) = Ckpt.counted(
+      seeds.select(col("vid").as("origin"), col("vid"), lit(1L).as("sigma")))
+    var levels = Vector(root)
+    var levelRows = Vector(rootRows)
     var visited = levels.head.select("origin", "vid").mat()
     var visitedRows = levelRows.head
     var step = 1
     var frontierRows = 1L
     while (step <= maxSteps && frontierRows > 0) {
       val prev = levels.last
-      val nxt = adj.send(prev, Seq(col("origin"), col("sigma")))
-        .join(graft.traverse.Traverse.maybeBroadcast(visited, visitedRows),
-          Seq("origin", "vid"), "left_anti")
-        .groupBy("origin", "vid").agg(sum(col("sigma")).as("sigma"))
-        .mat()
-      frontierRows = nxt.count()
+      val (nxt, rows) = Ckpt.counted(
+        adj.send(prev, Seq(col("origin"), col("sigma")))
+          .join(graft.traverse.Traverse.maybeBroadcast(visited, visitedRows),
+            Seq("origin", "vid"), "left_anti")
+          .groupBy("origin", "vid").agg(sum(col("sigma")).as("sigma")))
+      frontierRows = rows
       if (frontierRows > 0) {
         levels :+= nxt
         levelRows :+= frontierRows

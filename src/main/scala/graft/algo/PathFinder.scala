@@ -41,8 +41,9 @@ import graft.Ckpt.MatOps
   * [[bidiDrive]] instead — for the typed payload only on disjoint
   * endpoint sets (a self-pair cycle has no meet-in-the-middle split).
   *
-  * Scale: each level materializes + truncates lineage (localCheckpoint)
-  * and prunes per-origin visited sets, but the frontier carries one row
+  * Scale: each level materializes + truncates lineage (localCheckpoint),
+  * counting its rows on the same job (`Ckpt.counted`), and prunes
+  * per-origin visited sets, but the frontier carries one row
   * PER PATH (the vids array) — on dense graphs equal-length-path
   * multiplicity makes it far larger than |reached|, so the hop join's
   * broadcast hint is gated through Traverse.maybeBroadcast
@@ -58,7 +59,7 @@ object PathFinder {
     * depth — all tied paths kept), visited pruning, checkpoint
     * lifecycle. `expand` applies the caller's raw one-hop extension,
     * prunes it against visited, checkpoints, and bumps the depth. */
-  private final class BidiSide(seed0: DataFrame) {
+  private final class BidiSide(seed0: DataFrame, seedRows: Long) {
     var frontier: DataFrame = seed0
     var acc: DataFrame = seed0
     var levels: Vector[DataFrame] = Vector(seed0)
@@ -69,7 +70,7 @@ object PathFinder {
     // multiplicity (which grows exponentially on dense graphs)
     private var visited = seed0.select("origin", "vid").distinct().mat()
     var top = 0
-    var cnt: Long = frontier.count()
+    var cnt: Long = seedRows
     /** Final expansion depth per PRUNED origin (stopped early because
       * all its pairs resolved) — driver-side, bounded by the pruning
       * seed-size gate. Unpruned origins implicitly cap at `top`. */
@@ -79,12 +80,11 @@ object PathFinder {
       * re-distincts the accumulated ball. */
     def visitedSet: DataFrame = visited
     def expand(raw: DataFrame): DataFrame = {
-      val next = raw.join(
+      val (next, rows) = Ckpt.counted(raw.join(
           visited.select(col("origin").as("vo"), col("vid").as("vv")),
           col("origin") === col("vo") && col("vid") === col("vv"),
-          "left_anti")
-        .mat()
-      cnt = next.count()
+          "left_anti"))
+      cnt = rows
       if (cnt > 0) {
         // next's pairs are disjoint from visited (the anti-join), so
         // union-of-distincts stays distinct without a global re-dedup
@@ -226,13 +226,12 @@ object PathFinder {
             .distinct()
         // incremental: only genuinely NEW pairs join the met set (and
         // bump the count) — the accumulated set is never re-distincted
-        val fresh =
-          (if (metPairs == null) pairs
-           else pairs.join(metPairs
-               .select(col("__po").as("__mo"), col("__pt").as("__mt")),
-             col("__po") === col("__mo") && col("__pt") === col("__mt"),
-             "left_anti")).mat()
-        val freshCnt = fresh.count()
+        val (fresh, freshCnt) = Ckpt.counted(
+          if (metPairs == null) pairs
+          else pairs.join(metPairs
+              .select(col("__po").as("__mo"), col("__pt").as("__mt")),
+            col("__po") === col("__mo") && col("__pt") === col("__mt"),
+            "left_anti"))
         if (freshCnt > 0) {
           met += freshCnt
           val m2 = (if (metPairs == null) fresh
@@ -369,7 +368,7 @@ object PathFinder {
       col("origin").as("src"), col("vid").as("dst"), col("vids")) ++
       (if (typed) Seq(col("steps")) else Nil) :+ lit(step).as("hops"): _*)
     val seed0 = seed(srcs, e, typed)
-    var frontier = seed0.mat()
+    var (frontier, cnt) = Ckpt.counted(seed0)
     // shortest: per-origin visited anti-join. The typed payload starts
     // it EMPTY: a src that is also a dst must be re-reachable for the
     // self-pair's cycle paths (ShortestPath.feature `FROM "Tim Duncan"
@@ -382,7 +381,6 @@ object PathFinder {
         (if (typed) v.limit(0) else v).mat()
       }
     var found: DataFrame = null
-    var cnt = frontier.count()
     var step = 1
     while (step <= maxSteps && cnt > 0) {
       val h = hop(frontier, cnt, e)
@@ -396,13 +394,13 @@ object PathFinder {
           st("s") === e("ss") && st("d") === e("sd") &&
             st("t") === e("etype") && st("r") === e("rank")))
         else h
-      var next = kept.select(grown(e, typed): _*)
-      if (visited != null)
-        next = next.join(
+      val ext = kept.select(grown(e, typed): _*)
+      val (next, rows) = Ckpt.counted(
+        if (visited == null) ext
+        else ext.join(
           visited.select(col("origin").as("vo"), col("vid").as("vv")),
-          next("origin") === col("vo") && next("vid") === col("vv"),
-          "left_anti")
-      next = next.mat()
+          ext("origin") === col("vo") && ext("vid") === col("vv"),
+          "left_anti"))
       val hit = hits(next.join(dstSet, next("vid") === col("__target")), step)
         .mat()
       found = if (found == null) hit else found.unionByName(hit)
@@ -413,7 +411,7 @@ object PathFinder {
       }
       Ckpt.free(frontier) // consumed by next + hits
       frontier = next
-      cnt = frontier.count()
+      cnt = rows
       step += 1
     }
     Ckpt.free(frontier)
@@ -440,8 +438,11 @@ object PathFinder {
       case "dst" => col("src").as("dst")
       case c => col(c)
     }: _*), maxSteps)
-    def side(seeds: DataFrame) =
-      new BidiSide(seed(seeds, e0, typed).withColumn("depth", lit(0)).mat())
+    def side(seeds: DataFrame) = {
+      val (s0, rows) =
+        Ckpt.counted(seed(seeds, e0, typed).withColumn("depth", lit(0)))
+      new BidiSide(s0, rows)
+    }
     def extend(e: DataFrame)(frontier: DataFrame, cnt: Long,
                              d: Int): DataFrame =
       hop(frontier, cnt, e).select(grown(e, typed) :+ lit(d).as("depth"): _*)

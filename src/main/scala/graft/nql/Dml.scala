@@ -1855,7 +1855,6 @@ object Dml {
           else (tc.edgeTable(u.target), tc.edgeSchema(u.target),
             tc.edgeDefs(u.target))
         val whenC = u.when.map(w => Expr.compile(w, setResolver(u.target)))
-          .getOrElse(lit(true))
         val assigns = u.sets.map { case (p, e) =>
           p -> Expr.compile(e, setResolver(u.target)) }
         u.keyRefs match {
@@ -1871,15 +1870,14 @@ object Dml {
               case cs => keys.map(k => cs.zip(k).map { case (c, v) =>
                 col(c) === lit(v) }.reduce(_ && _)).reduce(_ || _)
             }
-            val cond = keyCond && whenC
             if (u.upsert) {
               // missing keys are seeded with schema defaults, then the
               // SET applies over the merged frame — one staged write
               val seedProps = defaultRow(defs).map(plain)
               val seed = spark.createDataFrame(
                 keys.map(k => Row.fromSeq(k ++ seedProps)).asJava, schema)
-              kt.upsertWith(seed, cond, assigns: _*)
-            } else kt.update(cond, assigns: _*)
+              kt.upsertWith(seed, keyCond, whenC, assigns: _*)
+            } else kt.update(keyCond && whenC.getOrElse(lit(true)), assigns: _*)
           // piped keys: membership is a marker join inside
           // updateByKeys, never a collect
           case Some(refs) =>
@@ -2547,20 +2545,28 @@ object Dml {
           }
         }
         val defs = propDefs(g, u.isTag, u.target)
-        // one per-key loop for both forms: each key's update commits
-        // as it is applied, and the YIELD frames union
+        // one per-key loop for both forms: every key applies to a
+        // staged copy (a repeated key sees its earlier result), and the
+        // copies commit only once every key has applied, so a missing
+        // key or a bad value leaves the whole statement unapplied; the
+        // YIELD frames union
         def updateEach[K](m: mutable.Map[K, Array[Any]],
                           keyOf: Seq[Any] => K,
-                          what: K => String): Seq[DataFrame] =
-          keys.map { k0 =>
+                          what: K => String): Seq[DataFrame] = {
+          val staged = mutable.LinkedHashMap.empty[K, Array[Any]]
+          val outs = keys.map { k0 =>
             val k = keyOf(k0)
-            applyUpdate(spark, defs, m.get(k), u.sets, u.when, u.yields,
-              u.upsert, what(k)) match {
-              case (Some(work), out) =>
-                m(k) = work; g.noteWrite(u.isTag, u.target, k); out
-              case (None, out) => out
-            }
+            val (work, out) = applyUpdate(spark, defs,
+              staged.get(k).orElse(m.get(k)), u.sets, u.when, u.yields,
+              u.upsert, what(k))
+            work.foreach(staged(k) = _)
+            out
           }
+          staged.foreach { case (k, work) =>
+            m(k) = work; g.noteWrite(u.isTag, u.target, k)
+          }
+          outs
+        }
         val outs =
           if (u.isTag) updateEach[Any](g.tagRows(u.target),
             k => evalVid(g, k.head), v => s"vertex $v on tag ${u.target}")

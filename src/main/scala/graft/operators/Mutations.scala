@@ -97,42 +97,62 @@ object Mutations {
 
     /** nGQL `UPSERT ... SET` semantics in ONE staged write: keys
       * missing from the table are seeded from `seed` (schema defaults
-      * / NULLs), then the SET `assignments` apply wherever `cond`
-      * holds — so an upserted-in row sees its defaults on the right-
-      * hand side (`SET age = age + 1` over a fresh row reads the
-      * default), exactly the reference's UpdateExecutor insertable
-      * path. The merge is an anti join on the (small) seed key set —
-      * never a collect. */
-    def upsertWith(seed: DataFrame, cond: org.apache.spark.sql.Column,
+      * / NULLs), then the SET `assignments` apply wherever `keyCond`
+      * and the statement's WHEN (`whenC`) hold — so an upserted-in row
+      * sees its defaults on the right-hand side (`SET age = age + 1`
+      * over a fresh row reads the default), exactly the reference's
+      * UpdateExecutor insertable path. The merge is an anti join on the
+      * (small) seed key set — never a collect. */
+    def upsertWith(seed: DataFrame, keyCond: org.apache.spark.sql.Column,
+                   whenC: Option[org.apache.spark.sql.Column],
                    assignments: (String, org.apache.spark.sql.Column)*): Unit = {
       val cur = if (exists) read else seed.limit(0)
       val fresh = seed.join(cur.select(keys.map(col): _*), keys, "left_anti")
-      val merged = cur.unionByName(fresh)
+      val (merged, cond) = seededWhen(cur, fresh, whenC)
       val updated = assignments.foldLeft(merged) { case (df, (c, v)) =>
-        df.withColumn(c, when(cond, v).otherwise(col(c)))
+        df.withColumn(c, when(keyCond && cond, v).otherwise(col(c)))
       }
-      write(updated)
+      write(updated.drop(Seeded))
+    }
+
+    private val Seeded = "__seeded"
+
+    /** `cur` ∪ `fresh` (the rows an UPSERT seeds for missing keys) and
+      * the condition the SET applies under: WHEN on `cur`'s rows, and
+      * always on a seeded row — the reference inserts a missing key
+      * whatever WHEN says (UpdateExecutor insertable path). With a
+      * WHEN, the union carries a `__seeded` marker the caller drops
+      * (a no-op drop otherwise); without one it is the bare union under
+      * `lit(true)`, the plan of a WHEN-less statement. */
+    private def seededWhen(cur: DataFrame, fresh: DataFrame,
+                           whenC: Option[org.apache.spark.sql.Column])
+        : (DataFrame, org.apache.spark.sql.Column) = whenC match {
+      case None => (cur.unionByName(fresh), lit(true))
+      case Some(w) =>
+        (cur.withColumn(Seeded, lit(false))
+          .unionByName(fresh.withColumn(Seeded, lit(true))), col(Seeded) || w)
     }
 
     /** UPDATE/UPSERT driven by a key-set DataFrame: rows whose key
-      * appears in `seed` receive the assignments (AND the extra
-      * predicate); with `insertMissing` the keys absent from the
-      * table are first seeded from `seed`'s rows (schema defaults) so
-      * the SET right-hand side reads them — nGQL UPSERT over a piped
-      * `$-` id set. Membership is a marker join, never a collect, so
-      * the piped set stays a DataFrame end to end at any scale. */
+      * appears in `seed` receive the assignments where the statement's
+      * WHEN (`whenC`) holds; with `insertMissing` the keys absent from
+      * the table are first seeded from `seed`'s rows (schema defaults)
+      * so the SET right-hand side reads them, and a seeded row takes
+      * the SET whatever WHEN says — nGQL UPSERT over a piped `$-` id
+      * set. Membership is a marker join, never a collect, so the piped
+      * set stays a DataFrame end to end at any scale. */
     def updateByKeys(seed: DataFrame, insertMissing: Boolean,
-                     extraCond: org.apache.spark.sql.Column,
+                     whenC: Option[org.apache.spark.sql.Column],
                      assignments: (String, org.apache.spark.sql.Column)*)
         : Unit = {
       val cur = if (exists) read
                 else if (insertMissing) seed.limit(0)
                 else return
-      val base = if (insertMissing) {
+      val (base, extraCond) = if (insertMissing) {
         val fresh = seed.join(cur.select(keys.map(col): _*), keys,
           "left_anti").dropDuplicates(keys)
-        cur.unionByName(fresh)
-      } else cur
+        seededWhen(cur, fresh, whenC)
+      } else (cur, whenC.getOrElse(lit(true)))
       val marked = base.join(
         seed.select(keys.map(col): _*).distinct()
           .withColumn("__hit", lit(true)),
@@ -142,7 +162,7 @@ object Mutations {
         df.withColumn(c, when(coalesce(cond, lit(false)), v)
           .otherwise(col(c)))
       }
-      write(updated.drop("__hit"))
+      write(updated.drop("__hit").drop(Seeded))
     }
 
     /** UPDATE: apply column assignments to rows matching a predicate. */

@@ -37,10 +37,11 @@ import graft.Ckpt.MatOps
   *    `spark.graft.checkpointDir` to reliable storage and the same
   *    sites become durable `checkpoint()`s that survive executor loss
   *    (see graft.Ckpt; exercised by tools.LocalClusterCheck).
-  *  - The frontier count (an action) runs against the materialized
-  *    blocks, which is cheap, and drives an explicit `broadcast()` hint
-  *    when the frontier is small — so hop joins against a big edge table
-  *    become broadcast joins instead of shuffling the edge table.
+  *  - The frontier's row count is observed on the job that
+  *    materializes it (`Ckpt.counted`, no extra action) and drives an
+  *    explicit `broadcast()` hint when the frontier is small — so hop
+  *    joins against a big edge table become broadcast joins instead of
+  *    shuffling the edge table.
   *  - Early exit on an empty frontier (the reference's loop condition).
   *  - No collect() anywhere; the driver only sees counts.
   */
@@ -192,9 +193,10 @@ object Traverse {
     * Level 0 is `seed`; level k is the caller's `hop` projection of
     * `hopJoin(level k-1, edges)`. With `visitKey`, a level also drops
     * every row whose key an earlier level holds (left anti-join). Each
-    * level is materialized and counted, and an empty level ends the
-    * walk before hop `n`. `edges` is persisted for the walk and
-    * released at its end (persistEdges).
+    * level is materialized by one job that also counts its rows
+    * (`Ckpt.counted`), and an empty level ends the walk before hop
+    * `n`. `edges` is persisted for the walk and released at its end
+    * (persistEdges).
     *
     * Returns the levels with rows whose step is in `keep`. With
     * `visitKey` it returns one Level instead: the visited set, every
@@ -206,8 +208,8 @@ object Traverse {
                             visitKey: Seq[String] = Nil)
                            (hop: (DataFrame, Int) => DataFrame): Seq[Level] = {
     val e = persistEdges(edges, n)
-    val root = seed.mat()
-    var level = Level(0, root, root.count())
+    val (root, rootRows) = Ckpt.counted(seed)
+    var level = Level(0, root, rootRows)
     var visited = if (visitKey.isEmpty) null else level
     val seen = visitKey.zipWithIndex.map { case (k, i) => (k, s"__seen$i") }
     val kept = scala.collection.mutable.ArrayBuffer.empty[Level]
@@ -220,9 +222,9 @@ object Traverse {
         visited.df.select(seen.map { case (k, s) => col(k).as(s) }: _*),
         seen.map { case (k, s) => next(k) === col(s) }.reduce(_ && _),
         "left_anti")
-      val df = fresh.mat()
+      val (df, rows) = Ckpt.counted(fresh)
       val prev = level
-      level = Level(step, df, df.count())
+      level = Level(step, df, rows)
       // the visited checkpoint holds prev's rows; the next hop reads level
       if (!keeps(prev) && (prev ne visited)) Ckpt.free(prev.df)
       if (visited != null && level.rows > 0) {
@@ -278,15 +280,19 @@ object Traverse {
           .unionByName(orient(edges, In).withColumn("__rev", lit(true)))
       case other => orient(edges, other)
     }
-    // per-step edge cap (GO ... SAMPLE [n,..] / LIMIT [n,..]):
-    // materialized so the yielded rows and the next frontier see the
-    // SAME capped pick (a deterministic first-n is a valid sample)
+    // per-step edge cap (GO ... SAMPLE [n,..] / LIMIT [n,..]); a
+    // deterministic first-n is a valid sample
+    def cap(k: Int, hop: DataFrame) =
+      stepCaps.lift(k - 1).fold(hop)(c => hop.limit(math.max(c, 0)))
+    // a step before n feeds the next frontier: its capped pick is
+    // materialized so the yielded rows and the frontier see the SAME rows
     val capped = scala.collection.mutable.Map.empty[Int, DataFrame]
-    // step k's rows are the hop out of level k-1, left lazy: keep m-1..n-1
+    // step k's rows are the hop out of level k-1, left lazy: keep
+    // m-1..n-1, so the walk stops at level n-1 (nothing reads level n)
     val levels = expand(seeds.select(col("vid").as("origin"), col("vid")),
-      e, n, keep = m - 1 until n) { (hop, k) =>
-      val rows = stepCaps.lift(k - 1).fold(hop) { cap =>
-        val c = hop.limit(math.max(cap, 0)).mat()
+      e, n - 1, keep = m - 1 until n) { (hop, k) =>
+      val rows = if (!stepCaps.isDefinedAt(k - 1)) hop else {
+        val c = cap(k, hop).mat()
         capped(k) = c
         c
       }
@@ -294,8 +300,8 @@ object Traverse {
     }
     capped.foreach { case (k, c) => if (k < m) Ckpt.free(c) }
     levels.map { l =>
-      capped.getOrElse(l.step + 1, hopJoin(l, e))
-        .withColumn("step", lit(l.step + 1))
+      val k = l.step + 1
+      capped.getOrElse(k, cap(k, hopJoin(l, e))).withColumn("step", lit(k))
     }.reduceOption(_ unionByName _).getOrElse(
       seeds.sparkSession.emptyDataFrame.select(lit("").as("origin"),
         lit("").as("src"), lit("").as("dst"), lit(0).as("step")).limit(0))

@@ -83,6 +83,58 @@ class DmlSpec extends SparkSpec {
     assert(cat.tagRows("t")("v").toSeq == Seq(10L, 15L))
   }
 
+  test("UPSERT seeds a missing key with the SET whatever WHEN says, on both catalogs") {
+    def check(cat: graft.graph.GraphCatalog): Unit = {
+      Gql.runScript(cat,
+        """CREATE TAG t(a int DEFAULT 10, b int);
+          |CREATE TAG s(n int);
+          |CREATE EDGE e();
+          |INSERT VERTEX t(a, b) VALUES "x":(1, 1), "y":(2, 2);
+          |INSERT VERTEX s(n) VALUES "a":(0);
+          |INSERT EDGE e() VALUES "a"->"w":(), "a"->"y":();""".stripMargin)
+      // literal keys: "v" is missing, "x" exists and fails WHEN
+      Gql.runScript(cat,
+        """UPSERT VERTEX ON t "v", "x" SET b = a + 5 WHEN b > 100""")
+      // piped keys: "w" is missing, "y" exists and fails WHEN
+      Gql.runScript(cat,
+        """GO FROM "a" OVER e YIELD e._dst AS id
+          || UPSERT VERTEX ON t $-.id SET b = a + 5 WHEN b > 100""".stripMargin)
+      val rows = cat.vertexTable("t").collect().map { r =>
+        r.getAs[String]("vid") ->
+          Seq("a", "b").map(c => Option(r.getAs[Any](c)).map(_.toString.toLong))
+      }.toMap
+      assert(rows == Map(
+        "v" -> Seq(Some(10L), Some(15L)), "w" -> Seq(Some(10L), Some(15L)),
+        "x" -> Seq(Some(1L), Some(1L)), "y" -> Seq(Some(2L), Some(2L))),
+        s"${cat.getClass.getSimpleName}: $rows")
+    }
+    check(fresh())
+    check(new graft.graph.TableCatalog(spark,
+      java.nio.file.Files.createTempDirectory("graft-tw").toString))
+  }
+
+  test("scenario space: a multi-key UPDATE with a missing key applies no key") {
+    val cat = fresh()
+    Gql.runScript(cat,
+      """CREATE TAG t(x int); CREATE EDGE e(w int);
+        |INSERT VERTEX t(x) VALUES "a":(1), "b":(2);
+        |INSERT EDGE e(w) VALUES "a"->"b":(1);""".stripMargin)
+    val v = intercept[DmlError] {
+      Gql.runScript(cat, """UPDATE VERTEX ON t "a", "zz" SET x = 9""")
+    }
+    assert(v.getMessage.contains("vertex zz on tag t not found"), v.getMessage)
+    intercept[DmlError] {
+      Gql.runScript(cat, """UPDATE EDGE ON e "a"->"b", "b"->"a" SET w = 9""")
+    }
+    assert(cat.tagRows("t").map { case (k, r) => k -> r.head }.toMap ==
+      Map("a" -> 1L, "b" -> 2L))
+    assert(cat.edgeRows("e").values.map(_.head).toSeq == Seq(1L))
+    // a key named twice still sees its own earlier result
+    Gql.runScript(cat, """UPDATE VERTEX ON t "a", "a", "b" SET x = x + 1""")
+    assert(cat.tagRows("t").map { case (k, r) => k -> r.head }.toMap ==
+      Map("a" -> 3L, "b" -> 3L))
+  }
+
   test("delete vertex WITH EDGE removes incident edges") {
     val cat = fresh()
     Gql.runScript(cat,

@@ -208,4 +208,29 @@ class GqlSpec extends SparkSpec {
       """FIND ALL PATH FROM "a" TO "d" OVER like UPTO 4 STEPS YIELD path AS p""")
     assert(yielded.count() == r.size)
   }
+
+  test("GO step caps: LIMIT / SAMPLE [..] cap every step, the last one too") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    // fan-out: a -> b1..b4, each bi -> ci1..ci3
+    val pairs = (1 to 4).flatMap(i => ("a", s"b$i") +:
+      (1 to 3).map(j => (s"b$i", s"c$i$j")))
+    val cat = graft.graph.MapCatalog(
+      tags = Map("node" -> pairs.flatMap(p => Seq(p._1, p._2)).distinct.toDF("vid")),
+      edges = Map("e" -> pairs.toDF("src", "dst").withColumn("rank", lit(0L))))
+    val edgeSet = pairs.toSet
+    def go(q: String) = Gql.run(cat, q).select("s", "d").as[(String, String)]
+      .collect().toSeq
+    for (kw <- Seq("LIMIT", "SAMPLE")) {
+      val two = go(s"""GO 2 STEPS FROM "a" OVER e YIELD e._src AS s, e._dst AS d $kw [2, 1]""")
+      assert(two.size == 1, s"$kw: $two")
+      assert(two.forall(edgeSet), s"$kw: $two")
+      val range = go(s"""GO 1 TO 2 STEPS FROM "a" OVER e YIELD e._src AS s, e._dst AS d $kw [1, 2]""")
+      assert(range.forall(edgeSet), s"$kw: $range")
+      val (step1, step2) = range.partition(_._1 == "a")
+      assert(step1.size == 1 && step2.size == 2, s"$kw: $range")
+      // the second step walks out of the first step's capped pick
+      assert(step2.forall(_._1 == step1.head._2), s"$kw: $range")
+    }
+  }
 }

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphModel
@@ -19,38 +16,9 @@ class GraphModelSpec extends SparkSpec {
     assumeFiles(s"$dir/customer.parquet", s"$dir/orders.parquet",
       s"$dir/part.parquet")
 
-  /** Jobs `body` starts from this thread. Suites share the session
-    * concurrently, so only jobs carrying a test-unique job tag count.
-    * The tag is the SparkContext's thread-local one: a session tag
-    * (`spark.addTag`) rides SQL executions only and would miss the
-    * plain RDD job a parquet footer read starts. A tagged sentinel job
-    * after `body` is the barrier: the listener bus delivers in order,
-    * so once the sentinel's start arrives every earlier start has. */
   private def jobsOf[T](body: => T): (T, Int) = {
-    val tag = s"graft-gm-${java.util.UUID.randomUUID()}"
-    val sentinel = s"$tag-sentinel"
-    val jobs = new AtomicInteger(0)
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val tags = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.tags")))
-          .map(_.split(",").toSet).getOrElse(Set.empty)
-        if (tags(sentinel)) sentinelSeen.countDown()
-        else if (tags(tag)) jobs.incrementAndGet()
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.addJobTag(tag)
-      val out = try body finally sc.removeJobTag(tag)
-      sc.addJobTag(sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(sentinel)
-      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "sentinel job start never reached the listener")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val (out, jobs) = jobNamesOf(body)
+    (out, jobs.size)
   }
 
   test("source tables resolve once per model: later touches start no job") {
