@@ -13,8 +13,9 @@ import graft.operators.Mutations
   * keys or piped `$-` refs, `Dml.execTable`) executes as one keyed
   * DataFrame merge per table — anti/semi joins with the delta
   * broadcast when small, one row per key — instead of driver-side row
-  * maps. Schemas live on the driver (`tagDefs` / `edgeDefs`); TTL is
-  * rejected at CREATE. This is
+  * maps. Schemas live on the driver (`tagDefs` / `edgeDefs`), cannot
+  * change after CREATE, and every read uses them (no parquet schema
+  * inference); TTL is rejected at CREATE. This is
   * the catalog a 100 TB space would use; ScenarioCatalog stays the
   * driver-side tool for TCK scenario spaces (tens of rows).
   *
@@ -36,12 +37,12 @@ final class TableCatalog(val spark: SparkSession, val root: String,
 
   def tagTable(t: String): Mutations.KeyedTable = {
     require(tagDefs.contains(t), s"unknown tag $t")
-    Mutations.vertexTable(spark, s"$root/tag_$t")
+    Mutations.vertexTable(spark, s"$root/tag_$t", Some(tagSchema(t)))
   }
 
   def edgeTable(e: String): Mutations.KeyedTable = {
     require(edgeDefs.contains(e), s"unknown edge $e")
-    Mutations.edgeTable(spark, s"$root/edge_$e")
+    Mutations.edgeTable(spark, s"$root/edge_$e", Some(edgeSchema(e)))
   }
 
   def tagSchema(t: String): StructType =

@@ -1,7 +1,7 @@
 package graft.nql
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, lit, round}
 import org.apache.spark.sql.types._
 import graft.graph.{GraphCatalog, ScenarioCatalog}
 import scala.collection.mutable
@@ -1000,159 +1000,37 @@ object Dml {
   }
 
   // ---------- driver-side constant/row-context evaluation ----------
-  /** Evaluate an expression against a prop-name environment; throws
-    * IllegalArgumentException for surface outside the DML subset and
-    * DmlError for semantic violations (unknown prop). */
-  def eval(e: Expr.E, env: String => Option[Any]): Any = e match {
-    case Expr.Lit(v) => v
-    case Expr.ParamLit(_, v) => eval(v, env)
-    case Expr.ListLit(items) => ListVal(items.map(eval(_, env)))
-    case Expr.SetLit(items) => SetVal(items.map(eval(_, env)).distinct)
-    case Expr.Ref(parts) =>
-      env(parts.last).getOrElse(
+  /** Evaluate an expression against a prop-name environment: the
+    * `Expr.fold` with the row's props as refs and `fncall` as its calls.
+    * Throws IllegalArgumentException for surface outside the fold and
+    * DmlError for semantic violations (unknown prop, operand types,
+    * division by zero, integer overflow). */
+  def eval(e: Expr.E, env: String => Option[Any]): Any = {
+    def prop(r: Expr.E): Any = r match {
+      case Expr.Ref(parts) => env(parts.last).getOrElse(
         throw new DmlError(s"unknown prop ${parts.mkString(".")}"))
-    case Expr.Param(_, _, parts) if parts.nonEmpty =>
-      env(parts.last).getOrElse(
+      case Expr.Param(_, _, parts) if parts.nonEmpty => env(parts.last).getOrElse(
         throw new DmlError(s"unknown prop ${parts.mkString(".")}"))
-    case Expr.Un("neg", x) => eval(x, env) match {
-      case n: Long => -n
-      case d: Double => -d
-      case other => throw new DmlError(s"cannot negate $other")
+      case other => throw new IllegalArgumentException(
+        s"unsupported DML expr ${Expr.text(other)}")
     }
-    case Expr.Un("not" | "notrel", x) => eval(x, env) match {
-      case b: Boolean => !b
-      case null => null
-      case other => throw new DmlError(s"cannot NOT $other")
-    }
-    case Expr.Bin(op, a, b) =>
-      binop(op, unTag(eval(a, env)), unTag(eval(b, env)))
-    case Expr.CaseW(None, branches, els) =>
-      branches.collectFirst {
-        case (c, v) if eval(c, env) == true => eval(v, env)
-      }.getOrElse(els.map(eval(_, env)).orNull)
-    case Expr.FnCall(name, args, _) => fncall(name.toLowerCase,
-      args.map(e2 => unTag(eval(e2, env))))
-    case Expr.MapLit(entries) =>
-      scala.collection.immutable.ListMap(
-        entries.map { case (k, v) => k -> eval(v, env) }: _*)
-    case Expr.Attr(x, nm) => eval(x, env) match {
-      case m: collection.Map[String @unchecked, Any @unchecked] =>
-        m.getOrElse(nm, null)
-      case null => null
-      case other => throw new DmlError(s"cannot access .$nm on $other")
-    }
-    // map['k'] / list[i] in SET/WHEN position (bugfix/SubscriptInUpdate)
-    case Expr.Subscript(x, i) =>
-      (unTag(eval(x, env)), unTag(eval(i, env))) match {
-        case (null, _) => null
-        case (m: collection.Map[String @unchecked, Any @unchecked],
-            k: String) => m.getOrElse(k, null)
-        case (xs: Seq[_], n: Long) =>
-          val idx = if (n < 0) xs.size + n else n
-          if (idx >= 0 && idx < xs.size) xs(idx.toInt) else null
-        case (b, k) => throw new DmlError(s"cannot subscript $b with $k")
-      }
-    case other =>
-      throw new IllegalArgumentException(s"unsupported DML expr $other")
-  }
-
-  /** Both operands integral (Long/Int), as Longs. */
-  private def long2(x: Any, y: Any): Option[(Long, Long)] = (x, y) match {
-    case (a: Long, b: Long) => Some((a, b))
-    case (a: Long, b: Int) => Some((a, b.toLong))
-    case (a: Int, b: Long) => Some((a.toLong, b))
-    case (a: Int, b: Int) => Some((a.toLong, b.toLong))
-    case _ => None
-  }
-
-  /** Both operands numeric, as Doubles (for any pair `long2` rejects). */
-  private def num2(x: Any, y: Any): Option[(Double, Double)] = {
-    def d(v: Any): Option[Double] = v match {
-      case n: Long => Some(n.toDouble)
-      case n: Int => Some(n.toDouble)
-      case f: Double => Some(f)
-      case _ => None
-    }
-    for (a <- d(x); b <- d(y)) yield (a, b)
-  }
-
-  private def rel[T](op: String, a: T, b: T)(implicit o: Ordering[T]): Boolean =
-    op match {
-      case "==" => o.equiv(a, b); case "!=" => !o.equiv(a, b)
-      case "<" => o.lt(a, b); case "<=" => o.lteq(a, b)
-      case ">" => o.gt(a, b); case ">=" => o.gteq(a, b)
-    }
-
-  /** A numeric comparison: exact on two integers (longs above 2^53
-    * stay distinct), IEEE on anything involving a double. */
-  private def numRel(op: String, x: Any, y: Any): Option[Boolean] =
-    long2(x, y).map { case (a, b) => rel(op, a, b) }.orElse(
-      num2(x, y).map { case (a, b) => rel(op, a, b)(Ordering.Double.IeeeOrdering) })
-
-  /** Arithmetic on two integers stays Long and raises on overflow with
-    * the YIELD path's message (Expr.compile); a double operand makes
-    * it Double arithmetic. */
-  private def arith(op: String, x: Any, y: Any): Any = long2(x, y) match {
-    case Some((a, b)) =>
-      if ((op == "/" || op == "%") && b == 0) throw new DmlError("division by zero")
-      try op match {
-        case "+" => Math.addExact(a, b)
-        case "-" => Math.subtractExact(a, b)
-        case "*" => Math.multiplyExact(a, b)
-        case "/" => if (b == -1) Math.negateExact(a) else a / b
-        case "%" => a % b
-      } catch { case _: ArithmeticException =>
-        throw new DmlError(s"result of ($a$op$b) cannot be represented as an integer")
-      }
-    case None => num2(x, y) match {
-      case Some((a, b)) => op match {
-        case "+" => a + b; case "-" => a - b; case "*" => a * b
-        case "/" => a / b; case "%" => a % b
-      }
-      case None => throw new DmlError(
-        if (op == "+") s"cannot add $x + $y" else s"cannot $op $x $y")
+    try Expr.fold(e, prop, fncall)
+    catch {
+      case n: Expr.NoFold =>
+        throw (if (n.unsupported) new IllegalArgumentException(n.getMessage)
+               else new DmlError(n.getMessage))
+      case o: Expr.IntOverflow => throw new DmlError(o.getMessage)
     }
   }
 
-  /** Container-literal kind tags only matter at prop coercion; every
-    * other consumer sees the plain element Seq. */
-  private def unTag(v: Any): Any = v match {
-    case SetVal(xs) => xs
-    case ListVal(xs) => xs
-    case other => other
-  }
-
-  private def binop(op: String, x: Any, y: Any): Any = op match {
-    case "and" | "AND" => (x, y) match {
-      case (false, _) | (_, false) => false
-      case (true, true) => true
-      case _ => null
-    }
-    case "or" | "OR" => (x, y) match {
-      case (true, _) | (_, true) => true
-      case (false, false) => false
-      case _ => null
-    }
-    case "==" | "=" =>
-      if (x == null || y == null) null else numRel("==", x, y).getOrElse(x == y)
-    case "!=" | "<>" =>
-      if (x == null || y == null) null else numRel("!=", x, y).getOrElse(x != y)
-    case "<" | "<=" | ">" | ">=" =>
-      if (x == null || y == null) null
-      else numRel(op, x, y).getOrElse((x, y) match {
-        case (a: String, b: String) => rel(op, a, b)
-        case _ => throw new DmlError(s"cannot compare $x $op $y")
-      })
-    case "+" => (x, y) match {
-      case (a: Seq[_], b: Seq[_]) => a ++ b
-      case (a: String, b: String) => a + b
-      case (null, _) | (_, null) => null
-      case _ => arith(op, x, y)
-    }
-    case "-" | "*" | "/" | "%" =>
-      if (x == null || y == null) null else arith(op, x, y)
-    case other =>
-      throw new IllegalArgumentException(s"unsupported DML operator $other")
+  /** `eval` for a value headed for prop coercion: a top-level LIST or
+    * SET literal keeps its kind (ListVal / SetVal), which coercion
+    * checks against the declared container. */
+  private def evalProp(e: Expr.E, env: String => Option[Any]): Any = e match {
+    case Expr.ParamLit(_, v) => evalProp(v, env)
+    case Expr.SetLit(_) => SetVal(eval(e, env).asInstanceOf[Seq[Any]])
+    case Expr.ListLit(_) => ListVal(eval(e, env).asInstanceOf[Seq[Any]])
+    case _ => eval(e, env)
   }
 
   private def fncall(name: String, args: List[Any]): Any = name match {
@@ -1609,7 +1487,7 @@ object Dml {
     }.toArray
   }
 
-  private def evalConst(e: Expr.E): Any = eval(e, _ => None)
+  private def evalConst(e: Expr.E): Any = evalProp(e, _ => None)
 
   private def evalVid(g: ScenarioCatalog, v: Any): Any =
     (v, g.vidIsInt) match {
@@ -1630,7 +1508,7 @@ object Dml {
   /** One-row result frame for UPDATE ... YIELD. */
   private def yieldFrame(spark: SparkSession, items: Seq[Item],
                          env: String => Option[Any]): DataFrame = {
-    val vals = items.map(i => i.alias -> unTag(eval(i.e, env)))
+    val vals = items.map(i => i.alias -> eval(i.e, env))
     def dtOf(v: Any): DataType = v match {
       case _: Long => LongType
       case _: Int => LongType
@@ -1681,7 +1559,7 @@ object Dml {
     def applySets(work: Array[Any]): Unit =
       sets.foreach { case (n, e) =>
         val i = defs.indexWhere(_.name == n)
-        work(i) = coerceDef(eval(e, envOf(work)), defs(i))
+        work(i) = coerceDef(evalProp(e, envOf(work)), defs(i))
       }
     existing match {
       case Some(arr) =>
@@ -1855,8 +1733,17 @@ object Dml {
           else (tc.edgeTable(u.target), tc.edgeSchema(u.target),
             tc.edgeDefs(u.target))
         val whenC = u.when.map(w => Expr.compile(w, setResolver(u.target)))
+        // each SET value is cast to its prop's declared type, rounding
+        // a fractional value into an int prop half away from zero, as
+        // `coerce` does: the column keeps its type
         val assigns = u.sets.map { case (p, e) =>
-          p -> Expr.compile(e, setResolver(u.target)) }
+          val v = Expr.compile(e, setResolver(u.target))
+          p -> (defs.find(_.name == p).map(_.dt) match {
+            case Some(LongType) => round(v).cast(LongType)
+            case Some(dt) => v.cast(dt)
+            case None => throw new DmlError(s"unknown prop $p")
+          })
+        }
         u.keyRefs match {
           // Literal keys stay a predicate over the table rather than a
           // key-set join: on a 750-row parquet table (local[4], median

@@ -328,8 +328,7 @@ object Expr {
           // range checks see them (-9223372036854775807-2 overflow);
           // negating Long.MinValue itself cannot be represented
           case Lit(n: Long) if n == Long.MinValue =>
-            throw new IllegalArgumentException(
-              "SemanticError: result of -(-9223372036854775808) cannot be represented as an integer")
+            throw new IntOverflow("-(-9223372036854775808)", "SemanticError: ")
           case Lit(n: Long) => Lit(-n)
           case Lit(d: Double) => Lit(-d)
           case other => Un("neg", other)
@@ -697,22 +696,13 @@ object Expr {
   val noResolver: Resolver = _ => None
 
   def compile(e: E, r: Resolver): Column = {
-    def c(e: E): Column = r(e).getOrElse(e match {
-      case Lit(null) => lit(null)
+    // an expression over literals compiles to its fold's value, the
+    // value DML computes too: the reference's constant folder rejects
+    // 9223372036854775807+1 rather than wrap (GO.feature), and
+    // mixed-family and list comparisons can't even be typed as Spark
+    // columns (RelationalExpr.feature)
+    def c(e: E): Column = r(e).orElse(foldedLit(e)).getOrElse(e match {
       case Lit(v) => lit(v)
-      // int-literal arithmetic folds with an overflow check — the
-      // reference's constant folder rejects 9223372036854775807+1
-      // as a SemanticError, not a silent wrap (GO.feature)
-      case Bin(op @ ("+" | "-" | "*"), Lit(a: Long), Lit(b: Long)) =>
-        try lit(op match {
-          case "+" => Math.addExact(a, b)
-          case "-" => Math.subtractExact(a, b)
-          case _ => Math.multiplyExact(a, b)
-        })
-        catch { case _: ArithmeticException =>
-          throw new IllegalArgumentException(
-            s"result of ($a$op$b) cannot be represented as an integer")
-        }
       case Ref(one :: Nil) => col(one)
       case Bin("and", a, b) => c(a) && c(b)
       // a constant-true operand decides the OR no matter how ill-typed
@@ -723,26 +713,6 @@ object Expr {
         lit(true)
       case Bin("or", a, b) => c(a) || c(b)
       case Bin("xor", a, b) => c(a) =!= c(b)
-      // constant relational expressions fold through the reference's
-      // Value comparator — mixed-family and list operands can't even
-      // be typed as Spark columns (RelationalExpr.feature)
-      case Bin(op @ ("==" | "!=" | "<" | "<=" | ">" | ">="), a, b)
-          if tryConst(a).exists(constCmpFoldable) &&
-             tryConst(b).exists(constCmpFoldable) &&
-             !isGeoDist(a) && !isGeoDist(b) =>
-        foldCmp(op, tryConst(a).get, tryConst(b).get) match {
-          case null => lit(null).cast("boolean")
-          case v2 => lit(v2)
-        }
-      case Bin("in", a, b)
-          if tryConst(a).exists(constCmpFoldable) &&
-             tryConst(b).exists(v2 => v2.isInstanceOf[List[_]] &&
-               constCmpFoldable(v2)) =>
-        foldIn(tryConst(a).get,
-          tryConst(b).get.asInstanceOf[List[Any]]) match {
-          case null => lit(null).cast("boolean")
-          case v2 => lit(v2)
-        }
       // ORDERING against a constant bool/list is the reference's
       // cross-family NULL whenever the other side is a non-bool,
       // non-list value — schema props are always scalars, so a
@@ -764,24 +734,15 @@ object Expr {
       // and >=/<= hold under approximate equality). EXCEPT around
       // ST_Distance: the geo predicate path compares raw doubles
       // (GeoBase.feature discriminates thresholds 2e-9 apart).
-      case Bin("==", a, b)
-        if (isFloatLit(a) || isFloatLit(b)) && !isGeoDist(a) && !isGeoDist(b) =>
-        approxEq(c(a), c(b))
-      case Bin("!=", a, b)
-        if (isFloatLit(a) || isFloatLit(b)) && !isGeoDist(a) && !isGeoDist(b) =>
-        !approxEq(c(a), c(b))
-      case Bin("<", a, b)
-        if (isFloatLit(a) || isFloatLit(b)) && !isGeoDist(a) && !isGeoDist(b) =>
-        c(a) < c(b) && !approxEq(c(a), c(b))
-      case Bin(">", a, b)
-        if (isFloatLit(a) || isFloatLit(b)) && !isGeoDist(a) && !isGeoDist(b) =>
-        c(a) > c(b) && !approxEq(c(a), c(b))
-      case Bin("<=", a, b)
-        if (isFloatLit(a) || isFloatLit(b)) && !isGeoDist(a) && !isGeoDist(b) =>
-        c(a) < c(b) || approxEq(c(a), c(b))
-      case Bin(">=", a, b)
-        if (isFloatLit(a) || isFloatLit(b)) && !isGeoDist(a) && !isGeoDist(b) =>
-        c(a) > c(b) || approxEq(c(a), c(b))
+      case Bin(op @ ("==" | "!=" | "<" | ">" | "<=" | ">="), a, b)
+          if (isFloatLit(a) || isFloatLit(b)) && !isGeoDist(a) && !isGeoDist(b) =>
+        val (l, r) = (c(a), c(b))
+        val eq = approxEq(l, r)
+        op match {
+          case "==" => eq; case "!=" => !eq
+          case "<" => l < r && !eq; case ">" => l > r && !eq
+          case "<=" => l < r || eq; case _ => l > r || eq
+        }
       // ==/!= across value types is DEFINITE in the reference
       // (Value.cpp operator==: different types are simply "not
       // equal"), while Spark's implicit cross-type cast yields NULL
@@ -789,14 +750,10 @@ object Expr {
       // shapes that can actually cross-cast — a numeric/bool literal
       // against a non-literal — so the common string/column equality
       // stays a bare EqualTo and KEEPS scan pushdown (PlanSpec).
-      case Bin("==", a, b) if mayTypeMismatch(a, b) =>
+      case Bin(op @ ("==" | "!="), a, b) if mayTypeMismatch(a, b) =>
         val (l, r) = (c(a), c(b))
-        when(l.isNull || r.isNull, lit(null))
-          .otherwise(coalesce(l === r, lit(false)))
-      case Bin("!=", a, b) if mayTypeMismatch(a, b) =>
-        val (l, r) = (c(a), c(b))
-        when(l.isNull || r.isNull, lit(null))
-          .otherwise(coalesce(l =!= r, lit(true)))
+        when(l.isNull || r.isNull, lit(null)).otherwise(
+          coalesce(if (op == "==") l === r else l =!= r, lit(op == "!=")))
       case Bin("==", a, b) => c(a) === c(b)
       case Bin("!=", a, b) => c(a) =!= c(b)
       case Bin("<", a, b) => c(a) < c(b)
@@ -856,19 +813,13 @@ object Expr {
             s"expression, can not apply `$op' to `__EMPTY__' and `STRING'.")
       case Bin("-", a, b) => c(a) - c(b)
       case Bin("*", a, b) => c(a) * c(b)
-      case e0 @ Bin("/", a, b) =>
-        // Spark's Divide null-guards ALL zero divisors in non-ANSI
-        // mode, but the reference's double division is IEEE (0/0.0 →
-        // NaN, 1/0.0 → inf, issue #3473). Constant double divisions
-        // fold here with Java (= IEEE) semantics; int/int divides
-        // INTEGRALLY (C++ semantics) with NULL-on-zero (DIV_BY_ZERO).
-        tryConst(e0) match {
-          case Some(d: Double) => lit(d)
-          case _ =>
-            import org.apache.spark.sql.graftbridge.ColumnBridge
-            ColumnBridge.column(graft.functions.NebulaDivide(
-              ColumnBridge.expression(c(a)), ColumnBridge.expression(c(b))))
-        }
+      case Bin("/", a, b) =>
+        // int/int divides INTEGRALLY (C++ semantics) with NULL-on-zero
+        // (DIV_BY_ZERO); constant double divisions fold above, IEEE
+        // like the reference's (0/0.0 → NaN, 1/0.0 → inf, issue #3473)
+        import org.apache.spark.sql.graftbridge.ColumnBridge
+        ColumnBridge.column(graft.functions.NebulaDivide(
+          ColumnBridge.expression(c(a)), ColumnBridge.expression(c(b))))
       case Bin("%", a, b) => c(a) % c(b)
       // =~ is a FULL match (std::regex_match, not search)
       case Bin("=~", a, Lit(p: String)) => c(a).rlike("^(?:" + p + ")$")
@@ -1175,23 +1126,12 @@ object Expr {
   }
 
   /** A comparison that Spark would resolve via a lossy implicit cast:
-    * a numeric/bool literal vs an expression of unknown type, or two
-    * literals of different families. */
-  private def litFamily(e: E): Option[String] = e match {
-    case Lit(_: Long) | Lit(_: Double) => Some("num")
-    case Lit(_: Boolean) => Some("bool")
-    case Lit(_: String) => Some("str")
-    case Un("neg", x) => litFamily(x)
-    case _ => None
+    * a numeric/bool literal vs an expression of unknown type (two
+    * literals fold through the Value comparator). */
+  private def mayTypeMismatch(a: E, b: E): Boolean = Seq(a, b).exists {
+    case Lit(_: Long | _: Double | _: Boolean) => true
+    case _ => false
   }
-
-  private def mayTypeMismatch(a: E, b: E): Boolean =
-    (litFamily(a), litFamily(b)) match {
-      case (Some(x), Some(y)) => x != y
-      case (Some("num" | "bool"), None) => true
-      case (None, Some("num" | "bool")) => true
-      case _ => false
-    }
 
   private def isStr(e: E): Boolean = e match {
     case Lit(_: String) => true
@@ -1202,7 +1142,6 @@ object Expr {
 
   private def isFloatLit(e: E): Boolean = e match {
     case Lit(_: Double) => true
-    case Un("neg", x) => isFloatLit(x)
     case _ => false
   }
 
@@ -1275,12 +1214,8 @@ object Expr {
     case _: Long | _: Int | _: Double | _: Float => 1
     case _: String => 2
     case _: Boolean => 3
-    case _: List[_] => 4
+    case _: Seq[_] => 4
     case _ => -1 // typed scenario values (time/geo/map): not folded
-  }
-  private[nql] def constCmpFoldable(v: Any): Boolean = v match {
-    case l: List[_] => l.forall(constCmpFoldable)
-    case other => cmpFamily(other) >= 0
   }
   private def toD(v: Any): Double = v match {
     case l: Long => l.toDouble; case i: Int => i.toDouble
@@ -1294,7 +1229,7 @@ object Expr {
   private def structEq(a: Any, b: Any): Boolean = (a, b) match {
     case (null, null) => true
     case (null, _) | (_, null) => false
-    case (x: List[_], y: List[_]) =>
+    case (x: Seq[_], y: Seq[_]) =>
       x.length == y.length &&
         x.zip(y).forall { case (p, q) => structEq(p, q) }
     case _ if cmpFamily(a) == 1 && cmpFamily(b) == 1 => epsNumEq(a, b)
@@ -1318,14 +1253,19 @@ object Expr {
       case 2 => a.asInstanceOf[String] < b.asInstanceOf[String]
       case 3 => !a.asInstanceOf[Boolean] && b.asInstanceOf[Boolean]
       case 4 =>
-        val (x, y) =
-          (a.asInstanceOf[List[Any]], b.asInstanceOf[List[Any]])
+        val (x, y) = (a.asInstanceOf[Seq[Any]], b.asInstanceOf[Seq[Any]])
         var i = 0
         while (i < x.length && i < y.length) {
           if (!structEq(x(i), y(i))) return ltConst(x(i), y(i))
           i += 1
         }
         x.length < y.length
+      // typed values: dates and datetimes order within their own type
+      case _ => (a, b) match {
+        case (x: java.util.Date, y: java.util.Date)
+            if x.getClass == y.getClass => x.before(y)
+        case _ => null
+      }
     }
   }
   private[nql] def foldCmp(op: String, a: Any, b: Any): Any = op match {
@@ -1334,16 +1274,12 @@ object Expr {
       case null => null; case x: Boolean => !x }
     case "<" => ltConst(a, b)
     case ">" => ltConst(b, a)
-    case "<=" => (ltConst(a, b), eqConst(a, b)) match {
-      case (true, _) => true; case (_, true) => true
-      case (null, _) => null; case (_, null) => null
-      case _ => false
-    }
-    case ">=" => (ltConst(b, a), eqConst(a, b)) match {
-      case (true, _) => true; case (_, true) => true
-      case (null, _) => null; case (_, null) => null
-      case _ => false
-    }
+    case "<=" | ">=" =>
+      (if (op == "<=") ltConst(a, b) else ltConst(b, a), eqConst(a, b)) match {
+        case (true, _) => true; case (_, true) => true
+        case (null, _) => null; case (_, null) => null
+        case _ => false
+      }
   }
   /** IN over a constant list: found → true; else NULL if any element
     * comparison was NULL (null element or null needle). */
@@ -1635,71 +1571,156 @@ object Expr {
     }
   }
 
-  /** Driver-side evaluation of a constant expression (literals, unary
-    * neg/not, arithmetic) — None when any input is non-constant. */
-  private[nql] def tryConst(e: E): Option[Any] = e match {
-    case Lit(v) => Some(v)
-    case ParamLit(_, v) => tryConst(v)
-    // nested map/list parameter access folds to the element
-    case Attr(x, name) => tryConst(x).collect {
-      case m: Map[_, _] => m.asInstanceOf[Map[String, Any]].get(name)
-    }.flatten
-    case Subscript(x, i) =>
-      (tryConst(x), tryConst(i)) match {
-        case (Some(l: List[_]), Some(n: Long)) => l.lift(n.toInt)
-        case _ => None
+  // ---------- driver-side fold ----------
+  /** The fold has no value: a ref or call its caller does not resolve,
+    * an operand type the operator does not take, an integer division
+    * by zero, or (`unsupported`) a node outside its surface. */
+  final class NoFold(msg: String, val unsupported: Boolean = false)
+      extends RuntimeException(msg, null, false, false)
+
+  /** An int64 overflow: the reference's "result of (a+b) cannot be
+    * represented as an integer". */
+  final class IntOverflow(what: String, prefix: String = "")
+      extends IllegalArgumentException(
+        s"${prefix}result of $what cannot be represented as an integer")
+
+  /** The one driver-side evaluator, over the reference's Value
+    * operators (Value.cpp): exact int64 `+ - * / %` and negation,
+    * IEEE doubles, string `+` concatenation, the constant Value
+    * comparator for comparisons and IN, three-valued AND/OR/NOT, lazy
+    * CASE, map attributes and list subscripts (negative from the end).
+    * `ref` resolves Ref/Param leaves and `call` makes function calls
+    * (lower-cased name, folded args); either throws NoFold where its
+    * caller has no value. `tryConst` is the fold with neither;
+    * `Dml.eval` resolves a row's props and calls `Dml.fncall`. */
+  def fold(e: E, ref: E => Any, call: (String, List[Any]) => Any): Any = {
+    def f(x: E): Any = fold(x, ref, call)
+    def attempt(x: E) = try Some(f(x)) catch { case _: NoFold => None }
+    def stuck(what: String): Nothing = throw new NoFold(what)
+    e match {
+      case Lit(v) => v
+      case ParamLit(_, v) => f(v)
+      case Ref(_) | Param(_, _, _) => ref(e)
+      case FnCall(name, args, _) => call(name.toLowerCase, args.map(f))
+      case ListLit(items) => items.map(f)
+      case SetLit(items) => items.map(f).distinct
+      case MapLit(entries) => scala.collection.immutable.ListMap(
+        entries.map { case (k, v) => k -> f(v) }: _*)
+      case Attr(x, nm) => f(x) match {
+        case null => null
+        case m: collection.Map[String @unchecked, _] => m.getOrElse(nm, null)
+        case v => stuck(s"cannot access .$nm on $v")
       }
-    case MapLit(entries) =>
-      val vs = entries.map { case (k, v) => tryConst(v).map(k -> _) }
-      if (vs.forall(_.isDefined)) Some(vs.flatten.toMap) else None
-    case ListLit(items) =>
-      val vs = items.map(tryConst)
-      if (vs.forall(_.isDefined)) Some(vs.flatten) else None
-    case Un("neg", x) => tryConst(x).collect {
-      case n: Long => -n
-      case d: Double => -d
-    }
-    case Un("not" | "notrel", x) =>
-      tryConst(x).collect { case b: Boolean => !b }
-    case Bin("or", a, b)
-        if tryConst(a).contains(true) || tryConst(b).contains(true) =>
-      Some(true)
-    case Bin("and", a, b)
-        if tryConst(a).contains(false) || tryConst(b).contains(false) =>
-      Some(false)
-    case Bin(op, a, b) =>
-      (tryConst(a), tryConst(b)) match {
-        case (Some(x: Long), Some(y: Long)) => op match {
-          case "+" => Some(x + y); case "-" => Some(x - y)
-          case "*" => Some(x * y)
-          case "/" => if (y == 0) None else Some(x / y)
-          case "%" => if (y == 0) None else Some(x % y)
-          case _ => None
+      case Subscript(x, i) => (f(x), f(i)) match {
+        case (null, _) | (_, null) => null
+        case (m: collection.Map[String @unchecked, _], k: String) =>
+          m.getOrElse(k, null)
+        case (xs: Seq[_], n: Long) =>
+          val idx = if (n < 0) xs.size + n else n
+          if (idx >= 0 && idx < xs.size) xs(idx.toInt) else null
+        case (b, k) => stuck(s"cannot subscript $b with $k")
+      }
+      case Un("neg", x) => f(x) match {
+        case null => null
+        case n: Long if n == Long.MinValue =>
+          throw new IntOverflow(s"-($n)", "SemanticError: ")
+        case n: Long => -n
+        case d: Double => -d
+        case v => stuck(s"cannot negate $v")
+      }
+      case Un("not" | "notrel", x) => f(x) match {
+        case null => null
+        case b: Boolean => !b
+        case v => stuck(s"cannot NOT $v")
+      }
+      // the left operand decides first; an operand the fold cannot
+      // evaluate still loses to a deciding one (`x OR true` is true)
+      case Bin(op @ ("and" | "or"), a, b) =>
+        val decides = op == "or"
+        val x = attempt(a)
+        lazy val y = attempt(b)
+        def bool3(v: Option[Any]) = v.exists(w => w == null || w.isInstanceOf[Boolean])
+        if (x.contains(decides) || y.contains(decides)) decides
+        else if (!bool3(x) || !bool3(y))
+          stuck(s"cannot ${x.getOrElse(f(a))} $op ${y.getOrElse(f(b))}")
+        else if (x.contains(null) || y.contains(null)) null
+        else !decides
+      case Bin(op @ ("==" | "!=" | "<" | "<=" | ">" | ">="), a, b) =>
+        foldCmp(op, f(a), f(b))
+      case Bin("in", a, b) => (f(a), f(b)) match {
+        case (_, null) => null
+        case (x, xs: Seq[_]) => foldIn(x, xs.toList)
+        case (x, other) => stuck(s"cannot test $x IN $other")
+      }
+      case Bin(op @ ("+" | "-" | "*" | "/" | "%"), a, b) => arith(op, f(a), f(b))
+      case CaseW(None, branches, els) =>
+        def holds(c: E): Boolean = f(c) match {
+          case b: Boolean => b
+          case null => false
+          case v => stuck(s"CASE condition $v is not a boolean")
         }
-        case (Some(x: String), Some(y: String)) if op == "+" => Some(x + y)
-        case (Some(xa), Some(ya)) =>
-          def toD(v: Any): Option[Double] = v match {
-            case n: Long => Some(n.toDouble)
-            case d: Double => Some(d)
-            case _ => None
-          }
-          (toD(xa), toD(ya)) match {
-            case (Some(x), Some(y)) => op match {
-              case "+" => Some(x + y); case "-" => Some(x - y)
-              case "*" => Some(x * y); case "/" => Some(x / y)
-              case _ => None
-            }
-            case _ => None
-          }
-        case _ => None
-      }
-    case _ => None
+        branches.collectFirst { case (c, v) if holds(c) => f(v) }
+          .getOrElse(els.map(f).orNull)
+      case other =>
+        throw new NoFold(s"unsupported expression ${text(other)}", unsupported = true)
+    }
   }
 
-  private def intArg(args: List[E], i: Int): Int = args(i) match {
-    case Lit(n: Long) => n.toInt
-    case Un("neg", Lit(n: Long)) => -n.toInt
-    case other => throw new IllegalArgumentException(s"expected int arg, got ${text(other)}")
+  private def arith(op: String, x: Any, y: Any): Any = (x, y) match {
+    case (null, _) | (_, null) => null
+    case (a: Long, b: Long) =>
+      if ((op == "/" || op == "%") && b == 0) throw new NoFold("division by zero")
+      try op match {
+        case "+" => Math.addExact(a, b)
+        case "-" => Math.subtractExact(a, b)
+        case "*" => Math.multiplyExact(a, b)
+        case "/" => if (b == -1) Math.negateExact(a) else a / b
+        case "%" => a % b
+      } catch { case _: ArithmeticException => throw new IntOverflow(s"($a$op$b)") }
+    case (a: Seq[_], b: Seq[_]) if op == "+" => (a ++ b).toList
+    case (_: String, _: Long | _: Double | _: Boolean | _: String) |
+         (_: Long | _: Double | _: Boolean, _: String) if op == "+" => s"$x$y"
+    case (a: Long, b: Double) => arith(op, a.toDouble, b)
+    case (a: Double, b: Long) => arith(op, a, b.toDouble)
+    case (a: Double, b: Double) => op match {
+      case "+" => a + b; case "-" => a - b; case "*" => a * b
+      case "/" => a / b; case "%" => a % b
+    }
+    case _ => throw new NoFold(s"cannot $op $x $y")
+  }
+
+  /** The fold of a constant expression, None where it has no value (a
+    * ref, a call, a type mismatch, an integer division by zero);
+    * integer overflow raises IntOverflow. */
+  private[nql] def tryConst(e: E): Option[Any] = {
+    def none(x: Any): Nothing = throw new NoFold("not constant")
+    try Some(fold(e, none, (_, _) => none(()))) catch { case _: NoFold => None }
+  }
+
+  /** The literal column of an expression over literals (no ref, call
+    * or lambda in it) whose fold is a scalar; a NULL comparison or
+    * logical result stays boolean-typed. */
+  private def foldedLit(e: E): Option[Column] = {
+    var const = true
+    collect(e) {
+      case Ref(_) | Param(_, _, _) | FnCall(_, _, _) | Quant(_, _, _, _) |
+           Compr(_, _, _, _) | ReduceE(_, _, _, _, _) | PatternE(_) |
+           Slice(_, _, _) | Star => const = false
+    }
+    if (!const) None
+    else tryConst(e).collect {
+      case v @ (_: Long | _: Double | _: String | _: Boolean) => lit(v)
+      case null => e match {
+        case Bin("and" | "or" | "in" | "==" | "!=" | "<" | "<=" | ">" | ">=", _, _) |
+             Un("not" | "notrel", _) => lit(null).cast("boolean")
+        case _ => lit(null)
+      }
+    }
+  }
+
+  private def intArg(args: List[E], i: Int): Int = tryConst(args(i)) match {
+    case Some(n: Long) => n.toInt
+    case _ => throw new IllegalArgumentException(s"expected int arg, got ${text(args(i))}")
   }
 
   private def strArg(args: List[E], i: Int): String = args(i) match {

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Mutation sinks (SURVEY.md §2.1 sinks; reference
   * executor/mutate/InsertExecutor.cpp:15, UpdateExecutor.cpp:40,
@@ -29,13 +30,17 @@ object Mutations {
     * on local fs, HDFS, and any store with a Hadoop connector
     * (java.io.File.renameTo silently no-ops off the local fs, which
     * would invert the never-truncate guarantee). */
-  final case class KeyedTable(spark: SparkSession, path: String, keys: Seq[String]) {
+  final case class KeyedTable(spark: SparkSession, path: String, keys: Seq[String],
+                              schema: Option[StructType] = None) {
     import org.apache.hadoop.fs.Path
 
     private def fs(p: Path) =
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    def read: DataFrame = spark.read.parquet(path)
+    /** The table's rows, read with the declared `schema`; without one
+      * every read infers it (a one-task parquet footer job). */
+    def read: DataFrame =
+      schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
     def exists: Boolean = { val p = new Path(path); fs(p).exists(p) }
 
     private def renameChecked(from: Path, to: Path): Unit =
@@ -198,10 +203,12 @@ object Mutations {
     }
   }
 
-  def vertexTable(spark: SparkSession, path: String): KeyedTable =
-    KeyedTable(spark, path, Seq("vid"))
+  def vertexTable(spark: SparkSession, path: String,
+                  schema: Option[StructType] = None): KeyedTable =
+    KeyedTable(spark, path, Seq("vid"), schema)
 
   /** Edge identity includes rank (NebulaKeyUtils.h:61). */
-  def edgeTable(spark: SparkSession, path: String): KeyedTable =
-    KeyedTable(spark, path, Seq("src", "dst", "rank"))
+  def edgeTable(spark: SparkSession, path: String,
+                schema: Option[StructType] = None): KeyedTable =
+    KeyedTable(spark, path, Seq("src", "dst", "rank"), schema)
 }

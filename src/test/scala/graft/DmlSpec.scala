@@ -74,6 +74,47 @@ class DmlSpec extends SparkSpec {
     assert(cat.tagRows("t")("a").head == 2L)
   }
 
+  test("WHEN compares like YIELD: epsilon numerics, cross-family NULL, lists") {
+    val cat = fresh()
+    Gql.runScript(cat,
+      """CREATE TAG t(x int);
+        |INSERT VERTEX t(x) VALUES "v":(0);""".stripMargin)
+    def yieldOf(c: String) = Gql.runScript(cat, s"YIELD $c AS r").collect().head.get(0)
+    // (condition, applies, YIELD value)
+    for (((c, applies, y), i) <- Seq(
+        ("1 == 1.000000001", true, true),
+        ("\"a\" < 1", false, null),
+        ("[1] < [2]", true, true)).zipWithIndex) {
+      assert(yieldOf(c) == y, c)
+      Gql.runScript(cat, s"""UPDATE VERTEX ON t "v" SET x = ${i + 1} WHEN $c""")
+      val x = cat.tagRows("t")("v").head
+      assert((x == i + 1L) == applies, s"$c: x = $x")
+      Gql.runScript(cat, """UPDATE VERTEX ON t "v" SET x = 0""")
+    }
+  }
+
+  test("SET into an int prop rounds and keeps the column type, on both catalogs") {
+    def run(cat: graft.graph.GraphCatalog) = {
+      Gql.runScript(cat,
+        """CREATE TAG t(x int);
+          |INSERT VERTEX t(x) VALUES "v":(1), "w":(5);
+          |UPDATE VERTEX ON t "v" SET x = x + 1.6;
+          |UPSERT VERTEX ON t "u" SET x = -2.5;
+          |INSERT VERTEX t(x) VALUES "z":(7);""".stripMargin)
+      val df = cat.vertexTable("t")
+      (df.schema("x").dataType,
+        df.collect().map(r => r.getAs[String]("vid") -> r.getAs[Any]("x")).toMap)
+    }
+    val root = java.nio.file.Files.createTempDirectory("graft-ts").toString
+    val table = run(new graft.graph.TableCatalog(spark, root))
+    assert(table == run(fresh()))
+    assert(table == (org.apache.spark.sql.types.LongType,
+      Map("v" -> 3L, "w" -> 5L, "u" -> -3L, "z" -> 7L)))
+    // the parquet files hold the declared type, not a widened double
+    assert(spark.read.parquet(s"$root/tag_t").schema("x").dataType ==
+      org.apache.spark.sql.types.LongType)
+  }
+
   test("upsert on a missing key inserts from defaults, WHEN ignored") {
     val cat = fresh()
     Gql.runScript(cat,
@@ -193,6 +234,23 @@ class DmlSpec extends SparkSpec {
     assert(paid.count() == 1) // 2->3 deleted; 3->100 swept WITH EDGE
     assert(paid.filter(col("src") === 1 && col("dst") === 2)
       .select("amount").head.getLong(0) == 20L)
+  }
+
+  test("table space: a FETCH reads with the declared schema, no inference job") {
+    val root = java.nio.file.Files.createTempDirectory("graft-tf").toString
+    val tc = new graft.graph.TableCatalog(spark, root)
+    Gql.runScript(tc,
+      """CREATE TAG t(x int, s string);
+        |INSERT VERTEX t(x, s) VALUES "a":(1, "p"), "b":(2, "q");""".stripMargin)
+    val q = """FETCH PROP ON t "a" YIELD t.x AS x, t.s AS s"""
+    Gql.run(tc, q).collect() // warm: first-touch planning
+    val (rows, jobs) = jobNamesOf(Gql.run(tc, q).collect())
+    assert(rows.map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((1L, "p")))
+    // 5 jobs, 2 of them `parquet at Mutations.scala` footer reads, when
+    // every read inferred the schema
+    assert(!jobs.exists(_.startsWith("parquet at")),
+      s"schema inference on read: $jobs")
+    assert(jobs.size == 3, jobs)
   }
 
   test("table space: piped UPDATE/UPSERT drive a key-set join") {

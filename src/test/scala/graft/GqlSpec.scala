@@ -233,4 +233,19 @@ class GqlSpec extends SparkSpec {
       assert(step2.forall(_._1 == step1.head._2), s"$kw: $range")
     }
   }
+
+  test("constant integer overflow raises the reference's message, never wraps") {
+    val cat = new graft.graph.ScenarioCatalog(spark, false)
+    def err(q: String) =
+      intercept[IllegalArgumentException](Gql.runScript(cat, q).collect()).getMessage
+    for ((q, what) <- Seq(
+        "YIELD 9223372036854775807 + 1 == -9223372036854775808 AS r" ->
+          "(9223372036854775807+1)",
+        "YIELD 9223372036854775807 * 2 IN [-2] AS r" -> "(9223372036854775807*2)",
+        "YIELD (9223372036854775807 + 0) + 1 AS r" -> "(9223372036854775807+1)",
+        "YIELD 1 AS r | LIMIT 9223372036854775807 + 1" -> "(9223372036854775807+1)"))
+      assert(err(q) == s"result of $what cannot be represented as an integer", q)
+    assert(err("YIELD -(-9223372036854775807 - 1) AS r") ==
+      "SemanticError: result of -(-9223372036854775808) cannot be represented as an integer")
+  }
 }
