@@ -7,10 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native cosine similarity over two numeric arrays — bit-identical to
-  * the declarative form in Fn.cosSimilarity (left-to-right double
-  * folds: dot / (sqrt(Σa²)·sqrt(Σb²)); length mismatch or a null
-  * element yields NULL, matching zip_with/aggregate null semantics).
+/** Native cosine similarity over two numeric arrays, the reference's
+  * cos_similarity, behind `Similarity.cosine` — bit-identical to the
+  * declarative zip_with/aggregate form (left-to-right double folds:
+  * dot / (sqrt(Σa²)·sqrt(Σb²)); length mismatch or a null element
+  * yields NULL, matching zip_with/aggregate null semantics).
   *
   * Exists because the zip_with+aggregate form runs as interpreted
   * higher-order functions with per-row array allocation — fine in a

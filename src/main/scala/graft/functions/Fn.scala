@@ -3,27 +3,12 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Scalar-function & expression layer (SURVEY.md §2.8).
-  *
-  * The reference registers ~110 scalar functions in
-  * src/common/function/FunctionManager.cpp (table at :58) and an
-  * expression AST in src/common/expression/Expression.h:22-110. ~80% map
-  * 1:1 onto codegen'd Spark built-ins; this object pins the mapping (and
-  * the handful of semantic shims) in ONE place so every planner/query
-  * builds on identical semantics. Nothing here is a UDF — every function
-  * stays inside whole-stage codegen.
-  *
-  * Naming: nGQL name → method. Where Spark's builtin matches exactly the
-  * method is a one-liner; comments call out divergences.
-  */
+/** The two column helpers that are not an nGQL name mapping. nGQL
+  * function names map to Spark in one place, `graft.nql.Expr.fnCol`
+  * (reference FunctionManager.cpp:58); the q_expr_* oracle queries
+  * compile through it. */
 object Fn {
 
-  // ---- math (FunctionManager.cpp: abs floor ceil round sqrt cbrt ...) ----
-  def abs_(c: Column): Column = abs(c)
-  def floor_(c: Column): Column = floor(c)
-  def ceil_(c: Column): Column = ceil(c)
-  /** nGQL round(x, n): HALF_UP like Spark's round. */
-  def round_(c: Column, scale: Int): Column = round(c, scale)
   /** Engine-portable rounding: floor(x·10^d + 0.5)/10^d is pure IEEE
     * arithmetic, so any engine computes the bit-identical double —
     * unlike round(), whose half-way tie-breaking differs between
@@ -33,139 +18,6 @@ object Fn {
     val p = lit(math.pow(10, d))
     floor(c * p + lit(0.5)).cast("double") / p
   }
-  def sqrt_(c: Column): Column = sqrt(c)
-  def cbrt_(c: Column): Column = cbrt(c)
-  def hypot_(a: Column, b: Column): Column = hypot(a, b)
-  def pow_(a: Column, b: Column): Column = pow(a, b)
-  def exp_(c: Column): Column = exp(c)
-  def exp2_(c: Column): Column = pow(lit(2.0), c)
-  def log_(c: Column): Column = log(c)
-  def log2_(c: Column): Column = log2(c)
-  def log10_(c: Column): Column = log10(c)
-  def sin_(c: Column): Column = sin(c)
-  def asin_(c: Column): Column = asin(c)
-  def cos_(c: Column): Column = cos(c)
-  def acos_(c: Column): Column = acos(c)
-  def tan_(c: Column): Column = tan(c)
-  def atan_(c: Column): Column = atan(c)
-  def sign_(c: Column): Column = signum(c)
-  def radians_(c: Column): Column = radians(c)
-  def e_ : Column = lit(math.E)
-  def pi_ : Column = lit(math.Pi)
-  def bitAnd(a: Column, b: Column): Column = a.bitwiseAND(b)
-  def bitOr(a: Column, b: Column): Column = a.bitwiseOR(b)
-  def bitXor(a: Column, b: Column): Column = a.bitwiseXOR(b)
-
-  // ---- string (lower upper length trim ltrim rtrim left right ...) ----
-  def toLower(c: Column): Column = lower(c)
-  def toUpper(c: Column): Column = upper(c)
-  def length_(c: Column): Column = length(c)
-  def trim_(c: Column): Column = trim(c)
-  def ltrim_(c: Column): Column = ltrim(c)
-  def rtrim_(c: Column): Column = rtrim(c)
-  def left_(c: Column, n: Int): Column = substring(c, 1, n)
-  def right_(c: Column, n: Int): Column = substring(c, -n, n)
-  def replace_(c: Column, find: String, repl: String): Column =
-    regexp_replace(c, java.util.regex.Pattern.quote(find), repl)
-  def reverse_(c: Column): Column = reverse(c)
-  def split_(c: Column, delim: String): Column = split(c, delim)
-  def toStringF(c: Column): Column = c.cast("string")
-  def toBoolean(c: Column): Column = c.cast("boolean")
-  def toFloat(c: Column): Column = c.cast("double")
-  /** nGQL toInteger: string parse failure → BAD_TYPE null; Spark cast
-    * returns plain null — accepted divergence (SURVEY §1.2). Float input
-    * truncates toward zero in both. */
-  def toInteger(c: Column): Column = c.cast("long")
-  def lpad_(c: Column, len: Int, pad: String): Column = lpad(c, len, pad)
-  def rpad_(c: Column, len: Int, pad: String): Column = rpad(c, len, pad)
-  /** nGQL substr(s, pos, len): 0-based pos; Spark substring is 1-based. */
-  def substr_(c: Column, pos: Int, len: Int): Column = substring(c, pos + 1, len)
-  def concat_(cs: Column*): Column = concat(cs: _*)
-  def concatWs(sep: String, cs: Column*): Column = concat_ws(sep, cs: _*)
-  def md5_(c: Column): Column = md5(c.cast("string"))
-  /** nGQL hash() — routed through NebulaHash so every entry point
-    * agrees bit-for-bit (the round-4 xxhash64 shim here silently
-    * diverged from the murmur goldens). */
-  def hash_(c: Column): Column = NebulaHash.hashCol(c)
-  def strcasecmp(a: Column, b: Column): Column =
-    when(lower(a) < lower(b), -1).when(lower(a) > lower(b), 1).otherwise(0)
-
-  // ---- collection (size range head last tail keys coalesce ...) ----
-  def size_(c: Column): Column = size(c)
-  def range_(from: Column, to: Column): Column = sequence(from, to)
-  def range_(from: Column, to: Column, step: Column): Column =
-    sequence(from, to, step)
-  def head_(c: Column): Column = element_at(c, 1)
-  def last_(c: Column): Column = element_at(c, -1)
-  def tail_(c: Column): Column = slice(c, lit(2), greatest(size(c) - 1, lit(0)))
-  def keys_(m: Column): Column = map_keys(m)
-  def toSet(c: Column): Column = array_distinct(c)
-  def coalesce_(cs: Column*): Column = coalesce(cs: _*)
-  /** cos_similarity(a, b) — FunctionManager.cpp registry. A native
-    * codegen'd expression (CosineSim): bit-identical to the
-    * zip_with/aggregate fold (same left-to-right double accumulation,
-    * IEEE division, null on length mismatch) but one tight primitive
-    * loop — the declarative form ran as interpreted higher-order
-    * functions and dominated candidate-pair joins (q_embed_neardup
-    * at sf1: 15.6M pairs × ~4 µs → minutes). */
-  def cosSimilarity(a: Column, b: Column): Column = CosineSim(a, b)
-
-  // ---- expression-AST constructs (Expression.h:22-110) ----
-  /** CASE WHEN ... (CaseExpression.h, both forms). */
-  def caseWhen(branches: Seq[(Column, Column)], orElse: Column): Column =
-    branches.tail.foldLeft(when(branches.head._1, branches.head._2)) {
-      case (acc, (c, v)) => acc.when(c, v)
-    }.otherwise(orElse)
-  /** IN list (kRelIn). */
-  def in(c: Column, values: Any*): Column = c.isin(values: _*)
-  /** CONTAINS / STARTS WITH / ENDS WITH. */
-  def containsStr(c: Column, s: String): Column = c.contains(s)
-  def startsWith(c: Column, s: String): Column = c.startsWith(s)
-  def endsWith(c: Column, s: String): Column = c.endsWith(s)
-  /** =~ regex match (kRelREG). */
-  def regexMatch(c: Column, pattern: String): Column = c.rlike(pattern)
-  /** subscript x[i] — nGQL is 0-based; element_at is 1-based. */
-  def subscript(c: Column, i: Int): Column = element_at(c, i + 1)
-  /** subscript range x[a..b) — 0-based, end-exclusive (kSubscriptRange). */
-  def subscriptRange(c: Column, from: Int, until: Int): Column =
-    slice(c, from + 1, until - from)
-  /** predicate fns all/any/none/single(x IN list WHERE p) (PredicateExpression.h). */
-  def allPred(c: Column, p: Column => Column): Column = forall(c, p)
-  def anyPred(c: Column, p: Column => Column): Column = exists(c, p)
-  def nonePred(c: Column, p: Column => Column): Column = !exists(c, p)
-  def singlePred(c: Column, p: Column => Column): Column =
-    size(filter(c, p)) === 1
-  /** list comprehension [x IN l WHERE p | f(x)] (ListComprehensionExpression.h). */
-  def listComprehension(c: Column, p: Column => Column, f: Column => Column): Column =
-    transform(filter(c, p), f)
-  /** reduce(acc = init, x IN l | f) (ReduceExpression.h). */
-  def reduce_(c: Column, init: Column, f: (Column, Column) => Column): Column =
-    aggregate(c, init, f)
-  def isNull_(c: Column): Column = c.isNull
-  def isNotNull_(c: Column): Column = c.isNotNull
-
-  // ---- temporal (now date time datetime timestamp extract) ----
-  def nowTs: Column = current_timestamp()
-  def dateF(c: Column): Column = to_date(c)
-  def yearF(c: Column): Column = year(c)
-  def monthF(c: Column): Column = month(c)
-  def dayF(c: Column): Column = dayofmonth(c)
-  def extractF(field: String, c: Column): Column = field.toLowerCase match {
-    case "year" => year(c); case "month" => month(c)
-    case "day" => dayofmonth(c); case "hour" => hour(c)
-    case "minute" => minute(c); case "second" => second(c)
-    case other => throw new IllegalArgumentException(s"extract: $other")
-  }
-
-  // ---- graph-specific (id src dst rank type labels properties) ----
-  // Our relational graph model (graft.graph.GraphModel) keeps these as
-  // plain columns, so the "functions" are column refs:
-  def idF(vidCol: Column): Column = vidCol
-  def srcF(df: org.apache.spark.sql.DataFrame): Column = df("src")
-  def dstF(df: org.apache.spark.sql.DataFrame): Column = df("dst")
-  def rankF(df: org.apache.spark.sql.DataFrame): Column = df("rank")
-  /** json_extract → get_json_object (FunctionManager.cpp `json_extract`). */
-  def jsonExtract(c: Column, path: String): Column = get_json_object(c, path)
 
   /** The reference's 1-arg JSON_EXTRACT renders a flat Map with one
     * nested level; deeper objects render `{}` and lists are omitted
@@ -203,56 +55,4 @@ object Fn {
       } catch { case _: Exception => Some(ErrVal.BadData) }
     })
   def jsonExtractMap(c: Column): Column = jsonExtractMapUdf(c)
-
-  // ---- path functions over our array-of-vids path representation
-  // (nodes relationships startNode endNode hasSameVertexInPath ...,
-  // FunctionManager.cpp graph-specific registry) ----
-  /** nodes(path): the vid sequence IS the path column. */
-  def nodes(path: Column): Column = path
-  /** startNode/endNode(path). */
-  def startNode(path: Column): Column = element_at(path, 1)
-  def endNode(path: Column): Column = element_at(path, -1)
-  /** relationships(path): consecutive (src,dst) pairs. */
-  def relationships(path: Column): Column =
-    zip_with(slice(path, lit(1), greatest(size(path) - 1, lit(0))),
-      slice(path, lit(2), greatest(size(path) - 1, lit(0))),
-      (s, d) => struct(s.as("src"), d.as("dst")))
-  /** length(path) in steps. */
-  def pathLength(path: Column): Column = greatest(size(path) - 1, lit(0))
-  /** hasSameVertexInPath: any vid repeated. */
-  def hasSameVertexInPath(path: Column): Column =
-    size(array_distinct(path)) < size(path)
-  /** reversePath. */
-  def reversePath(path: Column): Column = reverse(path)
-
-  // ---- set-ish collection mutations (setadd / erase) ----
-  def setAdd(c: Column, v: Column): Column =
-    array_distinct(concat(c, array(v)))
-  def erase(c: Column, v: Column): Column = array_remove(c, v)
-
-  // ---- geo: point subset of the st_* family (FunctionManager.cpp geo
-  // registry; reference is S2-backed — we cover POINT construction,
-  // WKT text, and spherical distance, which agree with S2 point
-  // semantics; polygon/linestring ops stay out of v1 per SURVEY §7.4)
-  /** st_point(lon, lat) → struct(lon, lat) in degrees. */
-  def stPoint(lon: Column, lat: Column): Column =
-    struct(lon.cast("double").as("lon"), lat.cast("double").as("lat"))
-  /** st_astext for points: 'POINT(lon lat)'. */
-  def stAsText(p: Column): Column =
-    concat(lit("POINT("), p.getField("lon").cast("string"), lit(" "),
-      p.getField("lat").cast("string"), lit(")"))
-  /** Mean Earth radius used by S2 (S2Earth.h), meters. */
-  val EarthRadiusMeters = 6371010.0
-  /** st_distance for points: great-circle (haversine) meters — pure
-    * IEEE trig so the oracle can replay it exactly. */
-  def stDistance(a: Column, b: Column): Column = {
-    val lat1 = radians(a.getField("lat")); val lat2 = radians(b.getField("lat"))
-    val dLat = lat2 - lat1
-    val dLon = radians(b.getField("lon")) - radians(a.getField("lon"))
-    val h = pow(sin(dLat / 2), 2) + cos(lat1) * cos(lat2) * pow(sin(dLon / 2), 2)
-    lit(2.0 * EarthRadiusMeters) * asin(sqrt(h))
-  }
-  /** st_dwithin for points. */
-  def stDWithin(a: Column, b: Column, meters: Double): Column =
-    stDistance(a, b) <= meters
 }

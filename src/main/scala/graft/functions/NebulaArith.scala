@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Add, Cast, Concat,
-  DateAdd, Divide, Expression, IntegralDivide, Literal, RuntimeReplaceable}
+  DateAdd, Divide, EqualTo, Expression, If, IntegralDivide, Literal,
+  Remainder, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types._
 
@@ -20,7 +21,8 @@ private[functions] object NebulaArith {
 
 /** Value-model `+` (reference Value.cpp operator+): when either
   * operand is a STRING the addition is concatenation (`"ab" + 1` →
-  * `"ab1"`, `1 + "ab"` → `"1ab"`); numeric operands add numerically.
+  * `"ab1"`, `1 + "ab"` → `"1ab"`); numeric operands add numerically;
+  * two lists concatenate (`[1, 2] + [3]` → `[1, 2, 3]`).
   * The dispatch needs the operands' resolved types, so it happens at
   * analysis time via RuntimeReplaceable — the nGQL compiler sees only
   * untyped Columns. Unsupported operand pairs throw the same
@@ -41,6 +43,15 @@ case class NebulaAdd(left: Expression, right: Expression)
         DateAdd(left, Cast(right, IntegerType))
       case (a, DateType) if isIntegral(a) =>
         DateAdd(right, Cast(left, IntegerType))
+      case (ArrayType(a, _), ArrayType(b, _)) =>
+        val t = ArrayType((a, b) match {
+          case _ if a == b => a
+          case (x: NumericType, y: NumericType) => widen(x, y)
+          case (NullType, y) => y
+          case (x, NullType) => x
+          case _ => StringType
+        })
+        Concat(Seq(Cast(left, t), Cast(right, t)))
       case (a, b) =>
         throw new IllegalArgumentException(s"bad operands for +: $a, $b")
     }
@@ -50,23 +61,30 @@ case class NebulaAdd(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Value-model `/`: integer ÷ integer is INTEGRAL division truncating
-  * toward zero (C++ semantics, `47 / 10` → 4), zero divisor → NULL
-  * (DIV_BY_ZERO); any float operand divides as double. */
-case class NebulaDivide(left: Expression, right: Expression)
+/** Value-model `/` and (`remainder`) `%`: integer ÷ integer is
+  * INTEGRAL division truncating toward zero (C++ semantics, `47 / 10`
+  * → 4, `-7 % 2` → -1), an integer zero divisor → NULL (DIV_BY_ZERO);
+  * any float operand divides as double. */
+case class NebulaDivide(left: Expression, right: Expression,
+                        remainder: Boolean = false)
     extends RuntimeReplaceable with BinaryLike[Expression] {
   import NebulaArith._
   override lazy val replacement: Expression =
     (left.dataType, right.dataType) match {
       case (a, b) if isIntegral(a) && isIntegral(b) =>
-        IntegralDivide(Cast(left, LongType), Cast(right, LongType))
-      case (a: NumericType, b: NumericType) =>
-        Divide(Cast(left, DoubleType), Cast(right, DoubleType))
+        val (l, r) = (Cast(left, LongType), Cast(right, LongType))
+        If(EqualTo(r, Literal(0L)), Literal.create(null, LongType),
+          if (remainder) Remainder(l, r) else IntegralDivide(l, r))
+      case (_: NumericType, _: NumericType) =>
+        val (l, r) = (Cast(left, DoubleType), Cast(right, DoubleType))
+        if (remainder) Remainder(l, r) else Divide(l, r)
       case (NullType, _) | (_, NullType) => Literal.create(null, NullType)
       case (a, b) =>
-        throw new IllegalArgumentException(s"bad operands for /: $a, $b")
+        throw new IllegalArgumentException(
+          s"bad operands for ${if (remainder) "%" else "/"}: $a, $b")
     }
-  override def prettyName: String = "nebula_divide"
+  override def prettyName: String =
+    if (remainder) "nebula_remainder" else "nebula_divide"
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): NebulaDivide =
     copy(left = newLeft, right = newRight)

@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions.udf
   * registry.
   *
   * The reference ships one example UDF (udf/standard_deviation.cpp);
-  * we register the same one as the canonical Aggregator demo. Prefer
-  * builtin/codegen functions (graft.functions.Fn) — UDFs are the
-  * escape hatch, not the default (they break whole-stage codegen).
+  * we register the same one as the canonical Aggregator demo. nGQL
+  * function names map onto builtin/codegen functions in
+  * `graft.nql.Expr.fnCol` — UDFs are the escape hatch, not the
+  * default (they break whole-stage codegen).
   */
 object Udfs {
 

@@ -1004,7 +1004,7 @@ object Dml {
     * `Expr.fold` with the row's props as refs and `fncall` as its calls.
     * Throws IllegalArgumentException for surface outside the fold and
     * DmlError for semantic violations (unknown prop, operand types,
-    * division by zero, integer overflow). */
+    * integer overflow). */
   def eval(e: Expr.E, env: String => Option[Any]): Any = {
     def prop(r: Expr.E): Any = r match {
       case Expr.Ref(parts) => env(parts.last).getOrElse(

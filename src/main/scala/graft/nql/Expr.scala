@@ -813,14 +813,14 @@ object Expr {
             s"expression, can not apply `$op' to `__EMPTY__' and `STRING'.")
       case Bin("-", a, b) => c(a) - c(b)
       case Bin("*", a, b) => c(a) * c(b)
-      case Bin("/", a, b) =>
+      case Bin(op @ ("/" | "%"), a, b) =>
         // int/int divides INTEGRALLY (C++ semantics) with NULL-on-zero
         // (DIV_BY_ZERO); constant double divisions fold above, IEEE
         // like the reference's (0/0.0 → NaN, 1/0.0 → inf, issue #3473)
         import org.apache.spark.sql.graftbridge.ColumnBridge
         ColumnBridge.column(graft.functions.NebulaDivide(
-          ColumnBridge.expression(c(a)), ColumnBridge.expression(c(b))))
-      case Bin("%", a, b) => c(a) % c(b)
+          ColumnBridge.expression(c(a)), ColumnBridge.expression(c(b)),
+          remainder = op == "%"))
       // =~ is a FULL match (std::regex_match, not search)
       case Bin("=~", a, Lit(p: String)) => c(a).rlike("^(?:" + p + ")$")
       case Bin(op @ ("starts" | "ends"), a, b) =>
@@ -1123,6 +1123,35 @@ object Expr {
     case FnCall("type", List(Ref(List(n))), _) if n == name =>
       Some(x.getItem("__t"))
     case other => r(other)
+  }
+
+  /** Ordering a schema prop against a literal of another type family
+    * is the reference's NULL (`$$.player.age >= true`, `e.likeness >=
+    * "12"` — RelationalExpr.feature), where Spark would cast and
+    * compare. Same-family orderings stay real comparisons: string
+    * props vs string literals, bool props vs bool literals
+    * (Index.feature `t1.col3 > false`). `propType` is the caller's
+    * schema type of a prop reference. */
+  def crossFamilyOrder(e: E,
+      propType: E => Option[org.apache.spark.sql.types.DataType]): Boolean = {
+    import org.apache.spark.sql.types.{BooleanType, NumericType, StringType}
+    def propFam(x: E) = propType(x).collect {
+      case _: NumericType => 'n'; case StringType => 's'; case BooleanType => 'b'
+    }
+    def litFam(x: E) = x match {
+      case Lit(_: Long | _: Double) => Some('n')
+      case Lit(_: String) => Some('s')
+      case Lit(_: Boolean) => Some('b')
+      case _ => None
+    }
+    def mism(p: E, l: E) = (propFam(p), litFam(l)) match {
+      case (Some(a), Some(b)) => a != b
+      case _ => false
+    }
+    e match {
+      case Bin("<" | "<=" | ">" | ">=", l, r) => mism(l, r) || mism(r, l)
+      case _ => false
+    }
   }
 
   /** A comparison that Spark would resolve via a lossy implicit cast:
@@ -1573,8 +1602,8 @@ object Expr {
 
   // ---------- driver-side fold ----------
   /** The fold has no value: a ref or call its caller does not resolve,
-    * an operand type the operator does not take, an integer division
-    * by zero, or (`unsupported`) a node outside its surface. */
+    * an operand type the operator does not take, or (`unsupported`) a
+    * node outside its surface. */
   final class NoFold(msg: String, val unsupported: Boolean = false)
       extends RuntimeException(msg, null, false, false)
 
@@ -1585,10 +1614,12 @@ object Expr {
         s"${prefix}result of $what cannot be represented as an integer")
 
   /** The one driver-side evaluator, over the reference's Value
-    * operators (Value.cpp): exact int64 `+ - * / %` and negation,
-    * IEEE doubles, string `+` concatenation, the constant Value
-    * comparator for comparisons and IN, three-valued AND/OR/NOT, lazy
-    * CASE, map attributes and list subscripts (negative from the end).
+    * operators (Value.cpp): exact int64 `+ - * / %` and negation (an
+    * integer zero divisor is NULL, DIV_BY_ZERO, unless both operands
+    * are constant), IEEE doubles, string `+` concatenation, the
+    * constant Value comparator for comparisons and IN, three-valued
+    * AND/OR/NOT, lazy CASE, map attributes and list subscripts
+    * (negative from the end).
     * `ref` resolves Ref/Param leaves and `call` makes function calls
     * (lower-cased name, folded args); either throws NoFold where its
     * caller has no value. `tryConst` is the fold with neither;
@@ -1652,7 +1683,15 @@ object Expr {
         case (x, xs: Seq[_]) => foldIn(x, xs.toList)
         case (x, other) => stuck(s"cannot test $x IN $other")
       }
-      case Bin(op @ ("+" | "-" | "*" | "/" | "%"), a, b) => arith(op, f(a), f(b))
+      case Bin(op @ ("+" | "-" | "*" | "/" | "%"), a, b) => (f(a), f(b)) match {
+        // an integer zero divisor is NULL over props and columns, but a
+        // constant one is the reference's constant-folding error
+        // (FoldConstantExprVisitor: YIELD 1/0, WHERE … 7 % 0)
+        case (_: Long, z: Long) if z == 0 && (op == "/" || op == "%") &&
+            tryConst(a).isDefined && tryConst(b).isDefined =>
+          throw new IllegalArgumentException("SemanticError: Divide by 0")
+        case (x, y) => arith(op, x, y)
+      }
       case CaseW(None, branches, els) =>
         def holds(c: E): Boolean = f(c) match {
           case b: Boolean => b
@@ -1669,8 +1708,8 @@ object Expr {
   private def arith(op: String, x: Any, y: Any): Any = (x, y) match {
     case (null, _) | (_, null) => null
     case (a: Long, b: Long) =>
-      if ((op == "/" || op == "%") && b == 0) throw new NoFold("division by zero")
-      try op match {
+      if ((op == "/" || op == "%") && b == 0) null
+      else try op match {
         case "+" => Math.addExact(a, b)
         case "-" => Math.subtractExact(a, b)
         case "*" => Math.multiplyExact(a, b)
@@ -1690,8 +1729,8 @@ object Expr {
   }
 
   /** The fold of a constant expression, None where it has no value (a
-    * ref, a call, a type mismatch, an integer division by zero);
-    * integer overflow raises IntOverflow. */
+    * ref, a call, a type mismatch); integer overflow raises
+    * IntOverflow. */
   private[nql] def tryConst(e: E): Option[Any] = {
     def none(x: Any): Nothing = throw new NoFold("not constant")
     try Some(fold(e, none, (_, _) => none(()))) catch { case _: NoFold => None }

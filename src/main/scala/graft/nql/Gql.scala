@@ -1517,9 +1517,6 @@ object Gql {
         // constant row (legal — yield.feature:553); the bare
         // `YIELD count(*)` SemanticError scenario is @skip-tagged
         // (a reference TODO), so no agg guard here
-        // YieldValidator parity: CONSTANT integer division/modulo by
-        // zero is a validation-time error (constant overflow raises in
-        // Expr.fold)
         (items.map(_.e) ++ where.toList).foreach(Expr.collect(_) {
           // uuid() is only legal inside graph-pattern filters; a
           // standalone YIELD rejects it (YieldValidator "Not supported
@@ -1527,15 +1524,6 @@ object Gql {
           case Expr.FnCall("uuid", Nil, _) =>
             throw new IllegalArgumentException(
               "SemanticError: Not supported expression `uuid()' for props deduction.")
-          case Expr.Bin("/" | "%", a2, b2)
-              // INTEGER/INTEGER by zero only: a float operand makes
-              // the division IEEE (0/0.0 → NaN, 1/0.0 → inf —
-              // bugfix/NaNInfinityFloat; Scala's boxed == would match
-              // 0.0 against 0L, hence the explicit Long checks
-              if Expr.tryConst(b2).exists(v => v.isInstanceOf[Long] &&
-                  v.asInstanceOf[Long] == 0L) &&
-                Expr.tryConst(a2).exists(_.isInstanceOf[Long]) =>
-            throw new IllegalArgumentException("SemanticError: Divide by 0")
         })
         val base = vars.headOption match {
           case Some(v) => env.getOrElse(v,
@@ -2481,41 +2469,17 @@ object Gql {
       def tagList(side: String, joined: Set[String]): Column =
         array_compact(array(joined.toSeq.sorted.map(t =>
           when(col(s"__${side}_${t}___has").isNotNull, lit(t))): _*))
-      // ordering a schema prop against a cross-family literal is the
-      // reference's NULL (`$$.player.age >= true`, RelationalExpr
-      // "in GO clause") — same-family orderings (bool prop vs bool
-      // literal, Index.feature) stay real comparisons
-      def propFam(x: Expr.E): Option[String] = {
-        def famOf(d: org.apache.spark.sql.types.DataType): String = d match {
-          case _: org.apache.spark.sql.types.NumericType => "n"
-          case org.apache.spark.sql.types.StringType => "s"
-          case org.apache.spark.sql.types.BooleanType => "b"
-          case _ => "?"
-        }
-        (x match {
-          case Expr.Param("dst" | "src", _, List(tag, prop))
-              if g.tagNames.contains(tag) =>
-            g.vertexTable(tag).schema.find(_.name == prop).map(_.dataType)
-          case Expr.Ref(List(et, p)) if etypes.contains(et) &&
-              !p.startsWith("_") =>
-            g.edgesByType(et).schema.find(_.name == p).map(_.dataType)
-          case _ => None
-        }).map(famOf)
-      }
-      def litFam2(x: Expr.E): Option[String] = x match {
-        case Expr.Lit(_: String) => Some("s")
-        case Expr.Lit(_: Boolean) => Some("b")
-        case Expr.Lit(_: Long) | Expr.Lit(_: Double) => Some("n")
+      def propType(x: Expr.E) = x match {
+        case Expr.Param("dst" | "src", _, List(tag, prop))
+            if g.tagNames.contains(tag) =>
+          g.vertexTable(tag).schema.find(_.name == prop).map(_.dataType)
+        case Expr.Ref(List(et, p)) if etypes.contains(et) &&
+            !p.startsWith("_") =>
+          g.edgesByType(et).schema.find(_.name == p).map(_.dataType)
         case _ => None
       }
-      def famMism(a: Expr.E, b: Expr.E): Boolean =
-        (propFam(a), litFam2(b)) match {
-          case (Some(fa), Some(fb)) => fa != "?" && fa != fb
-          case _ => false
-        }
       val resolver: Expr.Resolver = {
-        case Expr.Bin("<" | "<=" | ">" | ">=", l, r)
-            if famMism(l, r) || famMism(r, l) =>
+        case x if Expr.crossFamilyOrder(x, propType) =>
           Some(lit(null).cast("boolean"))
         case Expr.Ref(List("origin")) => Some(col("origin"))
         // GO context: `vid` is the hop destination (GO default output)

@@ -1597,6 +1597,13 @@ object MatchSeg {
         })
       }
     }
+    def propType(x: Expr.E) = (x match {
+      case Expr.Ref(List(a)) if plainCol(a) => Some(a)
+      case Expr.Ref(List(v, t2, p)) if cols(s"${v}_${t2}_$p") =>
+        Some(s"${v}_${t2}_$p")
+      case Expr.Ref(List(ev, p)) if cols(s"${ev}_$p") => Some(s"${ev}_$p")
+      case _ => None
+    }).map(binding.schema(_).dataType)
     val f: Expr.Resolver = {
       // IN over a non-list binding column (`x IN names` where WITH
       // bound names to a scalar / missing prop) is the reference's
@@ -1613,42 +1620,8 @@ object MatchSeg {
              !(l match {
                case Expr.FnCall("id", _, _) => true; case _ => false })) =>
         Some(lit(null).cast("boolean"))
-      // ordering a prop against a cross-family literal is the
-      // reference's NULL (`e.likeness >= "12"`, `$$.player.age >=
-      // true` — RelationalExpr.feature) — Spark would cast and
-      // compare. Same-family comparisons stay real: string props vs
-      // string literals (`n.player.name <= "2010.0"`) and BOOL props
-      // vs bool literals (Index.feature `t1.col3 > false`).
-      case Expr.Bin("<" | "<=" | ">" | ">=", l, r)
-          if {
-            def pt(x: Expr.E): Option[org.apache.spark.sql.types.DataType] =
-              (x match {
-                case Expr.Ref(List(a)) if plainCol(a) => Some(a)
-                case Expr.Ref(List(v, t2, p)) if cols(s"${v}_${t2}_$p") =>
-                  Some(s"${v}_${t2}_$p")
-                case Expr.Ref(List(ev, p)) if cols(s"${ev}_$p") =>
-                  Some(s"${ev}_$p")
-                case _ => None
-              }).map(binding.schema(_).dataType)
-            def fam(d: org.apache.spark.sql.types.DataType): String =
-              d match {
-                case _: org.apache.spark.sql.types.NumericType => "n"
-                case org.apache.spark.sql.types.StringType => "s"
-                case org.apache.spark.sql.types.BooleanType => "b"
-                case _ => "?"
-              }
-            def litFam(x: Expr.E): Option[String] = x match {
-              case Expr.Lit(_: String) => Some("s")
-              case Expr.Lit(_: Boolean) => Some("b")
-              case Expr.Lit(_: Long) | Expr.Lit(_: Double) => Some("n")
-              case _ => None
-            }
-            def mism(a: Expr.E, b: Expr.E) = (pt(a).map(fam), litFam(b)) match {
-              case (Some(fa), Some(fb)) => fa != "?" && fa != fb
-              case _ => false
-            }
-            mism(l, r) || mism(r, l)
-          } =>
+      // ordering a prop against a cross-family literal is NULL
+      case x if Expr.crossFamilyOrder(x, propType) =>
         Some(lit(null).cast("boolean"))
       // ==/!= between a scalar-shaped side and an ARRAY binding column
       // (`id(v) == vid` where vid = LIST[]): cross-family equality is

@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Cosine similarity between two array columns, double-exact. */
-  def cosine(a: Column, b: Column): Column =
-    graft.functions.Fn.cosSimilarity(a, b)
+  /** Cosine similarity between two array columns, double-exact: the
+    * native codegen'd `CosineSim` expression. */
+  def cosine(a: Column, b: Column): Column = graft.functions.CosineSim(a, b)
 
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),

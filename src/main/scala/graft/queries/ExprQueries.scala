@@ -1,116 +1,130 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.Fn
 import graft.functions.Fn.roundPortable
+import graft.nql.Expr
 
 /** SparkEntry registrations exercising the expression AST + scalar
   * function surface (SURVEY.md §2.8; reference Expression.h:22-110 and
-  * FunctionManager.cpp registry). One query per expression family; all
-  * built via graft.functions.Fn so the mappings under test are the ones
-  * the planner layer uses. */
+  * FunctionManager.cpp registry). One query per expression family.
+  * Each column nGQL can express is nGQL text compiled by `Expr.compile`
+  * (function names through `Expr.fnCol`), the mapping every nGQL and
+  * openCypher statement runs, so the DuckDB oracles check that
+  * mapping. Columns nGQL has no function for call the Spark builtin:
+  * lpad/rpad, nullif, date_trunc, make_date, datediff, array_join and
+  * get_json_object. nGQL integers are int64; a column the oracle
+  * declares INTEGER is cast back. */
 object ExprQueries {
   type Q = (SparkSession, String) => DataFrame
 
   private def t(s: SparkSession, dir: String, name: String) =
     Tables.load(s, dir, name)
 
+  /** nGQL expression `text` over the frame's columns. */
+  private def ngql(text: String): Column =
+    Expr.compile(Expr.parseText(text), Expr.noResolver)
+  private def ngql(text: String, alias: String): Column = ngql(text).as(alias)
+
   val queries: Map[String, Q] = Map(
     // CASE both forms (CaseExpression.h)
     "q_expr_case" -> ((s, dir) =>
       t(s, dir, "orders").select(col("o_orderkey"),
-        Fn.caseWhen(Seq(
-          (col("o_totalprice") > 300000, lit("big")),
-          (col("o_totalprice") > 150000, lit("mid"))), lit("small")).as("bucket"))),
+        ngql("""CASE WHEN o_totalprice > 300000 THEN "big"
+               |WHEN o_totalprice > 150000 THEN "mid" ELSE "small" END""".stripMargin,
+          "bucket"))),
 
     // string functions (lower/upper/substr/left/right/lpad/replace/...)
     "q_expr_string" -> ((s, dir) =>
       t(s, dir, "part").filter(col("p_partkey") <= 300).select(
         col("p_partkey"),
-        Fn.toLower(col("p_brand")).as("lo"),
-        Fn.toUpper(col("p_type")).as("up"),
-        Fn.length_(col("p_name")).as("len"),
-        Fn.substr_(col("p_name"), 2, 5).as("sub"),
-        Fn.left_(col("p_name"), 4).as("lft"),
-        Fn.right_(col("p_name"), 3).as("rgt"),
-        Fn.lpad_(col("p_brand"), 12, "#").as("lp"),
-        Fn.rpad_(col("p_brand"), 12, "#").as("rp"),
-        Fn.replace_(col("p_type"), " ", "_").as("repl"),
-        Fn.reverse_(col("p_brand")).as("rev"),
-        Fn.concatWs("|", col("p_brand"), col("p_type")).as("cw"),
-        Fn.md5_(col("p_name")).as("h"))),
+        ngql("lower(p_brand)", "lo"),
+        ngql("upper(p_type)", "up"),
+        ngql("length(p_name)", "len"),
+        ngql("substr(p_name, 2, 5)", "sub"),
+        ngql("left(p_name, 4)", "lft"),
+        ngql("right(p_name, 3)", "rgt"),
+        lpad(col("p_brand"), 12, "#").as("lp"),
+        rpad(col("p_brand"), 12, "#").as("rp"),
+        ngql("""replace(p_type, " ", "_")""", "repl"),
+        ngql("reverse(p_brand)", "rev"),
+        ngql("""concat_ws("|", p_brand, p_type)""", "cw"),
+        ngql("md5(p_name)", "h"))),
 
     // math functions
     "q_expr_math" -> ((s, dir) =>
       t(s, dir, "part").filter(col("p_partkey") <= 300).select(
         col("p_partkey"),
-        Fn.abs_(col("p_size") - 25).as("ab"),
-        Fn.floor_(col("p_retailprice")).as("fl"),
-        Fn.ceil_(col("p_retailprice")).as("ce"),
-        Fn.round_(col("p_size") / lit(7.0), 3).as("rd"),
-        roundPortable(Fn.sqrt_(col("p_retailprice")), 6).as("sq"),
-        roundPortable(Fn.pow_(col("p_size"), lit(2.0)), 1).as("pw"),
-        roundPortable(Fn.log_(col("p_retailprice")), 6).as("ln"),
-        roundPortable(Fn.log2_(col("p_size")), 6).as("l2"),
-        roundPortable(Fn.log10_(col("p_retailprice")), 6).as("l10"),
-        Fn.sign_(col("p_size") - 25).as("sg"),
-        Fn.bitAnd(col("p_size"), lit(12)).as("ba"),
-        Fn.bitOr(col("p_size"), lit(5)).as("bo"),
-        Fn.bitXor(col("p_size"), lit(9)).as("bx"))),
+        ngql("abs(p_size - 25)").cast("int").as("ab"),
+        ngql("floor(p_retailprice)", "fl"),
+        ngql("ceil(p_retailprice)", "ce"),
+        ngql("round(p_size / 7.0, 3)", "rd"),
+        roundPortable(ngql("sqrt(p_retailprice)"), 6).as("sq"),
+        roundPortable(ngql("pow(p_size, 2.0)"), 1).as("pw"),
+        roundPortable(ngql("log(p_retailprice)"), 6).as("ln"),
+        roundPortable(ngql("log2(p_size)"), 6).as("l2"),
+        roundPortable(ngql("log10(p_retailprice)"), 6).as("l10"),
+        ngql("sign(p_size - 25)", "sg"),
+        ngql("bit_and(p_size, 12)").cast("int").as("ba"),
+        ngql("bit_or(p_size, 5)").cast("int").as("bo"),
+        ngql("bit_xor(p_size, 9)").cast("int").as("bx"))),
 
     // temporal functions (date/time/extract family)
     "q_expr_temporal" -> ((s, dir) =>
       t(s, dir, "orders").filter(col("o_orderkey") <= 500).select(
         col("o_orderkey"),
-        Fn.yearF(col("o_orderdate")).as("y"),
-        Fn.monthF(col("o_orderdate")).as("m"),
-        Fn.dayF(col("o_orderdate")).as("d"),
-        Fn.extractF("hour", col("o_orderdate")).as("h"),
+        ngql("datetime(o_orderdate).year", "y"),
+        ngql("datetime(o_orderdate).month", "m"),
+        ngql("datetime(o_orderdate).day", "d"),
+        ngql("datetime(o_orderdate).hour", "h"),
         date_trunc("month", col("o_orderdate")).cast("date").as("mon"),
-        Fn.dateF(col("o_orderdate")).as("dt"))),
+        ngql("date(o_orderdate)", "dt"))),
 
     // relational predicates: IN/CONTAINS/STARTS/ENDS/=~ (Expression.h)
     "q_expr_predicates" -> ((s, dir) =>
       t(s, dir, "part").filter(col("p_partkey") <= 300).select(
         col("p_partkey"),
-        Fn.in(col("p_brand"), "Brand#11", "Brand#22", "Brand#33").as("inb"),
-        Fn.containsStr(col("p_type"), "BRASS").as("ct"),
-        Fn.startsWith(col("p_type"), "STANDARD").as("sw"),
-        Fn.endsWith(col("p_type"), "TIN").as("ew"),
-        Fn.regexMatch(col("p_type"), "^(ECONOMY|PROMO).*ED$").as("re"))),
+        ngql("""p_brand IN ["Brand#11", "Brand#22", "Brand#33"]""", "inb"),
+        ngql("""p_type CONTAINS "BRASS"""", "ct"),
+        ngql("""p_type STARTS WITH "STANDARD"""", "sw"),
+        ngql("""p_type ENDS WITH "TIN"""", "ew"),
+        ngql("""p_type =~ "(ECONOMY|PROMO).*ED"""", "re"))),
 
     // list exprs: subscript/slice/predicates/comprehension/reduce
     // (Expression.h kSubscript/kPredicate/ListComprehension/Reduce)
     "q_expr_list" -> ((s, dir) =>
       t(s, dir, "part").filter(col("p_partkey") <= 300)
-        .select(col("p_partkey"), split(col("p_name"), " ").as("toks"))
+        .select(col("p_partkey"), ngql("""split(p_name, " ")""", "toks"))
         .select(
           col("p_partkey"),
-          Fn.size_(col("toks")).as("n"),
-          Fn.head_(col("toks")).as("hd"),
-          Fn.last_(col("toks")).as("lst"),
-          array_join(Fn.subscriptRange(col("toks"), 1, 3), " ").as("mid"),
-          Fn.allPred(col("toks"), x => length(x) > 2).as("all3"),
-          Fn.anyPred(col("toks"), x => x.startsWith("a")).as("anya"),
-          Fn.size_(Fn.listComprehension(col("toks"),
-            x => length(x) > 4, x => upper(x))).as("ncomp"),
-          Fn.reduce_(col("toks"), lit(0), (acc, x) => acc + length(x)).as("totlen"))),
+          ngql("size(toks)", "n"),
+          ngql("head(toks)", "hd"),
+          ngql("last(toks)", "lst"),
+          array_join(ngql("toks[1..3]"), " ").as("mid"),
+          ngql("all(x IN toks WHERE length(x) > 2)", "all3"),
+          ngql("""any(x IN toks WHERE x STARTS WITH "a")""", "anya"),
+          ngql("size([x IN toks WHERE length(x) > 4 | upper(x)])", "ncomp"),
+          ngql("reduce(acc = 0, x IN toks | acc + length(x))").cast("int").as("totlen"))),
 
     // null handling: isNull/coalesce/nullif (kIsNull/kIsEmpty family)
     "q_expr_null" -> ((s, dir) =>
-      t(s, dir, "orders").filter(col("o_orderkey") <= 500).select(
-        col("o_orderkey"),
-        Fn.coalesce_(nullif(col("o_orderstatus"), lit("O")), lit("open")).as("st"),
-        Fn.isNull_(nullif(col("o_orderstatus"), lit("O"))).as("iso"),
-        Fn.isNotNull_(col("o_orderstatus")).as("nn"))),
+      t(s, dir, "orders").filter(col("o_orderkey") <= 500)
+        .select(col("o_orderkey"), col("o_orderstatus"),
+          nullif(col("o_orderstatus"), lit("O")).as("st0"))
+        .select(
+          col("o_orderkey"),
+          ngql("""coalesce(st0, "open")""", "st"),
+          ngql("st0 IS NULL", "iso"),
+          ngql("o_orderstatus IS NOT NULL", "nn"))),
 
-    // json_extract (FunctionManager.cpp) over the events props column
+    // JSON path extraction over the events props column (nGQL's
+    // json_extract renders the whole object, so the field read is
+    // Spark's get_json_object)
     "q_expr_json" -> ((s, dir) =>
       t(s, dir, "events").filter(col("event_id") <= 500).select(
         col("event_id"),
-        Fn.jsonExtract(col("props"), "$.k").cast("long").as("k"))),
+        get_json_object(col("props"), "$.k").cast("long").as("k"))),
 
     // temporal constructors + arithmetic (date/datetime/duration family)
     "q_expr_temporal2" -> ((s, dir) =>
@@ -118,26 +132,26 @@ object ExprQueries {
         col("o_orderkey"),
         make_date(lit(2020), month(col("o_orderdate")),
           dayofmonth(col("o_orderdate"))).as("md"),
-        date_add(to_date(col("o_orderdate")), 30).as("plus30"),
+        ngql("date(o_orderdate) + duration({days: 30})", "plus30"),
         datediff(to_date(col("o_orderdate")),
           make_date(lit(1995), lit(1), lit(1))).as("dd"),
-        unix_timestamp(col("o_orderdate")).as("epoch_s"))),
+        ngql("timestamp(o_orderdate)", "epoch_s"))),
 
-    // geo point subset of st_* (S2-backed in the reference; POINT
-    // construction, WKT, spherical distance)
+    // geo point subset of st_* (S2-backed in the reference): WKT text
+    // from column coordinates, and the S2 distance and DWithin that
+    // ST_Distance / ST_DWithin run
     "q_expr_geo" -> ((s, dir) =>
-      t(s, dir, "customer").filter(col("c_custkey") <= 300).select(
-        col("c_custkey"),
-        Fn.stAsText(Fn.stPoint((col("c_custkey") % 300) - 150,
-          (col("c_custkey") % 120) / lit(2.0) - 30)).as("wkt"),
-        roundPortable(Fn.stDistance(
-          Fn.stPoint((col("c_custkey") % 300) - 150,
-            (col("c_custkey") % 120) / lit(2.0) - 30),
-          Fn.stPoint(lit(2.35), lit(48.85))), 3).as("dist_m"),
-        Fn.stDWithin(
-          Fn.stPoint((col("c_custkey") % 300) - 150,
-            (col("c_custkey") % 120) / lit(2.0) - 30),
-          Fn.stPoint(lit(2.35), lit(48.85)), 5000000.0).as("near"))),
+      t(s, dir, "customer").filter(col("c_custkey") <= 300)
+        .select(col("c_custkey"),
+          ngql("toFloat((c_custkey % 300) - 150)", "lon"),
+          ngql("(c_custkey % 120) / 2.0 - 30", "lat"))
+        .select(col("c_custkey"), ngql(
+          """"POINT(" + toString(lon) + " " + toString(lat) + ")"""", "wkt"))
+        .select(
+          col("c_custkey"), col("wkt"),
+          roundPortable(ngql("ST_Distance(wkt, ST_Point(2.35, 48.85))"), 3)
+            .as("dist_m"),
+          ngql("ST_DWithin(wkt, ST_Point(2.35, 48.85), 5000000.0)", "near"))),
 
     // window functions over events (a free upgrade vs the reference,
     // SURVEY §2.2 — no OVER clause exists there)
@@ -161,14 +175,15 @@ object ExprQueries {
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("l_quantity")), 2).as("sum_qty"))),
 
-    // typecasts (kTypeCasting) with the trunc-toward-zero shim
+    // typecasts (kTypeCasting): toInteger parses through double and
+    // truncates toward zero
     "q_expr_cast" -> ((s, dir) =>
       t(s, dir, "orders").filter(col("o_orderkey") <= 500).select(
         col("o_orderkey"),
-        Fn.toInteger(substring(col("o_orderpriority"), 1, 1)).as("pri"),
-        Fn.toInteger(col("o_totalprice")).as("ip"),
-        Fn.toStringF(col("o_orderkey")).as("sk"),
-        Fn.toFloat(col("o_orderkey")).as("fk"))))
+        ngql("toInteger(substr(o_orderpriority, 0, 1))", "pri"),
+        ngql("toInteger(o_totalprice)", "ip"),
+        ngql("toString(o_orderkey)", "sk"),
+        ngql("toFloat(o_orderkey)", "fk"))))
 
   val oracleSql: Map[String, String] = Map(
     "q_expr_case" ->

@@ -121,16 +121,17 @@ object GraphQueries {
     // path functions (nodes/startNode/endNode/length/relationships/
     // hasSameVertexInPath) over the traversal path column
     "q_expr_path" -> ((s, dir) => {
-      import graft.functions.Fn
       val g = gm(s, dir)
+      val path = col("path")
+      val steps = greatest(size(path) - 1, lit(0))
       Traverse.paths(custSeeds(g, 3), g.edges, 1, 2)
         .select(col("origin"),
-          array_join(Fn.nodes(col("path")), "->").as("path"),
-          Fn.startNode(col("path")).as("start_v"),
-          Fn.endNode(col("path")).as("end_v"),
-          Fn.pathLength(col("path")).as("plen"),
-          Fn.hasSameVertexInPath(col("path")).as("cyc"),
-          size(Fn.relationships(col("path"))).as("nrels"))
+          array_join(path, "->").as("path"),
+          element_at(path, 1).as("start_v"),
+          element_at(path, -1).as("end_v"),
+          steps.as("plen"),
+          (size(array_distinct(path)) < size(path)).as("cyc"),
+          steps.as("nrels"))
     }),
 
     // AppendVertices (AppendVerticesExecutor.cpp:18) with prop prefixing

@@ -52,7 +52,8 @@ class ExprFoldSpec extends SparkSpec {
   }
 
   test("fold differential: DML and YIELD agree on generated constant expressions") {
-    // the cases that disagreed before the fold was shared
+    // the cases that disagreed before the fold was shared, constant
+    // zero divisors and list concatenation
     probes.foreach { t =>
       val d = dmlSide(t, Map.empty)
       val y = yieldSide(s"YIELD $t AS r")
@@ -62,6 +63,15 @@ class ExprFoldSpec extends SparkSpec {
   }
 
   test("fold differential: integer operators evaluated by Spark over piped leaves") {
+    // a zero divisor over piped leaves is NULL on both paths, not an
+    // error on both
+    for (op <- Seq("/", "%")) {
+      val c = Case(s"$$-.c0 $op $$-.c1", Map("c0" -> 7L, "c1" -> 0L),
+        Some(s"YIELD 7 AS c0, 0 AS c1 | YIELD $$-.c0 $op $$-.c1 AS r"))
+      val (d, y) = (dmlSide(c.text, c.env), yieldSide(c.script))
+      assert(d == Right(null) && agree(d, y),
+        s"probe ${c.script}\n    DML   -> ${show(d)}\n    YIELD -> ${show(y)}")
+    }
     check("piped", 60, 20261119L, piped)
   }
 }
@@ -78,7 +88,8 @@ object ExprFoldSpec {
     "9223372036854775807 + 1 == -9223372036854775808",
     "9223372036854775807 * 2 IN [-2]",
     "(9223372036854775807 + 0) + 1",
-    "\"a\" < 1", "[1] < [2]", "1 == 1.000000001")
+    "\"a\" < 1", "[1] < [2]", "1 == 1.000000001",
+    "1 / 0", "7 % 0", "[1, 2] + [3]")
 
   def show(v: Either[String, Any]): String = v match {
     case Left(err) => s"raises ${err.take(160)}"
@@ -92,6 +103,8 @@ object ExprFoldSpec {
     case (x: Double, y: Double) => x == y || (x.isNaN && y.isNaN)
     case (x: String, y: String) => x == y
     case (x: Boolean, y: Boolean) => x == y
+    case (x: collection.Seq[_], y: collection.Seq[_]) =>
+      x.size == y.size && x.zip(y).forall { case (p, q) => same(p, q) }
     case _ => false
   }
 

@@ -248,4 +248,46 @@ class GqlSpec extends SparkSpec {
     assert(err("YIELD -(-9223372036854775807 - 1) AS r") ==
       "SemanticError: result of -(-9223372036854775808) cannot be represented as an integer")
   }
+
+  test("an integer / or % by zero is NULL over piped columns, a constant one raises") {
+    val cat = new graft.graph.ScenarioCatalog(spark, false)
+    val r = Gql.runScript(cat,
+      """YIELD 7 AS x, -7 AS n, 0 AS z | YIELD $-.x / $-.z AS d, $-.x % $-.z AS m,
+        |$-.n / 2 AS d2, $-.n % 2 AS m2, (1 / $-.z) IS NULL AS dn""".stripMargin)
+      .collect().head
+    assert(r.isNullAt(0) && r.isNullAt(1), s"got $r")
+    assert(r.getLong(2) == -3L && r.getLong(3) == -1L && r.getBoolean(4), s"got $r")
+    // the reference's constant folder rejects a constant zero divisor
+    for (q <- Seq("YIELD 1 / 0 AS d", "YIELD 7 % (1 - 1) AS m",
+                  "YIELD 7 AS x | YIELD $-.x + 1 / 0 AS d"))
+      assert(intercept[IllegalArgumentException](Gql.runScript(cat, q).collect())
+        .getMessage == "SemanticError: Divide by 0", q)
+  }
+
+  test("list + list concatenates, over piped columns and constants") {
+    val cat = new graft.graph.ScenarioCatalog(spark, false)
+    val c = Gql.runScript(cat, "YIELD [1, 2] + [3] AS r").collect().head
+    assert(c.getSeq[Long](0) == Seq(1L, 2L, 3L))
+    val r = Gql.runScript(cat,
+      """YIELD [1, 2] AS a, [3] AS b, ["x"] AS s | YIELD $-.a + $-.b AS r, $-.s + $-.s AS t""")
+      .collect().head
+    assert(r.getSeq[Long](0) == Seq(1L, 2L, 3L))
+    assert(r.getSeq[String](1) == Seq("x", "x"))
+  }
+
+  test("GO: ordering a prop against a literal of another type family keeps no row") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val cat = graft.graph.MapCatalog(
+      tags = Map("t" -> Seq(("a", 10L), ("b", 20L), ("c", 30L)).toDF("vid", "age")),
+      edges = Map("e" -> Seq(("a", "b"), ("a", "c")).toDF("src", "dst")
+        .withColumn("rank", lit(0L))))
+    def dsts(where: String) = Gql.run(cat,
+        s"""GO FROM "a" OVER e WHERE $where YIELD e._dst AS d""")
+      .as[String].collect().toSet
+    assert(dsts("$$.t.age >= true").isEmpty)
+    assert(dsts("$$.t.age < \"25\"").isEmpty)
+    assert(dsts("$$.t.age >= 12") == Set("b", "c"))
+    assert(dsts("$$.t.age < 25") == Set("b"))
+  }
 }

@@ -58,4 +58,17 @@ class MatchSegSpec extends SparkSpec {
     assert(ages("{age: (4 * 20) + 5}") == literal)
     assert(ages("{age: $p.a}") == literal)
   }
+
+  test("WHERE ordering a prop against a literal of another type family keeps no row") {
+    val aged = MapCatalog(
+      tags = Map("t" -> Seq(("a", 10L), ("b", 20L)).toDF("vid", "age")),
+      edges = Map("knows" -> Seq(("a", "b", 0L)).toDF("src", "dst", "rank")))
+    def ids(where: String) =
+      Gql.run(aged, s"MATCH (n:t) WHERE $where RETURN id(n) AS v")
+        .as[String].collect().toSet
+    assert(ids("""n.t.age >= "12"""").isEmpty)
+    assert(ids("n.t.age < true").isEmpty)
+    assert(ids("n.t.age >= 12") == Set("b"))
+    assert(ids("n.t.age < 25") == Set("a", "b"))
+  }
 }
