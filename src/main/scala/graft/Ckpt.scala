@@ -94,13 +94,19 @@ object Ckpt {
     * (`Dataset.observe`) in every durability mode — no extra job. The
     * materialized plan gains one CollectMetrics node. `rows` must
     * evaluate to a non-null Long (`count`, `count_if`). */
-  def counted(df: DataFrame, rows: Column = count(lit(1))): (DataFrame, Long) = {
+  def counted(df: DataFrame, rows: Column = count(lit(1))): (DataFrame, Long) =
+    observed(df, rows)(mat)
+
+  /** `run(df)` with the Long aggregate `metric` observed on the jobs
+    * `run` starts over the frame (a materialization, a write), returned
+    * beside `run`'s result: no extra job. */
+  def observed[T](df: DataFrame, metric: Column)(run: DataFrame => T): (T, Long) = {
     val obs = Observation()
-    val ck = mat(df.observe(obs, rows.as("rows")))
-    (ck, Await.result(obs.future, ObservedWait).getAs[Long]("rows"))
+    val out = run(df.observe(obs, metric.as("rows")))
+    (out, Await.result(obs.future, ObservedWait).getAs[Long]("rows"))
   }
 
-  /** How long `counted` waits, after the job returned, for the metric
+  /** How long `observed` waits, after the job returned, for the metric
     * the listener bus delivers (normally well under a millisecond): a
     * bus that dropped the event fails the query here instead of
     * blocking its loop forever. */

@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The one place a graft SparkSession is built, for the mains
   * (Bench, Verify, the tools) and the test suites alike, so their
   * postures cannot drift apart: UTC session time, no UI, WARN logging,
-  * AQE and skew joins at Spark's defaults (both on).
+  * a 2000-entry codegen class cache, AQE and skew joins at Spark's
+  * defaults (both on).
   *
   * A `local-cluster[...]` master runs separate executor JVMs, which
   * changes two things:
@@ -33,6 +34,11 @@ object Harness {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // a static conf, so only the builder can set it: at Spark's 100
+      // entries one cycle of the perfbench `interactive` request mix
+      // (about 300 generated classes) recompiled every class of every
+      // request; at 2000 the warm cycle compiled almost nothing
+      .config("spark.sql.codegen.cache.maxEntries", 2000)
     if (master.startsWith("local-cluster")) {
       val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
       Runtime.getRuntime.addShutdownHook(new Thread(() =>

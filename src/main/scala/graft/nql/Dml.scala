@@ -1657,8 +1657,10 @@ object Dml {
       case Seq(s, d2, r) => Seq(vid(s), vid(d2), r)
       case vs => vs.map(vid)
     }
+    // literal keys, one row per distinct key: a frame the driver holds,
+    // which KeyedTable applies as a key predicate
     def literalKeys(cols: Seq[String], keys: Seq[Seq[Any]]): DataFrame =
-      spark.createDataFrame(keys.map(k => Row.fromSeq(key(k))).asJava,
+      spark.createDataFrame(keys.map(key).distinct.map(Row.fromSeq).asJava,
         StructType(cols.map(c =>
           StructField(c, if (c == "rank") LongType else vidDt))))
     // a piped key set with vids cast to the space's vid type,
@@ -1744,39 +1746,32 @@ object Dml {
             case None => throw new DmlError(s"unknown prop $p")
           })
         }
-        u.keyRefs match {
-          // Literal keys stay a predicate over the table rather than a
-          // key-set join: on a 750-row parquet table (local[4], median
-          // of 5 second-round runs) a single-key UPDATE planned 2 Spark
-          // jobs and 241 ms this way, and 5 jobs and 560 ms as
-          // updateByKeys' marker join. A repeated key is one key.
-          case None =>
-            val keys = u.keyRows.map(key).distinct
-            val keyCond = kt.keys match {
-              case Seq(c) => col(c).isin(keys.map(_.head): _*)
-              case cs => keys.map(k => cs.zip(k).map { case (c, v) =>
-                col(c) === lit(v) }.reduce(_ && _)).reduce(_ || _)
-            }
-            if (u.upsert) {
-              // missing keys are seeded with schema defaults, then the
-              // SET applies over the merged frame — one staged write
-              val seedProps = defaultRow(defs).map(plain)
-              val seed = spark.createDataFrame(
-                keys.map(k => Row.fromSeq(k ++ seedProps)).asJava, schema)
-              kt.upsertWith(seed, keyCond, whenC, assigns: _*)
-            } else kt.update(keyCond && whenC.getOrElse(lit(true)), assigns: _*)
-          // piped keys: membership is a marker join inside
-          // updateByKeys, never a collect
+        // literal keys are a frame the driver holds (a key predicate in
+        // KeyedTable), piped keys a key-set join, never a collect
+        val seed = u.keyRefs match {
+          case None if u.upsert =>
+            // missing keys are seeded with schema defaults, then the
+            // SET applies over the merged frame — one staged write
+            val seedProps = defaultRow(defs).map(plain)
+            spark.createDataFrame(u.keyRows.map(key).distinct
+              .map(k => Row.fromSeq(k ++ seedProps)).asJava, schema)
+          case None => literalKeys(kt.keys, u.keyRows)
           case Some(refs) =>
             val ks = pipedKeySet(u.sentence, refs)
-            val seed =
-              if (!u.upsert) ks
-              else ks.select(ks.columns.toSeq.map(col) ++
-                schema.fields.toSeq.drop(kt.keys.size)
-                  .zip(defaultRow(defs).map(plain)).map { case (f2, v) =>
-                    lit(v).cast(f2.dataType).as(f2.name) }: _*)
-            kt.updateByKeys(seed, insertMissing = u.upsert, whenC,
-              assigns: _*)
+            if (!u.upsert) ks
+            else ks.select(ks.columns.toSeq.map(col) ++
+              schema.fields.toSeq.drop(kt.keys.size)
+                .zip(defaultRow(defs).map(plain)).map { case (f2, v) =>
+                  lit(v).cast(f2.dataType).as(f2.name) }: _*)
+        }
+        // a literal key the table lacks fails the statement, as on the
+        // scenario space, and no key applies
+        try kt.updateByKeys(seed, insertMissing = u.upsert, whenC, assigns: _*)
+        catch {
+          case graft.operators.Mutations.KeyNotFound(k) =>
+            throw new DmlError(
+              if (u.isTag) s"vertex ${k.head} on tag ${u.target} not found"
+              else s"edge ${(k(0), k(1), k(2))} on ${u.target} not found")
         }
         emptyOk(spark)
       case DeleteVertex(vids, ref, withEdge) =>
@@ -1789,8 +1784,7 @@ object Dml {
         }
         if (withEdge) tc.edgeTypeNames.foreach { e =>
           val tb = tc.edgeTable(e)
-          if (tb.exists) tb.deleteJoin(ids, (cur, other) =>
-            cur("src") === other("vid") || cur("dst") === other("vid"))
+          if (tb.exists) tb.deleteTouching(ids, Seq("src", "dst"))
         }
         emptyOk(spark)
       case DeleteEdge(etype, keys, refKeys) =>

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -17,12 +19,28 @@ import org.apache.spark.sql.types.StructType
   * table (parquet has no transaction log — documented trade-off vs
   * the reference's Raft-replicated KV).
   *
-  * Scale notes: merge = one shuffle-free read + anti/semi join on the
-  * key (broadcast when the delta is small — the common case) + a
-  * partitioned rewrite. On a real deployment this is exactly Delta
-  * MERGE's copy-on-write plan, and should be swapped for it.
+  * Scale notes: every mutation is one staged rewrite of the table.
+  *  - A key set the driver already holds (a frame whose optimized plan
+  *    is a local relation: the rows of a literal INSERT, UPDATE or
+  *    DELETE) becomes one key predicate over the table scan: `vid IN
+  *    (...)`, or one struct IN over `(src, dst, rank)`, which the
+  *    optimizer turns into a set lookup. The rewrite is then the only
+  *    Spark job: no count of the delta, no broadcast.
+  *  - Any other key set (a piped `$-` set, a stream micro-batch) stays
+  *    a DataFrame and is joined on the key: broadcast when it is small
+  *    (the count in `gatedKeys`), a shuffle join above the cap.
+  *  - A rewrite writes max(1, ceil(plan size / spark.sql.files
+  *    .maxPartitionBytes)) files (one for a table under 128 MB at the
+  *    default) and no `_SUCCESS` marker: nothing reads it, and the
+  *    staged rename is the commit.
+  * On a real deployment this is Delta MERGE's copy-on-write plan, and
+  * should be swapped for it.
   */
 object Mutations {
+
+  /** A literal-key UPDATE named `key`, which the table does not hold. */
+  final case class KeyNotFound(key: Seq[Any])
+      extends RuntimeException(s"key ${key.mkString(", ")} not found")
 
   /** A key-addressed mutable table backed by a parquet dir. All
     * staging-commit filesystem work goes through the Hadoop
@@ -51,9 +69,32 @@ object Mutations {
       if (f.exists(p)) require(f.delete(p, true), s"delete $p failed")
     }
 
-    private def write(df: DataFrame): Unit = {
+    /** Files per rewrite: one per `spark.sql.files.maxPartitionBytes`
+      * of the plan's estimated size, at least one. */
+    private def fileCount(df: DataFrame): Int = {
+      val max = JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes"))
+      val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      ((size + max - 1) / max).max(1).min(Int.MaxValue).toInt
+    }
+
+    /** Stage `df` as the table's next version, then swap it in. With
+      * `check`, its metric is observed on the write job itself and its
+      * test runs before the swap: a test that raises drops the stage
+      * and leaves the table as it was. */
+    private def write(df: DataFrame,
+                      check: Option[(Column, Long => Unit)] = None): Unit = {
       val stage = new Path(path + ".stage")
-      df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+      def save(d: DataFrame): Unit =
+        d.coalesce(fileCount(df)).write.mode(SaveMode.Overwrite)
+          .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+          .parquet(stage.toString)
+      check match {
+        case None => save(df)
+        case Some((metric, test)) =>
+          val (_, n) = graft.Ckpt.observed(df, metric)(save)
+          try test(n) catch { case e: Throwable => deleteIfExists(stage); throw e }
+      }
       val target = new Path(path)
       if (fs(target).exists(target)) {
         val old = new Path(path + ".old")
@@ -63,6 +104,28 @@ object Mutations {
         deleteIfExists(old)
       } else renameChecked(stage, target)
     }
+
+    /** The distinct `cols` tuples of `df` when the driver already holds
+      * them: `df`'s optimized plan is a local relation (rows built on the
+      * driver, `createDataFrame`, `toDF`). Reading them starts no job. */
+    private def localRows(df: DataFrame, cols: Seq[String]): Option[Seq[Row]] =
+      df.queryExecution.optimizedPlan match {
+        case _: LocalRelation =>
+          Some(df.select(cols.map(col): _*).collect().toSeq.distinct)
+        case _ => None
+      }
+
+    /** `cols` is one of the tuples `rows`: a plain IN for one column,
+      * one struct IN for several, so a long list stays one set lookup. */
+    private def isIn(cols: Seq[String], rows: Seq[Row]): Column = cols match {
+      case Seq(c) => col(c).isin(rows.map(_.get(0)): _*)
+      case _ => struct(cols.map(col): _*).isin(rows.map(r =>
+        struct(cols.indices.map(i => lit(r.get(i)).as(cols(i))): _*)): _*)
+    }
+
+    /** A NULL-safe negation: a row whose test is NULL is kept, as an
+      * anti join keeps a row whose key matches nothing. */
+    private def notTrue(c: Column): Column = !coalesce(c, lit(false))
 
     /** Delta-size gate: broadcast the delta's key set only when it is
       * small (the common case); a bulk mutation above the cap plans a
@@ -74,9 +137,24 @@ object Mutations {
       graft.traverse.Traverse.maybeBroadcast(ks, ks.count())
     }
 
+    /** The table's rows whose key is not among `keyRows`' keys: a key
+      * predicate when the driver holds them, else an anti join. */
+    private def without(keyRows: DataFrame): DataFrame =
+      localRows(keyRows, keys) match {
+        case Some(ks) => read.filter(notTrue(isIn(keys, ks)))
+        case None => read.join(gatedKeys(keyRows), keys, "left_anti")
+      }
+
+    /** `assignments` applied, in order, to the rows where `cond` holds. */
+    private def assign(df: DataFrame, cond: Column,
+                       assignments: Seq[(String, Column)]): DataFrame =
+      assignments.foldLeft(df) { case (d, (c, v)) =>
+        d.withColumn(c, when(cond, v).otherwise(col(c)))
+      }
+
     /** The merged frame an INSERT writes (exposed for plan tests). */
     private[graft] def insertPlan(rows: DataFrame): DataFrame =
-      read.join(gatedKeys(rows), keys, "left_anti").unionByName(rows)
+      without(rows).unionByName(rows)
 
     /** INSERT (reference default: overwrite existing keys —
       * InsertExecutor "insert or overwrite" semantics, i.e. Delta
@@ -108,16 +186,13 @@ object Mutations {
       * over a fresh row reads the default), exactly the reference's
       * UpdateExecutor insertable path. The merge is an anti join on the
       * (small) seed key set — never a collect. */
-    def upsertWith(seed: DataFrame, keyCond: org.apache.spark.sql.Column,
-                   whenC: Option[org.apache.spark.sql.Column],
-                   assignments: (String, org.apache.spark.sql.Column)*): Unit = {
+    private def upsertWith(seed: DataFrame, keyCond: Column,
+                           whenC: Option[Column],
+                           assignments: Seq[(String, Column)]): Unit = {
       val cur = if (exists) read else seed.limit(0)
       val fresh = seed.join(cur.select(keys.map(col): _*), keys, "left_anti")
       val (merged, cond) = seededWhen(cur, fresh, whenC)
-      val updated = assignments.foldLeft(merged) { case (df, (c, v)) =>
-        df.withColumn(c, when(keyCond && cond, v).otherwise(col(c)))
-      }
-      write(updated.drop(Seeded))
+      write(assign(merged, keyCond && cond, assignments).drop(Seeded))
     }
 
     private val Seeded = "__seeded"
@@ -130,76 +205,89 @@ object Mutations {
       * (a no-op drop otherwise); without one it is the bare union under
       * `lit(true)`, the plan of a WHEN-less statement. */
     private def seededWhen(cur: DataFrame, fresh: DataFrame,
-                           whenC: Option[org.apache.spark.sql.Column])
-        : (DataFrame, org.apache.spark.sql.Column) = whenC match {
-      case None => (cur.unionByName(fresh), lit(true))
-      case Some(w) =>
-        (cur.withColumn(Seeded, lit(false))
-          .unionByName(fresh.withColumn(Seeded, lit(true))), col(Seeded) || w)
-    }
-
-    /** UPDATE/UPSERT driven by a key-set DataFrame: rows whose key
-      * appears in `seed` receive the assignments where the statement's
-      * WHEN (`whenC`) holds; with `insertMissing` the keys absent from
-      * the table are first seeded from `seed`'s rows (schema defaults)
-      * so the SET right-hand side reads them, and a seeded row takes
-      * the SET whatever WHEN says — nGQL UPSERT over a piped `$-` id
-      * set. Membership is a marker join, never a collect, so the piped
-      * set stays a DataFrame end to end at any scale. */
-    def updateByKeys(seed: DataFrame, insertMissing: Boolean,
-                     whenC: Option[org.apache.spark.sql.Column],
-                     assignments: (String, org.apache.spark.sql.Column)*)
-        : Unit = {
-      val cur = if (exists) read
-                else if (insertMissing) seed.limit(0)
-                else return
-      val (base, extraCond) = if (insertMissing) {
-        val fresh = seed.join(cur.select(keys.map(col): _*), keys,
-          "left_anti").dropDuplicates(keys)
-        seededWhen(cur, fresh, whenC)
-      } else (cur, whenC.getOrElse(lit(true)))
-      val marked = base.join(
-        seed.select(keys.map(col): _*).distinct()
-          .withColumn("__hit", lit(true)),
-        keys, "left")
-      val cond = coalesce(col("__hit"), lit(false)) && extraCond
-      val updated = assignments.foldLeft(marked) { case (df, (c, v)) =>
-        df.withColumn(c, when(coalesce(cond, lit(false)), v)
-          .otherwise(col(c)))
+                           whenC: Option[Column]): (DataFrame, Column) =
+      whenC match {
+        case None => (cur.unionByName(fresh), lit(true))
+        case Some(w) =>
+          (cur.withColumn(Seeded, lit(false))
+            .unionByName(fresh.withColumn(Seeded, lit(true))), col(Seeded) || w)
       }
-      write(updated.drop("__hit").drop(Seeded))
-    }
+
+    /** UPDATE/UPSERT by key set: rows whose key appears in `seed`
+      * receive the assignments where the statement's WHEN (`whenC`)
+      * holds; with `insertMissing` the keys absent from the table are
+      * first seeded from `seed`'s rows (schema defaults, one row per
+      * key) so the SET right-hand side reads them, and a seeded row
+      * takes the SET whatever WHEN says — nGQL UPSERT.
+      *
+      * A `seed` the driver holds (literal keys) is a key predicate.
+      * Without `insertMissing`, every one of its keys must be in the
+      * table: the matched keys are counted on the write job, and a
+      * shortfall raises `KeyNotFound` (the first missing key in `seed`
+      * order) before the swap, so no key applies. Any other `seed` (a
+      * piped `$-` set) is a marker join, never a collect, and its keys
+      * missing from the table are skipped. */
+    def updateByKeys(seed: DataFrame, insertMissing: Boolean,
+                     whenC: Option[Column],
+                     assignments: (String, Column)*): Unit =
+      localRows(seed, keys) match {
+        case Some(ks) if insertMissing =>
+          upsertWith(seed, isIn(keys, ks), whenC, assignments)
+        case Some(ks) if !exists =>
+          ks.headOption.foreach(k => throw KeyNotFound(k.toSeq))
+        case Some(ks) =>
+          val hit = isIn(keys, ks)
+          // on a shortfall: the first key the live table lacks
+          def missing = {
+            val found = read.filter(hit).select(keys.map(col): _*).collect().toSet
+            KeyNotFound(ks.find(!found(_)).getOrElse(ks.head).toSeq)
+          }
+          write(assign(read, hit && whenC.getOrElse(lit(true)), assignments),
+            Some(count_if(hit) -> (n => if (n < ks.size) throw missing)))
+        case None =>
+          val cur = if (exists) read
+                    else if (insertMissing) seed.limit(0)
+                    else return
+          val (base, extraCond) = if (insertMissing) {
+            val fresh = seed.join(cur.select(keys.map(col): _*), keys,
+              "left_anti").dropDuplicates(keys)
+            seededWhen(cur, fresh, whenC)
+          } else (cur, whenC.getOrElse(lit(true)))
+          val marked = base.join(
+            seed.select(keys.map(col): _*).distinct()
+              .withColumn("__hit", lit(true)),
+            keys, "left")
+          write(assign(marked, coalesce(col("__hit"), lit(false)) && extraCond,
+            assignments).drop("__hit").drop(Seeded))
+      }
 
     /** UPDATE: apply column assignments to rows matching a predicate. */
-    def update(cond: org.apache.spark.sql.Column,
-               assignments: (String, org.apache.spark.sql.Column)*): Unit = {
-      val cur = read
-      val updated = assignments.foldLeft(cur) { case (df, (c, v)) =>
-        df.withColumn(c, when(cond, v).otherwise(col(c)))
-      }
-      write(updated)
-    }
+    def update(cond: Column, assignments: (String, Column)*): Unit =
+      write(assign(read, cond, assignments))
 
     /** The surviving frame a DELETE writes (exposed for plan tests). */
     private[graft] def deletePlan(keyRows: DataFrame): DataFrame =
-      read.join(gatedKeys(keyRows), keys, "left_anti")
+      without(keyRows)
 
     /** DELETE rows by key set (DeleteExecutor semantics). */
     def delete(keyRows: DataFrame): Unit = write(deletePlan(keyRows))
 
     /** DELETE rows matching a predicate. */
-    def deleteWhere(cond: org.apache.spark.sql.Column): Unit =
-      write(read.filter(!coalesce(cond, lit(false))))
+    def deleteWhere(cond: Column): Unit = write(read.filter(notTrue(cond)))
 
-    /** DELETE rows that match ANY row of `other` under `cond` — an
-      * anti join, so a piped delete set stays a DataFrame end to end
-      * (no driver collect; `other` broadcast when small via AQE).
-      * Used for `DELETE VERTEX ... WITH EDGE` incidence sweeps. */
-    def deleteJoin(other: DataFrame,
-                   cond: (DataFrame, DataFrame) =>
-                     org.apache.spark.sql.Column): Unit = {
+    /** DELETE the rows in which any of `cols` holds one of the `vid`s
+      * of `ids`: the incident-edge sweep of `DELETE VERTEX ... WITH
+      * EDGE`. Ids the driver holds are one IN per column; any other id
+      * set stays a DataFrame in an anti join (broadcast when small via
+      * AQE), never a collect. */
+    def deleteTouching(ids: DataFrame, cols: Seq[String]): Unit = {
       val cur = read
-      write(cur.join(other, cond(cur, other), "left_anti"))
+      write(localRows(ids, Seq("vid")) match {
+        case Some(vs) =>
+          cur.filter(notTrue(cols.map(c => isIn(Seq(c), vs)).reduce(_ || _)))
+        case None => cur.join(ids,
+          cols.map(c => cur(c) === ids("vid")).reduce(_ || _), "left_anti")
+      })
     }
   }
 

@@ -31,10 +31,11 @@ import graft.operators.Mutations.KeyedTable
   *  - KeyedTable's write is a CHECKED staged rename (never a torn
   *    table), so a reader sees either the pre- or post-batch state.
   *
-  * Scale: each microbatch costs one staged merge = one anti-join +
-  * union over the table (the delta's keys broadcast when small —
-  * Mutations.gatedKeys), i.e. a scan of the current table, never of
-  * the mutation history. For high-churn workloads the same foreachBatch
+  * Scale: each microbatch costs one staged merge = one anti join +
+  * union over the table (a micro-batch is a DataFrame, not a key set
+  * the driver holds, so its keys are joined, broadcast when small; see
+  * the `Mutations` scale notes), i.e. a scan of the current table,
+  * never of the mutation history. For high-churn workloads the same foreachBatch
   * body pointed at a log-structured base+delta table (periodic
   * compaction) bounds the per-batch cost further; the merge semantics
   * stay identical.

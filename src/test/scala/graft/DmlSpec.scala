@@ -253,6 +253,107 @@ class DmlSpec extends SparkSpec {
     assert(jobs.size == 3, jobs)
   }
 
+  test("table space: a literal-key statement is one rewrite job writing one file") {
+    val root = java.nio.file.Files.createTempDirectory("graft-tj").toString
+    val tc = new graft.graph.TableCatalog(spark, root)
+    Gql.runScript(tc,
+      """CREATE TAG t(x int); CREATE EDGE e(w int);
+        |INSERT VERTEX t(x) VALUES "a":(1), "b":(2), "c":(3);
+        |INSERT EDGE e(w) VALUES "a"->"b":(1), "b"->"c"@1:(2), "c"->"a":(3);
+        |""".stripMargin)
+    def jobs(stmt: String): Seq[String] = jobNamesOf(Gql.runScript(tc, stmt))._2
+    // the key set is a predicate on the rewrite: no count of the delta,
+    // no broadcast, and the UPDATE's missing-key count rides the write
+    assert(jobs("""INSERT VERTEX t(x) VALUES "d":(4), "a":(5)""").size == 1)
+    assert(jobs("""INSERT EDGE e(w) VALUES "a"->"c":(4), "b"->"c"@1:(5)""").size == 1)
+    assert(jobs("""UPDATE VERTEX ON t "a", "c" SET x = x + 10""").size == 1)
+    // one rewrite of the tag table, one of the edge table
+    assert(jobs("""DELETE VERTEX "b" WITH EDGE""").size == 2)
+    assert(tc.vertexTable("t").collect().map(r => r.getString(0) -> r.getLong(1))
+      .toMap == Map("a" -> 15L, "c" -> 13L, "d" -> 4L))
+    assert(tc.edgesByType("e").select("src", "dst", "rank", "w").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
+      .toSet == Set(("c", "a", 0L, 3L), ("a", "c", 0L, 4L)))
+    // a small table is one part file, and no _SUCCESS marker is written
+    Seq("tag_t", "edge_e").foreach { t =>
+      val names = new java.io.File(s"$root/$t").list().toSeq
+      assert(names.count(_.startsWith("part-")) == 1, s"$t: $names")
+      assert(!names.exists(_.contains("_SUCCESS")), s"$t: $names")
+    }
+  }
+
+  test("table space: a multi-key UPDATE with a missing key raises and applies no key") {
+    def check(cat: graft.graph.GraphCatalog): Unit = {
+      Gql.runScript(cat,
+        """CREATE TAG t(x int); CREATE EDGE e(w int);
+          |INSERT VERTEX t(x) VALUES "a":(1), "b":(2);
+          |INSERT EDGE e(w) VALUES "a"->"b":(1);""".stripMargin)
+      val v = intercept[DmlError] {
+        Gql.runScript(cat, """UPDATE VERTEX ON t "a", "zz" SET x = 9""")
+      }
+      assert(v.getMessage.contains("vertex zz on tag t not found"), v.getMessage)
+      val e = intercept[DmlError] {
+        Gql.runScript(cat, """UPDATE EDGE ON e "a"->"b", "b"->"a" SET w = 9""")
+      }
+      assert(e.getMessage.contains("edge (b,a,0) on e not found"), e.getMessage)
+      val rows = Gql.run(cat,
+        """FETCH PROP ON t "a", "b" YIELD t.x AS x""").collect()
+        .map(_.getAs[Long]("x")).toSet
+      assert(rows == Set(1L, 2L), s"${cat.getClass.getSimpleName}: $rows")
+      val w = Gql.run(cat, """GO FROM "a" OVER e YIELD e.w AS w""").collect()
+        .map(_.getLong(0)).toSeq
+      assert(w == Seq(1L), s"${cat.getClass.getSimpleName}: $w")
+    }
+    check(fresh())
+    val root = java.nio.file.Files.createTempDirectory("graft-tm").toString
+    check(new graft.graph.TableCatalog(spark, root))
+    assert(!new java.io.File(s"$root/tag_t.stage").exists(), "stage left behind")
+  }
+
+  test("table space: literal and piped key sets leave identical tables") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    def space(): graft.graph.TableCatalog = {
+      val tc = new graft.graph.TableCatalog(spark,
+        java.nio.file.Files.createTempDirectory("graft-tl").toString,
+        vidIsInt = true)
+      Gql.runScript(tc,
+        """CREATE TAG t(x int); CREATE EDGE e(w int);
+          |INSERT VERTEX t(x) VALUES 1:(1), 2:(2), 3:(3), 4:(4);
+          |INSERT EDGE e(w) VALUES 1->2:(1), 1->2@1:(2), 2->3:(3), 3->4@2:(4),
+          |  4->1:(5), 2->4@1:(6);""".stripMargin)
+      tc
+    }
+    def state(tc: graft.graph.TableCatalog) =
+      (tc.vertexTable("t").collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
+        tc.edgesByType("e").select("src", "dst", "rank", "w").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet)
+    val literal, piped = space()
+    Gql.runScript(literal,
+      """INSERT VERTEX t(x) VALUES 2:(20), 5:(5);
+        |INSERT EDGE e(w) VALUES 1->2@1:(20), 3->1@3:(7);""".stripMargin)
+    // the same rows as frames the driver does not hold: the key join
+    def frame(rows: Seq[Seq[Any]], schema: org.apache.spark.sql.types.StructType) =
+      spark.createDataFrame(rows.map(Row.fromSeq).asJava, schema).repartition(2)
+    piped.tagTable("t").insert(frame(Seq(Seq(2L, 20L), Seq(5L, 5L)),
+      piped.tagSchema("t")))
+    piped.edgeTable("e").insert(frame(Seq(Seq(1L, 2L, 1L, 20L),
+      Seq(3L, 1L, 3L, 7L)), piped.edgeSchema("e")))
+    assert(state(literal) == state(piped))
+    Gql.runScript(literal, "DELETE EDGE e 1->2@1, 3->1@3")
+    Gql.runScript(piped,
+      """LOOKUP ON e WHERE e.w > 6 YIELD src(edge) AS s, dst(edge) AS d, rank(edge) AS r
+        || DELETE EDGE e $-.s -> $-.d @ $-.r""".stripMargin)
+    assert(state(literal) == state(piped))
+    Gql.runScript(literal, "DELETE VERTEX 2, 5 WITH EDGE")
+    Gql.runScript(piped,
+      """LOOKUP ON t WHERE t.x >= 5 YIELD id(vertex) AS id
+        || DELETE VERTEX $-.id WITH EDGE""".stripMargin)
+    assert(state(literal) == state(piped))
+    assert(state(literal) == (Set((1L, 1L), (3L, 3L), (4L, 4L)),
+      Set((3L, 4L, 2L, 4L), (4L, 1L, 0L, 5L))))
+  }
+
   test("table space: piped UPDATE/UPSERT drive a key-set join") {
     import org.apache.spark.sql.functions.col
     val root = java.nio.file.Files.createTempDirectory("graft-tu").toString

@@ -7,6 +7,7 @@ class HarnessSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.ui.enabled") == "false")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "2")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000")
     // AQE and skew joins are on by Spark's defaults, not set explicitly
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     assert(spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
