@@ -1,21 +1,24 @@
 #!/usr/bin/env python3
-"""Spark jobs, wall time and files written per request template in a
-traced perfbench run.
+"""Spark jobs, time inside jobs, wall time and files written per
+request template in a traced perfbench run.
 
 A `perfbench/run.py ... --trace 1` run leaves its request log
 (`out/results.jsonl`) and its trace (`out/trace.json`) in a run
 directory under `perfbench/.runs/`. The trace attributes every Spark
 job to a span, and every span to a request. This script counts the jobs
 of each traced request and prints, per template, the number of traced
-requests, the min / mean / max jobs per request, the mean wall ms and,
-where the run samples it (`mutate`), the mean files written.
+requests, the min / mean / max jobs per request, the mean wall ms, the
+mean ms inside the request's jobs (the union of their spans, so
+overlapping jobs count once), the mean share of wall time outside any
+of its jobs and, where the run samples it (`mutate`), the mean files
+written.
 
     scripts/jobs_by_template.py perfbench/.runs/mutate-s7001-t1-1234
     scripts/jobs_by_template.py --diff parent_run change_run
 
 With --diff it prints both runs side by side, one template a line, and
-exits 1 when any template's min or max jobs differs (wall ms and files
-are shown, not compared).
+exits 1 when any template's min or max jobs differs (wall ms, in-job
+ms, outside share and files are shown, not compared).
 """
 import json
 import os
@@ -23,25 +26,39 @@ import sys
 from collections import defaultdict
 
 
+def union_ms(spans):
+    """Length of the union of (start, end) ms intervals."""
+    total, end = 0, None
+    for a, b in sorted(spans):
+        if end is None or a > end:
+            total += b - a
+            end = b
+        elif b > end:
+            total += b - end
+            end = b
+    return total
+
+
 def per_template(run_dir):
-    """{template: [(jobs, wall ms, files written or None) of each traced
-    request]}."""
+    """{template: [(jobs, wall ms, files written or None, ms inside
+    jobs) of each traced request]}."""
     out = os.path.join(run_dir, "out")
     with open(os.path.join(out, "trace.json")) as f:
         trace = json.load(f)
     req_of_span = {s["id"]: s["req"] for s in trace["spans"]}
-    jobs = defaultdict(int)
+    spans = defaultdict(list)
     for j in trace["jobs"]:
         if j["span"] in req_of_span:
-            jobs[req_of_span[j["span"]]] += 1
+            spans[req_of_span[j["span"]]].append((j["start_ms"], j["end_ms"]))
     reqs = defaultdict(list)
     with open(os.path.join(out, "results.jsonl")) as f:
         for line in f:
             r = json.loads(line)
             if r["phase"] == "traced":
-                reqs[r["tpl"]].append((jobs[r["i"]],
+                reqs[r["tpl"]].append((len(spans[r["i"]]),
                                        (r["end"] - r["start"]) / 1e6,
-                                       (r.get("sample") or {}).get("files_written")))
+                                       (r.get("sample") or {}).get("files_written"),
+                                       union_ms(spans[r["i"]])))
     return reqs
 
 
@@ -50,26 +67,32 @@ def mean(xs):
 
 
 def summary(rs):
-    """(min jobs, mean jobs, max jobs, mean wall ms, mean files or None)."""
+    """(min jobs, mean jobs, max jobs, mean wall ms, mean files or None,
+    mean in-job ms, mean share of wall outside jobs)."""
     js = [r[0] for r in rs]
     files = [r[2] for r in rs if r[2] is not None]
+    outside = [max(0.0, 1 - r[3] / r[1]) if r[1] > 0 else 0.0 for r in rs]
     return (min(js), mean(js), max(js), mean([r[1] for r in rs]),
-            mean(files) if files else None)
+            mean(files) if files else None, mean([r[3] for r in rs]),
+            mean(outside))
+
+
+COLS = "%-16s %9s %8s %5s %6s" % ("jobs", "wall_ms", "in_job", "out", "files")
 
 
 def fmt(s):
     if s is None:
-        return "%-16s %9s %6s" % ("-", "-", "-")
-    return "%-16s %9.1f %6s" % ("%d/%.2f/%d" % s[:3], s[3],
-                               "-" if s[4] is None else "%.1f" % s[4])
+        return "%-16s %9s %8s %5s %6s" % ("-", "-", "-", "-", "-")
+    return "%-16s %9.1f %8.1f %5.2f %6s" % (
+        "%d/%.2f/%d" % s[:3], s[3], s[5], s[6],
+        "-" if s[4] is None else "%.1f" % s[4])
 
 
 def main(argv):
     if len(argv) == 3 and argv[0] == "--diff":
         a, b = per_template(argv[1]), per_template(argv[2])
         differ = False
-        print("%-16s %-16s %9s %6s   %-16s %9s %6s" % (
-            "template", "jobs", "wall_ms", "files", "jobs", "wall_ms", "files"))
+        print("%-16s %s   %s" % ("template", COLS, COLS))
         for t in sorted(set(a) | set(b)):
             sa = summary(a[t]) if a.get(t) else None
             sb = summary(b[t]) if b.get(t) else None
@@ -79,7 +102,7 @@ def main(argv):
                                         "" if same else "DIFFERS"))
         return 1 if differ else 0
     if len(argv) == 1:
-        print("%-16s %-6s %-16s %9s %6s" % ("template", "n", "jobs", "wall_ms", "files"))
+        print("%-16s %-6s %s" % ("template", "n", COLS))
         for t, rs in sorted(per_template(argv[0]).items()):
             print("%-16s %-6d %s" % (t, len(rs), fmt(summary(rs))))
         return 0

@@ -1,6 +1,7 @@
 package graft.algo
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** Neighbor-message delivery for the iterative algorithms: `send`
@@ -32,7 +33,15 @@ import org.apache.spark.sql.functions._
   * Message MULTISETS are identical across implementations, so
   * algorithms whose update rules are order-independent (min-label WCC,
   * argmin/argmax picks, exact-dyadic sums) produce bit-identical
-  * results on either. */
+  * results on either.
+  *
+  * A loop whose active set is small reads neighbors instead of
+  * joining: [[neighbors]] collects the out-edges of a key set the
+  * driver holds, one `src IN (keys)` filter on the UNCACHED edge side
+  * in one Spark job (GetNeighborsProcessor.cpp:32's key-prefixed scan).
+  * On the store the filter prunes bucket files and, the files being
+  * sorted by src, parquet row groups; a loop that never leaves the
+  * driver never builds the cached side either (persist is lazy). */
 sealed trait Adjacency {
   /** Deliver `payload` columns (evaluated against the joined
     * state-row × edge-row) to every out-neighbor of state("vid").
@@ -45,6 +54,18 @@ sealed trait Adjacency {
   def outDegrees: DataFrame = bySrc(Seq(count(lit(1)).as("od")))
   /** Release any resources pinned for the loop (cache blocks). */
   def release(): Unit
+  /** The oriented (src, dst, keep...) edges as written, never the
+    * cached copy: the source of [[neighbors]]. */
+  protected def uncached: DataFrame
+  /** Type of the oriented view's vertex ids. */
+  private[graft] def vidType: org.apache.spark.sql.types.DataType =
+    uncached.schema("src").dataType
+  /** The (src, dst, cols...) edge rows whose src is one of `keys`, in
+    * one Spark job; None when more than `limit` rows match. `cols` may
+    * reference `keep` columns. */
+  private[graft] def neighbors(keys: Iterable[Any], cols: Seq[Column],
+                limit: Int): Option[Array[Row]] =
+    Adjacency.neighbors(uncached, keys, cols, limit)
 }
 
 object Adjacency {
@@ -88,6 +109,50 @@ object Adjacency {
         expanded <= storage * CacheBudgetFraction
     }
 
+  /** The bound of the driver-held loops (`PathFinder`'s untyped
+    * forward walk, `GraphAlgos.sssp`): while a loop's frontier (or
+    * reached set) and the neighbor rows it has read each stay at or
+    * under this many rows, the loop runs on the driver with one
+    * [[neighbors]] read per hop; above it the loop restarts from its
+    * seeds on the distributed join loop. The crossover against the
+    * distributed loop is not measured yet (ROADMAP direction B): this
+    * value keeps the driver's copy to a few MB and is far above the
+    * active sets measured so far (SSSP's state in `q_algo_sssp` holds
+    * at most 107 rows at sf0.1). */
+  val DriverRows = 10000
+
+  /** The key-filtered neighbor read: `edges` rows whose src is one of
+    * `keys`, projected to (src, dst, cols...). No join and no
+    * exchange; the IN list becomes one InSet (PlanSpec pins the plan). */
+  private[graft] def neighborRead(edges: DataFrame, keys: Iterable[Any],
+                                  cols: Seq[Column]): DataFrame =
+    edges.filter(col("src").isin(keys.toSeq: _*))
+      .select(col("src") +: col("dst") +: cols: _*)
+
+  /** [[neighborRead]] collected: None when more than `limit` rows
+    * match. */
+  private[graft] def neighbors(edges: DataFrame, keys: Iterable[Any],
+                               cols: Seq[Column],
+                               limit: Int): Option[Array[Row]] =
+    if (keys.isEmpty) Some(Array.empty)
+    else collectUpTo(neighborRead(edges, keys, cols), limit)
+
+  /** `df`'s rows when there are at most `limit` of them, else None, in
+    * at most one Spark job: a frame the driver already holds (a local
+    * relation) is read without one, any other returns at most
+    * `limit + 1` rows per partition, so an oversized result never
+    * reaches the driver whole. */
+  private[graft] def collectUpTo(df: DataFrame,
+                                 limit: Int): Option[Array[Row]] = {
+    val rows = df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => df.collect()
+      case _ =>
+        val n = limit + 1
+        df.rdd.mapPartitions(_.take(n)).collect()
+    }
+    if (rows.length > limit) None else Some(rows)
+  }
+
   /** `keep` names that would collide with the frame's own (src, dst)
     * columns or the state's join key (vid) surface as
     * AnalysisExceptions far from the misuse site (a duplicated column
@@ -111,7 +176,9 @@ final class FrameAdjacency(oriented: DataFrame,
   // edge-side Sort elides — the sort is paid once at cache build
   // instead of once per iteration (guide §2.4: establish the layout
   // one operation needs once and reuse it).
-  private val e = oriented.select(("src" +: "dst" +: keep).map(col): _*)
+  protected val uncached: DataFrame =
+    oriented.select(("src" +: "dst" +: keep).map(col): _*)
+  private val e = uncached
     .repartition(col("src"))
     .sortWithinPartitions("src")
     .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -146,8 +213,9 @@ final class StoredAdjacency(sides: Seq[DataFrame],
                             cacheSides: Boolean = true) extends Adjacency {
   require(sides.nonEmpty, "StoredAdjacency needs at least one side")
   Adjacency.checkKeep(keep)
-  private val narrow = sides.map { s =>
-    val n = s.select(("src" +: "dst" +: keep).map(col): _*)
+  private val plain = sides.map(_.select(("src" +: "dst" +: keep).map(col): _*))
+  protected val uncached: DataFrame = plain.reduce(_ unionByName _)
+  private val narrow = plain.map { n =>
     if (cacheSides)
       // cached SORTED within the bucketed layout: a multi-file bucket
       // loses its written sortBy order on read, so each round's

@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.Ckpt
 import graft.Ckpt.MatOps
@@ -1199,14 +1199,89 @@ object GraphAlgos {
     * a stored edge column, every relaxation join edge-side
     * Exchange-free). min-aggregation is multiset-determined and path
     * sums associate identically, so results match the frame path
-    * bit-for-bit. */
+    * bit-for-bit.
+    *
+    * While the reached set and the edge rows read stay within
+    * [[Adjacency.DriverRows]], the rounds run on the driver
+    * ([[ssspOnDriver]]): one [[Adjacency.neighbors]] read per round,
+    * of the vertices reached last round only, and the same
+    * min-relaxation in driver memory. Above the bound the loop restarts
+    * on the distributed rounds. */
   def sssp(spark: org.apache.spark.sql.SparkSession, adj: Adjacency,
            source: String, iters: Int,
            w: org.apache.spark.sql.Column): DataFrame =
-    iterate(spark.range(1).select(lit(source).as("vid"), lit(0.0).as("dist"))
-        .mat(), iters) { (dist, _) =>
-      val ext = adj.send(dist, Seq((col("dist") + w).as("dist")))
-      dist.unionByName(ext)
-        .groupBy("vid").agg(min(col("dist")).as("dist"))
-    }._1
+    sssp(spark, adj, source, iters, w, Adjacency.DriverRows)
+
+  /** [[sssp]] with the driver loop's bound as a parameter (0 forces the
+    * distributed rounds). */
+  private[graft] def sssp(spark: org.apache.spark.sql.SparkSession,
+                          adj: Adjacency, source: String, iters: Int,
+                          w: org.apache.spark.sql.Column,
+                          driverRows: Int): DataFrame =
+    ssspOnDriver(spark, adj, source, iters, w, driverRows).getOrElse(
+      iterate(spark.range(1).select(lit(source).as("vid"), lit(0.0).as("dist"))
+          .mat(), iters) { (dist, _) =>
+        val ext = adj.send(dist, Seq((col("dist") + w).as("dist")))
+        dist.unionByName(ext)
+          .groupBy("vid").agg(min(col("dist")).as("dist"))
+      }._1)
+
+  /** The distributed rounds of [[sssp]] replayed on the driver: each
+    * round reads the out-edges of the vertices first reached in the
+    * previous round (earlier reads stay in driver memory, so every
+    * round relaxes over the whole reached set, as the join does), and
+    * a round that changes nothing ends the loop, since every later
+    * round would repeat it. Spark's `min` is replayed exactly: NULL
+    * sums are skipped unless nothing else arrives, NaN orders above
+    * every number, and a value that compares equal (-0.0 against 0.0)
+    * keeps the earlier one. None, with no rows returned, when the
+    * vertex ids are not strings or the reached set or the rows read
+    * exceed `bound`. */
+  private def ssspOnDriver(spark: org.apache.spark.sql.SparkSession,
+                           adj: Adjacency, source: String, iters: Int,
+                           w: org.apache.spark.sql.Column,
+                           bound: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.types._
+    if (bound < 1 || adj.vidType != StringType) return None
+    type D = java.lang.Double
+    // Spark's min: a NULL never wins, NaN is the greatest double, ties
+    // keep the value already held
+    def least(a: D, b: D): D =
+      if (b == null) a
+      else if (a == null) b
+      else if (a.doubleValue == b.doubleValue ||
+               java.lang.Double.compare(a, b) <= 0) a
+      else b
+    val out = scala.collection.mutable.HashMap.empty[Any, Vector[(Any, D)]]
+    var read = 0
+    var dist = Map[Any, D](source -> java.lang.Double.valueOf(0.0))
+    var fresh: Iterable[Any] = Seq(source)
+    var round = 0
+    var changed = true
+    while (round < iters && changed) {
+      if (fresh.nonEmpty) {
+        val rows = adj.neighbors(fresh, Seq(w.cast(DoubleType)), bound - read)
+          .getOrElse(return None)
+        read += rows.length
+        fresh.foreach(out(_) = Vector.empty)
+        rows.foreach { r =>
+          out(r.get(0)) :+= (r.get(1) -> r.getAs[D](2))
+        }
+      }
+      var next = dist
+      for ((u, du) <- dist; (v, wv) <- out(u)) {
+        val sum: D = if (du == null || wv == null) null else du + wv
+        next = next.updated(v, next.get(v).fold(sum)(least(_, sum)))
+      }
+      if (next.size > bound) return None
+      changed = next != dist
+      fresh = next.keySet -- dist.keySet
+      dist = next
+      round += 1
+    }
+    val schema = StructType(Seq(StructField("vid", StringType),
+      StructField("dist", DoubleType)))
+    Some(spark.createDataFrame(java.util.Arrays.asList(
+      dist.toSeq.map { case (v, d) => Row(v, d) }: _*), schema))
+  }
 }

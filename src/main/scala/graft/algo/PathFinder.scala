@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -40,6 +40,15 @@ import graft.Ckpt.MatOps
   * [[BidiMinSteps]] or more takes the bidirectional assembly over
   * [[bidiDrive]] instead — for the typed payload only on disjoint
   * endpoint sets (a self-pair cycle has no meet-in-the-middle split).
+  *
+  * Small walks: the untyped forward walk (SHORTEST below
+  * [[BidiMinSteps]], NOLOOP) runs on the driver while its seeds,
+  * targets, each level's frontier and the neighbor rows read stay within
+  * [[Adjacency.DriverRows]]: one key-filtered [[Adjacency.neighbors]]
+  * read per level, no checkpoint, no join ([[forwardOnDriver]]). A walk
+  * that crosses the bound restarts from its seeds on the distributed
+  * loop below; the typed walk and the bidirectional search always take
+  * the distributed route.
   *
   * Scale: each level materializes + truncates lineage (localCheckpoint),
   * counting its rows on the same job (`Ckpt.counted`), and prunes
@@ -291,7 +300,9 @@ object PathFinder {
     * one row per path. */
   private[graft] def walk(srcs: DataFrame, dsts: DataFrame,
                           edges: DataFrame, maxSteps: Int, mode: String,
-                          dir: Direction, typed: Boolean): DataFrame = {
+                          dir: Direction, typed: Boolean,
+                          driverRows: Int = Adjacency.DriverRows)
+      : DataFrame = {
     require(typed || mode != "all", "trail mode needs the typed payload")
     val e =
       if (typed) stepEdges(edges, dir)
@@ -305,7 +316,9 @@ object PathFinder {
         return bidi(srcs, dsts, e, maxSteps, typed,
           s.count() * d.count() - overlap)
     }
-    forward(srcs, dsts, e, maxSteps, mode, typed)
+    (if (typed) None
+     else forwardOnDriver(srcs, dsts, e, maxSteps, mode, driverRows))
+      .getOrElse(forward(srcs, dsts, e, maxSteps, mode, typed))
   }
 
   /** Typed walk edges: traversal (src, dst) plus the stored identity
@@ -419,6 +432,80 @@ object PathFinder {
     Ckpt.free(dstSet)
     Traverse.releaseEdges(e, maxSteps) // hits are checkpointed
     if (found == null) hits(seed0, 0).limit(0) else found
+  }
+
+  /** The untyped [[forward]] loop held on the driver, one
+    * [[Adjacency.neighbors]] read per level (of the frontier vids not
+    * read at an earlier level) over the uncached oriented edges `e`:
+    * the frontier, the per-origin visited set and the hits are driver
+    * collections, the reference's graphd-side BFS
+    * (BFSShortestPathExecutor.cpp:12). Rows equal the distributed
+    * loop's, multiplicity included: parallel edges and repeated seeds
+    * repeat paths there too. A `shortest` walk also stops once every
+    * (origin, target) pair is visited, since no later level can hit.
+    * None, with no rows returned, when the endpoint and edge vid types
+    * differ (the join would coerce them), or when the seeds, the
+    * targets, a level's frontier or the neighbor rows read exceed
+    * `bound`: the caller then restarts on the distributed loop. */
+  private def forwardOnDriver(srcs: DataFrame, dsts: DataFrame,
+                              e: DataFrame, maxSteps: Int, mode: String,
+                              bound: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.types._
+    val vt = e.schema("src").dataType
+    val atomic = Seq[DataType](StringType, LongType, IntegerType)
+    if (bound < 1 || !atomic.contains(vt) ||
+        Seq(e.schema("dst"), srcs.schema("vid"), dsts.schema("vid"))
+          .exists(_.dataType != vt)) return None
+    def vids(df: DataFrame): Option[Seq[Any]] =
+      Adjacency.collectUpTo(df.select("vid"), bound).map(_.map(_.get(0)).toSeq)
+    val seeds = vids(srcs).getOrElse(return None)
+    val targets = vids(dsts).getOrElse(return None).filter(_ != null).toSet
+    val shortest = mode == "shortest"
+    val out = scala.collection.mutable.HashMap.empty[Any, Vector[Any]]
+    var read = 0
+    // a path is its vids; its origin is the head, its vid the last
+    var frontier: Seq[Vector[Any]] = seeds.map(Vector(_))
+    val visited = scala.collection.mutable.HashSet.empty[(Any, Any)]
+    // (origin, target) pairs not yet visited: a shortest walk ends at 0
+    var open = 0L
+    if (shortest) {
+      seeds.foreach(o => visited += (o -> o))
+      open = seeds.distinct.filter(_ != null)
+        .map(o => (targets - o).size.toLong).sum
+    }
+    val found = Vector.newBuilder[Row]
+    var step = 1
+    while (step <= maxSteps && frontier.nonEmpty && !(shortest && open == 0)) {
+      val fresh = frontier.iterator.map(_.last)
+        .filter(v => v != null && !out.contains(v)).toSet
+      if (fresh.nonEmpty) {
+        val rows = Adjacency.neighbors(e, fresh, Nil, bound - read)
+          .getOrElse(return None)
+        read += rows.length
+        fresh.foreach(out(_) = Vector.empty)
+        // a NULL dst never joins a level and never meets a target
+        rows.foreach(r => if (r.get(1) != null) out(r.get(0)) :+= r.get(1))
+      }
+      // built lazily: an oversized level stops at bound + 1 paths
+      val next = frontier.iterator.flatMap { p =>
+        out.getOrElse(p.last, Vector.empty).iterator.filter { d =>
+          if (shortest) !visited((p.head, d)) else !p.contains(d)
+        }.map(p :+ _)
+      }.take(bound + 1).toVector
+      if (next.size > bound) return None
+      next.foreach { p =>
+        if (targets(p.last)) found += Row(p.head, p.last, p, step)
+        if (shortest && visited.add(p.head -> p.last) && targets(p.last))
+          open -= 1
+      }
+      frontier = next
+      step += 1
+    }
+    val schema = StructType(Seq(StructField("src", vt),
+      StructField("dst", vt), StructField("vids", ArrayType(vt)),
+      StructField("hops", IntegerType, nullable = false)))
+    Some(e.sparkSession.createDataFrame(
+      java.util.Arrays.asList(found.result(): _*), schema))
   }
 
   /** The shortest-path walk as an adaptive meet-in-the-middle search

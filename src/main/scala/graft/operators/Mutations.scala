@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -184,14 +185,29 @@ object Mutations {
       * and the statement's WHEN (`whenC`) hold — so an upserted-in row
       * sees its defaults on the right-hand side (`SET age = age + 1`
       * over a fresh row reads the default), exactly the reference's
-      * UpdateExecutor insertable path. The merge is an anti join on the
-      * (small) seed key set — never a collect. */
+      * UpdateExecutor insertable path. `seed` is the driver-held key
+      * set. A one-file table is the write job alone: every seed row
+      * joins the table's rows in its one partition, and a seed row whose
+      * key a table row holds drops there (a per-key rank, no shuffle).
+      * A larger table anti-joins the seed against its key column. */
     private def upsertWith(seed: DataFrame, keyCond: Column,
                            whenC: Option[Column],
                            assignments: Seq[(String, Column)]): Unit = {
       val cur = if (exists) read else seed.limit(0)
-      val fresh = seed.join(cur.select(keys.map(col): _*), keys, "left_anti")
-      val (merged, cond) = seededWhen(cur, fresh, whenC)
+      val (merged, cond) =
+        if (fileCount(cur) > 1)
+          seededWhen(cur, seed.join(cur.select(keys.map(col): _*), keys,
+            "left_anti"), whenC)
+        else {
+          // one partition satisfies the rank's clustering: no Exchange
+          val both = cur.withColumn(Seeded, lit(false))
+            .unionByName(seed.withColumn(Seeded, lit(true))).coalesce(1)
+          val rank = row_number().over(
+            Window.partitionBy(keys.map(col): _*).orderBy(col(Seeded)))
+          (both.withColumn("__rank", rank)
+            .filter(!col(Seeded) || col("__rank") === 1).drop("__rank"),
+            col(Seeded) || whenC.getOrElse(lit(true)))
+        }
       write(assign(merged, keyCond && cond, assignments).drop(Seeded))
     }
 

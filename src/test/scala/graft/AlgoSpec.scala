@@ -68,6 +68,74 @@ class AlgoSpec extends SparkSpec {
     assert(!out.contains("zzz"))
   }
 
+  test("sssp on the driver: same rows as the distributed rounds, every posture and weight") {
+    import spark.implicits._
+    import graft.algo.{Adjacency, FrameAdjacency, StoredAdjacency}
+    // NaN, NULL, negative and -0.0 weights; a self-loop, parallel edges
+    // and a cycle; z unreachable
+    val nan = Double.NaN
+    val fixed: Seq[(String, String, Option[Double])] = Seq(
+      ("v0", "v1", Some(2.0)), ("v0", "v1", Some(-1.0)), ("v1", "v2", Some(nan)),
+      ("v1", "v2", None), ("v2", "v3", Some(-0.0)), ("v3", "v0", Some(-3.0)),
+      ("v3", "v3", Some(0.5)), ("v0", "v4", None), ("v4", "v5", Some(1.0)),
+      ("v2", "v6", Some(nan)), ("v6", "v5", Some(-0.0)), ("z", "v0", Some(1.0)))
+    // the generated shapes, one weight in three replaced by NaN or NULL
+    val generated = AlgoSpec.sample.map(_.edges.zipWithIndex.map {
+      case ((a, b, _, w), i) =>
+        (a, b, if (i % 3 == 1) None else if (i % 3 == 2) Some(nan) else Some(-w))
+    })
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0),
+        Option(r.get(1)).map(d => java.lang.Double.doubleToLongBits(
+          d.asInstanceOf[Double])))).sorted.toSeq
+    (fixed +: generated).foreach { es =>
+      val frame = es.toDF("src", "dst", "w")
+      Seq[(String, () => Adjacency)](
+        "frame" -> (() => new FrameAdjacency(frame, keep = Seq("w"))),
+        "stored" -> (() => new StoredAdjacency(Seq(frame), Seq("w"), cacheSides = false)),
+        "stored+cache" -> (() => new StoredAdjacency(Seq(frame), Seq("w")))
+      ).foreach { case (posture, mk) =>
+        Seq(0, 1, 3, 6).foreach { iters =>
+          def run(bound: Int) = {
+            val adj = mk()
+            try jobNamesOf(rows(GraphAlgos.sssp(spark, adj, "v0", iters,
+              col("w"), bound)))
+            finally adj.release()
+          }
+          val (dist, _) = run(0)
+          val (local, jobs) = run(Adjacency.DriverRows)
+          val clue = s"$posture, $iters rounds, ${es.mkString(" ")}"
+          assert(local == dist, s"$clue: driver $local != distributed $dist")
+          assert(jobs.size <= iters && jobs.forall(_.contains("Adjacency.scala")),
+            s"$clue: $jobs")
+          // a reached set that crosses the bound mid-loop restarts on
+          // the distributed rounds
+          assert(run(2)._1 == dist, s"$clue: bound 2")
+        }
+      }
+    }
+  }
+
+  test("sssp over the store: one neighbor read per round") {
+    val dir = "/root/testdata/sf0.001"
+    assumeFiles(dir)
+    val s2 = spark.newSession()
+    graft.sources.GraphStore.enableManaged(s2)
+    val g = graft.graph.GraphModel(s2, dir)
+    val w = (col("rank") + 1).cast("double")
+    def run(bound: Int) = {
+      val adj = g.adjacencyOut(keep = Seq("rank"))
+      try jobNamesOf(GraphAlgos.sssp(s2, adj, "c:1", 4, w, bound)
+        .collect().map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq)
+      finally adj.release()
+    }
+    val (dist, _) = run(0) // also builds the store
+    val (local, jobs) = run(graft.algo.Adjacency.DriverRows)
+    assert(local == dist && dist.size > 1)
+    assert(jobs.nonEmpty && jobs.size <= 4 &&
+      jobs.forall(_.contains("Adjacency.scala")), s"$jobs")
+  }
+
   test("kCore peels the chain and keeps the clique") {
     import spark.implicits._
     // K4 (every vertex degree 3) + a chain e-f-g that must peel away

@@ -109,7 +109,9 @@ class CkptSpec extends SparkSpec {
       edges = Map("like" -> likes))
     Seq(
       """GO 2 STEPS FROM "a" OVER like YIELD like._dst AS d""",
-      """FIND SHORTEST PATH FROM "a" TO "d" OVER like UPTO 3 STEPS""",
+      // YIELD path: the typed walk keeps the checkpointed level loop
+      // (an untyped walk this small runs on the driver, with no job)
+      """FIND SHORTEST PATH FROM "a" TO "d" OVER like UPTO 3 STEPS YIELD path AS p""",
       """MATCH (v:node)-[:like*1..2]->(w) WHERE id(v) == "a" RETURN id(w) AS w"""
     ).foreach { q =>
       val (rows, jobs) = jobNamesOf(graft.nql.Gql.run(cat, q).collect())

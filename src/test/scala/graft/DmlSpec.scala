@@ -267,13 +267,16 @@ class DmlSpec extends SparkSpec {
     assert(jobs("""INSERT VERTEX t(x) VALUES "d":(4), "a":(5)""").size == 1)
     assert(jobs("""INSERT EDGE e(w) VALUES "a"->"c":(4), "b"->"c"@1:(5)""").size == 1)
     assert(jobs("""UPDATE VERTEX ON t "a", "c" SET x = x + 10""").size == 1)
+    // an UPSERT seeds its missing key ("e", "c"->"d") on the same job
+    assert(jobs("""UPSERT VERTEX ON t "c", "e" SET x = 7""").size == 1)
+    assert(jobs("""UPSERT EDGE ON e "a"->"c", "c"->"d" SET w = 9""").size == 1)
     // one rewrite of the tag table, one of the edge table
     assert(jobs("""DELETE VERTEX "b" WITH EDGE""").size == 2)
     assert(tc.vertexTable("t").collect().map(r => r.getString(0) -> r.getLong(1))
-      .toMap == Map("a" -> 15L, "c" -> 13L, "d" -> 4L))
+      .toMap == Map("a" -> 15L, "c" -> 7L, "d" -> 4L, "e" -> 7L))
     assert(tc.edgesByType("e").select("src", "dst", "rank", "w").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      .toSet == Set(("c", "a", 0L, 3L), ("a", "c", 0L, 4L)))
+      .toSet == Set(("c", "a", 0L, 3L), ("a", "c", 0L, 9L), ("c", "d", 0L, 9L)))
     // a small table is one part file, and no _SUCCESS marker is written
     Seq("tag_t", "edge_e").foreach { t =>
       val names = new java.io.File(s"$root/$t").list().toSeq

@@ -1,6 +1,7 @@
 package graft
 
-import graft.algo.PathFinder
+import graft.algo.{Adjacency, PathFinder}
+import graft.traverse.Traverse
 
 /** Endpoint path semantics on:
   *   a -> b -> d
@@ -9,6 +10,7 @@ import graft.algo.PathFinder
   */
 class PathFinderSpec extends SparkSpec {
   import spark.implicits._
+  import scala.jdk.CollectionConverters._
 
   private def edges = Seq(
     ("a", "b"), ("b", "d"), ("a", "c"), ("c", "d"),
@@ -208,5 +210,101 @@ class PathFinderSpec extends SparkSpec {
         edges, 2)
       .select("path").as[String].collect().toSet
     assert(r == Set("a->b->d", "a->c->d"))
+  }
+
+  // ---- the driver-held forward walk against the distributed loop ----
+
+  /** The untyped walk's rows (src, dst, path, hops), sorted with their
+    * multiplicity, under a driver-loop bound (0: the distributed loop
+    * only), and the jobs it started. */
+  private def walked(srcs: Seq[String], dsts: Seq[String],
+                     e: org.apache.spark.sql.DataFrame, maxSteps: Int,
+                     mode: String, dir: Traverse.Direction, bound: Int)
+      : (Seq[(String, String, String, Int)], Seq[String]) =
+    jobNamesOf(PathFinder.vidPaths(PathFinder.walk(srcs.toDF("vid"),
+        dsts.toDF("vid"), e, maxSteps, mode, dir, typed = false,
+        driverRows = bound))
+      .select("src", "dst", "path", "hops")
+      .as[(String, String, String, Int)].collect().sorted.toSeq)
+
+  /** Parallel a -> b edges, a self-loop on b, the cycle a -> b -> c -> a,
+    * a tail c -> d and an isolated z. */
+  private def knotted = Seq(("a", "b"), ("a", "b"), ("b", "b"), ("b", "c"),
+    ("c", "a"), ("c", "d"), ("d", "e"), ("a", "e")).toDF("src", "dst")
+
+  test("driver walk: same rows as the distributed loop, every mode, direction and cap") {
+    val cases = for {
+      mode <- Seq("shortest", "noloop")
+      dir <- Seq(Traverse.Out, Traverse.In, Traverse.Both)
+      cap <- Seq(1, 3, 5)
+      (srcs, dsts) <- Seq(
+        (Seq("a"), Seq("d", "e")),
+        // src == dst, an unreachable target and a target that is a src
+        (Seq("a", "d"), Seq("a", "d", "z")),
+        // a repeated seed repeats its paths on both loops
+        (Seq("b", "b"), Seq("a", "e")))
+    } yield (mode, dir, cap, srcs, dsts)
+    cases.foreach { case (mode, dir, cap, srcs, dsts) =>
+      val (local, jobs) = walked(srcs, dsts, knotted, cap, mode, dir,
+        Adjacency.DriverRows)
+      val (dist, _) = walked(srcs, dsts, knotted, cap, mode, dir, 0)
+      val clue = s"$mode $dir cap $cap $srcs -> $dsts"
+      assert(local == dist, s"$clue: driver $local != distributed $dist")
+      // one neighbor read per level at most, nothing else
+      assert(jobs.size <= cap && jobs.forall(_.contains("Adjacency.scala")),
+        s"$clue: $jobs")
+    }
+    // the parallel edges double the paths through a -> b
+    val (twice, _) = walked(Seq("a"), Seq("c"), knotted, 3, "shortest",
+      Traverse.Out, Adjacency.DriverRows)
+    assert(twice == Seq.fill(2)(("a", "c", "a->b->c", 2)), s"$twice")
+  }
+
+  test("driver walk: a frontier that crosses the bound restarts on the distributed loop") {
+    // a binary tree: level k holds 2^k paths
+    val tree = (1 until 32).map(i => (s"t$i", s"t${2 * i}")) ++
+      (1 until 32).map(i => (s"t$i", s"t${2 * i + 1}"))
+    val e = tree.toDF("src", "dst")
+    val leaves = (32 until 64).map(i => s"t$i")
+    val (dist, _) = walked(Seq("t1"), leaves, e, 5, "noloop", Traverse.Out, 0)
+    assert(dist.size == 32, s"${dist.size}")
+    Seq(Adjacency.DriverRows, 8).foreach { bound =>
+      val (rows, jobs) = walked(Seq("t1"), leaves, e, 5, "noloop",
+        Traverse.Out, bound)
+      assert(rows == dist, s"bound $bound")
+      // under bound 8 the level of 16 paths stops the driver loop: the
+      // distributed loop's checkpoints run after the neighbor reads
+      val onDriver = jobs.forall(_.contains("Adjacency.scala"))
+      assert(onDriver == (bound == Adjacency.DriverRows), s"bound $bound: $jobs")
+    }
+  }
+
+  test("driver walk: FIND SHORTEST PATH over the store starts one job per level") {
+    val dir = "/root/testdata/sf0.001"
+    assumeFiles(dir)
+    val s2 = spark.newSession()
+    graft.sources.GraphStore.enableManaged(s2)
+    val g = graft.graph.GraphModel(s2, dir)
+    val q = """FIND SHORTEST PATH FROM "c:1", "c:2" TO "r:0", "r:1" UPTO 4 STEPS"""
+    val warm = graft.nql.Gql.run(g, q).collect() // builds the store
+    val (rows, jobs) = jobNamesOf(graft.nql.Gql.run(g, q).collect())
+    assert(rows.map(_.toSeq).sortBy(_.mkString).toSeq ==
+      warm.map(_.toSeq).sortBy(_.mkString).toSeq)
+    // literal endpoints are read without a job: only the neighbor reads
+    assert(jobs.nonEmpty && jobs.size <= 4 &&
+      jobs.forall(_.contains("Adjacency.scala")), s"$jobs")
+    // and the distributed loop finds the same paths
+    val e = g.allEdges
+    def ends(vs: String*) = s2.createDataFrame(
+      vs.map(org.apache.spark.sql.Row(_)).asJava,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("vid",
+          org.apache.spark.sql.types.StringType))))
+    def paths(bound: Int) = PathFinder.vidPaths(PathFinder.walk(
+        ends("c:1", "c:2"), ends("r:0", "r:1"), e, 4, "shortest",
+        Traverse.Out, typed = false, driverRows = bound))
+      .collect().map(_.toSeq).sortBy(_.mkString).toSeq
+    assert(paths(Adjacency.DriverRows) == paths(0))
+    assert(paths(0).nonEmpty)
   }
 }

@@ -477,6 +477,45 @@ class PlanSpec extends SparkSpec {
     assert(a == b, "stored WCC diverges from flat WCC")
   }
 
+  test("neighbor read: a src InSet on the bucketed edge scan, no Join, no Exchange") {
+    have()
+    import graft.sources.GraphStore
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val s2 = spark.newSession()
+    GraphStore.enableManaged(s2)
+    val g = graft.graph.GraphModel(s2, dir)
+    val e = GraphStore.outEdges(s2, g.store.get).select("src", "dst", "rank")
+    val keys = (1 to 20).map(i => s"c:$i")
+    val read = graft.algo.Adjacency.neighborRead(e, keys, Seq(col("rank")))
+    val plan = read.queryExecution.executedPlan
+    val scans = plan.collect { case f: FileSourceScanExec => f }
+    assert(scans.size == 1, plan.toString)
+    val scan = scans.head
+    val onSrc = scan.dataFilters.exists {
+      case In(a, _) => a.references.toSeq.map(_.name) == Seq("src")
+      case InSet(a, _) => a.references.toSeq.map(_.name) == Seq("src")
+      case _ => false
+    }
+    assert(onSrc, s"no src In/InSet on the scan: ${scan.dataFilters}")
+    // one key selects one bucket's files, though the scan is not a
+    // bucketed scan (no operator above it needs the layout)
+    val one = graft.algo.Adjacency.neighborRead(e, Seq("c:1"), Nil)
+      .queryExecution.executedPlan
+      .collect { case f: FileSourceScanExec => f.optionalBucketSet }
+    assert(one.size == 1 && one.head.exists(_.cardinality() == 1), s"$one")
+    assert(plan.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.isEmpty,
+      plan.toString)
+    assert(plan.collect {
+      case x: org.apache.spark.sql.execution.exchange.Exchange => x }.isEmpty,
+      plan.toString)
+    // the scan reads the three projected columns only
+    assert(scan.requiredSchema.fieldNames.toSet == Set("src", "dst", "rank"),
+      scan.requiredSchema.toString)
+    assert(read.collect().forall(r => keys.contains(r.getString(0))))
+  }
+
   test("stored und adjacency: undirected algorithm sends never exchange the edge side") {
     have()
     import graft.sources.GraphStore
