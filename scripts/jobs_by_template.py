@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Spark jobs, time inside jobs, wall time and files written per
-request template in a traced perfbench run.
+request template in a traced perfbench run, computed with the
+harness's own per-request metrics (`perfbench/harness/metrics.py`).
 
 A `perfbench/run.py ... --trace 1` run leaves its request log
 (`out/results.jsonl`) and its trace (`out/trace.json`) in a run
@@ -9,9 +10,9 @@ job to a span, and every span to a request. This script counts the jobs
 of each traced request and prints, per template, the number of traced
 requests, the min / mean / max jobs per request, the mean wall ms, the
 mean ms inside the request's jobs (the union of their spans, so
-overlapping jobs count once), the mean share of wall time outside any
-of its jobs and, where the run samples it (`mutate`), the mean files
-written.
+overlapping jobs count once), the share of the template's wall time
+outside any of its jobs and, where the run samples it (`mutate`), the
+mean files written.
 
     scripts/jobs_by_template.py perfbench/.runs/mutate-s7001-t1-1234
     scripts/jobs_by_template.py --diff parent_run change_run
@@ -25,40 +26,28 @@ import os
 import sys
 from collections import defaultdict
 
-
-def union_ms(spans):
-    """Length of the union of (start, end) ms intervals."""
-    total, end = 0, None
-    for a, b in sorted(spans):
-        if end is None or a > end:
-            total += b - a
-            end = b
-        elif b > end:
-            total += b - end
-            end = b
-    return total
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                os.pardir, "perfbench"))
+from harness.metrics import layer_totals  # noqa: E402
 
 
 def per_template(run_dir):
     """{template: [(jobs, wall ms, files written or None, ms inside
-    jobs) of each traced request]}."""
+    jobs) of each traced request]}. Jobs, wall and in-job time are the
+    harness's own per-request figures (`layer_totals`: job spans clipped
+    to the request, unfinished jobs left out of the in-job time)."""
     out = os.path.join(run_dir, "out")
     with open(os.path.join(out, "trace.json")) as f:
         trace = json.load(f)
-    req_of_span = {s["id"]: s["req"] for s in trace["spans"]}
-    spans = defaultdict(list)
-    for j in trace["jobs"]:
-        if j["span"] in req_of_span:
-            spans[req_of_span[j["span"]]].append((j["start_ms"], j["end_ms"]))
-    reqs = defaultdict(list)
     with open(os.path.join(out, "results.jsonl")) as f:
-        for line in f:
-            r = json.loads(line)
-            if r["phase"] == "traced":
-                reqs[r["tpl"]].append((len(spans[r["i"]]),
-                                       (r["end"] - r["start"]) / 1e6,
-                                       (r.get("sample") or {}).get("files_written"),
-                                       union_ms(spans[r["i"]])))
+        recs = [r for r in map(json.loads, f) if r["phase"] == "traced"]
+    per = layer_totals(recs, trace, {})
+    reqs = defaultdict(list)
+    for r in recs:
+        d = per[r["i"]]
+        reqs[r["tpl"]].append((int(d["spark.jobs"]), d["_wall_s"] * 1e3,
+                               (r.get("sample") or {}).get("files_written"),
+                               d["spark.in_job_s"] * 1e3))
     return reqs
 
 
@@ -68,13 +57,16 @@ def mean(xs):
 
 def summary(rs):
     """(min jobs, mean jobs, max jobs, mean wall ms, mean files or None,
-    mean in-job ms, mean share of wall outside jobs)."""
+    mean in-job ms, share of wall outside jobs). The share is the
+    harness's `outside_job_frac` over the template's requests: one minus
+    their in-job time over their wall time."""
     js = [r[0] for r in rs]
     files = [r[2] for r in rs if r[2] is not None]
-    outside = [max(0.0, 1 - r[3] / r[1]) if r[1] > 0 else 0.0 for r in rs]
+    wall = sum(r[1] for r in rs)
+    outside = 1 - sum(r[3] for r in rs) / wall if wall else 0.0
     return (min(js), mean(js), max(js), mean([r[1] for r in rs]),
             mean(files) if files else None, mean([r[3] for r in rs]),
-            mean(outside))
+            outside)
 
 
 COLS = "%-16s %9s %8s %5s %6s" % ("jobs", "wall_ms", "in_job", "out", "files")

@@ -1,8 +1,11 @@
 package graft.algo
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Neighbor-message delivery for the iterative algorithms: `send`
   * delivers each state row's payload along every edge u→v of the
@@ -114,19 +117,35 @@ object Adjacency {
     * reached set) and the neighbor rows it has read each stay at or
     * under this many rows, the loop runs on the driver with one
     * [[neighbors]] read per hop; above it the loop restarts from its
-    * seeds on the distributed join loop. The crossover against the
-    * distributed loop is not measured yet (ROADMAP direction B): this
-    * value keeps the driver's copy to a few MB and is far above the
-    * active sets measured so far (SSSP's state in `q_algo_sssp` holds
-    * at most 107 rows at sf0.1). */
+    * seeds on the distributed join loop. The value is the measured
+    * crossover of the path walk (sf0.1 store, 4 cores, min of 3 warm
+    * runs, driver loop against bound 0 on the same input): FIND
+    * SHORTEST PATH UPTO 4 STEPS from the first n customers to two
+    * regions, whose largest frontier or read grows with n, took
+    * 0.50 s against 1.69 s at n = 3 (peak 357 rows), 1.14 s against
+    * 2.38 s at n = 30 (3,182), 1.82 s against 1.74 s at n = 100
+    * (10,433), 2.17 s against 1.70 s at n = 150 (15,084) and 3.55 s
+    * against 1.89 s at n = 300 (28,853). SSSP crosses later: from
+    * `c:1` over both edge directions, 0.27 s against 0.63 s at 729
+    * rows, 1.03 s against 0.94 s at 54,997 and 22.6 s against 1.53 s
+    * at 537,128, so one bound at the lower crossover serves both.
+    * `q_algo_sssp` (peak 138) took 0.44 s against 0.87 s. */
   val DriverRows = 10000
 
   /** The key-filtered neighbor read: `edges` rows whose src is one of
     * `keys`, projected to (src, dst, cols...). No join and no
-    * exchange; the IN list becomes one InSet (PlanSpec pins the plan). */
+    * exchange (PlanSpec pins the plan). The filter is built as one
+    * InSet over the keys, which must have src's type. `isin` makes one
+    * literal expression per key for Catalyst to analyze and fold into
+    * the same InSet: with it the path walk measured under
+    * [[DriverRows]] took 3.09 s at n = 100 and 5.60 s at n = 300, not
+    * 1.82 s and 3.55 s. Planning the read still grows with the keys
+    * (sf0.1 store: 0.34 s at 1,000 keys, 1.2 s at 5,000, against
+    * 0.15 s and 0.28 s to run it), which is what bounds the loops. */
   private[graft] def neighborRead(edges: DataFrame, keys: Iterable[Any],
                                   cols: Seq[Column]): DataFrame =
-    edges.filter(col("src").isin(keys.toSeq: _*))
+    edges.filter(ColumnBridge.column(InSet(ColumnBridge.expression(col("src")),
+        keys.iterator.map(CatalystTypeConverters.convertToCatalyst).toSet)))
       .select(col("src") +: col("dst") +: cols: _*)
 
   /** [[neighborRead]] collected: None when more than `limit` rows
@@ -138,20 +157,51 @@ object Adjacency {
     else collectUpTo(neighborRead(edges, keys, cols), limit)
 
   /** `df`'s rows when there are at most `limit` of them, else None, in
-    * at most one Spark job: a frame the driver already holds (a local
-    * relation) is read without one, any other returns at most
-    * `limit + 1` rows per partition, so an oversized result never
-    * reaches the driver whole. */
+    * at most one Spark job. A frame the driver already holds (a local
+    * relation) is read without one. Any other runs one job in which
+    * each task returns at most `limit + 1` rows, and the driver keeps a
+    * running count of the rows returned: once it passes `limit` the
+    * rows are dropped and the job is cancelled, so the rows that reach
+    * the driver are bounded by the tasks running at that moment, not
+    * by the number of partitions. */
   private[graft] def collectUpTo(df: DataFrame,
-                                 limit: Int): Option[Array[Row]] = {
-    val rows = df.queryExecution.optimizedPlan match {
-      case _: LocalRelation => df.collect()
+                                 limit: Int): Option[Array[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => Some(df.collect()).filter(_.length <= limit)
       case _ =>
         val n = limit + 1
-        df.rdd.mapPartitions(_.take(n)).collect()
+        val rdd = df.rdd
+        // partition index -> its rows, in partition order at the end
+        val kept = scala.collection.mutable.TreeMap.empty[Int, Array[Row]]
+        var count = 0
+        // guarded by `kept`: task results arrive on the scheduler's thread
+        var over = false
+        var job: org.apache.spark.FutureAction[Unit] = null
+        val submitted = df.sparkSession.sparkContext.submitJob(rdd,
+          (it: Iterator[Row]) => it.take(n).toArray,
+          0 until rdd.getNumPartitions,
+          (i: Int, rows: Array[Row]) => kept.synchronized {
+            if (!over) {
+              kept(i) = rows
+              count += rows.length
+              if (count > limit) {
+                over = true
+                kept.clear()
+                if (job != null) job.cancel()
+              }
+            }
+          }, ())
+        kept.synchronized {
+          job = submitted
+          if (over) submitted.cancel()
+        }
+        scala.concurrent.Await.ready(submitted,
+          scala.concurrent.duration.Duration.Inf)
+        kept.synchronized {
+          if (over) None
+          else { submitted.value.get.get; Some(kept.values.flatten.toArray) }
+        }
     }
-    if (rows.length > limit) None else Some(rows)
-  }
 
   /** `keep` names that would collide with the frame's own (src, dst)
     * columns or the state's join key (vid) surface as

@@ -186,29 +186,26 @@ object Mutations {
       * sees its defaults on the right-hand side (`SET age = age + 1`
       * over a fresh row reads the default), exactly the reference's
       * UpdateExecutor insertable path. `seed` is the driver-held key
-      * set. A one-file table is the write job alone: every seed row
-      * joins the table's rows in its one partition, and a seed row whose
-      * key a table row holds drops there (a per-key rank, no shuffle).
-      * A larger table anti-joins the seed against its key column. */
+      * set. The merge is the write job alone: the table's rows and every
+      * seed row are ranked per key, table rows first, and a seed row
+      * whose key a table row holds drops. The union is coalesced to
+      * the rewrite's file count: at one (a table under
+      * `spark.sql.files.maxPartitionBytes`) the single partition
+      * satisfies the rank's clustering and no Exchange is planned; a
+      * larger table is shuffled on its keys for the rank. */
     private def upsertWith(seed: DataFrame, keyCond: Column,
                            whenC: Option[Column],
                            assignments: Seq[(String, Column)]): Unit = {
       val cur = if (exists) read else seed.limit(0)
-      val (merged, cond) =
-        if (fileCount(cur) > 1)
-          seededWhen(cur, seed.join(cur.select(keys.map(col): _*), keys,
-            "left_anti"), whenC)
-        else {
-          // one partition satisfies the rank's clustering: no Exchange
-          val both = cur.withColumn(Seeded, lit(false))
-            .unionByName(seed.withColumn(Seeded, lit(true))).coalesce(1)
-          val rank = row_number().over(
-            Window.partitionBy(keys.map(col): _*).orderBy(col(Seeded)))
-          (both.withColumn("__rank", rank)
-            .filter(!col(Seeded) || col("__rank") === 1).drop("__rank"),
-            col(Seeded) || whenC.getOrElse(lit(true)))
-        }
-      write(assign(merged, keyCond && cond, assignments).drop(Seeded))
+      val both = cur.withColumn(Seeded, lit(false))
+        .unionByName(seed.withColumn(Seeded, lit(true)))
+        .coalesce(fileCount(cur))
+      val rank = row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(col(Seeded)))
+      val merged = both.withColumn("__rank", rank)
+        .filter(!col(Seeded) || col("__rank") === 1).drop("__rank")
+      write(assign(merged, keyCond && (col(Seeded) || whenC.getOrElse(lit(true))),
+        assignments).drop(Seeded))
     }
 
     private val Seeded = "__seeded"

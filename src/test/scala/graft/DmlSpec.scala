@@ -285,6 +285,31 @@ class DmlSpec extends SparkSpec {
     }
   }
 
+  test("table space: a literal UPSERT on a table of several files merges by key") {
+    val root = java.nio.file.Files.createTempDirectory("graft-tu").toString
+    val tc = new graft.graph.TableCatalog(spark, root)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    // 1 KB per file: the second INSERT rewrites the table as several
+    // files, and the UPSERT's rank runs over more than one partition
+    spark.conf.set(key, "1k")
+    try {
+      def vals(r: Range) = r.map(i => s""""v$i":($i)""").mkString(", ")
+      Gql.runScript(tc, s"""CREATE TAG t(x int);
+        |INSERT VERTEX t(x) VALUES ${vals(0 until 150)};
+        |INSERT VERTEX t(x) VALUES ${vals(150 until 300)};""".stripMargin)
+      def parts = new java.io.File(s"$root/tag_t").list().count(_.startsWith("part-"))
+      assert(parts > 1, s"$parts part files")
+      Gql.runScript(tc,
+        """UPSERT VERTEX ON t "v5", "v200", "n1", "n2", "n1" SET x = 7 WHEN x > 100""")
+      val got = tc.vertexTable("t").collect().map(r => r.getString(0) -> r.getLong(1))
+      val want = (0 until 300).map(i => s"v$i" -> i.toLong).toMap ++
+        Map("v200" -> 7L, "n1" -> 7L, "n2" -> 7L)
+      // one row per key: a repeated seed key is seeded once
+      assert(got.length == want.size && got.toMap == want)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("table space: a multi-key UPDATE with a missing key raises and applies no key") {
     def check(cat: graft.graph.GraphCatalog): Unit = {
       Gql.runScript(cat,

@@ -279,6 +279,33 @@ class PathFinderSpec extends SparkSpec {
     }
   }
 
+  test("collectUpTo: the bound holds over the total, not each partition") {
+    // 20 partitions of 5 rows: no partition passes a bound of 10
+    val df = spark.range(0, 100, 1, 20).toDF("id")
+    val (over, jobs) = jobNamesOf(Adjacency.collectUpTo(df, 10))
+    assert(over.isEmpty && jobs.size == 1, s"$jobs")
+    assert(Adjacency.collectUpTo(df, 100).map(_.map(_.getLong(0)).toSeq) ==
+      Some(0L until 100L))
+    assert(Adjacency.collectUpTo(df.filter("id < 10"), 10)
+      .map(_.map(_.getLong(0)).toSeq) == Some(0L until 10L))
+  }
+
+  test("driver walk: a neighbor read over many partitions that passes the bound restarts on the distributed loop") {
+    // a star of 40 out-edges spread over 20 partitions of 2 rows each
+    val e = (0 until 40).map(i => ("s", s"v$i")).toDF("src", "dst")
+      .repartition(20)
+    val targets = Seq("v1", "v7", "v39")
+    val (dist, _) = walked(Seq("s"), targets, e, 2, "shortest",
+      Traverse.Out, 0)
+    assert(dist.size == 3, s"${dist.size}")
+    val (rows, jobs) = walked(Seq("s"), targets, e, 2, "shortest",
+      Traverse.Out, 10)
+    assert(rows == dist)
+    // the read stops the driver loop; the distributed loop's jobs follow
+    assert(jobs.head.contains("Adjacency.scala") &&
+      !jobs.forall(_.contains("Adjacency.scala")), s"$jobs")
+  }
+
   test("driver walk: FIND SHORTEST PATH over the store starts one job per level") {
     val dir = "/root/testdata/sf0.001"
     assumeFiles(dir)
