@@ -288,6 +288,14 @@ class PathFinderSpec extends SparkSpec {
       Some(0L until 100L))
     assert(Adjacency.collectUpTo(df.filter("id < 10"), 10)
       .map(_.map(_.getLong(0)).toSeq) == Some(0L until 10L))
+    // the job stops once the count passes the bound: with 300 ms tasks on
+    // 4 cores, the first wave's 20 rows cancel it before the other waves
+    val done = spark.sparkContext.longAccumulator("collectUpTo tasks")
+    val slow = spark.range(0, 100, 1, 20).as[Long].mapPartitions { it =>
+      Thread.sleep(300); done.add(1); it
+    }.toDF("id")
+    assert(Adjacency.collectUpTo(slow, 10).isEmpty)
+    assert(done.value < 20, s"${done.value} of 20 tasks ran to the end")
   }
 
   test("driver walk: a neighbor read over many partitions that passes the bound restarts on the distributed loop") {
