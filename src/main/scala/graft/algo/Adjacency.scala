@@ -63,12 +63,11 @@ sealed trait Adjacency {
   /** Type of the oriented view's vertex ids. */
   private[graft] def vidType: org.apache.spark.sql.types.DataType =
     uncached.schema("src").dataType
-  /** The (src, dst, cols...) edge rows whose src is one of `keys`, in
-    * one Spark job; None when more than `limit` rows match. `cols` may
-    * reference `keep` columns. */
-  private[graft] def neighbors(keys: Iterable[Any], cols: Seq[Column],
-                limit: Int): Option[Array[Row]] =
-    Adjacency.neighbors(uncached, keys, cols, limit)
+  /** A driver loop's [[Adjacency.Neighbors]] over the oriented view,
+    * reading (src, dst, cols...); `cols` may reference `keep` columns. */
+  private[graft] def driverNeighbors(cols: Seq[Column],
+                                     bound: Int): Adjacency.Neighbors =
+    new Adjacency.Neighbors(uncached, cols, bound)
 }
 
 object Adjacency {
@@ -113,11 +112,12 @@ object Adjacency {
     }
 
   /** The bound of the driver-held loops (`PathFinder`'s untyped
-    * forward walk, `GraphAlgos.sssp`): while a loop's frontier (or
-    * reached set) and the neighbor rows it has read each stay at or
-    * under this many rows, the loop runs on the driver with one
-    * [[neighbors]] read per hop; above it the loop restarts from its
-    * seeds on the distributed join loop. The value is the measured
+    * forward walk, `GraphAlgos.sssp`, `Traverse.go` and `goYield`, and
+    * the one-tag FETCH's vid bag): while a loop's frontier (or reached
+    * set) and the neighbor rows it has read each stay at or under this
+    * many rows, the loop runs on the driver with one [[neighbors]] read
+    * per hop; above it the loop restarts from its seeds on the
+    * distributed join loop. The value is the measured
     * crossover of the path walk (sf0.1 store, 4 cores, min of 3 warm
     * runs, driver loop against bound 0 on the same input): FIND
     * SHORTEST PATH UPTO 4 STEPS from the first n customers to two
@@ -132,21 +132,27 @@ object Adjacency {
     * `q_algo_sssp` (peak 138) took 0.44 s against 0.87 s. */
   val DriverRows = 10000
 
-  /** The key-filtered neighbor read: `edges` rows whose src is one of
-    * `keys`, projected to (src, dst, cols...). No join and no
+  /** `df`'s rows whose `key` column is one of `keys`, which must have
+    * that column's type: the key-filtered read of the driver-held
+    * loops' neighbors and of a FETCH's tag rows. No join and no
     * exchange (PlanSpec pins the plan). The filter is built as one
-    * InSet over the keys, which must have src's type. `isin` makes one
-    * literal expression per key for Catalyst to analyze and fold into
-    * the same InSet: with it the path walk measured under
-    * [[DriverRows]] took 3.09 s at n = 100 and 5.60 s at n = 300, not
-    * 1.82 s and 3.55 s. Planning the read still grows with the keys
-    * (sf0.1 store: 0.34 s at 1,000 keys, 1.2 s at 5,000, against
-    * 0.15 s and 0.28 s to run it), which is what bounds the loops. */
+    * InSet over the keys. `isin` makes one literal expression per key
+    * for Catalyst to analyze and fold into the same InSet: with it the
+    * path walk measured under [[DriverRows]] took 3.09 s at n = 100 and
+    * 5.60 s at n = 300, not 1.82 s and 3.55 s. Planning the read still
+    * grows with the keys (sf0.1 store: 0.34 s at 1,000 keys, 1.2 s at
+    * 5,000, against 0.15 s and 0.28 s to run it), which is what bounds
+    * the loops. */
+  private[graft] def keyRead(df: DataFrame, key: String,
+                             keys: Iterable[Any]): DataFrame =
+    df.filter(ColumnBridge.column(InSet(ColumnBridge.expression(col(key)),
+        keys.iterator.map(CatalystTypeConverters.convertToCatalyst).toSet)))
+
+  /** The key-filtered neighbor read: `edges` rows whose src is one of
+    * `keys` ([[keyRead]]), projected to (src, dst, cols...). */
   private[graft] def neighborRead(edges: DataFrame, keys: Iterable[Any],
                                   cols: Seq[Column]): DataFrame =
-    edges.filter(ColumnBridge.column(InSet(ColumnBridge.expression(col("src")),
-        keys.iterator.map(CatalystTypeConverters.convertToCatalyst).toSet)))
-      .select(col("src") +: col("dst") +: cols: _*)
+    keyRead(edges, "src", keys).select(col("src") +: col("dst") +: cols: _*)
 
   /** [[neighborRead]] collected: None when more than `limit` rows
     * match. */
@@ -155,6 +161,32 @@ object Adjacency {
                                limit: Int): Option[Array[Row]] =
     if (keys.isEmpty) Some(Array.empty)
     else collectUpTo(neighborRead(edges, keys, cols), limit)
+
+  /** The neighbor rows a driver-held loop has read, by src: the
+    * bookkeeping every driver loop shares. [[load]] reads the keys not
+    * read before in one [[neighbors]] read of `edges`, so a vertex's
+    * rows are read once however often the loop returns to it, and the
+    * rows read by all loads together stay within `bound`. */
+  private[graft] final class Neighbors(edges: DataFrame, cols: Seq[Column],
+                                       bound: Int) {
+    private val out = scala.collection.mutable.HashMap.empty[Any, Vector[Row]]
+    private var read = 0
+    /** The (src, dst, cols...) rows of a loaded key; none for any other
+      * key. */
+    def apply(v: Any): Vector[Row] = out.getOrElse(v, Vector.empty)
+    /** Read the `keys` not read before (a NULL key matches no row);
+      * false, with nothing kept, once the rows read pass the bound. */
+    def load(keys: IterableOnce[Any]): Boolean = {
+      val fresh = keys.iterator.filter(v => v != null && !out.contains(v)).toSet
+      fresh.isEmpty || neighbors(edges, fresh, cols, bound - read).exists {
+        rows =>
+          read += rows.length
+          fresh.foreach(out(_) = Vector.empty)
+          rows.foreach(r => out(r.get(0)) :+= r)
+          true
+      }
+    }
+  }
 
   /** `df`'s rows when there are at most `limit` of them, else None, in
     * at most one Spark job. A frame the driver already holds (a local

@@ -1252,30 +1252,21 @@ object GraphAlgos {
       else if (a.doubleValue == b.doubleValue ||
                java.lang.Double.compare(a, b) <= 0) a
       else b
-    val out = scala.collection.mutable.HashMap.empty[Any, Vector[(Any, D)]]
-    var read = 0
+    val nb = adj.driverNeighbors(Seq(w.cast(DoubleType)), bound)
     var dist = Map[Any, D](source -> java.lang.Double.valueOf(0.0))
-    var fresh: Iterable[Any] = Seq(source)
     var round = 0
     var changed = true
     while (round < iters && changed) {
-      if (fresh.nonEmpty) {
-        val rows = adj.neighbors(fresh, Seq(w.cast(DoubleType)), bound - read)
-          .getOrElse(return None)
-        read += rows.length
-        fresh.foreach(out(_) = Vector.empty)
-        rows.foreach { r =>
-          out(r.get(0)) :+= (r.get(1) -> r.getAs[D](2))
-        }
-      }
+      // reads the vertices reached last round; the rest are held
+      if (!nb.load(dist.keys)) return None
       var next = dist
-      for ((u, du) <- dist; (v, wv) <- out(u)) {
+      for ((u, du) <- dist; r <- nb(u)) {
+        val (v, wv) = (r.get(1), r.getAs[D](2))
         val sum: D = if (du == null || wv == null) null else du + wv
         next = next.updated(v, next.get(v).fold(sum)(least(_, sum)))
       }
       if (next.size > bound) return None
       changed = next != dist
-      fresh = next.keySet -- dist.keySet
       dist = next
       round += 1
     }

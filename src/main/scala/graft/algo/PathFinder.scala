@@ -461,8 +461,7 @@ object PathFinder {
     val seeds = vids(srcs).getOrElse(return None)
     val targets = vids(dsts).getOrElse(return None).filter(_ != null).toSet
     val shortest = mode == "shortest"
-    val out = scala.collection.mutable.HashMap.empty[Any, Vector[Any]]
-    var read = 0
+    val nb = new Adjacency.Neighbors(e, Nil, bound)
     // a path is its vids; its origin is the head, its vid the last
     var frontier: Seq[Vector[Any]] = seeds.map(Vector(_))
     val visited = scala.collection.mutable.HashSet.empty[(Any, Any)]
@@ -476,20 +475,12 @@ object PathFinder {
     val found = Vector.newBuilder[Row]
     var step = 1
     while (step <= maxSteps && frontier.nonEmpty && !(shortest && open == 0)) {
-      val fresh = frontier.iterator.map(_.last)
-        .filter(v => v != null && !out.contains(v)).toSet
-      if (fresh.nonEmpty) {
-        val rows = Adjacency.neighbors(e, fresh, Nil, bound - read)
-          .getOrElse(return None)
-        read += rows.length
-        fresh.foreach(out(_) = Vector.empty)
-        // a NULL dst never joins a level and never meets a target
-        rows.foreach(r => if (r.get(1) != null) out(r.get(0)) :+= r.get(1))
-      }
+      if (!nb.load(frontier.iterator.map(_.last))) return None
       // built lazily: an oversized level stops at bound + 1 paths
       val next = frontier.iterator.flatMap { p =>
-        out.getOrElse(p.last, Vector.empty).iterator.filter { d =>
-          if (shortest) !visited((p.head, d)) else !p.contains(d)
+        // a NULL dst never joins a level and never meets a target
+        nb(p.last).iterator.map(_.get(1)).filter { d =>
+          d != null && (if (shortest) !visited((p.head, d)) else !p.contains(d))
         }.map(p :+ _)
       }.take(bound + 1).toVector
       if (next.size > bound) return None

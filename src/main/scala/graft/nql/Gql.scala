@@ -1,6 +1,6 @@
 package graft.nql
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.GraphCatalog
 import graft.algo.PathFinder
@@ -1885,9 +1885,9 @@ object Gql {
     // from the space yields no row (DeleteTag.feature goldens). A semi
     // join keeps each left row once however often its vid repeats on
     // the right, so the union of tag tables needs no distinct.
-    val rows = bag
+    val rows = fetchOnDriver(g, tag, bag).getOrElse(bag
       .join(g.allVertices.select(col("vid")), Seq("vid"), "left_semi")
-      .join(g.vertexTable(tag), Seq("vid"), "left")
+      .join(g.vertexTable(tag), Seq("vid"), "left"))
     val strVid = rows.schema("vid").dataType ==
       org.apache.spark.sql.types.StringType
     def fields: Seq[(String, Column, org.apache.spark.sql.types.DataType)] =
@@ -1920,6 +1920,49 @@ object Gql {
       if (ys.isEmpty) rows
       else selectItems(rows, ys, resolver)
     if (dist) out.distinct() else out
+  }
+
+  /** [[execFetchOne]]'s rows read on the driver, the reference's
+    * GetVertices (GetVerticesExecutor.cpp:14), when the bag holds at
+    * most `Adjacency.DriverRows` vids of the tag table's vid type: one
+    * `vid IN (keys)` read of the tag table, and one of `allVertices`
+    * only for the keys the tag table lacks. The rows equal the joins':
+    * per bag row (its multiplicity kept), one per matching tag row, a
+    * NULL-props row for a vid that exists without the tag, none for an
+    * absent or NULL vid; columns (vid, tag props...). None when the
+    * vid types differ (the joins would coerce them) or the bag or the
+    * rows read pass the bound. */
+  private def fetchOnDriver(g: GraphCatalog, tag: String,
+                            bag: DataFrame): Option[DataFrame] = {
+    import org.apache.spark.sql.types.StructType
+    import graft.algo.Adjacency
+    val bound = Adjacency.DriverRows
+    val table = g.vertexTable(tag)
+    val vt = bag.schema("vid").dataType
+    if (table.schema("vid").dataType != vt ||
+        g.allVertices.schema("vid").dataType != vt) return None
+    val vids = Adjacency.collectUpTo(bag, bound).getOrElse(return None)
+      .map(_.get(0)).filter(_ != null)
+    val props = table.columns.toSeq.filter(_ != "vid")
+    val found = (if (vids.isEmpty) Array.empty[Row]
+      else Adjacency.collectUpTo(Adjacency.keyRead(table, "vid", vids)
+        .select((col("vid") +: props.map(col)): _*), bound)
+        .getOrElse(return None)).groupBy(_.get(0))
+    val missing = vids.toSet -- found.keySet
+    val exists = if (missing.isEmpty) Set.empty[Any]
+      else Adjacency.collectUpTo(Adjacency.keyRead(
+          g.allVertices.select("vid"), "vid", missing), bound)
+        .getOrElse(return None).map(_.get(0)).toSet
+    val rows = vids.iterator.flatMap { v =>
+      found.get(v) match {
+        case Some(rs) => rs.iterator
+        case None if exists(v) => Iterator(Row.fromSeq(v +: props.map(_ => null)))
+        case None => Iterator.empty
+      }
+    }
+    Some(bag.sparkSession.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*),
+      StructType(bag.schema("vid") +:
+        table.schema.filter(_.name != "vid").map(_.copy(nullable = true)))))
   }
 
   /** Render a property map `{k: v, ...}` the way the reference prints

@@ -1,9 +1,10 @@
 package graft.traverse
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.Ckpt
 import graft.Ckpt.MatOps
+import graft.algo.Adjacency
 
 /** Iterative graph-expansion library: the Spark-first re-expression of the
   * reference's traversal operators (SURVEY.md §2.1/§2.5):
@@ -43,7 +44,12 @@ import graft.Ckpt.MatOps
   *    joins against a big edge table become broadcast joins instead of
   *    shuffling the edge table.
   *  - Early exit on an empty frontier (the reference's loop condition).
-  *  - No collect() anywhere; the driver only sees counts.
+  *  - The driver sees only counts, except in `go` and `goYield` while
+  *    the seeds, each level and the neighbor rows read stay within
+  *    `Adjacency.DriverRows`: then the levels are walked on the driver,
+  *    one key-filtered neighbor read per level (the reference's
+  *    GetNeighbors, GetNeighborsProcessor.cpp:32), and the result is a
+  *    local relation. Above the bound they run the loop above.
   */
 object Traverse {
 
@@ -248,18 +254,36 @@ object Traverse {
     * deduped on (origin, vid) — ExpandAll's frontier dedup
     * (ExpandAllExecutor.cpp:50) — so the frontier stays bounded by |V|
     * per origin instead of path count. GO's edge-multiplicity output
-    * (one row per traversed edge) is `goYield`. */
+    * (one row per traversed edge) is `goYield`. A walk within
+    * [[Adjacency.DriverRows]] runs on the driver ([[walkOnDriver]]). */
   def go(seeds: DataFrame, edges: DataFrame, m: Int, n: Int,
-         dir: Direction = Out): DataFrame = {
+         dir: Direction = Out): DataFrame =
+    go(seeds, edges, m, n, dir, Adjacency.DriverRows)
+
+  /** [[go]] with the driver walk's bound as a parameter (0 forces the
+    * distributed loop). */
+  private[graft] def go(seeds: DataFrame, edges: DataFrame, m: Int, n: Int,
+                        dir: Direction, driverRows: Int): DataFrame = {
     require(m >= 1 && n >= m, s"bad step range $m..$n")
-    val levels = expand(seeds.select(col("vid").as("origin"), col("vid")),
-      orient(edges, dir).select("src", "dst"), n, keep = m to n) { (hop, k) =>
-      hop.select(col("origin"), col("dst").as("vid")).distinct()
-        .withColumn("step", lit(k))
+    val e = orient(edges, dir).select("src", "dst")
+    walkOnDriver(seeds, e, n, driverRows, hopsFrom = n + 1).map { steps =>
+      import org.apache.spark.sql.types._
+      val vt = e.schema("src").dataType
+      local(seeds, StructType(Seq(StructField("origin", vt),
+          StructField("vid", vt), StructField("step", IntegerType, false))),
+        (m to n).iterator.filter(_ <= steps.size).flatMap { k =>
+          steps(k - 1).level.iterator.map { case (o, v) => Row(o, v, k) }
+        })
+    }.getOrElse {
+      val levels = expand(seeds.select(col("vid").as("origin"), col("vid")),
+        e, n, keep = m to n) { (hop, k) =>
+        hop.select(col("origin"), col("dst").as("vid")).distinct()
+          .withColumn("step", lit(k))
+      }
+      unionLevels(levels).getOrElse(seeds.sparkSession.emptyDataFrame
+        .withColumn("origin", lit("")).withColumn("vid", lit(""))
+        .withColumn("step", lit(0)).limit(0))
     }
-    unionLevels(levels).getOrElse(seeds.sparkSession.emptyDataFrame
-      .withColumn("origin", lit("")).withColumn("vid", lit(""))
-      .withColumn("step", lit(0)).limit(0))
   }
 
   /** GO ... YIELD edge rows: the reference's exact GO output shape —
@@ -268,9 +292,18 @@ object Traverse {
     * edge at each step in [m, n], keeping the edge's property columns
     * (like._dst / $$-style yields join on these). TCK golden: GO 3
     * STEPS FROM "Tim Duncan" OVER like | YIELD COUNT(*) == 5
-    * (tests/tck/features/aggregate/Agg.feature). */
+    * (tests/tck/features/aggregate/Agg.feature). A walk within
+    * [[Adjacency.DriverRows]] and without step caps runs on the driver
+    * ([[walkOnDriver]]). */
   def goYield(seeds: DataFrame, edges: DataFrame, m: Int, n: Int,
-              dir: Direction = Out, stepCaps: Seq[Int] = Nil): DataFrame = {
+              dir: Direction = Out, stepCaps: Seq[Int] = Nil): DataFrame =
+    goYield(seeds, edges, m, n, dir, stepCaps, Adjacency.DriverRows)
+
+  /** [[goYield]] with the driver walk's bound as a parameter (0 forces
+    * the distributed loop). */
+  private[graft] def goYield(seeds: DataFrame, edges: DataFrame, m: Int,
+                             n: Int, dir: Direction, stepCaps: Seq[Int],
+                             driverRows: Int): DataFrame = {
     require(m >= 1 && n >= m, s"bad step range $m..$n")
     // BIDIRECT keeps a `__rev` marker so whole-edge yields can recover
     // the STORED direction from the traversal-oriented columns
@@ -280,6 +313,24 @@ object Traverse {
           .unionByName(orient(edges, In).withColumn("__rev", lit(true)))
       case other => orient(edges, other)
     }
+    (if (stepCaps.nonEmpty) None
+     else walkOnDriver(seeds, e, n, driverRows, hopsFrom = m)).map { steps =>
+      import org.apache.spark.sql.types._
+      // the read rows are (src, dst, others...): put them in e's order
+      val read = "src" +: "dst" +: e.columns.filterNot(Set("src", "dst"))
+      val at = e.columns.map(read.indexOf(_))
+      local(seeds, StructType(StructField("origin", e.schema("src").dataType) +:
+          e.schema.fields :+ StructField("step", IntegerType, false)),
+        (m to n).iterator.filter(_ <= steps.size).flatMap { k =>
+          steps(k - 1).hops.iterator.map { case (o, r) =>
+            Row.fromSeq(o +: at.map(r.get).toSeq :+ k) }
+        })
+    }.getOrElse(goYieldLoop(seeds, e, m, n, stepCaps))
+  }
+
+  /** [[goYield]]'s distributed loop over the oriented edges `e`. */
+  private def goYieldLoop(seeds: DataFrame, e: DataFrame, m: Int, n: Int,
+                          stepCaps: Seq[Int]): DataFrame = {
     // per-step edge cap (GO ... SAMPLE [n,..] / LIMIT [n,..]); a
     // deterministic first-n is a valid sample
     def cap(k: Int, hop: DataFrame) =
@@ -306,6 +357,64 @@ object Traverse {
       seeds.sparkSession.emptyDataFrame.select(lit("").as("origin"),
         lit("").as("src"), lit("").as("dst"), lit(0).as("step")).limit(0))
   }
+
+  /** One step of [[walkOnDriver]]: its level's (origin, vid) rows and
+    * the hop rows behind them, (origin, (src, dst, others...)). */
+  private final case class DriverStep(level: Seq[(Any, Any)],
+                                      hops: Seq[(Any, Row)])
+
+  /** The levels of [[go]] and [[goYield]] walked on the driver, the
+    * reference's GetNeighbors per step (GetNeighborsProcessor.cpp:32):
+    * one [[Adjacency.Neighbors]] read per level, of the frontier vids
+    * not read at an earlier level, over the uncached oriented edges
+    * `e`. Level 0 is the seed bag (origin = vid, a repeated seed
+    * repeated); level k is the hop out of level k-1 deduped on
+    * (origin, vid), as [[expand]] keeps it, NULL vid included. Returns
+    * per step k (index k-1, up to the last non-empty level) level k
+    * and, from step `hopsFrom` on, the hop rows behind it, one per
+    * traversed edge. None, with no rows returned, when the seed and
+    * edge vid types differ (the join would coerce them), or when the
+    * seeds, a level, a step's hop rows or the neighbor rows read pass
+    * `bound`: the caller then runs the distributed loop. */
+  private def walkOnDriver(seeds: DataFrame, e: DataFrame, n: Int,
+                           bound: Int, hopsFrom: Int): Option[Seq[DriverStep]] = {
+    import org.apache.spark.sql.types._
+    val vt = e.schema("src").dataType
+    if (bound < 1 || !Seq[DataType](StringType, LongType, IntegerType).contains(vt) ||
+        Seq(e.schema("dst"), seeds.schema("vid")).exists(_.dataType != vt))
+      return None
+    val nb = new Adjacency.Neighbors(e,
+      e.columns.toSeq.filterNot(Set("src", "dst")).map(col), bound)
+    var frontier: Seq[(Any, Any)] =
+      Adjacency.collectUpTo(seeds.select("vid"), bound).getOrElse(return None)
+        .map(r => (r.get(0), r.get(0))).toSeq
+    val steps = Vector.newBuilder[DriverStep]
+    var k = 1
+    while (k <= n && frontier.nonEmpty) {
+      if (!nb.load(frontier.iterator.map(_._2))) return None
+      def hop = frontier.iterator.flatMap { case (o, v) => nb(v).map(o -> _) }
+      // built lazily: an oversized step stops at bound + 1 rows
+      val rows = if (k < hopsFrom) Vector.empty else hop.take(bound + 1).toVector
+      if (rows.size > bound) return None
+      val level = scala.collection.mutable.LinkedHashSet.empty[(Any, Any)]
+      val it = if (k < hopsFrom) hop else rows.iterator
+      while (it.hasNext && level.size <= bound) {
+        val (o, r) = it.next()
+        level += (o -> r.get(1))
+      }
+      if (level.size > bound) return None
+      steps += DriverStep(level.toSeq, rows)
+      frontier = level.toSeq
+      k += 1
+    }
+    Some(steps.result())
+  }
+
+  /** `rows` as a local relation of `schema` in `seeds`' session. */
+  private def local(seeds: DataFrame, schema: org.apache.spark.sql.types.StructType,
+                    rows: Iterator[Row]): DataFrame =
+    seeds.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows.toSeq: _*), schema)
 
   /** Traverse with path tracking: (v)-[:e*m..n]->(w) keeping the full
     * vertex path as ArrayType, cycle check via array_contains. Output

@@ -108,7 +108,9 @@ class CkptSpec extends SparkSpec {
       tags = Map("node" -> Seq("a", "b", "c", "d", "e", "f").toDF("vid")),
       edges = Map("like" -> likes))
     Seq(
-      """GO 2 STEPS FROM "a" OVER like YIELD like._dst AS d""",
+      // step caps keep GO on the checkpointed level loop (a capless GO
+      // this small runs on the driver, with one neighbor read per level)
+      """GO 2 STEPS FROM "a" OVER like YIELD like._dst AS d LIMIT [10, 10]""",
       // YIELD path: the typed walk keeps the checkpointed level loop
       // (an untyped walk this small runs on the driver, with no job)
       """FIND SHORTEST PATH FROM "a" TO "d" OVER like UPTO 3 STEPS YIELD path AS p""",

@@ -250,7 +250,81 @@ class DmlSpec extends SparkSpec {
     // every read inferred the schema
     assert(!jobs.exists(_.startsWith("parquet at")),
       s"schema inference on read: $jobs")
-    assert(jobs.size == 3, jobs)
+    // a present key is one `vid IN (keys)` read of the tag table
+    assert(jobs.size == 1 && jobs.head.contains("Adjacency.scala"), jobs)
+  }
+
+  test("table space: a literal-key GO is one neighbor read") {
+    val root = java.nio.file.Files.createTempDirectory("graft-tg").toString
+    val tc = new graft.graph.TableCatalog(spark, root)
+    Gql.runScript(tc,
+      """CREATE TAG t(x int); CREATE EDGE e(w double);
+        |INSERT VERTEX t(x) VALUES "a":(1), "b":(2), "c":(3);
+        |INSERT EDGE e(w) VALUES "a"->"b":(1.5), "a"->"c":(2.5), "b"->"c":(3.5);
+        |""".stripMargin)
+    val q = """GO FROM "a" OVER e YIELD e._dst AS dst, e.w AS w"""
+    Gql.run(tc, q).collect() // warm: first-touch planning
+    val (rows, jobs) = jobNamesOf(Gql.run(tc, q).collect())
+    assert(rows.map(r => (r.getString(0), r.getDouble(1))).toSet ==
+      Set(("b", 1.5), ("c", 2.5)))
+    assert(jobs.size == 1 && jobs.head.contains("Adjacency.scala"), jobs)
+  }
+
+  test("FETCH on the driver: the join's rows on scenario and table spaces") {
+    import org.apache.spark.sql.functions.col
+    val script =
+      """CREATE TAG t(x int, s string); CREATE TAG u(y int);
+        |INSERT VERTEX t(x, s) VALUES "a":(1, "p"), "b":(2, NULL);
+        |INSERT VERTEX u(y) VALUES "a":(7), "c":(9);""".stripMargin
+    val root = java.nio.file.Files.createTempDirectory("graft-tfd").toString
+    val tc = new graft.graph.TableCatalog(spark, root)
+    val sc = fresh()
+    Seq(sc, tc).foreach(Gql.runScript(_, script))
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).map(kv => kv._1 -> kv._2.size)
+    // "a" present, "c" without the tag (NULL props), "zz" absent, "a"
+    // repeated
+    val keys = Seq("a", "c", "zz", "a", "b")
+    Seq[(String, graft.graph.GraphCatalog)]("scenario" -> sc, "table" -> tc)
+      .foreach { case (name, cat) =>
+        val q = s"FETCH PROP ON t ${keys.map(k => "\"" + k + "\"").mkString(", ")}"
+        val (got, jobs) = jobNamesOf(bag(Gql.run(cat, q)))
+        // the distributed rows: the existence semi join, the tag left join
+        import spark.implicits._
+        val want = bag(keys.toDF("vid")
+          .join(cat.allVertices.select(col("vid")), Seq("vid"), "left_semi")
+          .join(cat.vertexTable("t"), Seq("vid"), "left"))
+        assert(got == want, name)
+        assert(got == Map(Seq("a", 1L, "p") -> 2, Seq("b", 2L, null) -> 1,
+          Seq("c", null, null) -> 1), name)
+        // the tag read, and the existence read of the keys it lacks
+        assert(jobs.size <= 2 && jobs.forall(_.contains("Adjacency.scala")),
+          s"$name: $jobs")
+        val yielded = Gql.run(cat, """FETCH PROP ON t "c", "a" YIELD t.x AS x, t.s AS s""")
+        assert(yielded.columns.toSeq == Seq("x", "s"), name)
+        assert(bag(yielded) == Map(Seq(null, null) -> 1, Seq(1L, "p") -> 1), name)
+      }
+  }
+
+  test("FETCH on an int-vid space given a string literal takes the join path") {
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("graft-tfi").toString
+    val tc = new graft.graph.TableCatalog(spark, root, vidIsInt = true)
+    val sc = fresh(int = true)
+    Seq(sc, tc).foreach(Gql.runScript(_,
+      """CREATE TAG t(x int); INSERT VERTEX t(x) VALUES 1:(10), 2:(20);"""))
+    Seq[(String, graft.graph.GraphCatalog)]("scenario" -> sc, "table" -> tc)
+      .foreach { case (name, cat) =>
+        val q = """FETCH PROP ON t "1", "3""""
+        val (got, jobs) = jobNamesOf(Gql.run(cat, q).collect().map(_.toSeq).toSeq)
+        import spark.implicits._
+        val want = Seq("1", "3").toDF("vid")
+          .join(cat.allVertices.select(col("vid")), Seq("vid"), "left_semi")
+          .join(cat.vertexTable("t"), Seq("vid"), "left")
+          .collect().map(_.toSeq).toSeq
+        assert(got == want, name)
+        assert(!jobs.exists(_.contains("Adjacency.scala")), s"$name: $jobs")
+      }
   }
 
   test("table space: a literal-key statement is one rewrite job writing one file") {

@@ -290,4 +290,32 @@ class GqlSpec extends SparkSpec {
     assert(dsts("$$.t.age >= 12") == Set("b", "c"))
     assert(dsts("$$.t.age < 25") == Set("b"))
   }
+
+  test("FETCH on the driver: the join's rows on a GraphModel, store on and off") {
+    val dir = "/root/testdata/sf0.001"
+    assumeFiles(dir)
+    import org.apache.spark.sql.functions.col
+    val stored = spark.newSession()
+    graft.sources.GraphStore.enableManaged(stored)
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).map(kv => kv._1 -> kv._2.size)
+    // "c:1" present and repeated, "p:1" a part without the customer tag
+    // (NULL props), "zz" absent
+    val keys = Seq("c:1", "p:1", "zz", "c:1")
+    val q = s"FETCH PROP ON customer ${keys.map(k => "\"" + k + "\"").mkString(", ")}"
+    Seq("store off" -> spark, "store on" -> stored).foreach { case (name, s2) =>
+      val g = graft.graph.GraphModel(s2, dir)
+      Gql.run(g, q).collect() // warm: resolves the tables, builds the store
+      val (got, jobs) = jobNamesOf(bag(Gql.run(g, q)))
+      import s2.implicits._
+      val want = bag(keys.toDF("vid")
+        .join(g.allVertices.select(col("vid")), Seq("vid"), "left_semi")
+        .join(g.vertexTable("customer"), Seq("vid"), "left"))
+      assert(got == want, name)
+      assert(got.values.sum == 3 && got.keys.exists(r => r.head == "p:1" &&
+        r.tail.forall(_ == null)), s"$name: $got")
+      assert(jobs.size == 2 && jobs.forall(_.contains("Adjacency.scala")),
+        s"$name: $jobs")
+    }
+  }
 }

@@ -69,4 +69,24 @@ class GraphModelSpec extends SparkSpec {
     assert(want.size > 1, "the chosen customer has fewer than two orders")
     assert(got === want)
   }
+
+  test("store-backed GO 1 TO 2 STEPS: one neighbor read per level") {
+    have()
+    import graft.traverse.Traverse
+    val s2 = spark.newSession()
+    graft.sources.GraphStore.enableManaged(s2)
+    val g = GraphModel(s2, dir)
+    val q = """GO 1 TO 2 STEPS FROM "c:1" OVER * YIELD origin, vid, step"""
+    Gql.run(g, q).collect() // warm: builds the store
+    val (rows, jobs) = jobNamesOf(Gql.run(g, q).collect())
+    assert(jobs.nonEmpty && jobs.size <= 2 &&
+      jobs.forall(_.contains("Adjacency.scala")), s"$jobs")
+    // the distributed loop reaches the same rows
+    import s2.implicits._
+    val loop = Traverse.go(Seq("c:1").toDF("vid"), g.allEdges, 1, 2,
+      Traverse.Out, 0).collect()
+    assert(rows.map(_.toSeq).sortBy(_.mkString).toSeq ==
+      loop.map(_.toSeq).sortBy(_.mkString).toSeq)
+    assert(rows.exists(_.getInt(2) == 2), "no second-level rows")
+  }
 }

@@ -68,8 +68,12 @@ class PlanSpec extends SparkSpec {
   test("traversal frontier lineage is truncated (constant plan depth)") {
     have()
     // a 2-step go's plan must hang off a checkpointed RDD scan, not a
-    // 2-join-deep tree (the round-1 scale bug)
-    val plan = SparkEntry.queries("q_go_1to2")(spark, dir)
+    // 2-join-deep tree (the round-1 scale bug); q_go_1to2's walk at
+    // bound 0, the distributed loop (at its size it runs on the driver)
+    val g = graft.graph.GraphModel(spark, dir)
+    val plan = graft.traverse.Traverse.go(g.customers
+        .filter(expr("CAST(substr(vid, 3, 10) AS BIGINT) <= 5")).select("vid"),
+        g.edges, 1, 2, graft.traverse.Traverse.Out, 0)
       .queryExecution.optimizedPlan.toString
     assert(plan.contains("LogicalRDD") || plan.contains("ExistingRDD"),
       s"frontier not materialized:\n$plan")
@@ -437,10 +441,11 @@ class PlanSpec extends SparkSpec {
     // and the stored loop is result-identical to the flat loop
     def seeds(gm: graft.graph.GraphModel) = gm.customers
       .filter(expr("CAST(substr(vid, 3, 10) AS BIGINT) <= 3")).select("vid")
-    val stored = Traverse.go(seeds(g), g.edges, 1, 2)
+    // (bound 0: the distributed loop on both)
+    val stored = Traverse.go(seeds(g), g.edges, 1, 2, Traverse.Out, 0)
       .collect().map(_.toSeq).toSet
     val gFlat = graft.graph.GraphModel(spark, dir)
-    val flat = Traverse.go(seeds(gFlat), gFlat.edges, 1, 2)
+    val flat = Traverse.go(seeds(gFlat), gFlat.edges, 1, 2, Traverse.Out, 0)
       .collect().map(_.toSeq).toSet
     assert(stored == flat, "stored GO diverges from flat GO")
   }

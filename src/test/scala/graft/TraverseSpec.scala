@@ -109,7 +109,9 @@ class TraverseSpec extends SparkSpec {
 
   test("level checkpoints: only the levels a result reads stay live") {
     // goYield's step-3 rows are the lazy hop out of level 2: one level
-    assert(liveAfter(Traverse.goYield(seeds("a"), edges, 3, 3).collect()) == 1)
+    // (bound 0: the distributed loop, whose levels are checkpoints)
+    assert(liveAfter(Traverse.goYield(seeds("a"), edges, 3, 3, Out, Nil, 0)
+      .collect()) == 1)
     // subgraph's vertices are the visited checkpoint; its edges are lazy
     assert(liveAfter {
       val v = Traverse.subgraph(seeds("a"), edges, 2, Out)
@@ -146,6 +148,66 @@ class TraverseSpec extends SparkSpec {
         val minOverOrigins = dist.groupBy(_._1._2)
           .map { case (v, ds) => v -> ds.values.min }
         assert(depth == minOverOrigins, ctx)
+      }
+    }
+  }
+
+  /** A frame's rows as a multiset. */
+  private def bag(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity)
+      .map { case (r, rs) => r -> rs.size }
+
+  test("driver walk: go and goYield give the distributed loop's rows") {
+    import graft.algo.Adjacency
+    // the differential graph plus a NULL dst out of d
+    val g = Seq[(String, String, Long)](("a", "b", 0L), ("a", "b", 1L),
+      ("b", "c", 0L), ("c", "a", 0L), ("c", "c", 0L), ("c", "d", 0L),
+      ("d", null, 0L))
+      .toDF("src", "dst", "rank").withColumn("etype", lit("e"))
+    // a repeated seed repeats its step-1 edges in goYield
+    val from = seeds("a", "d", "z", "a")
+    // int vids, and an edge column ahead of (src, dst)
+    val ints = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 3L), (3L, 1L))
+      .toDF("src", "dst")
+      .select((col("src") * 10).as("w"), col("src"), col("dst"))
+    val intFrom = Seq(1L, 1L, 9L).toDF("vid")
+    for ((gr, fr) <- Seq((g, from), (ints, intFrom)); dir <- Seq(Out, In, Both);
+         (m, n) <- Seq((1, 1), (1, 3), (2, 3))) {
+      val ctx = s"${fr.schema("vid").dataType} $dir $m..$n"
+      val (go, goJobs) = jobNamesOf(bag(Traverse.go(fr, gr, m, n, dir,
+        Adjacency.DriverRows)))
+      assert(go == bag(Traverse.go(fr, gr, m, n, dir, 0)), ctx)
+      val (yielded, yJobs) = jobNamesOf(bag(Traverse.goYield(fr, gr, m, n,
+        dir, Nil, Adjacency.DriverRows)))
+      assert(yielded == bag(Traverse.goYield(fr, gr, m, n, dir, Nil, 0)), ctx)
+      assert(yielded.nonEmpty, ctx)
+      // one neighbor read per level at most, nothing else
+      Seq(goJobs, yJobs).foreach { jobs =>
+        assert(jobs.size <= n && jobs.forall(_.contains("Adjacency.scala")),
+          s"$ctx: $jobs")
+      }
+    }
+  }
+
+  test("driver walk: a level that crosses the bound restarts on the distributed loop") {
+    import graft.algo.Adjacency
+    // a binary tree: level k holds 2^k vertices
+    val tree = ((1 until 32).map(i => (s"t$i", s"t${2 * i}")) ++
+      (1 until 32).map(i => (s"t$i", s"t${2 * i + 1}"))).toDF("src", "dst")
+    val go0 = bag(Traverse.go(seeds("t1"), tree, 1, 5, Out, 0))
+    val yield0 = bag(Traverse.goYield(seeds("t1"), tree, 1, 5, Out, Nil, 0))
+    assert(go0.size == 62 && yield0.size == 62)
+    Seq(Adjacency.DriverRows, 8).foreach { bound =>
+      val (go, goJobs) = jobNamesOf(bag(Traverse.go(seeds("t1"), tree, 1, 5,
+        Out, bound)))
+      val (yielded, yJobs) = jobNamesOf(bag(Traverse.goYield(seeds("t1"),
+        tree, 1, 5, Out, Nil, bound)))
+      assert(go == go0 && yielded == yield0, s"bound $bound")
+      // under bound 8 the level of 16 stops the driver walk: the
+      // distributed loop's checkpoints run after the neighbor reads
+      Seq(goJobs, yJobs).foreach { jobs =>
+        assert(jobs.forall(_.contains("Adjacency.scala")) ==
+          (bound == Adjacency.DriverRows), s"bound $bound: $jobs")
       }
     }
   }
