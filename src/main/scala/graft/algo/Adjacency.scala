@@ -112,8 +112,8 @@ object Adjacency {
     }
 
   /** The bound of the driver-held loops (`PathFinder`'s untyped
-    * forward walk, `GraphAlgos.sssp`, `Traverse.go` and `goYield`, and
-    * the one-tag FETCH's vid bag): while a loop's frontier (or reached
+    * forward walk, `GraphAlgos.sssp`, `Traverse.go` and `goYield` of
+    * two or more steps, and the one-tag FETCH's vid bag): while a loop's frontier (or reached
     * set) and the neighbor rows it has read each stay at or under this
     * many rows, the loop runs on the driver with one [[neighbors]] read
     * per hop; above it the loop restarts from its seeds on the
@@ -129,7 +129,18 @@ object Adjacency {
     * `c:1` over both edge directions, 0.27 s against 0.63 s at 729
     * rows, 1.03 s against 0.94 s at 54,997 and 22.6 s against 1.53 s
     * at 537,128, so one bound at the lower crossover serves both.
-    * `q_algo_sssp` (peak 138) took 0.44 s against 0.87 s. */
+    * `q_algo_sssp` (peak 138) took 0.44 s against 0.87 s. GO of two
+    * or more steps and the one-tag FETCH cross at about the same
+    * size or later (same setup, nGQL from the first n customers):
+    * `GO 1 TO 2 STEPS ... OVER *` took 0.25 s against 0.73 s at 236
+    * rows, 0.30-0.40 s against 0.69-0.74 s at 2,517, 0.46 s against
+    * 0.68 s at 5,490 and 0.55-0.65 s against 0.67-0.70 s at 9,445;
+    * `FETCH PROP ON customer` of n keys 0.16 s against 0.56 s at
+    * n = 10, 0.18 s against 0.53 s at 1,000, 0.43 s against 0.71 s at
+    * 3,000 and 5.7 s against 5.6 s at 10,000 (parsing the statement
+    * dominates both); a piped FETCH of a GO's 9,971 order vids 0.57 s
+    * against 0.59 s. A one-step GO crosses lower
+    * (`Traverse.OneStepRows`). */
   val DriverRows = 10000
 
   /** `df`'s rows whose `key` column is one of `keys`, which must have
@@ -198,42 +209,47 @@ object Adjacency {
     * by the number of partitions. */
   private[graft] def collectUpTo(df: DataFrame,
                                  limit: Int): Option[Array[Row]] =
-    df.queryExecution.optimizedPlan match {
-      case _: LocalRelation => Some(df.collect()).filter(_.length <= limit)
-      case _ =>
-        val n = limit + 1
-        val rdd = df.rdd
-        // partition index -> its rows, in partition order at the end
-        val kept = scala.collection.mutable.TreeMap.empty[Int, Array[Row]]
-        var count = 0
-        // guarded by `kept`: task results arrive on the scheduler's thread
-        var over = false
-        var job: org.apache.spark.FutureAction[Unit] = null
-        val submitted = df.sparkSession.sparkContext.submitJob(rdd,
-          (it: Iterator[Row]) => it.take(n).toArray,
-          0 until rdd.getNumPartitions,
-          (i: Int, rows: Array[Row]) => kept.synchronized {
-            if (!over) {
-              kept(i) = rows
-              count += rows.length
-              if (count > limit) {
-                over = true
-                kept.clear()
-                if (job != null) job.cancel()
-              }
+    if (held(df)) Some(df.collect()).filter(_.length <= limit)
+    else {
+      val n = limit + 1
+      val rdd = df.rdd
+      // partition index -> its rows, in partition order at the end
+      val kept = scala.collection.mutable.TreeMap.empty[Int, Array[Row]]
+      var count = 0
+      // guarded by `kept`: task results arrive on the scheduler's thread
+      var over = false
+      var job: org.apache.spark.FutureAction[Unit] = null
+      val submitted = df.sparkSession.sparkContext.submitJob(rdd,
+        (it: Iterator[Row]) => it.take(n).toArray,
+        0 until rdd.getNumPartitions,
+        (i: Int, rows: Array[Row]) => kept.synchronized {
+          if (!over) {
+            kept(i) = rows
+            count += rows.length
+            if (count > limit) {
+              over = true
+              kept.clear()
+              if (job != null) job.cancel()
             }
-          }, ())
-        kept.synchronized {
-          job = submitted
-          if (over) submitted.cancel()
-        }
-        scala.concurrent.Await.ready(submitted,
-          scala.concurrent.duration.Duration.Inf)
-        kept.synchronized {
-          if (over) None
-          else { submitted.value.get.get; Some(kept.values.flatten.toArray) }
-        }
+          }
+        }, ())
+      kept.synchronized {
+        job = submitted
+        if (over) submitted.cancel()
+      }
+      scala.concurrent.Await.ready(submitted,
+        scala.concurrent.duration.Duration.Inf)
+      kept.synchronized {
+        if (over) None
+        else { submitted.value.get.get; Some(kept.values.flatten.toArray) }
+      }
     }
+
+  /** True when the driver already holds `df`'s rows (its optimized
+    * plan is a local relation: literal ids, or a projection or filter
+    * of one), so reading them starts no Spark job. */
+  private[graft] def held(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
   /** `keep` names that would collide with the frame's own (src, dst)
     * columns or the state's join key (vid) surface as

@@ -1930,8 +1930,10 @@ object Gql {
     * per bag row (its multiplicity kept), one per matching tag row, a
     * NULL-props row for a vid that exists without the tag, none for an
     * absent or NULL vid; columns (vid, tag props...). None when the
-    * vid types differ (the joins would coerce them) or the bag or the
-    * rows read pass the bound. */
+    * driver does not hold the bag (a Spark plan's bag would be computed
+    * twice once it passes the bound), when the vid types differ (the
+    * joins would coerce them) or when the bag or the rows read pass
+    * the bound. */
   private def fetchOnDriver(g: GraphCatalog, tag: String,
                             bag: DataFrame): Option[DataFrame] = {
     import org.apache.spark.sql.types.StructType
@@ -1939,7 +1941,7 @@ object Gql {
     val bound = Adjacency.DriverRows
     val table = g.vertexTable(tag)
     val vt = bag.schema("vid").dataType
-    if (table.schema("vid").dataType != vt ||
+    if (!Adjacency.held(bag) || table.schema("vid").dataType != vt ||
         g.allVertices.schema("vid").dataType != vt) return None
     val vids = Adjacency.collectUpTo(bag, bound).getOrElse(return None)
       .map(_.get(0)).filter(_ != null)
@@ -2352,6 +2354,16 @@ object Gql {
           s"please add alias when using ${i.alias}.")
     }
 
+  /** `seeds`' distinct vids. Seeds the driver holds are deduped there
+    * into a local relation, which GO's driver walk can take; any other
+    * is a distributed distinct. */
+  private def distinctVids(seeds: DataFrame): DataFrame = {
+    val vids = seeds.select(col("vid"))
+    if (!graft.algo.Adjacency.held(vids)) vids.distinct()
+    else seeds.sparkSession.createDataFrame(
+      java.util.Arrays.asList(vids.collect().distinct: _*), vids.schema)
+  }
+
   private def execGo(g: GraphCatalog, goAst: Go, seedsDF: DataFrame,
                      input: Option[(DataFrame, String)]): DataFrame = {
     val Go(m0, n, _, _, _, rawEtypes, dir, where, yieldsOpt, dist, stepCaps) = goAst
@@ -2424,8 +2436,7 @@ object Gql {
       var out =
         if (!inputRefs) {
           val base = Traverse.goYield(
-            if (input.isDefined) seedsDF.select(col("vid")).distinct()
-            else seedsDF,
+            if (input.isDefined) distinctVids(seedsDF) else seedsDF,
             eframe, m, nEff, dir, stepCaps.map(_._2).getOrElse(Nil))
           input match {
             case Some((in, seedCol)) if in.columns.contains(seedCol) =>
@@ -2447,7 +2458,7 @@ object Gql {
           val renamed = in.columns.foldLeft(in)((d, c2) =>
             d.withColumnRenamed(c2, s"__in_$c2"))
           val expanded = Traverse.goYield(
-            seedsDF.select(col("vid")).distinct(), eframe, m, nEff, dir,
+            distinctVids(seedsDF), eframe, m, nEff, dir,
             stepCaps.map(_._2).getOrElse(Nil))
           renamed.join(expanded,
             col(s"__in_$seedCol") === col("origin"))

@@ -44,9 +44,10 @@ import graft.algo.Adjacency
   *    joins against a big edge table become broadcast joins instead of
   *    shuffling the edge table.
   *  - Early exit on an empty frontier (the reference's loop condition).
-  *  - The driver sees only counts, except in `go` and `goYield` while
-  *    the seeds, each level and the neighbor rows read stay within
-  *    `Adjacency.DriverRows`: then the levels are walked on the driver,
+  *  - The driver sees only counts, except in `go` and `goYield` when
+  *    it holds the seeds (a local relation) and they, each level and
+  *    the neighbor rows read stay within a bound (`driverRows`): then
+  *    the levels are walked on the driver,
   *    one key-filtered neighbor read per level (the reference's
   *    GetNeighbors, GetNeighborsProcessor.cpp:32), and the result is a
   *    local relation. Above the bound they run the loop above.
@@ -255,10 +256,27 @@ object Traverse {
     * (ExpandAllExecutor.cpp:50) — so the frontier stays bounded by |V|
     * per origin instead of path count. GO's edge-multiplicity output
     * (one row per traversed edge) is `goYield`. A walk within
-    * [[Adjacency.DriverRows]] runs on the driver ([[walkOnDriver]]). */
+    * [[driverRows]] runs on the driver ([[walkOnDriver]]). */
   def go(seeds: DataFrame, edges: DataFrame, m: Int, n: Int,
          dir: Direction = Out): DataFrame =
-    go(seeds, edges, m, n, dir, Adjacency.DriverRows)
+    go(seeds, edges, m, n, dir, driverRows(n))
+
+  /** The driver walk's bound for a GO of one step. Its distributed
+    * loop is one level of 3 jobs, which the walk matches at about a
+    * thousand rows (sf0.1 store, 4 cores, min of 3 warm runs,
+    * `GO FROM <the first n customers> OVER placed` against bound 0):
+    * 0.14-0.19 s against 0.25 s at 286 rows, 0.16-0.18 s against
+    * 0.18-0.19 s at 1,046, 0.20 s against 0.15 s at 2,049, 0.26 s
+    * against 0.15 s at 5,033 and 0.42 s against 0.19 s at 9,971. A
+    * walk that passes its bound loses the reads it made: 0.35 s
+    * against 0.19 s at 1,046 rows under a bound of 1,000. */
+  private[graft] val OneStepRows = 1000
+
+  /** The driver walk's bound for a GO of up to `n` steps: a loop of
+    * two or more levels (8 jobs or more) crosses at
+    * [[Adjacency.DriverRows]]. */
+  private def driverRows(n: Int): Int =
+    if (n == 1) OneStepRows else Adjacency.DriverRows
 
   /** [[go]] with the driver walk's bound as a parameter (0 forces the
     * distributed loop). */
@@ -293,11 +311,11 @@ object Traverse {
     * (like._dst / $$-style yields join on these). TCK golden: GO 3
     * STEPS FROM "Tim Duncan" OVER like | YIELD COUNT(*) == 5
     * (tests/tck/features/aggregate/Agg.feature). A walk within
-    * [[Adjacency.DriverRows]] and without step caps runs on the driver
+    * [[driverRows]] and without step caps runs on the driver
     * ([[walkOnDriver]]). */
   def goYield(seeds: DataFrame, edges: DataFrame, m: Int, n: Int,
               dir: Direction = Out, stepCaps: Seq[Int] = Nil): DataFrame =
-    goYield(seeds, edges, m, n, dir, stepCaps, Adjacency.DriverRows)
+    goYield(seeds, edges, m, n, dir, stepCaps, driverRows(n))
 
   /** [[goYield]] with the driver walk's bound as a parameter (0 forces
     * the distributed loop). */
@@ -372,15 +390,18 @@ object Traverse {
     * (origin, vid), as [[expand]] keeps it, NULL vid included. Returns
     * per step k (index k-1, up to the last non-empty level) level k
     * and, from step `hopsFrom` on, the hop rows behind it, one per
-    * traversed edge. None, with no rows returned, when the seed and
-    * edge vid types differ (the join would coerce them), or when the
-    * seeds, a level, a step's hop rows or the neighbor rows read pass
-    * `bound`: the caller then runs the distributed loop. */
+    * traversed edge. None, with no rows returned, when the driver does
+    * not hold the seeds (a Spark plan's seeds would be computed twice
+    * once they pass the bound: for the walk and for the loop), when
+    * the seed and edge vid types differ (the join would coerce them),
+    * or when the seeds, a level, a step's hop rows or the neighbor rows
+    * read pass `bound`: the caller then runs the distributed loop. */
   private def walkOnDriver(seeds: DataFrame, e: DataFrame, n: Int,
                            bound: Int, hopsFrom: Int): Option[Seq[DriverStep]] = {
     import org.apache.spark.sql.types._
     val vt = e.schema("src").dataType
-    if (bound < 1 || !Seq[DataType](StringType, LongType, IntegerType).contains(vt) ||
+    if (bound < 1 || !Adjacency.held(seeds) ||
+        !Seq[DataType](StringType, LongType, IntegerType).contains(vt) ||
         Seq(e.schema("dst"), seeds.schema("vid")).exists(_.dataType != vt))
       return None
     val nb = new Adjacency.Neighbors(e,

@@ -316,6 +316,16 @@ class GqlSpec extends SparkSpec {
         r.tail.forall(_ == null)), s"$name: $got")
       assert(jobs.size == 2 && jobs.forall(_.contains("Adjacency.scala")),
         s"$name: $jobs")
+      // a piped bag the driver does not hold (a LOOKUP's rows) takes the
+      // joins at once: no key read, which would compute the bag twice
+      // once it passed the bound
+      val piped = "LOOKUP ON customer WHERE customer.acctbal > 9000 YIELD vid" +
+        " | FETCH PROP ON customer $-.vid"
+      val (pipedRows, pipedJobs) = jobNamesOf(bag(Gql.run(g, piped)))
+      val pipedWant = bag(g.customers.filter(col("acctbal") > 9000)
+        .select("vid").join(g.vertexTable("customer"), Seq("vid")))
+      assert(pipedRows.nonEmpty && pipedRows == pipedWant, name)
+      assert(!pipedJobs.exists(_.contains("Adjacency.scala")), s"$name: $pipedJobs")
     }
   }
 }

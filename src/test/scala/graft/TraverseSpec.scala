@@ -211,4 +211,38 @@ class TraverseSpec extends SparkSpec {
       }
     }
   }
+
+  test("driver walk: seeds the driver does not hold take the distributed loop at once") {
+    import graft.algo.Adjacency
+    // seeds behind a shuffle: a walk would compute them once to collect
+    // them and again for the loop once they pass the bound
+    val planned = seeds("a", "c", "a").repartition(2)
+    assert(!Adjacency.held(planned) && Adjacency.held(seeds("a")))
+    val (go, goJobs) = jobNamesOf(bag(Traverse.go(planned, edges, 1, 2, Out,
+      Adjacency.DriverRows)))
+    val (yielded, yJobs) = jobNamesOf(bag(Traverse.goYield(planned, edges, 1, 2,
+      Out, Nil, Adjacency.DriverRows)))
+    assert(go == bag(Traverse.go(planned, edges, 1, 2, Out, 0)))
+    assert(yielded == bag(Traverse.goYield(planned, edges, 1, 2, Out, Nil, 0)))
+    assert(go.nonEmpty && yielded.nonEmpty)
+    Seq(goJobs, yJobs).foreach { jobs =>
+      assert(jobs.nonEmpty && !jobs.exists(_.contains("Adjacency.scala")), jobs)
+    }
+  }
+
+  test("driver walk: a one-step GO takes the smaller bound") {
+    import graft.algo.Adjacency
+    // one seed with more out-edges than OneStepRows, fewer than DriverRows
+    val fan = Traverse.OneStepRows + 100
+    assert(fan < Adjacency.DriverRows)
+    val star = (1 to fan).map(i => ("s", s"x$i")).toDF("src", "dst")
+    def readsOnly(jobs: Seq[String]) = jobs.forall(_.contains("Adjacency.scala"))
+    val (one, oneJobs) = jobNamesOf(Traverse.go(seeds("s"), star, 1, 1)
+      .collect().length)
+    val (two, twoJobs) = jobNamesOf(Traverse.go(seeds("s"), star, 1, 2)
+      .collect().length)
+    assert(one == fan && two == fan)
+    assert(oneJobs.nonEmpty && !readsOnly(oneJobs), oneJobs)
+    assert(readsOnly(twoJobs), twoJobs)
+  }
 }
