@@ -113,13 +113,14 @@ object Adjacency {
 
   /** The bound of the driver-held loops (`PathFinder`'s untyped
     * forward walk, `GraphAlgos.sssp`, `Traverse.go` and `goYield` of
-    * two or more steps, and the one-tag FETCH's vid bag): while a loop's frontier (or reached
-    * set) and the neighbor rows it has read each stay at or under this
-    * many rows, the loop runs on the driver with one [[neighbors]] read
-    * per hop; above it the loop restarts from its seeds on the
-    * distributed join loop. The value is the measured
-    * crossover of the path walk (sf0.1 store, 4 cores, min of 3 warm
-    * runs, driver loop against bound 0 on the same input): FIND
+    * two or more steps, and the one-tag FETCH's vid bag): while a
+    * loop's frontier (or reached set) and the neighbor rows it has
+    * read each stay at or under this many rows, the loop runs on the
+    * driver with one [[neighbors]] read per hop; above it the loop
+    * restarts from its seeds on the distributed join loop. The value
+    * is the measured crossover of the path walk (sf0.1 store, 4
+    * cores, min of 3 warm runs, driver loop against bound 0 on the
+    * same input): FIND
     * SHORTEST PATH UPTO 4 STEPS from the first n customers to two
     * regions, whose largest frontier or read grows with n, took
     * 0.50 s against 1.69 s at n = 3 (peak 357 rows), 1.14 s against

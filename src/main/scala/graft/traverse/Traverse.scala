@@ -47,10 +47,10 @@ import graft.algo.Adjacency
   *  - The driver sees only counts, except in `go` and `goYield` when
   *    it holds the seeds (a local relation) and they, each level and
   *    the neighbor rows read stay within a bound (`driverRows`): then
-  *    the levels are walked on the driver,
-  *    one key-filtered neighbor read per level (the reference's
-  *    GetNeighbors, GetNeighborsProcessor.cpp:32), and the result is a
-  *    local relation. Above the bound they run the loop above.
+  *    the levels are walked on the driver, one key-filtered neighbor
+  *    read per level (the reference's GetNeighbors,
+  *    GetNeighborsProcessor.cpp:32), and the result is a local
+  *    relation. Above the bound they run the loop above.
   */
 object Traverse {
 
