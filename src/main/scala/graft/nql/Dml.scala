@@ -1697,11 +1697,12 @@ object Dml {
       if (ifNotExists) kt.insertIfNotExists(df) else kt.insert(df)
       emptyOk(spark)
     }
-    def setResolver(schema: String): Expr.Resolver = {
-      case Expr.Ref(List(t, p)) if t == schema => Some(col(p))
-      case Expr.Ref(List(p)) => Some(col(p))
-      case _ => None
-    }
+    // SET / WHEN read the target's props bare or as `<target>.<prop>`
+    def setResolver(u: Update, schema: StructType): Expr.Resolver =
+      (if (u.isTag) Binding(vertex = Some(Binding.Vertex(col("vid"), Seq(u.target),
+        _ => schema.fields.toSeq.filter(_.name != "vid"))))
+      else Binding(edge = Some(Binding.stored(Seq(new Binding.EdgeType(
+        u.target, 0, Binding.edgeProps(schema.fields.toSeq))))))).resolver
     d match {
       case CreateSchema(isTag, name, props, ifNotExists, ttlDur, ttlCol, _) =>
         require(ttlDur.isEmpty && ttlCol.isEmpty,
@@ -1734,12 +1735,12 @@ object Dml {
             tc.tagDefs(u.target))
           else (tc.edgeTable(u.target), tc.edgeSchema(u.target),
             tc.edgeDefs(u.target))
-        val whenC = u.when.map(w => Expr.compile(w, setResolver(u.target)))
+        val whenC = u.when.map(w => Expr.compile(w, setResolver(u, schema)))
         // each SET value is cast to its prop's declared type, rounding
         // a fractional value into an int prop half away from zero, as
         // `coerce` does: the column keeps its type
         val assigns = u.sets.map { case (p, e) =>
-          val v = Expr.compile(e, setResolver(u.target))
+          val v = Expr.compile(e, setResolver(u, schema))
           p -> (defs.find(_.name == p).map(_.dt) match {
             case Some(LongType) => round(v).cast(LongType)
             case Some(dt) => v.cast(dt)

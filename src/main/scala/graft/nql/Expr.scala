@@ -402,10 +402,10 @@ object Expr {
       // full pattern parse, backtracking to an ordinary parenthesized
       // expression when the pattern shape doesn't hold (e.g. `(a)<-b`
       // is a comparison against a negation)
-      val saved = p.ts
+      val saved = p.mark
       try PatternE(MatchSeg.parsePatternExprPart(p))
       catch {
-        case scala.util.control.NonFatal(_) => p.ts = saved; parenAtom(p)
+        case scala.util.control.NonFatal(_) => p.reset(saved); parenAtom(p)
       }
     case Some(Sym("(")) => parenAtom(p)
     case Some(Sym("[")) =>

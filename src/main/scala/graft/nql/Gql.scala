@@ -60,8 +60,8 @@ object Gql {
 
   def lex(q: String): Lexed = {
     val out = scala.collection.mutable.ListBuffer.empty[Tok]
-    val starts = scala.collection.mutable.ListBuffer.empty[Int]
-    val ends = scala.collection.mutable.ListBuffer.empty[Int]
+    val starts = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val ends = scala.collection.mutable.ArrayBuffer.empty[Int]
     var i = 0
     while (i < q.length) {
       val tokStart = i
@@ -190,7 +190,7 @@ object Gql {
   }
 
   // ---------- token cursor ----------
-  private[nql] class P(var ts: List[Tok]) {
+  private[nql] class P(private var rest: List[Tok]) {
     /** Session parameters (name -> nGQL literal text) — `$name` in
       * expression position inlines the parsed literal (Expr.ParamLit);
       * vid/step/sample positions reject like the reference's
@@ -200,19 +200,24 @@ object Gql {
       * before them) — empty when the caller used plain tokenize, in
       * which case [[gluedAt]] is always false. */
     private var glueSet: Set[Int] = Set.empty
-    private var glueTotal: Int = 0
+    /** Index of the head token in the lexed stream. */
+    private var pos = 0
     /** Most recently consumed token (for `]-` adjacency checks). */
     var lastConsumed: Tok = null
-    def setGlue(l: Lexed): Unit = { glueSet = l.glued; glueTotal = l.toks.length }
+    def setGlue(l: Lexed): Unit = glueSet = l.glued
+    /** The tokens left. */
+    def ts: List[Tok] = rest
+    /** The cursor, for a backtracking parse to [[reset]] to. */
+    def mark: (List[Tok], Int) = (rest, pos)
+    def reset(m: (List[Tok], Int)): Unit = { rest = m._1; pos = m._2 }
     /** Is the token at offset k from the head glued to its source
       * predecessor? k=0: head vs the last consumed token. */
-    def gluedAt(k: Int): Boolean = glueSet.contains(glueTotal - ts.length + k)
-    def peek: Option[Tok] = ts.headOption
-    def peek2: Option[Tok] = ts.drop(1).headOption
-    def next(): Tok = { val h = ts.head; ts = ts.tail; lastConsumed = h; h }
-    def kw(s: String): Boolean = ts.headOption match {
-      case Some(Word(w)) if w.equalsIgnoreCase(s) =>
-        lastConsumed = ts.head; ts = ts.tail; true
+    def gluedAt(k: Int): Boolean = glueSet.contains(pos + k)
+    def peek: Option[Tok] = rest.headOption
+    def peek2: Option[Tok] = rest.drop(1).headOption
+    def next(): Tok = { val h = rest.head; rest = rest.tail; pos += 1; lastConsumed = h; h }
+    def kw(s: String): Boolean = rest.headOption match {
+      case Some(Word(w)) if w.equalsIgnoreCase(s) => next(); true
       case _ => false
     }
     def kwPeek(s: String): Boolean = ts.headOption match {
@@ -221,9 +226,8 @@ object Gql {
     }
     def expectKw(s: String): Unit =
       require(kw(s), s"expected $s at ${ts.take(3)}")
-    def sym(s: String): Boolean = ts.headOption match {
-      case Some(Sym(x)) if x == s =>
-        lastConsumed = ts.head; ts = ts.tail; true
+    def sym(s: String): Boolean = rest.headOption match {
+      case Some(Sym(x)) if x == s => next(); true
       case _ => false
     }
     def expectSym(s: String): Unit =
@@ -1307,45 +1311,7 @@ object Gql {
             }
           case _ => tbl
         }
-        val lkStrVid = tbl0.schema(if (isEdge) "src" else "vid")
-          .dataType == org.apache.spark.sql.types.StringType
-        val resolver: Expr.Resolver = {
-          // whole-entity yields (`YIELD vertex AS node` / `YIELD edge
-          // AS e`) render the serialized node/edge value
-          case Expr.Ref(List(k)) if !isEdge && k.equalsIgnoreCase("vertex") =>
-            Some(renderNode(col("vid"), lkStrVid))
-          case Expr.Ref(List(k)) if isEdge && k.equalsIgnoreCase("edge") =>
-            Some(renderEdge(lit(tag), col("src"), col("dst"), col("rank"),
-              lkStrVid))
-          case Expr.Ref(List(c)) => Some(col(c))
-          case Expr.Ref(List(t, prop)) if t == tag => Some(col(prop))
-          case Expr.FnCall("id", List(Expr.Ref(List("vertex"))), _) if !isEdge =>
-            Some(col("vid"))
-          case Expr.FnCall("src", List(Expr.Ref(List("edge"))), _) if isEdge =>
-            Some(col("src"))
-          case Expr.FnCall("dst", List(Expr.Ref(List("edge"))), _) if isEdge =>
-            Some(col("dst"))
-          case Expr.FnCall("rank", List(Expr.Ref(List("edge"))), _) if isEdge =>
-            Some(col("rank"))
-          // properties(vertex|edge): all schema props in declaration
-          // order (Schema.feature LOOKUP yields)
-          case Expr.FnCall("properties", List(Expr.Ref(List(k))), _)
-              if (!isEdge && k.equalsIgnoreCase("vertex")) ||
-                (isEdge && k.equalsIgnoreCase("edge")) =>
-            val exclude =
-              if (isEdge) Set("src", "dst", "rank") else Set("vid")
-            val cs = tbl.columns.filterNot(exclude.contains)
-            Some(struct(cs.map(c0 => col(c0).as(c0)).toSeq: _*))
-          case _ => None
-        }
-        val filtered = where match {
-          case Some(w) => tblS.filter(Expr.compile(w, resolver))
-          case None => tblS
-        }
-        val out =
-          if (ys.isEmpty) filtered
-          else selectItems(filtered, ys, resolver)
-        if (dist) out.distinct() else out
+        yieldRows(tblS, where, ys, dist, lookupBinding(g, tbl, tag, isEdge).resolver)
       case f @ Fetch(_, vids, vidsRef, _, _) =>
         // vid list keeps multiplicity (dup vids yield dup rows unless
         // DISTINCT — FetchVertices TCK); bag semantics via join
@@ -1418,10 +1384,7 @@ object Gql {
         require(vars.size == 1, "GROUP BY sentence needs one $var source")
         val base = env.getOrElse(vars.head,
           throw new IllegalArgumentException(s"undefined $${vars.head}"))
-        val resolver: Expr.Resolver = {
-          case Expr.Param("var", _, List(c)) => Some(colByName(c))
-          case _ => None
-        }
+        val resolver = Binding.vars(base).resolver
         val keyCols = keys.zipWithIndex.map { case (k, i2) =>
           Expr.compile(k, resolver).as(s"__gk$i2") }
         val aggs = items.map { i =>
@@ -1474,12 +1437,8 @@ object Gql {
         def prefixed(v: String, df: DataFrame): DataFrame =
           df.columns.foldLeft(df)((d, c2) =>
             d.withColumnRenamed(c2, s"__jv_${v}_$c2"))
-        val jres: Expr.Resolver = {
-          case Expr.Param("var", v, List(c2)) =>
-            Some(colByName(s"__jv_${v}_$c2"))
-          case _ => None
-        }
         var joined = prefixed(base, frames.head._2)
+        def jres = Binding.vars(joined, v => s"__jv_${v}_").resolver
         joins.foreach { case (_, other, cond) =>
           // the condition must bind exactly the joined variables and
           // existing props (SemanticError parity)
@@ -1500,12 +1459,7 @@ object Gql {
           joined = joined.join(prefixed(other, frame(other)),
             Expr.compile(cond, jres), "inner")
         }
-        val filtered = where match {
-          case Some(w) => joined.filter(Expr.compile(w, jres))
-          case None => joined
-        }
-        val out = selectItems(filtered, items, jres)
-        if (distinct) out.distinct() else out
+        yieldRows(joined, where, items, distinct, jres)
       case YieldStmt(items, distinct, where) =>
         // standalone YIELD: constants, or projections over one $var
         var vars = Set.empty[String]
@@ -1530,18 +1484,17 @@ object Gql {
             throw new IllegalArgumentException(s"undefined $$$v"))
           case None => spark.range(1).drop("id")
         }
-        val resolver: Expr.Resolver = {
-          case Expr.Param("var", _, List(c)) => Some(colByName(c))
-          case _ => None
-        }
-        val filtered = where match {
-          case Some(w) => base.filter(Expr.compile(w, resolver))
-          case None => base
-        }
-        val out = selectItems(filtered, items, resolver)
-        if (distinct) out.distinct() else out
+        yieldRows(base, where, items, distinct, Binding.vars(base).resolver)
     }
   }
+
+  /** The vids a `$-.c` (the pipe `input`) or `$var.c` ref reads. */
+  private def refVids(ref: InRef, input: Option[DataFrame],
+                      env: Map[String, DataFrame], sentence: String): DataFrame =
+    ref.varName.fold(input.getOrElse(throw new IllegalArgumentException(
+        s"$sentence $$-. needs a pipe")))(v => env.getOrElse(v,
+        throw new IllegalArgumentException(s"undefined $$$v")))
+      .select(colByName(ref.colName).as("vid"))
 
   /** GET SUBGRAPH ... YIELD — step rows of rendered vertex/edge lists
     * (SubgraphExecutor.cpp; DataCollect kSubgraph). */
@@ -1550,15 +1503,8 @@ object Gql {
                             env: Map[String, DataFrame]): DataFrame = {
     val spark = g.session
     val SubgraphY(steps, seeds, seedsRef, specs0, yields, where) = sg
-    val seedFrame = seedsRef match {
-      case Some(InRef(None, c)) =>
-        input.getOrElse(throw new IllegalArgumentException(
-          "GET SUBGRAPH $-. needs a pipe")).select(colByName(c).as("vid"))
-      case Some(InRef(Some(v), c)) =>
-        env.getOrElse(v, throw new IllegalArgumentException(s"undefined $$$v"))
-          .select(colByName(c).as("vid"))
-      case None => seedsDf(spark, seeds)
-    }
+    val seedFrame = seedsRef.fold(seedsDf(spark, seeds))(
+      refVids(_, input, env, "GET SUBGRAPH"))
     // SubgraphValidator parity: ref-seeded src column must match the
     // space's vid type (`the srcs should be type of FIXED_STRING…`)
     if (seedsRef.isDefined) {
@@ -1605,25 +1551,19 @@ object Gql {
           frame = Traverse.appendVertices(frame, g.vertexTable(tag),
             vidCol = "dst", prefix = s"__dst_${tag}_")
         }
-        val resolver: Expr.Resolver = {
-          case Expr.Ref(List(et, p)) if allTypes.contains(et) =>
-            Some(p match {
-              case "_src" => when(col("etype") === et, col("ss"))
-              case "_dst" => when(col("etype") === et, col("sd"))
-              case "_rank" => when(col("etype") === et, col("rank"))
-              case prop => when(col("etype") === et, col(prop))
-            })
-          case Expr.Param("dst", _, List(tag, prop)) =>
-            Some(col(s"__dst_${tag}_$prop"))
-          case _ => None
-        }
-        frame.filter(Expr.compile(w, resolver))
+        // `<etype>._src` / `_dst` read the stored ends
+        val binding = Binding(
+          dst = Some(Binding.Vertex(col("dst"), dstTags.toSeq,
+            Binding.tagProps(g), Some("__dst_"))),
+          edge = Some(Binding.Edge(allTypes.map(Binding.edgeType(g, _)),
+            Some(col("etype")), col("ss"), col("sd"), col("rank"),
+            col("ss"), col("sd"))))
+        frame.filter(Expr.compile(w, binding.resolver))
           .select("src", "dst", "etype", "rank", "ss", "sd")
       case None => oriented0
     }
     val verts = Traverse.subgraph(seedFrame, oriented, steps, Out)
-    val strVid = seedFrame.schema("vid").dataType ==
-      org.apache.spark.sql.types.StringType
+    val strVid = isStr(seedFrame, "vid")
     val vRows = verts.groupBy("step")
       .agg(collect_list(renderNode(col("vid"), strVid)).as("__v"))
     lazy val eRows = {
@@ -1671,16 +1611,8 @@ object Gql {
           s"SemanticError: $miss not found in space.")
       }
     }
-    def seedSet(vids: Seq[Any], ref: Option[InRef]): DataFrame = ref match {
-      case Some(InRef(None, c)) =>
-        input.getOrElse(throw new IllegalArgumentException(
-          "FIND PATH $-. needs a pipe")).select(colByName(c).as("vid"))
-          .distinct()
-      case Some(InRef(Some(v), c)) =>
-        env.getOrElse(v, throw new IllegalArgumentException(s"undefined $$$v"))
-          .select(colByName(c).as("vid")).distinct()
-      case None => seedsDf(spark, vids)
-    }
+    def seedSet(vids: Seq[Any], ref: Option[InRef]): DataFrame =
+      ref.fold(seedsDf(spark, vids))(refVids(_, input, env, "FIND PATH").distinct())
     val (sSet, dSet) = (seedSet(srcs, srcRef), seedSet(dsts, dstRef))
     // WHERE = an edge filter: only edges whose props satisfy it are
     // walkable (FindPathValidator edge filter; path WHERE scenarios).
@@ -1689,14 +1621,9 @@ object Gql {
     val allowed: Option[DataFrame] = fpWhere.map { w =>
       val names = if (etypes == Seq("*")) g.edgeTypeNames else etypes
       val ep = g.edgesWithProps(names)
-      val resolver: Expr.Resolver = {
-        case Expr.Ref(List(et, prop))
-            if names.contains(et) && ep.columns.contains(prop) =>
-          Some(when(col("__etype") === et, col(prop)))
-        case Expr.Ref(List(et, _)) if names.contains(et) =>
-          Some(lit(null))
-        case _ => None
-      }
+      val resolver = Binding(edge = Some(Binding.stored(
+        names.map(Binding.edgeType(g, _)), Some(col("__etype")))),
+        frame = Some(ep), absentNull = true).resolver
       w match {
         // container literal in boolean position: truthiness false
         case Expr.ListLit(_) | Expr.SetLit(_) | Expr.MapLit(_) =>
@@ -1815,59 +1742,13 @@ object Gql {
     }
     rows = rows.filter(tags.map(t => col(s"__t_${t}___has").isNotNull)
       .reduce(_ || _))
-    val strVid = rows.schema("vid").dataType ==
-      org.apache.spark.sql.types.StringType
     // merged vertex prop view: first-listed tag wins a name collision
     // (same merge order as the reference's per-tag DataSet columns)
-    val propTags: Map[String, Seq[String]] = {
-      val m = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-      tags.foreach { t =>
-        g.vertexTable(t).columns.filter(_ != "vid").foreach { c2 =>
-          m(c2) = m.getOrElse(c2, Seq.empty) :+ t
-        }
-      }
-      m.toMap
-    }
-    def propCol(prop: String): Column = propTags.get(prop) match {
-      case Some(ts) => coalesce(ts.map(t => col(s"__t_${t}_$prop")): _*)
-      case None => lit(null)
-    }
-    def fields: Seq[(String, Column, org.apache.spark.sql.types.DataType)] =
-      propTags.toSeq.map { case (prop, ts) =>
-        (prop, propCol(prop),
-          g.vertexTable(ts.head).schema(prop).dataType)
-      }
-    val resolver: Expr.Resolver = {
-      case Expr.FnCall("id", List(Expr.Ref(List("vertex"))), _) =>
-        Some(col("vid"))
-      // edge-entity functions over a vertex fetch are a semantic
-      // reject, not missing surface (GetPropValidator)
-      case Expr.FnCall(fnE @ ("src" | "dst" | "rank" | "type"),
-          List(Expr.Ref(List("edge"))), _) =>
-        throw new IllegalArgumentException(
-          s"Invalid expression $fnE(EDGE) over a vertex fetch")
-      case Expr.Ref(List("vertex")) => Some(renderNode(col("vid"), strVid))
-      case Expr.FnCall("properties", List(Expr.Ref(List("vertex"))), _) =>
-        Some(renderPropsMap(fields))
-      case Expr.Attr(Expr.FnCall("properties",
-          List(Expr.Ref(List("vertex"))), _), prop) => Some(propCol(prop))
-      case Expr.FnCall("keys", List(Expr.Ref(List("vertex"))), _) =>
-        Some(presentKeys(fields))
-      case Expr.FnCall("tags" | "labels", List(Expr.Ref(List("vertex"))), _) =>
-        Some(array_compact(array(tags.sorted.map(t =>
-          when(col(s"__t_${t}___has").isNotNull, lit(t))): _*)))
-      case Expr.Ref(List(t, prop)) if tags.contains(t) =>
-        Some(col(s"__t_${t}_$prop"))
-      case Expr.Ref(List(c)) => Some(col(c))
-      case _ => None
-    }
-    val out =
-      if (ys.isEmpty)
-        rows.select(col("vid") +: tags.flatMap(t =>
-          g.vertexTable(t).columns.filter(_ != "vid").map(c2 =>
-            col(s"__t_${t}_$c2").as(s"$t.$c2"))): _*)
-      else selectItems(rows, ys, resolver)
-    if (dist) out.distinct() else out
+    val resolver = fetchBinding(rows, Binding.Vertex(col("vid"), tags,
+      Binding.tagProps(g), Some("__t_"))).resolver
+    yieldRows(if (ys.nonEmpty) rows else rows.select(col("vid") +: tags.flatMap(t =>
+        g.vertexTable(t).columns.filter(_ != "vid").map(c2 =>
+          col(s"__t_${t}_$c2").as(s"$t.$c2"))): _*), None, ys, dist, resolver)
   }
 
   /** Extend FETCH yields with hidden `__vid_<alias>` twins for every
@@ -1876,6 +1757,25 @@ object Gql {
   private def withVidTwins(ys: Seq[Item]): Seq[Item] =
     ys ++ ys.collect { case Item(Expr.Ref(List("vertex")), a2) =>
       Item(Expr.FnCall("id", List(Expr.Ref(List("vertex")))), s"__vid_$a2") }
+
+  private def isStr(df: DataFrame, c: String): Boolean =
+    df.schema(c).dataType == org.apache.spark.sql.types.StringType
+
+  /** A vertex fetch's binding over its `rows`. */
+  private def fetchBinding(rows: DataFrame, v: Binding.Vertex): Binding =
+    Binding(vertex = Some(v), strVid = isStr(rows, "vid"), rejectAbsent = true)
+
+  /** LOOKUP's binding over a tag or edge table `tbl`: properties(x) is
+    * the struct of its prop columns, in table order. */
+  private def lookupBinding(g: GraphCatalog, tbl: DataFrame, tag: String,
+                            isEdge: Boolean): Binding = {
+    val fields = tbl.schema.fields.toSeq
+    if (isEdge) Binding(edge = Some(Binding.stored(Seq(Binding.edgeType(g, tag,
+        Binding.edgeProps(fields))))), strVid = isStr(tbl, "src"), propsStruct = true)
+    else Binding(vertex = Some(Binding.Vertex(col("vid"), Seq(tag),
+        _ => fields.filter(_.name != "vid"))), strVid = isStr(tbl, "vid"),
+      propsStruct = true)
+  }
 
   private def execFetchOne(g: GraphCatalog, tag: String, f: Fetch,
                            bag: DataFrame): DataFrame = {
@@ -1888,38 +1788,8 @@ object Gql {
     val rows = fetchOnDriver(g, tag, bag).getOrElse(bag
       .join(g.allVertices.select(col("vid")), Seq("vid"), "left_semi")
       .join(g.vertexTable(tag), Seq("vid"), "left"))
-    val strVid = rows.schema("vid").dataType ==
-      org.apache.spark.sql.types.StringType
-    def fields: Seq[(String, Column, org.apache.spark.sql.types.DataType)] =
-      g.vertexTable(tag).schema.filter(_.name != "vid").map(sf =>
-        (sf.name, col(sf.name), sf.dataType))
-    val resolver: Expr.Resolver = {
-      case Expr.FnCall("id", List(Expr.Ref(List("vertex"))), _) =>
-        Some(col("vid"))
-      // edge-entity functions over a vertex fetch are a semantic
-      // reject, not missing surface (GetPropValidator)
-      case Expr.FnCall(fnE @ ("src" | "dst" | "rank" | "type"),
-          List(Expr.Ref(List("edge"))), _) =>
-        throw new IllegalArgumentException(
-          s"Invalid expression $fnE(EDGE) over a vertex fetch")
-      case Expr.Ref(List("vertex")) => Some(renderNode(col("vid"), strVid))
-      case Expr.FnCall("properties", List(Expr.Ref(List("vertex"))), _) =>
-        Some(renderPropsMap(fields))
-      case Expr.Attr(Expr.FnCall("properties",
-          List(Expr.Ref(List("vertex"))), _), prop) =>
-        Some(if (fields.exists(_._1 == prop)) col(prop) else lit(null))
-      case Expr.FnCall("keys", List(Expr.Ref(List("vertex"))), _) =>
-        Some(presentKeys(fields))
-      case Expr.FnCall("tags" | "labels", List(Expr.Ref(List("vertex"))), _) =>
-        Some(array(lit(tag)))
-      case Expr.Ref(List(c)) => Some(col(c))
-      case Expr.Ref(List(t, prop)) if t == tag => Some(col(prop))
-      case _ => None
-    }
-    val out =
-      if (ys.isEmpty) rows
-      else selectItems(rows, ys, resolver)
-    if (dist) out.distinct() else out
+    yieldRows(rows, None, ys, dist, fetchBinding(rows, Binding.Vertex(col("vid"),
+      Seq(tag), Binding.tagProps(g))).resolver)
   }
 
   /** [[execFetchOne]]'s rows read on the driver, the reference's
@@ -2019,44 +1889,9 @@ object Gql {
       pairs("__s") === e("src") && pairs("__d") === e("dst") &&
         pairs("__r") === e("rank"))
       .drop("__s", "__d", "__r")
-    val strVid = rows.schema("src").dataType ==
-      org.apache.spark.sql.types.StringType
-    def eFields: Seq[(String, Column, org.apache.spark.sql.types.DataType)] =
-      e.schema.filterNot(f => Set("src", "dst", "rank")(f.name))
-        .map(sf => (sf.name, col(sf.name), sf.dataType))
-    val resolver: Expr.Resolver = {
-      case Expr.FnCall("src", List(Expr.Ref(List("edge"))), _) => Some(col("src"))
-      case Expr.FnCall("dst", List(Expr.Ref(List("edge"))), _) => Some(col("dst"))
-      case Expr.FnCall("rank", List(Expr.Ref(List("edge"))), _) => Some(col("rank"))
-      case Expr.FnCall("type", List(Expr.Ref(List("edge"))), _) => Some(lit(etype))
-      case Expr.FnCall("properties", List(Expr.Ref(List("edge"))), _) =>
-        Some(renderPropsMap(eFields))
-      case Expr.Attr(Expr.FnCall("properties",
-          List(Expr.Ref(List("edge"))), _), prop) =>
-        Some(if (eFields.exists(_._1 == prop)) col(prop) else lit(null))
-      case Expr.FnCall("keys", List(Expr.Ref(List("edge"))), _) =>
-        Some(presentKeys(eFields))
-      // vertex-entity functions over an edge fetch are a semantic
-      // reject, not missing surface (GetPropValidator)
-      case Expr.FnCall(f @ ("id" | "tags" | "labels"),
-          List(Expr.Ref(List("vertex"))), _) =>
-        throw new IllegalArgumentException(
-          s"Invalid expression $f(VERTEX) over an edge fetch")
-      case Expr.FnCall("__edge_twin", _, _) =>
-        Some(struct(col("src").as("src"), col("dst").as("dst"),
-          col("rank").as("rank"), lit(etype).as("etype"),
-          renderPropsMap(eFields).as("props")))
-      case Expr.Ref(List("edge")) =>
-        Some(renderEdge(lit(etype), col("src"), col("dst"), col("rank"), strVid))
-      case Expr.Ref(List(t, "_src")) if t == etype => Some(col("src"))
-      case Expr.Ref(List(t, "_dst")) if t == etype => Some(col("dst"))
-      case Expr.Ref(List(t, "_rank")) if t == etype => Some(col("rank"))
-      case Expr.Ref(List(t, prop)) if t == etype => Some(col(prop))
-      case Expr.Ref(List(c)) => Some(col(c))
-      case _ => None
-    }
-    val out = if (ys.isEmpty) rows else selectItems(rows, ys, resolver)
-    if (dist) out.distinct() else out
+    yieldRows(rows, None, ys, dist, Binding(
+      edge = Some(Binding.stored(Seq(Binding.edgeType(g, etype)))),
+      strVid = isStr(rows, "src"), rejectAbsent = true).resolver)
   }
 
   /** Typed-or-star edge view WITHOUT property columns (hop joins,
@@ -2109,9 +1944,6 @@ object Gql {
       lit(" @"), rank.cast("string"), lit("]"))
   }
 
-  /** Compile+select items; aggregate-bearing items trigger the
-    * reference's implicit grouping (AggregateExecutor.cpp:12-99):
-    * aggregate-free items become the group keys. */
   /** LOOKUP ... WHERE ES_QUERY(index, "query") — the reference's
     * FulltextIndexScan (LookupValidator routes a fulltext WHERE to
     * its ES adapter; tests/tck/features/fulltext_index/). Native: the
@@ -2161,7 +1993,7 @@ object Gql {
         val (vid, ps) = docsSeq(d)
         Row.fromSeq((vid +: ps.toSeq) :+ s)
       }
-      finishEsLookup(spark.createDataFrame(rows.asJava, schemaT),
+      finishEsLookup(g, spark.createDataFrame(rows.asJava, schemaT),
         tag, isEdge = false, ys, dist)
     } else {
       val docsSeq = sc.edgeRows(schema).toVector
@@ -2183,48 +2015,32 @@ object Gql {
           (if (keyRank.isEmpty) ps.toSeq
            else rank.asInstanceOf[Any] +: ps.toSeq)) :+ s)
       }
-      finishEsLookup(spark.createDataFrame(rows.asJava, schemaT),
+      finishEsLookup(g, spark.createDataFrame(rows.asJava, schemaT),
         tag, isEdge = true, ys, dist)
     }
   }
 
-  private def finishEsLookup(frame: DataFrame, tag: String, isEdge: Boolean,
+  private def finishEsLookup(g: GraphCatalog, frame: DataFrame, tag: String,
+                             isEdge: Boolean,
                              ys: Seq[Item], dist: Boolean): DataFrame = {
-    val strVid = frame.schema(if (isEdge) "src" else "vid")
-      .dataType == org.apache.spark.sql.types.StringType
-    val resolver: Expr.Resolver = {
-      case Expr.FnCall("score", Nil, _) => Some(col("__ft_score"))
-      case Expr.Ref(List(k)) if !isEdge && k.equalsIgnoreCase("vertex") =>
-        Some(renderNode(col("vid"), strVid))
-      case Expr.Ref(List(k)) if isEdge && k.equalsIgnoreCase("edge") =>
-        Some(renderEdge(lit(tag), col("src"), col("dst"), col("rank"),
-          strVid))
-      case Expr.Ref(List(c)) => Some(col(c))
-      case Expr.Ref(List(t, prop)) if t == tag => Some(col(prop))
-      case Expr.FnCall("id", List(Expr.Ref(List("vertex"))), _) if !isEdge =>
-        Some(col("vid"))
-      case Expr.FnCall("src", List(Expr.Ref(List("edge"))), _) if isEdge =>
-        Some(col("src"))
-      case Expr.FnCall("dst", List(Expr.Ref(List("edge"))), _) if isEdge =>
-        Some(col("dst"))
-      case Expr.FnCall("rank", List(Expr.Ref(List("edge"))), _) if isEdge =>
-        Some(col("rank"))
-      case Expr.FnCall("properties", List(Expr.Ref(List(k))), _)
-          if (!isEdge && k.equalsIgnoreCase("vertex")) ||
-            (isEdge && k.equalsIgnoreCase("edge")) =>
-        val exclude =
-          if (isEdge) Set("src", "dst", "rank", "__ft_score")
-          else Set("vid", "__ft_score")
-        val cs = frame.columns.filterNot(exclude.contains)
-        Some(struct(cs.map(c0 => col(c0).as(c0)).toSeq: _*))
-      case _ => None
-    }
-    val out =
-      if (ys.isEmpty) frame.drop("__ft_score")
-      else selectItems(frame, ys, resolver)
-    if (dist) out.distinct() else out
+    val resolver = lookupBinding(g, frame.drop("__ft_score"), tag, isEdge)
+      .copy(score = Some(col("__ft_score"))).resolver
+    yieldRows(if (ys.isEmpty) frame.drop("__ft_score") else frame, None, ys,
+      dist, resolver)
   }
 
+  /** `df` filtered by `where`, then its `items` (every column when there
+    * are none), made DISTINCT when asked. */
+  private def yieldRows(df: DataFrame, where: Option[Expr.E], items: Seq[Item],
+                        distinct: Boolean, resolver: Expr.Resolver): DataFrame = {
+    val filtered = where.fold(df)(w => df.filter(Expr.compile(w, resolver)))
+    val out = if (items.isEmpty) filtered else selectItems(filtered, items, resolver)
+    if (distinct) out.distinct() else out
+  }
+
+  /** Compile+select items; aggregate-bearing items trigger the
+    * reference's implicit grouping (AggregateExecutor.cpp:12-99):
+    * aggregate-free items become the group keys. */
   private[nql] def selectItems(df: DataFrame, items0: Seq[Item],
                           resolver: Expr.Resolver): DataFrame = {
     // `$-.*` / `$var.*` expand to every visible input column, aliased
@@ -2250,11 +2066,6 @@ object Gql {
     }
   }
 
-  /** GO execution against a prepared seed frame (literal set for a
-    * top-level sentence; the previous pipe stage's column, with bag
-    * multiplicity, for a chained `| GO FROM $-.col`). `input` carries
-    * the full source frame when seeds came from a pipe/$var, so items
-    * can reference its columns ($-.col / $var.col yields). */
   /** Inside an aggregate-bearing item, naked column subtrees outside
     * any aggregate call (e.g. `{name1: m.p.name, name2: collect(..)}`,
     * Agg.feature collect-in-map) compile as `first(...)` — the
@@ -2364,6 +2175,11 @@ object Gql {
       java.util.Arrays.asList(vids.collect().distinct: _*), vids.schema)
   }
 
+  /** GO execution against a prepared seed frame (literal set for a
+    * top-level sentence; the previous pipe stage's column, with bag
+    * multiplicity, for a chained `| GO FROM $-.col`). `input` carries
+    * the full source frame when seeds came from a pipe/$var, so items
+    * can reference its columns ($-.col / $var.col yields). */
   private def execGo(g: GraphCatalog, goAst: Go, seedsDF: DataFrame,
                      input: Option[(DataFrame, String)]): DataFrame = {
     val Go(m0, n, _, _, _, rawEtypes, dir, where, yieldsOpt, dist, stepCaps) = goAst
@@ -2399,13 +2215,13 @@ object Gql {
       case Expr.Param("src", _, List(tag, _)) => srcTags += tag
       // whole-vertex prop functions need every tag joined (the
       // reference merges all tag prop maps: GetPropProcessor)
-      case Expr.FnCall("properties" | "tags" | "labels",
+      case Expr.FnCall("properties" | "keys" | "tags" | "labels",
           List(Expr.Param("dst", _, Nil)), _) => dstTags ++= g.tagNames
-      case Expr.FnCall("properties" | "tags" | "labels",
+      case Expr.FnCall("properties" | "keys" | "tags" | "labels",
           List(Expr.Param("src", _, Nil)), _) => srcTags ++= g.tagNames
       case Expr.Param("dst" | "src", _, Nil) => needsEdge = true
       case Expr.FnCall("src" | "dst" | "rank" | "type" | "typeid" |
-          "properties", List(Expr.Ref(List("edge"))), _) => needsEdge = true
+          "properties" | "keys", List(Expr.Ref(List("edge"))), _) => needsEdge = true
       case Expr.Param("input" | "var", _, _) =>
         require(input.isDefined, "$-/$var ref needs a pipe or $var source")
         inputRefs = true
@@ -2418,21 +2234,12 @@ object Gql {
     if (simple) {
       // ExpandAll frontier semantics: deduped (origin,vid) rows
       val base = Traverse.go(seedsDF, simpleEdges(g, rawEtypes), m, nEff, dir)
-      val resolver: Expr.Resolver = {
-        case Expr.Ref(List(c)) if frontierCols(c) => Some(col(c))
-        case _ => None
-      }
-      val filtered = where match {
-        case Some(w) => base.filter(Expr.compile(w, resolver))
-        case None => base
-      }
-      val out = selectItems(filtered, items, resolver)
-      finish(if (dist) out.distinct() else out)
+      // the frontier's columns are origin, vid and step: bare names
+      finish(yieldRows(base, where, items, dist, Expr.noResolver))
     } else {
       // per-edge yield rows with property columns
       val eframe = g.edgesWithProps(etypes)
-      val strVid = eframe.schema("src").dataType ==
-        org.apache.spark.sql.types.StringType
+      val strVid = isStr(eframe, "src")
       var out =
         if (!inputRefs) {
           val base = Traverse.goYield(
@@ -2474,13 +2281,9 @@ object Gql {
           g.vertexTable(tag).withColumn("__has", lit(true)),
           vidCol = "src", prefix = s"__src_${tag}_")
       }
-      def guarded(et: String, c: Column): Column =
-        if (single) c else when(col("__etype") === et, c)
-      // deterministic integer edge-type id (the reference's meta-
-      // assigned EdgeType; any stable int — goldens regex-match it)
-      def typeId(et: String): Int = g.edgeTypeNames.indexOf(et) + 2
-      // whole-edge values print the STORED direction (Edge.cpp
-      // toString): under REVERSELY the stored src is the traversal dst
+      // whole-edge values and src(edge)/dst(edge) print the STORED
+      // direction (Edge.cpp toString): under REVERSELY the stored src is
+      // the traversal dst
       val (storedSrc, storedDst) = dir match {
         case Traverse.In => (col("dst"), col("src"))
         case Traverse.Both =>
@@ -2488,136 +2291,19 @@ object Gql {
            when(col("__rev"), col("src")).otherwise(col("dst")))
         case _ => (col("src"), col("dst"))
       }
-      val etypeName: Column =
-        if (single) lit(etypes.head) else col("__etype")
-      // per-edge-type prop fields (props of OTHER types are NULL on a
-      // row — edgesWithProps unions by name)
-      def edgeFields(et: String) =
-        g.edgesByType(et).schema
-          .filter(f2 => !Set("src", "dst", "rank").contains(f2.name))
-          .map(f2 => (f2.name, guarded(et, col(f2.name)), f2.dataType))
-      def edgePropCol(prop: String): Column = {
-        val having = etypes.filter(et =>
-          g.edgesByType(et).columns.contains(prop))
-        if (having.isEmpty) lit(null)
-        else coalesce(having.map(et => guarded(et, col(prop))): _*)
-      }
-      def vertexPropCol(side: String, joined: Set[String],
-                        prop: String): Column = {
-        val having = joined.toSeq.sorted.filter(t =>
-          g.vertexTable(t).columns.contains(prop))
-        if (having.isEmpty) lit(null)
-        else coalesce(having.map(t => col(s"__${side}_${t}_$prop")): _*)
-      }
-      def vertexFields(side: String, joined: Set[String]) = {
-        val m = scala.collection.mutable.LinkedHashMap
-          .empty[String, org.apache.spark.sql.types.DataType]
-        joined.toSeq.sorted.foreach { t =>
-          g.vertexTable(t).schema.filter(_.name != "vid").foreach { f2 =>
-            if (!m.contains(f2.name)) m(f2.name) = f2.dataType
-          }
-        }
-        m.toSeq.map { case (n, dt) =>
-          (n, vertexPropCol(side, joined, n), dt) }
-      }
-      def tagList(side: String, joined: Set[String]): Column =
-        array_compact(array(joined.toSeq.sorted.map(t =>
-          when(col(s"__${side}_${t}___has").isNotNull, lit(t))): _*))
-      def propType(x: Expr.E) = x match {
-        case Expr.Param("dst" | "src", _, List(tag, prop))
-            if g.tagNames.contains(tag) =>
-          g.vertexTable(tag).schema.find(_.name == prop).map(_.dataType)
-        case Expr.Ref(List(et, p)) if etypes.contains(et) &&
-            !p.startsWith("_") =>
-          g.edgesByType(et).schema.find(_.name == p).map(_.dataType)
-        case _ => None
-      }
-      val resolver: Expr.Resolver = {
-        case x if Expr.crossFamilyOrder(x, propType) =>
-          Some(lit(null).cast("boolean"))
-        case Expr.Ref(List("origin")) => Some(col("origin"))
-        // GO context: `vid` is the hop destination (GO default output)
-        case Expr.Ref(List("vid")) => Some(col("dst"))
-        case Expr.Ref(List("step")) => Some(col("step"))
-        // entity functions over the current edge (FunctionManager src/
-        // dst/rank/type; type() returns the NAME, typeid() the int id)
-        case Expr.FnCall("src", List(Expr.Ref(List("edge"))), _) =>
-          Some(storedSrc)
-        case Expr.FnCall("dst", List(Expr.Ref(List("edge"))), _) =>
-          Some(storedDst)
-        case Expr.FnCall("rank", List(Expr.Ref(List("edge"))), _) =>
-          Some(col("rank"))
-        case Expr.FnCall("type", List(Expr.Ref(List("edge"))), _) =>
-          Some(etypeName)
-        case Expr.FnCall("typeid", List(Expr.Ref(List("edge"))), _) =>
-          Some(if (single) lit(typeId(etypes.head))
-               else etypes.tail.foldLeft(
-                 when(col("__etype") === etypes.head, typeId(etypes.head))) {
-                   (acc, et) => acc.when(col("__etype") === et, typeId(et)) })
-        case Expr.Attr(Expr.FnCall("properties",
-            List(Expr.Ref(List("edge"))), _), prop) =>
-          Some(edgePropCol(prop))
-        case Expr.FnCall("properties", List(Expr.Ref(List("edge"))), _) =>
-          Some(if (single) renderPropsMap(edgeFields(etypes.head))
-               else etypes.tail.foldLeft(
-                 when(col("__etype") === etypes.head,
-                   renderPropsMap(edgeFields(etypes.head)))) { (acc, et) =>
-                     acc.when(col("__etype") === et,
-                       renderPropsMap(edgeFields(et))) })
-        case Expr.Attr(Expr.FnCall("properties",
-            List(Expr.Param("dst", _, Nil)), _), prop) =>
-          Some(vertexPropCol("dst", dstTags, prop))
-        case Expr.Attr(Expr.FnCall("properties",
-            List(Expr.Param("src", _, Nil)), _), prop) =>
-          Some(vertexPropCol("src", srcTags, prop))
-        case Expr.FnCall("properties", List(Expr.Param("dst", _, Nil)), _) =>
-          Some(renderPropsMap(vertexFields("dst", dstTags)))
-        case Expr.FnCall("properties", List(Expr.Param("src", _, Nil)), _) =>
-          Some(renderPropsMap(vertexFields("src", srcTags)))
-        case Expr.FnCall("tags" | "labels",
-            List(Expr.Param("dst", _, Nil)), _) =>
-          Some(tagList("dst", dstTags))
-        case Expr.FnCall("tags" | "labels",
-            List(Expr.Param("src", _, Nil)), _) =>
-          Some(tagList("src", srcTags))
-        case Expr.Ref(List(et, p)) if etypes.contains(et) =>
-          Some(p match {
-            case "_dst" => guarded(et, col("dst"))
-            case "_src" => guarded(et, col("src"))
-            case "_rank" => guarded(et, col("rank"))
-            case "_type" => guarded(et, lit(typeId(et)))
-            case prop => guarded(et, col(prop))
-          })
-        case Expr.Param("dst", _, List(tag, prop)) =>
-          Some(col(s"__dst_${tag}_$prop"))
-        case Expr.Param("src", _, List(tag, prop)) =>
-          Some(col(s"__src_${tag}_$prop"))
-        case Expr.FnCall("id", List(Expr.Param("dst", _, Nil)), _) =>
-          Some(col("dst"))
-        case Expr.FnCall("id", List(Expr.Param("src", _, Nil)), _) =>
-          Some(col("src"))
-        // whole-value yields, reference serialization forms; goYield
-        // orients columns to traversal direction, but a whole-edge
-        // value prints the STORED direction (Edge.cpp toString) — under
-        // REVERSELY the stored src is the traversal dst
-        case Expr.Ref(List("edge")) =>
-          val (es, ed) = dir match {
-            case Traverse.In => (col("dst"), col("src"))
-            case Traverse.Both =>
-              (when(col("__rev"), col("dst")).otherwise(col("src")),
-               when(col("__rev"), col("src")).otherwise(col("dst")))
-            case _ => (col("src"), col("dst"))
-          }
-          Some(renderEdge(
-            if (single) lit(etypes.head) else col("__etype"),
-            es, ed, col("rank"), strVid))
-        case Expr.Param("dst", _, Nil) => Some(renderNode(col("dst"), strVid))
-        case Expr.Param("src", _, Nil) => Some(renderNode(col("src"), strVid))
-        // source-frame refs from a pipe/$var seed (join-back columns)
-        case Expr.Param("input" | "var", _, List(c)) if inputRefs =>
-          Some(colByName(s"__in_$c"))
-        case _ => None
-      }
+      def side(vid: String, tags: Set[String]) =
+        Some(Binding.Vertex(col(vid), tags.toSeq.sorted, Binding.tagProps(g),
+          Some(s"__${vid}_")))
+      // GO context: `vid` is the hop destination (GO default output)
+      val binding = Binding(src = side("src", srcTags), dst = side("dst", dstTags),
+        edge = Some(Binding.Edge(etypes.map(Binding.edgeType(g, _)),
+          if (single) None else Some(col("__etype")), col("src"), col("dst"),
+          col("rank"), storedSrc, storedDst)),
+        names = Map("origin" -> col("origin"), "vid" -> col("dst"),
+          "step" -> col("step"), "__raw_etype" -> col("__etype")),
+        input = (k, _) => Option.when(inputRefs && (k == "input" || k == "var"))("__in_"),
+        frame = Some(out), strVid = strVid, familyOrder = true)
+      val resolver = binding.resolver
       // Multi-edge EMPTY semantics: a prop ref of edge type A evaluated
       // on a type-B row is __EMPTY__ in the reference — equality against
       // it is DEFINITE (`!=` true, `==` false), not null-propagating
@@ -2644,16 +2330,12 @@ object Gql {
           }
         case other => other
       }
-      val fullResolver: Expr.Resolver = {
-        case Expr.Ref(List("__raw_etype")) => Some(col("__etype"))
-        case other => resolver(other)
-      }
       val filtered = where match {
         // a container literal is not a boolean — truthiness filters
         // everything (BAD_TYPE; GO.feature `WHERE [like._dst == ...]`)
         case Some(Expr.ListLit(_) | Expr.SetLit(_) | Expr.MapLit(_)) =>
           out.limit(0)
-        case Some(w) => out.filter(Expr.compile(rwEmpty(w), fullResolver))
+        case Some(w) => out.filter(Expr.compile(rwEmpty(w), resolver))
         case None => out
       }
       // `$-.*` / `$var.*` in a piped GO expands to the SOURCE frame's
@@ -2667,12 +2349,15 @@ object Gql {
             .map(c2 => Item(Expr.Param(k, nm, List(c2)), i.alias))
         case _ => Seq(i)
       } }
-      val sel = selectItems(filtered, items2, fullResolver)
+      val sel = selectItems(filtered, items2, resolver)
       finish(if (dist) sel.distinct() else sel)
     }
   }
 
-  /** Pipe application over the previous stage's DataFrame ($- input). */
+  /** Pipe application over the previous stage's DataFrame ($- input):
+    * `$-.col` and bare `col` both address its columns, dotted forms
+    * ($-.like._dst) the columns whose NAME holds the dot (the previous
+    * stage's default aliases), see [[Binding.pipe]]. */
   private def applyPipe(g: GraphCatalog, df: DataFrame, pipe: Pipe,
                         env: Map[String, DataFrame] = Map.empty): DataFrame = pipe match {
     case PFind(fp: FindPath) => execFindPath(g, fp, Some(df), env)
@@ -2701,12 +2386,12 @@ object Gql {
       if (off == 0) df.limit(nn)
       else df.offset(off).limit(nn)
     case POrderBy(keys, tiebreak) =>
-      val resolver = pipeResolverFor(df)
+      val resolver = Binding.pipe(df).resolver
       // NULL sorts as the largest value (OrderByExecutor comparator);
       // a path column sorts by its structured twin: src vertex, then
       // the (dst, type, rank) step sequence (Path.h:211 operator<)
       df.orderBy(keys.map { case (e, desc) =>
-        val c = pathTwin(df, e) match {
+        val c = Binding.pipe(df).twin("__path_", e).map(col) match {
           // Step::operator< keys on the TRAVERSAL dst (the path's next
           // vertex), then edge type, then rank (Path.h:86)
           case Some(h) => struct(element_at(h("vids"), 1),
@@ -2727,7 +2412,7 @@ object Gql {
       // may not reach through to the input's columns
       if (Expr.hasAgg(e)) throw new IllegalArgumentException(
         "SemanticError: can't use aggregating function in unwind clause")
-      val resolver = pipeResolverFor(df)
+      val resolver = Binding.pipe(df).resolver
       val c = Expr.compile(e, resolver)
       val unwound = df.select(c).schema.head.dataType match {
         case _: org.apache.spark.sql.types.ArrayType =>
@@ -2736,19 +2421,13 @@ object Gql {
       }
       unwound.select(col(alias))
     case PYield(items, distinct, where) =>
-      val resolver = pipeResolverFor(df)
-      val filtered = where match {
-        case Some(w) => df.filter(Expr.compile(w, resolver))
-        case None => df
-      }
-      val out = selectItems(filtered, items, resolver)
-      if (distinct) out.distinct() else out
+      yieldRows(df, where, items, distinct, Binding.pipe(df).resolver)
     case PGroup(keys, items, distinct) =>
       // aggregate-free items evaluate once per group (`first`): the
       // reference emits one row per key group regardless. Group keys
       // get hidden aliases so an item alias matching an input column
       // name is never ambiguous in the output select.
-      val resolver = pipeResolverFor(df)
+      val resolver = Binding.pipe(df).resolver
       // a yield item must be a group key or aggregate-bearing — the
       // reference's GroupByValidator rejects a dangling column
       // (Agg.feature: GROUP BY $-.age YIELD ..., $-.dst AS dst)
@@ -2791,131 +2470,5 @@ object Gql {
       val out = df.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
         .select(items.map(i => colByName(i.alias)): _*)
       if (distinct) out.distinct() else out
-  }
-
-  /** The hidden structured twin of a `$-.p` path reference, when the
-    * input frame carries one. */
-  private def pathTwin(df: DataFrame, e: Expr.E): Option[Column] = {
-    val name = e match {
-      case Expr.Param("input", _, List(c)) => Some(c)
-      case Expr.Ref(List(c)) => Some(c)
-      case _ => None
-    }
-    name.filter(c => df.columns.contains(s"__path_$c"))
-      .map(c => col(s"__path_$c"))
-  }
-
-  /** In pipes, `$-.col` and bare `col` both address the input frame;
-    * dotted forms ($-.like._dst) address columns whose NAME contains
-    * the dot (the default aliases of the previous stage). */
-  private val pipeResolver: Expr.Resolver = {
-    case Expr.Param("input", _, parts) if parts.nonEmpty =>
-      Some(colByName(parts.mkString(".")))
-    case Expr.Ref(parts) if parts.nonEmpty =>
-      Some(colByName(parts.mkString(".")))
-    case _ => None
-  }
-
-  /** pipeResolver plus path-aware functions over `$-.p` columns that
-    * carry a `__path_p` structured twin (length/nodes/relationships/
-    * startNode/endNode — FunctionManager.cpp path registry). */
-  private def pipeResolverFor(df: DataFrame): Expr.Resolver = {
-    val cols = df.columns.toSet
-    def twin(e: Expr.E): Option[Column] = e match {
-      case Expr.Param("input", _, List(c)) if cols(s"__path_$c") =>
-        Some(col(s"__path_$c"))
-      case Expr.Ref(List(c)) if cols(s"__path_$c") => Some(col(s"__path_$c"))
-      case _ => None
-    }
-    def strVidOf(name: String): Boolean = {
-      val t = df.schema(name).dataType
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      t("vids").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
-        .elementType == org.apache.spark.sql.types.StringType
-    }
-    def twinName(e: Expr.E): Option[String] = e match {
-      case Expr.Param("input", _, List(c)) if cols(s"__path_$c") =>
-        Some(s"__path_$c")
-      case Expr.Ref(List(c)) if cols(s"__path_$c") => Some(s"__path_$c")
-      case _ => None
-    }
-    // whole-edge column twins (FETCH ... YIELD edge AS e → __edge_e)
-    def etwinName(e: Expr.E): Option[String] = e match {
-      case Expr.Param("input", _, List(c)) if cols(s"__edge_$c") =>
-        Some(s"__edge_$c")
-      case Expr.Ref(List(c)) if cols(s"__edge_$c") => Some(s"__edge_$c")
-      case _ => None
-    }
-    def etwin(e: Expr.E): Option[Column] = etwinName(e).map(col)
-    def strVidOfEdge(name: String): Boolean =
-      df.schema(name).dataType
-        .asInstanceOf[org.apache.spark.sql.types.StructType]("src")
-        .dataType == org.apache.spark.sql.types.StringType
-    def nodeR(v: Column, strVid: Boolean): Column =
-      if (strVid) concat(lit("(\""), v, lit("\")"))
-      else concat(lit("("), v.cast("string"), lit(")"))
-
-    {
-      // id() over a rendered whole-vertex column: hidden vid twin
-      case Expr.FnCall("id", List(Expr.Param("input", _, List(c2))), _)
-          if cols(s"__vid_$c2") => Some(col(s"__vid_$c2"))
-      case Expr.FnCall("id", List(Expr.Ref(List(c2))), _)
-          if cols(s"__vid_$c2") => Some(col(s"__vid_$c2"))
-      case Expr.FnCall("length", List(arg), _) if twin(arg).isDefined =>
-        Some(size(twin(arg).get("steps")).cast("long"))
-      case Expr.FnCall("nodes", List(arg), _) if twin(arg).isDefined =>
-        val s = strVidOf(twinName(arg).get)
-        Some(transform(twin(arg).get("vids"), v => nodeR(v, s)))
-      // id() over a path endpoint is the raw vid, not the rendered
-      // node (yield/join.feature `id(startNode($-.p)) AS src`)
-      case Expr.FnCall("id",
-          List(Expr.FnCall("startnode", List(arg), _)), _)
-          if twin(arg).isDefined =>
-        Some(element_at(twin(arg).get("vids"), 1))
-      case Expr.FnCall("id",
-          List(Expr.FnCall("endnode", List(arg), _)), _)
-          if twin(arg).isDefined =>
-        Some(element_at(twin(arg).get("vids"), -1))
-      case Expr.FnCall("startnode", List(arg), _) if twin(arg).isDefined =>
-        val s = strVidOf(twinName(arg).get)
-        Some(nodeR(element_at(twin(arg).get("vids"), 1), s))
-      case Expr.FnCall("endnode", List(arg), _) if twin(arg).isDefined =>
-        val s = strVidOf(twinName(arg).get)
-        Some(nodeR(element_at(twin(arg).get("vids"), -1), s))
-      case Expr.FnCall("relationships", List(arg), _) if twin(arg).isDefined =>
-        val s = strVidOf(twinName(arg).get)
-        Some(transform(twin(arg).get("steps"), st =>
-          renderEdge(st("t"), st("s"), st("d"), st("r"), s)))
-      // whole-edge columns (FETCH ... YIELD edge AS e) carry an
-      // `__edge_<alias>` twin: startNode/endNode render the endpoint
-      // nodes, properties() the pre-rendered prop map
-      case Expr.FnCall("startnode", List(arg), _) if etwin(arg).isDefined =>
-        Some(nodeR(etwin(arg).get("src"), strVidOfEdge(etwinName(arg).get)))
-      case Expr.FnCall("endnode", List(arg), _) if etwin(arg).isDefined =>
-        Some(nodeR(etwin(arg).get("dst"), strVidOfEdge(etwinName(arg).get)))
-      case Expr.FnCall("properties", List(arg), _) if etwin(arg).isDefined =>
-        Some(etwin(arg).get("props"))
-      case Expr.FnCall("type", List(arg), _) if etwin(arg).isDefined =>
-        Some(etwin(arg).get("etype"))
-      case Expr.FnCall("src", List(arg), _) if etwin(arg).isDefined =>
-        Some(etwin(arg).get("src"))
-      case Expr.FnCall("dst", List(arg), _) if etwin(arg).isDefined =>
-        Some(etwin(arg).get("dst"))
-      case Expr.FnCall("rank", List(arg), _) if etwin(arg).isDefined =>
-        Some(etwin(arg).get("rank"))
-      case Expr.Param("input", _, parts) if parts.nonEmpty =>
-        // a literally-dotted column name (`like._dst`) wins; when only
-        // the head exists, descend struct fields (`$-.a.b` over a
-        // map-literal column — PipeAndVariable.feature)
-        if (cols(parts.mkString("."))) Some(colByName(parts.mkString(".")))
-        else parts match {
-          case a :: rest if rest.nonEmpty && cols(a) =>
-            Some(rest.foldLeft(colByName(a))(_.getField(_)))
-          case _ => Some(colByName(parts.mkString(".")))
-        }
-      case Expr.Ref(parts) if parts.nonEmpty =>
-        Some(colByName(parts.mkString(".")))
-      case _ => None
-    }
   }
 }

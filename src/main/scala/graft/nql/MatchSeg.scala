@@ -373,10 +373,10 @@ object MatchSeg {
       }
       if (!more) go = false
       else {
-        val saved = p.ts
+        val saved = p.mark
         try { rels += parseRel(p); nodes += parseNode(p) }
         catch {
-          case scala.util.control.NonFatal(_) => p.ts = saved; go = false
+          case scala.util.control.NonFatal(_) => p.reset(saved); go = false
         }
       }
     }

@@ -70,6 +70,36 @@ class GqlSpec extends SparkSpec {
     assert(pf.vidsRef.contains(InRef(None, "id")))
   }
 
+  test("parse time is linear in a statement's literal lists") {
+    def secs(q: String): Double = {
+      val t0 = System.nanoTime(); Gql.parse(q); (System.nanoTime() - t0) / 1e9
+    }
+    val fetch = "FETCH PROP ON customer " +
+      (1 to 20000).map(i => "\"c:" + i + "\"").mkString(", ")
+    val Fetch(_, vids, _, _, _) = Gql.parse(fetch): @unchecked
+    assert(vids.size == 20000)
+    assert(secs(fetch) < 5.0)
+    val in = "YIELD 3 IN [" + (1 to 5000).mkString(", ") + "] AS r"
+    assert(secs(in) < 5.0)
+    // the glue set still reads the right token after a long list
+    intercept[IllegalArgumentException](Gql.parse(
+      "YIELD [" + (1 to 5000).mkString(", ") + "] AS l, 1--1 AS r"))
+  }
+
+  test("keys() lists the non-null props of any bound vertex or edge") {
+    val g = GqlEntitySpec.str(spark)
+    def ans(q: String) = GqlEntitySpec.answer(g, q)
+    assert(ans("""GO FROM "a" OVER like YIELD keys(edge) AS k, keys($$) AS d, keys($^) AS s""") ==
+      "k:array<string>, d:array<string>, s:array<string> | " +
+        "([likeness], [age, name], [age, name]) ([likeness], [name], [age, name])")
+    assert(ans("""GO FROM "a" OVER like, serve YIELD keys(edge) AS k""") ==
+      "k:array<string> | ([likeness]) ([likeness]) ([start_year])")
+    assert(ans("""LOOKUP ON player YIELD keys(vertex) AS k""") ==
+      "k:array<string> | ([age, name]) ([age, name]) ([name])")
+    assert(ans("""LOOKUP ON like YIELD keys(edge) AS k""") ==
+      "k:array<string> | ([likeness]) ([likeness]) ([likeness])")
+  }
+
   test("FIND PATH honors OVER list, direction, NOLOOP, UPTO") {
     val FindPath(m1, srcs, dsts, ets, dir, k, _, _, _, _) =
       Gql.parse("""FIND SHORTEST PATH FROM "a" TO "b", "c" OVER like REVERSELY UPTO 4 STEPS"""): @unchecked
