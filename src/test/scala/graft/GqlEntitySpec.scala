@@ -8,8 +8,10 @@ import org.apache.spark.sql.SparkSession
   * values, id src dst rank type typeid, properties(x) and
   * properties(x).p, keys, tags/labels, alias.prop, `$^`/`$$` props,
   * `$-.c`/`$var.c`, score(), and the hidden `__vid_`/`__edge_`/`__path_`
-  * twins) in every nGQL sentence that yields or filters, over a string-
-  * vid MapCatalog and an int-vid ScenarioCatalog. Each answer is the
+  * twins) in every nGQL sentence that yields or filters, and the same
+  * functions over MATCH's named vertex and edge variables in RETURN,
+  * WITH and WHERE, over a string-vid MapCatalog and an int-vid
+  * ScenarioCatalog. Each answer is the
   * output schema (name:type) and the sorted rows, or the reject text;
   * a Spark analysis failure is pinned by its error condition only. */
 class GqlEntitySpec extends SparkSpec {
@@ -334,7 +336,80 @@ object GqlEntitySpec {
       """GO FROM "a" OVER like YIELD like._dst AS d | UNWIND [$-.d, "x"] AS u""" ->
         """u:string | (b) (c) (x) (x)""",
       """$a = GO FROM "a" OVER like YIELD like._dst AS d, like.likeness AS l; $b = GO FROM "b" OVER like YIELD like._src AS s, like._dst AS d2; YIELD $a.d AS d, $b.d2 AS d2 FROM $a INNER JOIN $b ON $a.d == $b.s""" ->
-        """d:string, d2:string | (b, c)"""))
+        """d:string, d2:string | (b, c)""")),
+    ("MATCH vertices: whole values, id, properties, keys, labels, tag access", "str", Seq(
+      """MATCH (v:player) RETURN v AS v, id(v) AS i, v.player.name AS n, v.player.age AS a""" ->
+        """v:string, i:string, n:string, a:bigint | (("a"), a, Ann, 30) (("b"), b, Bob, 40) (("c"), c, Cy, null)""",
+      """MATCH (v:player) WHERE v.player.age > 35 RETURN v AS v""" ->
+        """v:string | (("b"))""",
+      """MATCH (v:player) RETURN properties(v) AS p, properties(v).name AS pn, properties(v).age AS pa, properties(v).nope AS px""" ->
+        """p:string, pn:string, pa:bigint, px:void | ({age: 30, name: "Ann"}, Ann, 30, null) ({age: 40, name: "Bob"}, Bob, 40, null) ({name: "Cy"}, Cy, null, null)""",
+      """MATCH (v:player) RETURN labels(v) AS l, keys(v) AS k""" ->
+        """l:array<string>, k:array<string> | ([player, team], [age, name]) ([player], [age, name]) ([player], [age, name])""",
+      """MATCH (v) RETURN id(v) AS i, properties(v) AS p, keys(v) AS k, labels(v) AS l""" ->
+        """i:string, p:string, k:array<string>, l:array<string> | (a, {age: 30, name: "Ann"}, [age, name], [player, team]) (b, {age: 40, name: "Bob"}, [age, name], [player]) (c, {name: "Cy"}, [age, name], [player]) (t, {name: "Tea"}, [name], [team])""",
+      """MATCH (v) RETURN id(v) AS i, v.player.name AS n, v.team.name AS tn, v.player.nope AS px""" ->
+        """i:string, n:string, tn:string, px:void | (a, Ann, A-team, null) (b, Bob, null, null) (c, Cy, null, null) (t, null, Tea, null)""",
+      """MATCH (v:player) RETURN id(v) AS i, v.player AS vp, v.notATag AS nt, v['name'] AS sn, v['nope'] AS sx""" ->
+        """i:string, vp:string, nt:void, sn:string, sx:void | (a, {age: 30, name: "Ann"}, null, Ann, null) (b, {age: 40, name: "Bob"}, null, Bob, null) (c, {name: "Cy"}, null, Cy, null)""",
+      """MATCH (v) WHERE id(v) == "t" RETURN v AS v, labels(v) AS l, properties(v) AS p, keys(v) AS k, v.team AS vt, v.player AS vp""" ->
+        """v:string, l:array<string>, p:string, k:array<string>, vt:string, vp:string | (("t"), [team], {name: "Tea"}, [name], {name: "Tea"}, null)""",
+      """MATCH (v) WHERE id(v) == "t" RETURN tags(v) AS t, v.team.name AS n, v.player.name AS pn""" ->
+        """t:array<string>, n:string, pn:string | ([team], Tea, null)""",
+      """MATCH (v:team) RETURN id(v) AS i, v['name'] AS sn, v['age'] AS sa, properties(v).age AS pa""" ->
+        """i:string, sn:string, sa:bigint, pa:bigint | (a, Ann, 30, 30) (t, Tea, null, null)""",
+      """MATCH (v:player) WHERE v IS NOT NULL AND id(v) != "c" WITH v, v.player.age AS a RETURN v AS v, a AS a""" ->
+        """v:string, a:bigint | (("a"), 30) (("b"), 40)""",
+      """MATCH (v:player) WITH v WHERE v.player.age > 35 RETURN id(v) AS i, v.player.name AS n""" ->
+        """i:string, n:string | (b, Bob)""",
+      """MATCH (v:player) RETURN id(v) AS i, collect(v) AS vs""" ->
+        """i:string, vs:array<string> | (a, [("a")]) (b, [("b")]) (c, [("c")])""",
+      """MATCH (v:player) WITH id(v) AS i, collect(v) AS vs RETURN i AS i, size(vs) AS n, vs AS vs""" ->
+        """i:string, n:int, vs:array<string> | (a, 1, [("a")]) (b, 1, [("b")]) (c, 1, [("c")])""",
+      """MATCH (v:player) WHERE id(v) == "a" RETURN [v] AS l""" ->
+        """l:array<string> | ([("a")])""",
+      """MATCH (v) WITH {a: v} AS m RETURN m.a.player.age AS ma, m.a.team.name AS mt, m.a.player AS mp""" ->
+        """ma:bigint, mt:string, mp:struct<name:string,age:bigint> | (30, A-team, {Ann, 30}) (40, null, {Bob, 40}) (null, Tea, null) (null, null, {Cy, null})""")),
+    ("MATCH edges: whole values, edge functions, props, several types, OPTIONAL nulls", "str", Seq(
+      """MATCH (a)-[e:like]->(b) RETURN e AS e, type(e) AS t, rank(e) AS r, src(e) AS s, dst(e) AS d""" ->
+        """e:string, t:string, r:bigint, s:string, d:string | ([:like "a"->"b" @0], like, 0, a, b) ([:like "a"->"c" @1], like, 1, a, c) ([:like "b"->"c" @0], like, 0, b, c)""",
+      """MATCH (a)-[e:like]->(b) RETURN properties(e) AS p, properties(e).likeness AS pl, properties(e).nope AS px, e.likeness AS l, e.nope AS ex, e['likeness'] AS sl, keys(e) AS k""" ->
+        """p:string, pl:bigint, px:void, l:bigint, ex:void, sl:bigint, k:array<string> | ({likeness: 70}, 70, null, 70, null, 70, [likeness]) ({likeness: 80}, 80, null, 80, null, 80, [likeness]) ({likeness: 90}, 90, null, 90, null, 90, [likeness])""",
+      """MATCH (a)-[e:like]->(b) WHERE e.likeness > 75 RETURN id(a) AS a, id(b) AS b""" ->
+        """a:string, b:string | (a, b) (b, c)""",
+      """MATCH (a)-[e:like]->(b) WHERE e IS NOT NULL WITH a, e, b WHERE e.likeness < 85 RETURN a AS a, e AS e, b AS b""" ->
+        """a:string, e:string, b:string | (("a"), [:like "a"->"c" @1], ("c")) (("b"), [:like "b"->"c" @0], ("c"))""",
+      """MATCH (a:player)-[e:like|serve]->(b) RETURN e AS e, type(e) AS t, properties(e) AS p, e.likeness AS l, e.start_year AS y""" ->
+        """e:string, t:string, p:string, l:bigint, y:bigint | ([:like "a"->"b" @0], like, {likeness: 90}, 90, null) ([:like "a"->"c" @1], like, {likeness: 70}, 70, null) ([:like "b"->"c" @0], like, {likeness: 80}, 80, null) ([:serve "a"->"t" @0], serve, {start_year: 2001}, null, 2001) ([:serve "b"->"t" @0], serve, {start_year: 2005}, null, 2005)""",
+      """MATCH (a)-[e]->(b) WHERE id(a) == "a" RETURN e AS e, type(e) AS t, properties(e) AS p""" ->
+        """e:string, t:string, p:string | ([:like "a"->"b" @0], like, {likeness: 90}) ([:like "a"->"c" @1], like, {likeness: 70}) ([:serve "a"->"t" @0], serve, {start_year: 2001})""",
+      """MATCH (a)-[e:like]-(b) WHERE id(a) == "b" RETURN e AS e, id(b) AS o, src(e) AS s, dst(e) AS d""" ->
+        """e:string, o:string, s:string, d:string | ([:like "a"->"b" @0], a, a, b) ([:like "b"->"c" @0], c, b, c)""",
+      """MATCH (a)<-[e:serve]-(b) RETURN e AS e, id(a) AS a, id(b) AS b, src(e) AS s""" ->
+        """e:string, a:string, b:string, s:string | ([:serve "a"->"t" @0], t, a, a) ([:serve "b"->"t" @0], t, b, b)""",
+      """MATCH (a)-[e:like]->(b) RETURN id(a) AS a, id(b) AS b, collect(e) AS es""" ->
+        """a:string, b:string, es:array<string> | (a, b, [[:like "a"->"b" @0]]) (a, c, [[:like "a"->"c" @1]]) (b, c, [[:like "b"->"c" @0]])""",
+      """MATCH (a)-[e:like]->(b) WHERE id(a) == "a" RETURN [a, e, b] AS l""" ->
+        """l:array<string> | ([("a"), [:like "a"->"b" @0], ("b")]) ([("a"), [:like "a"->"c" @1], ("c")])""",
+      """MATCH (a)-[e:like]->(b) WHERE id(b) == "c" WITH {x: e} AS m RETURN m.x.likeness AS l""" ->
+        """l:bigint | (70) (80)""",
+      """MATCH (v:player) OPTIONAL MATCH (v)-[e:serve]->(t) RETURN id(v) AS i, count(e) AS c, e AS e""" ->
+        """i:string, c:bigint, e:string | (a, 1, [:serve "a"->"t" @0]) (b, 1, [:serve "b"->"t" @0]) (c, 0, null)""",
+      """MATCH (v:player) OPTIONAL MATCH (v)-[e:serve]->(t) RETURN count(e) AS c""" ->
+        """c:bigint | (2)""",
+      """MATCH (v:player) OPTIONAL MATCH (v)-[e:serve]->(t) WITH v, e RETURN id(v) AS i, type(e) AS t, e.start_year AS y, e AS e""" ->
+        """i:string, t:string, y:bigint, e:string | (a, serve, 2001, [:serve "a"->"t" @0]) (b, serve, 2005, [:serve "b"->"t" @0]) (c, null, null, null)""")),
+    ("MATCH on int vids: vertices and edges render unquoted", "int", Seq(
+      """MATCH (v:person) RETURN v AS v, id(v) AS i, properties(v) AS p, labels(v) AS l, keys(v) AS k""" ->
+        """v:string, i:bigint, p:string, l:array<string>, k:array<string> | ((1), 1, {age: 30, name: "ann lee"}, [person], [age, name]) ((2), 2, {age: 40, name: "bob"}, [person], [age, name]) ((3), 3, {age: 50, name: "ann"}, [person], [age, name])""",
+      """MATCH (a)-[e:knows]->(b) RETURN e AS e, src(e) AS s, dst(e) AS d, rank(e) AS r, properties(e) AS p, keys(e) AS k""" ->
+        """e:string, s:bigint, d:bigint, r:bigint, p:string, k:array<string> | ([:knows 1->2 @0], 1, 2, 0, {w: 5}, [w]) ([:knows 1->3 @2], 1, 3, 2, {w: 7}, [w]) ([:knows 2->3 @0], 2, 3, 0, {w: 6}, [w])""",
+      """MATCH (a)-[e:knows]->(b) WHERE id(a) == 1 RETURN id(b) AS i, collect(e) AS es, collect(b) AS bs""" ->
+        """i:bigint, es:array<string>, bs:array<string> | (2, [[:knows 1->2 @0]], [(2)]) (3, [[:knows 1->3 @2]], [(3)])""",
+      """MATCH (a:person)-[e:knows]->(b) WITH a, e WHERE e.w > 5 RETURN a AS a, e AS e""" ->
+        """a:string, e:string | ((1), [:knows 1->3 @2]) ((2), [:knows 2->3 @0])""",
+      """MATCH (v:person) WHERE id(v) == 2 RETURN [v] AS l, v.person AS vp, v['age'] AS sa""" ->
+        """l:array<string>, vp:string, sa:bigint | ([(2)], {age: 40, name: "bob"}, 40)"""))
   )
 }
 
