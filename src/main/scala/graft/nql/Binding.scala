@@ -9,13 +9,22 @@ import graft.graph.GraphCatalog
   * name, and the one resolver built from it: the reference's entity
   * functions (FunctionManager.cpp:58 — id tags labels properties keys
   * type typeid src dst rank) defined once over the frame's columns.
-  * `vertex`, `$^` and `$$` are [[Binding.Vertex]]es, the current edge an
-  * [[Binding.Edge]]. `names` binds bare names to columns (GO's `vid` is
-  * the hop's dst). `input(kind, var)` is the column-name prefix under
-  * which `$-.c` (kind "input") or `$var.c` (kind "var") live, with the
-  * hidden `__vid_` / `__edge_` / `__path_` twins of rendered values;
-  * `bare` makes a bare (dotted) name a frame column too. `frame` is the
-  * frame the expressions run over. Where sentences differ, the difference is a field:
+  * `vertices` and `edges` bind names to [[Binding.Vertex]]es and
+  * [[Binding.Edge]]s: `vertex`, `$^`, `$$` and `edge` (any case for
+  * `vertex`/`edge`) name a sentence's own entities; any other name is a
+  * variable, which also reads `v.tag.prop`, `v.tag`, `v['p']`, `e.p`,
+  * `e['p']` and, inside a map literal, a navigable struct. `names`
+  * binds bare names to columns (GO's `vid` is the hop's dst).
+  * `input(kind, var)` is the column-name prefix under which `$-.c`
+  * (kind "input") or `$var.c` (kind "var") live, with the hidden
+  * `__vid_` / `__edge_` / `__path_` twins of rendered values; `bare`
+  * makes a bare (dotted) name a frame column too. `frame` is the frame
+  * the expressions run over. Where sentences differ, the difference is
+  * a field:
+  *  - `render`: a whole vertex or edge is its rendering; otherwise its
+  *    raw vid or (type, src, dst, rank) key struct, NULL when unbound;
+  *  - `declaredKeys`: keys(x) lists the props the vertex's borne tags or
+  *    the edge's type declare, rather than those not NULL on the row;
   *  - `propsStruct`: properties(x) is the struct of the prop columns
   *    (LOOKUP) rather than the rendered map;
   *  - `rejectAbsent`: an entity function of the entity the frame does
@@ -25,40 +34,53 @@ import graft.graph.GraphCatalog
   *  - `absentNull`: an `<etype>.<prop>` naming no frame column reads
   *    NULL (a path's edge filter); otherwise analysis rejects it. */
 private[nql] final case class Binding(
-    vertex: Option[Binding.Vertex] = None,
-    src: Option[Binding.Vertex] = None,
-    dst: Option[Binding.Vertex] = None,
-    edge: Option[Binding.Edge] = None,
+    vertices: Map[String, Binding.Vertex] = Map.empty,
+    edges: Map[String, Binding.Edge] = Map.empty,
     names: Map[String, Column] = Map.empty,
     input: (String, String) => Option[String] = (_, _) => None,
     bare: Boolean = false,
     frame: Option[DataFrame] = None,
-    strVid: Boolean = true,
     score: Option[Column] = None,
+    render: Boolean = true,
+    declaredKeys: Boolean = false,
     propsStruct: Boolean = false,
     rejectAbsent: Boolean = false,
     familyOrder: Boolean = false,
     absentNull: Boolean = false) {
   import Binding._
-  import Expr.{Attr, FnCall, Param, Ref}
+  import Expr.{Attr, FnCall, MapLit, Param, Ref, Subscript}
 
+  private def vertex = vertices.get("vertex")
+  private def edge = edges.get("edge")
+  private def side(s: String) = vertices.get(if (s == "dst") "$$" else "$^")
   private def word(e: Expr.E, w: String): Boolean = e match {
     case Ref(List(k)) => k.equalsIgnoreCase(w)
     case _ => false
   }
-  /** The vertex an argument names: `vertex`, `$^` or `$$`. */
+  /** The vertex an argument names: `vertex`, `$^`, `$$` or a variable. */
   private def vertexOf(e: Expr.E): Option[Vertex] = e match {
-    case Param("src", _, Nil) => src
-    case Param("dst", _, Nil) => dst
+    case Param(s @ ("src" | "dst"), _, Nil) => side(s)
     case _ if word(e, "vertex") => vertex
+    case Ref(List(v)) => vertices.get(v)
     case _ => None
   }
-  private def edgeOf(e: Expr.E): Option[Edge] =
-    if (word(e, "edge")) edge else None
+  private def edgeOf(e: Expr.E): Option[Edge] = e match {
+    case _ if word(e, "edge") => edge
+    case Ref(List(v)) => edges.get(v)
+    case _ => None
+  }
+
+  /** A variable: any name but the sentence's own entities. */
+  private def varVertex(n: String) = if (own(n)) None else vertices.get(n)
+  private def varEdge(n: String) = if (own(n)) None else edges.get(n)
+  private def navOf(e: Expr.E): Option[Column] = e match {
+    case Ref(List(n)) => varVertex(n).map(_.nav).orElse(varEdge(n).map(_.nav))
+    case _ => None
+  }
 
   private def propType(e: Expr.E): Option[DataType] = e match {
-    case Param(side @ ("dst" | "src"), _, List(t, p)) =>
-      (if (side == "dst") dst else src).filter(_.tags.contains(t))
+    case Param(s @ ("dst" | "src"), _, List(t, p)) =>
+      side(s).filter(_.tags.contains(t))
         .flatMap(_.props(t).find(_.name == p)).map(_.dataType)
     case Ref(List(et, p)) if !p.startsWith("_") =>
       edge.flatMap(_.types.find(_.name == et))
@@ -92,11 +114,14 @@ private[nql] final case class Binding(
     case FnCall("score", Nil, _) if score.isDefined => score
     case Ref(List(n)) if names.contains(n) => names.get(n)
     case x if vertexOf(x).isDefined =>
-      Some(Gql.renderNode(vertexOf(x).get.vid, strVid))
+      val v = vertexOf(x).get
+      Some(if (render) Gql.renderNode(v.vid, v.strVid) else v.vid)
     case x if edgeOf(x).isDefined =>
       val ed = edgeOf(x).get
-      Some(Gql.renderEdge(ed.typeName, ed.storedSrc, ed.storedDst, ed.rank,
-        strVid))
+      Some(if (render) Gql.renderEdge(ed.typeName, ed.storedSrc, ed.storedDst,
+          ed.rank, ed.strVid)
+        else when(ed.storedSrc.isNotNull,
+          struct(ed.typeName, ed.storedSrc, ed.storedDst, ed.rank)))
     // entity functions over an entity the frame does not hold
     case FnCall(f @ ("src" | "dst" | "rank" | "type"), List(a), _)
         if rejectAbsent && edge.isEmpty && word(a, "edge") =>
@@ -112,6 +137,7 @@ private[nql] final case class Binding(
         case "id" => v.vid
         case "properties" if propsStruct => propsStructOf(v.fields)
         case "properties" => Gql.renderPropsMap(v.fields)
+        case "keys" if declaredKeys => v.declaredKeys
         case "keys" => Gql.presentKeys(v.fields)
         case _ => v.tagList
       })
@@ -123,6 +149,7 @@ private[nql] final case class Binding(
         case "rank" => ed.rank
         case "type" => ed.typeName
         case "typeid" => ed.typeId
+        case "keys" if declaredKeys => ed.declaredKeys
         case "keys" => Gql.presentKeys(ed.fields)
         case "properties" if propsStruct => propsStructOf(ed.fields)
         case "properties" => ed.propsMap
@@ -130,6 +157,13 @@ private[nql] final case class Binding(
         case _ => struct(ed.storedSrc.as("src"), ed.storedDst.as("dst"),
           ed.rank.as("rank"), ed.typeName.as("etype"), ed.propsMap.as("props"))
       })
+    // the ends of the edge key the traversal read, traversal orientation
+    // and all (FunctionManager.cpp:2152,2202: a `<-` hop reads the
+    // reverse key, so its dst is the far node); a vertex's own vid
+    case FnCall(f @ ("none_direct_src" | "none_direct_dst"), a :: _, _)
+        if vertexOf(a).isDefined || edgeOf(a).isDefined =>
+      Some(vertexOf(a).map(_.vid).getOrElse(
+        if (f.endsWith("dst")) edgeOf(a).get.dst else edgeOf(a).get.src))
     case Attr(FnCall("properties", List(a), _), p)
         if !propsStruct && vertexOf(a).isDefined =>
       Some(vertexOf(a).get.merged(p))
@@ -149,9 +183,26 @@ private[nql] final case class Binding(
         case "_type" => ed.guard(t, lit(t.id))
         case _ => ed.guard(t, col(p))
       })
-    case Param(side @ ("dst" | "src"), _, List(t, p))
-        if (if (side == "dst") dst else src).exists(_.tags.contains(t)) =>
-      Some((if (side == "dst") dst else src).get.prop(t, p))
+    case Param(s @ ("dst" | "src"), _, List(t, p))
+        if side(s).exists(_.tags.contains(t)) =>
+      Some(side(s).get.prop(t, p))
+    // a variable's tag prop, whole tag (NULL where the vertex lacks it,
+    // or for a name no tag has), subscripted prop and edge prop
+    case Ref(List(v, t, p)) if varVertex(v).isDefined =>
+      Some(varVertex(v).get.read(t, p))
+    case Ref(List(v, t)) if varVertex(v).isDefined =>
+      Some(varVertex(v).get.tagMap(t))
+    case Ref(List(e, p)) if varEdge(e).isDefined => Some(varEdge(e).get.merged(p))
+    case Subscript(Ref(List(v)), Expr.Lit(p: String)) if varVertex(v).isDefined =>
+      Some(varVertex(v).get.merged(p))
+    case Subscript(Ref(List(e)), Expr.Lit(p: String)) if varEdge(e).isDefined =>
+      Some(varEdge(e).get.merged(p))
+    // a map capturing a whole variable holds it as a navigable struct
+    // (`{a: v}.a.player.age`): per-tag prop structs, NULL where the
+    // vertex lacks the tag; an edge's columns as one struct
+    case MapLit(entries) if entries.exists(en => navOf(en._2).isDefined) =>
+      Some(struct(entries.map { case (k, x) =>
+        navOf(x).getOrElse(Expr.compile(x, resolver)).as(k) }: _*))
     // id() over a rendered whole-vertex column reads its vid twin
     case FnCall("id", List(a), _) if twin("__vid_", a).isDefined =>
       Some(col(twin("__vid_", a).get))
@@ -205,20 +256,28 @@ private[nql] object Binding {
     struct(fields.map(f => f._2.as(f._1)): _*)
   private def firstWins(props: Seq[StructField]): Seq[(String, DataType)] =
     props.map(f => f.name -> f.dataType).distinctBy(_._1)
+  private val own = Set("vertex", "edge", "$^", "$$")
   private val vertexFns = Set("id", "properties", "keys", "tags", "labels")
   private val edgeFns = Set("src", "dst", "rank", "type", "typeid", "keys",
     "properties", "__edge_twin")
 
-  /** A vertex of the frame. `tags` in merge order (the first wins a
-    * prop-name clash); `props(t)` the tag's prop fields. `prefix`
-    * None: one tag every row bears, its props bare columns; Some(p):
-    * tag t's prop q is column `p + t + "_" + q`, and a non-null
-    * `p + t + "___has"` marks the tag borne. */
+  /** A vertex of the frame, its vid rendered quoted when `strVid`.
+    * `tags` in merge order (the first wins a prop-name clash);
+    * `props(t)` the tag's prop fields. `prefix` None: one tag every row
+    * bears, its props bare columns; Some(p): tag t's prop q is column
+    * `p + t + "_" + q`, and `present(t)` marks the tag borne (by default
+    * a non-null `p + t + "___has"`). */
   final case class Vertex(vid: Column, tags: Seq[String],
                           props: String => Seq[StructField],
-                          prefix: Option[String] = None) {
+                          prefix: Option[String] = None, strVid: Boolean = true,
+                          present: Option[String => Column] = None) {
     def prop(t: String, p: String): Column =
       prefix.fold(col(p))(pre => col(s"$pre${t}_$p"))
+    /** Tag t's prop p; NULL when t does not declare it. */
+    def read(t: String, p: String): Column =
+      if (props(t).exists(_.name == p)) prop(t, p) else lit(null)
+    private def has(t: String): Column =
+      present.fold(col(s"${prefix.get}${t}___has").isNotNull)(_(t))
     /** A prop of the merged view; NULL when no tag declares it. */
     def merged(p: String): Column =
       tags.filter(t => props(t).exists(_.name == p)) match {
@@ -229,8 +288,30 @@ private[nql] object Binding {
       firstWins(tags.flatMap(props)).map { case (p, dt) => (p, merged(p), dt) }
     def tagList: Column = prefix match {
       case None => array(lit(tags.head))
-      case Some(pre) => array_compact(array(tags.sorted.map(t =>
-        when(col(s"$pre${t}___has").isNotNull, lit(t))): _*))
+      case Some(_) => array_compact(array(tags.sorted.map(t =>
+        when(has(t), lit(t))): _*))
+    }
+    /** The sorted props the borne tags declare. */
+    def declaredKeys: Column = {
+      val empty = typedLit(Seq.empty[String])
+      val perTag = tags.sorted.flatMap { t =>
+        val ks = props(t).map(_.name).sorted
+        Option.when(ks.nonEmpty)(when(has(t), array(ks.map(lit): _*)).otherwise(empty))
+      }
+      if (perTag.isEmpty) empty
+      else array_sort(array_distinct(flatten(array(perTag: _*))))
+    }
+    private def tagFields(t: String) = props(t).map(f => (f.name, prop(t, f.name), f.dataType))
+    /** Tag t's props as a rendered map, NULL where the vertex lacks t. */
+    def tagMap(t: String): Column =
+      if (!tags.contains(t)) lit(null)
+      else when(has(t), if (props(t).isEmpty) lit(null) else Gql.renderPropsMap(tagFields(t)))
+    /** A struct of per-tag prop structs, NULL where the vertex lacks the
+      * tag; the vid when no tag has props. */
+    def nav: Column = tags.sorted.filter(props(_).nonEmpty) match {
+      case Seq() => vid
+      case ts => struct(ts.map(t => when(has(t),
+        struct(tagFields(t).map(f => f._2.as(f._1)): _*)).as(t)): _*)
     }
   }
 
@@ -241,13 +322,20 @@ private[nql] object Binding {
     lazy val props: Seq[StructField] = props0
   }
 
-  /** The current edge. `typeCol` names a row's type; None for one type,
-    * whose columns need no guard. `src`/`dst` are the traversal ends
-    * (`<etype>._src` / `_dst`), `storedSrc`/`storedDst` the stored ones
-    * (src(edge), dst(edge), the whole-edge value). */
+  /** An edge of the frame, its ends rendered quoted when `strVid`.
+    * `typeCol` names a row's type; None for one type, whose columns need
+    * no guard. `src`/`dst` are the traversal ends (`<etype>._src` /
+    * `_dst`), `storedSrc`/`storedDst` the stored ones (src(edge),
+    * dst(edge), the whole-edge value). `union` None: each type's props
+    * are bare columns read behind a guard on the row's type; Some(fs):
+    * the edge's columns are `prefix + f` for each f in fs, one per name
+    * whatever the type (a row's type leaves the others' NULL), the keys
+    * `src`, `dst`, `rank` and `etype` among them. */
   final case class Edge(types: Seq[EdgeType], typeCol: Option[Column],
                         src: Column, dst: Column, rank: Column,
-                        storedSrc: Column, storedDst: Column) {
+                        storedSrc: Column, storedDst: Column,
+                        strVid: Boolean = true, prefix: String = "",
+                        union: Option[Seq[StructField]] = None) {
     def guard(t: EdgeType, c: Column): Column =
       typeCol.fold(c)(tc => when(tc === t.name, c))
     def typeName: Column = typeCol.getOrElse(lit(types.head.name))
@@ -259,19 +347,63 @@ private[nql] object Binding {
     def typeId: Column = byType(t => lit(t.id))
     private def fieldsOf(t: EdgeType) =
       t.props.map(f => (f.name, guard(t, col(f.name)), f.dataType))
-    def propsMap: Column = byType(t => Gql.renderPropsMap(fieldsOf(t)))
-    def merged(p: String): Column =
-      types.filter(_.props.exists(_.name == p)) match {
+    def propsMap: Column =
+      if (union.isDefined) Gql.renderPropsMap(fields)
+      else byType(t => Gql.renderPropsMap(fieldsOf(t)))
+    def merged(p: String): Column = union match {
+      case Some(fs) => if (fs.exists(_.name == p)) col(prefix + p) else lit(null)
+      case None => types.filter(_.props.exists(_.name == p)) match {
         case Seq() => lit(null)
         case hs => if (typeCol.isEmpty) col(p) else coalesce(hs.map(guard(_, col(p))): _*)
       }
-    def fields: Seq[(String, Column, DataType)] =
-      firstWins(types.flatMap(_.props)).map { case (p, dt) => (p, merged(p), dt) }
+    }
+    def fields: Seq[(String, Column, DataType)] = union match {
+      case Some(fs) => fs.filterNot(f => edgeKeys(f.name) || f.name == "etype")
+        .map(f => (f.name, col(prefix + f.name), f.dataType))
+      case None =>
+        firstWins(types.flatMap(_.props)).map { case (p, dt) => (p, merged(p), dt) }
+    }
+    /** The sorted props the row's type declares. */
+    def declaredKeys: Column = {
+      def names(t: EdgeType) = t.props.map(_.name).sorted
+      def keysOf(t: EdgeType) =
+        if (names(t).isEmpty) typedLit(Seq.empty[String]) else array(names(t).map(lit): _*)
+      if (types.map(names).distinct.size == 1) keysOf(types.head) else byType(keysOf)
+    }
+    /** The edge's columns as one struct; the stored src when it has none. */
+    def nav: Column = union.filter(_.nonEmpty)
+      .fold(storedSrc)(fs => struct(fs.map(f => col(prefix + f.name).as(f.name)): _*))
   }
 
   /** One edge type stored in frame order (src, dst, rank columns). */
-  def stored(types: Seq[EdgeType], typeCol: Option[Column] = None): Edge =
-    Edge(types, typeCol, col("src"), col("dst"), col("rank"), col("src"), col("dst"))
+  def stored(types: Seq[EdgeType], typeCol: Option[Column] = None,
+             strVid: Boolean = true): Edge =
+    Edge(types, typeCol, col("src"), col("dst"), col("rank"), col("src"), col("dst"),
+      strVid)
+
+  private def isStr(df: DataFrame, c: String): Boolean =
+    df.columns.contains(c) && df.schema(c).dataType == StringType
+  /** The fields of `df` named `pre + q`, as q; `_`-led q are hidden. */
+  private def under(df: DataFrame, pre: String): Seq[StructField] =
+    df.schema.fields.toSeq.collect { case f if f.name.startsWith(pre) &&
+      !f.name.stripPrefix(pre).startsWith("_") => f.copy(name = f.name.stripPrefix(pre)) }
+  /** The column marking tag t borne by vertex variable v. */
+  def marker(v: String, t: String): String = s"__lbl_${v}_$t"
+  /** Vertex variable v of `df`: vid column `v`, tag t's prop q in column
+    * `v_t_q` where `df` carries it, presence in [[marker]]. */
+  def vertexVar(df: DataFrame, v: String, tags: Seq[String]): Vertex =
+    Vertex(col(v), tags, t => under(df, s"${v}_${t}_"), Some(s"${v}_"),
+      isStr(df, v), Some(t => col(marker(v, t))))
+  /** Edge variable e of `df` over `types`: columns `e_src`, `e_dst`,
+    * `e_rank`, `e_etype` and `e_<prop>`; the traversal ends `e__tsrc` /
+    * `e__tdst` where `df` carries them, else the stored ones. */
+  def edgeVar(df: DataFrame, e: String, types: Seq[EdgeType]): Edge = {
+    def c(n: String) = col(s"${e}_$n")
+    def end(n: String) =
+      if (df.columns.contains(s"${e}__t$n")) col(s"${e}__t$n") else c(n)
+    Edge(types, Some(c("etype")), end("src"), end("dst"), c("rank"), c("src"), c("dst"),
+      isStr(df, s"${e}_src"), s"${e}_", Some(under(df, s"${e}_")))
+  }
 
   private val edgeKeys = Set("src", "dst", "rank")
   def edgeProps(fields: Seq[StructField]): Seq[StructField] =

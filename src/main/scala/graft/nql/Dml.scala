@@ -1699,9 +1699,9 @@ object Dml {
     }
     // SET / WHEN read the target's props bare or as `<target>.<prop>`
     def setResolver(u: Update, schema: StructType): Expr.Resolver =
-      (if (u.isTag) Binding(vertex = Some(Binding.Vertex(col("vid"), Seq(u.target),
-        _ => schema.fields.toSeq.filter(_.name != "vid"))))
-      else Binding(edge = Some(Binding.stored(Seq(new Binding.EdgeType(
+      (if (u.isTag) Binding(vertices = Map("vertex" -> Binding.Vertex(col("vid"),
+        Seq(u.target), _ => schema.fields.toSeq.filter(_.name != "vid"))))
+      else Binding(edges = Map("edge" -> Binding.stored(Seq(new Binding.EdgeType(
         u.target, 0, Binding.edgeProps(schema.fields.toSeq))))))).resolver
     d match {
       case CreateSchema(isTag, name, props, ifNotExists, ttlDur, ttlCol, _) =>

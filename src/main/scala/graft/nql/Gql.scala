@@ -1553,9 +1553,9 @@ object Gql {
         }
         // `<etype>._src` / `_dst` read the stored ends
         val binding = Binding(
-          dst = Some(Binding.Vertex(col("dst"), dstTags.toSeq,
+          vertices = Map("$$" -> Binding.Vertex(col("dst"), dstTags.toSeq,
             Binding.tagProps(g), Some("__dst_"))),
-          edge = Some(Binding.Edge(allTypes.map(Binding.edgeType(g, _)),
+          edges = Map("edge" -> Binding.Edge(allTypes.map(Binding.edgeType(g, _)),
             Some(col("etype")), col("ss"), col("sd"), col("rank"),
             col("ss"), col("sd"))))
         frame.filter(Expr.compile(w, binding.resolver))
@@ -1621,7 +1621,7 @@ object Gql {
     val allowed: Option[DataFrame] = fpWhere.map { w =>
       val names = if (etypes == Seq("*")) g.edgeTypeNames else etypes
       val ep = g.edgesWithProps(names)
-      val resolver = Binding(edge = Some(Binding.stored(
+      val resolver = Binding(edges = Map("edge" -> Binding.stored(
         names.map(Binding.edgeType(g, _)), Some(col("__etype")))),
         frame = Some(ep), absentNull = true).resolver
       w match {
@@ -1744,8 +1744,8 @@ object Gql {
       .reduce(_ || _))
     // merged vertex prop view: first-listed tag wins a name collision
     // (same merge order as the reference's per-tag DataSet columns)
-    val resolver = fetchBinding(rows, Binding.Vertex(col("vid"), tags,
-      Binding.tagProps(g), Some("__t_"))).resolver
+    val resolver = fetchBinding(Binding.Vertex(col("vid"), tags,
+      Binding.tagProps(g), Some("__t_"), isStr(rows, "vid"))).resolver
     yieldRows(if (ys.nonEmpty) rows else rows.select(col("vid") +: tags.flatMap(t =>
         g.vertexTable(t).columns.filter(_ != "vid").map(c2 =>
           col(s"__t_${t}_$c2").as(s"$t.$c2"))): _*), None, ys, dist, resolver)
@@ -1762,18 +1762,18 @@ object Gql {
     df.schema(c).dataType == org.apache.spark.sql.types.StringType
 
   /** A vertex fetch's binding over its `rows`. */
-  private def fetchBinding(rows: DataFrame, v: Binding.Vertex): Binding =
-    Binding(vertex = Some(v), strVid = isStr(rows, "vid"), rejectAbsent = true)
+  private def fetchBinding(v: Binding.Vertex): Binding =
+    Binding(vertices = Map("vertex" -> v), rejectAbsent = true)
 
   /** LOOKUP's binding over a tag or edge table `tbl`: properties(x) is
     * the struct of its prop columns, in table order. */
   private def lookupBinding(g: GraphCatalog, tbl: DataFrame, tag: String,
                             isEdge: Boolean): Binding = {
     val fields = tbl.schema.fields.toSeq
-    if (isEdge) Binding(edge = Some(Binding.stored(Seq(Binding.edgeType(g, tag,
-        Binding.edgeProps(fields))))), strVid = isStr(tbl, "src"), propsStruct = true)
-    else Binding(vertex = Some(Binding.Vertex(col("vid"), Seq(tag),
-        _ => fields.filter(_.name != "vid"))), strVid = isStr(tbl, "vid"),
+    if (isEdge) Binding(edges = Map("edge" -> Binding.stored(Seq(Binding.edgeType(g, tag,
+        Binding.edgeProps(fields))), strVid = isStr(tbl, "src"))), propsStruct = true)
+    else Binding(vertices = Map("vertex" -> Binding.Vertex(col("vid"), Seq(tag),
+        _ => fields.filter(_.name != "vid"), strVid = isStr(tbl, "vid"))),
       propsStruct = true)
   }
 
@@ -1788,8 +1788,8 @@ object Gql {
     val rows = fetchOnDriver(g, tag, bag).getOrElse(bag
       .join(g.allVertices.select(col("vid")), Seq("vid"), "left_semi")
       .join(g.vertexTable(tag), Seq("vid"), "left"))
-    yieldRows(rows, None, ys, dist, fetchBinding(rows, Binding.Vertex(col("vid"),
-      Seq(tag), Binding.tagProps(g))).resolver)
+    yieldRows(rows, None, ys, dist, fetchBinding(Binding.Vertex(col("vid"),
+      Seq(tag), Binding.tagProps(g), strVid = isStr(rows, "vid"))).resolver)
   }
 
   /** [[execFetchOne]]'s rows read on the driver, the reference's
@@ -1890,8 +1890,8 @@ object Gql {
         pairs("__r") === e("rank"))
       .drop("__s", "__d", "__r")
     yieldRows(rows, None, ys, dist, Binding(
-      edge = Some(Binding.stored(Seq(Binding.edgeType(g, etype)))),
-      strVid = isStr(rows, "src"), rejectAbsent = true).resolver)
+      edges = Map("edge" -> Binding.stored(Seq(Binding.edgeType(g, etype)),
+        strVid = isStr(rows, "src"))), rejectAbsent = true).resolver)
   }
 
   /** Typed-or-star edge view WITHOUT property columns (hop joins,
@@ -2292,17 +2292,18 @@ object Gql {
         case _ => (col("src"), col("dst"))
       }
       def side(vid: String, tags: Set[String]) =
-        Some(Binding.Vertex(col(vid), tags.toSeq.sorted, Binding.tagProps(g),
-          Some(s"__${vid}_")))
+        Binding.Vertex(col(vid), tags.toSeq.sorted, Binding.tagProps(g),
+          Some(s"__${vid}_"), strVid)
       // GO context: `vid` is the hop destination (GO default output)
-      val binding = Binding(src = side("src", srcTags), dst = side("dst", dstTags),
-        edge = Some(Binding.Edge(etypes.map(Binding.edgeType(g, _)),
+      val binding = Binding(
+        vertices = Map("$^" -> side("src", srcTags), "$$" -> side("dst", dstTags)),
+        edges = Map("edge" -> Binding.Edge(etypes.map(Binding.edgeType(g, _)),
           if (single) None else Some(col("__etype")), col("src"), col("dst"),
-          col("rank"), storedSrc, storedDst)),
+          col("rank"), storedSrc, storedDst, strVid)),
         names = Map("origin" -> col("origin"), "vid" -> col("dst"),
           "step" -> col("step"), "__raw_etype" -> col("__etype")),
         input = (k, _) => Option.when(inputRefs && (k == "input" || k == "var"))("__in_"),
-        frame = Some(out), strVid = strVid, familyOrder = true)
+        frame = Some(out), familyOrder = true)
       val resolver = binding.resolver
       // Multi-edge EMPTY semantics: a prop ref of edge type A evaluated
       // on a type-B row is __EMPTY__ in the reference — equality against

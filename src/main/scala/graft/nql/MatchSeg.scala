@@ -392,20 +392,25 @@ object MatchSeg {
   }
 
   // ---------- executor ----------
-  private class BState(g: GraphCatalog) {
+  private class BState(val g: GraphCatalog) {
     val vertexVars = scala.collection.mutable.LinkedHashSet.empty[String]
     val edgeVars = scala.collection.mutable.LinkedHashSet.empty[String]
     /** Pattern-declaration order across BOTH kinds — `RETURN *` emits
       * columns in this order (v, e, v2 for a one-hop pattern). */
     val declOrder = scala.collection.mutable.ListBuffer.empty[String]
-    /** (var, tag) pairs whose prop columns are bound in the frame. */
+    /** (var, tag) pairs whose prop columns and presence marker are
+      * bound in the frame. */
     val boundTags = scala.collection.mutable.Set.empty[(String, String)]
+    /** (var, tag) pairs whose presence an expression reads (labels(),
+      * properties(), `v.tag`, a map capturing v): an ORDER BY cut ranks
+      * such a tag's absence EMPTY (applyReturn). */
+    val presenceRead = scala.collection.mutable.Set.empty[(String, String)]
+    /** The edge types each single-edge var ranges over. */
+    val edgeTypes = scala.collection.mutable.Map.empty[String, Seq[String]]
     var anon = 0
     def freshVar(): String = { anon += 1; s"__n$anon" }
     def knownTag(t: String): Boolean = g.tagNames.contains(t)
     def tags: Seq[String] = g.tagNames
-    /** Vars whose per-tag membership flags are joined (labels()). */
-    val labelsBound = scala.collection.mutable.Set.empty[String]
     /** Plain (scalar) columns introduced by WITH/UNWIND — part of the
       * variable namespace for `RETURN *` but never rendered. */
     val plainCols = scala.collection.mutable.LinkedHashSet.empty[String]
@@ -458,9 +463,10 @@ object MatchSeg {
       if (!known(v)) declOrder += v
       vertexVars += v
     }
-    def addEdge(ev: String): Unit = {
+    def addEdge(ev: String, types: Seq[String]): Unit = {
       if (!known(ev)) declOrder += ev
       edgeVars += ev
+      edgeTypes(ev) = types
     }
     def addPlain(n: String): Unit = {
       if (!known(n)) declOrder += n
@@ -468,12 +474,14 @@ object MatchSeg {
     }
   }
 
-  /** Rename a tag table into a variable's namespace:
-    * vid → var, prop → `var_tag_prop`. */
+  /** Rename a tag table into a variable's namespace: vid → var, prop →
+    * `var_tag_prop`, plus the tag's presence marker (the layout
+    * [[Binding.vertexVar]] reads). */
   private def tagFrame(g: GraphCatalog, tag: String, v: String): DataFrame = {
     val tbl = g.vertexTable(tag)
     tbl.columns.foldLeft(tbl)((df, c) =>
       df.withColumnRenamed(c, if (c == "vid") v else s"${v}_${tag}_$c"))
+      .withColumn(Binding.marker(v, tag), lit(true))
   }
 
   /** Type-strict inline-prop equality (the reference compares values
@@ -514,11 +522,8 @@ object MatchSeg {
       g.allVertices.select(col("vid").as(v)).distinct()
     } else {
       var df = tagFrame(g, n.tags.head, v)
-      st.boundTags += (v -> n.tags.head)
-      n.tags.tail.foreach { t =>
-        df = df.join(tagFrame(g, t, v), Seq(v))
-        st.boundTags += (v -> t)
-      }
+      n.tags.tail.foreach(t => df = df.join(tagFrame(g, t, v), Seq(v)))
+      st.boundTags ++= n.tags.map(v -> _)
       nodePropFilter(df, v, n.tags, n.props)
     }
   }
@@ -595,7 +600,7 @@ object MatchSeg {
     rel.v.foreach { ev =>
       if (rel.range.isEmpty) {
         // single-hop form: bare edge var columns
-        st.addEdge(ev)
+        st.addEdge(ev, types)
         val s0 = element_at(col("steps"), 1)
         frame = frame
           .withColumn(s"${ev}_src", s0("s"))
@@ -816,7 +821,8 @@ object MatchSeg {
             eidCol.as("__heid")) ++
             (ev0 match {
               case Some(ev) =>
-                if (reused.isEmpty) st.addEdge(ev)
+                if (reused.isEmpty)
+                  st.addEdge(ev, if (rel.etypes.nonEmpty) rel.etypes else g.edgeTypeNames)
                 Seq(col("__osrc").as(s"${ev}_src"), col("__odst").as(s"${ev}_dst"),
                   col("rank").as(s"${ev}_rank"),
                   col("__etype").as(s"${ev}_etype"),
@@ -980,108 +986,52 @@ object MatchSeg {
     out.select(outCols: _*)
   }
 
-  /** Ensure every `v.tag.prop` referenced by `exprs` has its tag table
-    * joined (LEFT — an unmatched tag yields NULL, not row loss). */
-  /** Join every tag's prop frame + membership flag for `v` (the
-    * properties(v) / map-captured-vertex prerequisite). */
-  private def joinAllTags(g: GraphCatalog, st: BState, v: String,
-                          set: DataFrame => Unit,
-                          get: () => DataFrame): Unit = {
-    g.tagNames.foreach { t =>
-      if (st.knownTag(t) && !st.boundTags.contains((v, t))) {
-        set(get().join(tagFrame(g, t, v), Seq(v), "left_outer"))
-        st.boundTags += (v -> t)
-      }
-    }
-    if (!st.labelsBound.contains(v)) {
-      g.tagNames.foreach { t =>
-        set(get().join(
-          g.vertexTable(t).select(col("vid").as(v),
-            lit(true).as(s"__lbl_${v}_$t")),
-          Seq(v), "left_outer"))
-      }
-      st.labelsBound += v
-    }
-  }
-
+  /** Join, LEFT (an unmatched tag yields NULL, not row loss), each tag
+    * table that `exprs` read of a vertex var and the frame lacks: the
+    * named tag of `v.tag.prop` / `v.tag` (on every node of a fixed-length
+    * path for `nodes(p)` forms), and every tag for properties(v),
+    * keys(v), labels(v) and a map capturing v. */
   private def ensureTags(g: GraphCatalog, st: BState, binding0: DataFrame,
                          exprs: Seq[Expr.E]): DataFrame = {
     var binding = binding0
-    // nodes(p)-derived prop access (subscript / lambda instantiation
-    // in the resolver) needs the tag joined on EVERY node alias of
-    // the fixed-length path
-    def joinTagForNodes(pv: String, tags: Iterable[String]): Unit =
-      st.pathVars(pv).nodes.foreach { nv =>
-        tags.foreach { t =>
-          if (st.knownTag(t) && !st.boundTags.contains((nv, t))) {
-            binding = binding.join(tagFrame(g, t, nv), Seq(nv),
-              "left_outer")
-            st.boundTags += (nv -> t)
-          }
-        }
+    def join(v: String, tags: Iterable[String]): Unit = tags.foreach { t =>
+      if (st.knownTag(t) && !st.boundTags.contains((v, t))) {
+        binding = binding.join(tagFrame(g, t, v), Seq(v), "left_outer")
+        st.boundTags += (v -> t)
       }
+    }
+    def vertex(e: Expr.E): Option[String] = e match {
+      case Expr.Ref(List(v)) if st.vertexVars.contains(v) => Some(v)
+      case _ => None
+    }
+    def fixedPath(pv: String) = st.pathVars.get(pv).filter(!_.varLength)
+    def lambdaTags(v2: String, es: Iterable[Expr.E]): Set[String] = {
+      var tags = Set.empty[String]
+      es.foreach(Expr.collect(_) { case Expr.Ref(List(`v2`, t, _)) => tags += t })
+      tags
+    }
     exprs.foreach(Expr.collect(_) {
-      case Expr.Ref(List(v, tag, _))
-          if st.vertexVars.contains(v) && st.knownTag(tag) &&
-            !st.boundTags.contains((v, tag)) =>
-        binding = binding.join(tagFrame(g, tag, v), Seq(v), "left_outer")
-        st.boundTags += (v -> tag)
+      case Expr.Ref(List(v, tag, _)) if st.vertexVars.contains(v) => join(v, Seq(tag))
+      case Expr.Ref(List(v, tag)) if st.vertexVars.contains(v) =>
+        join(v, Seq(tag)); st.presenceRead += (v -> tag)
       case Expr.Attr(Expr.Attr(Expr.Subscript(
-            Expr.FnCall("nodes", List(Expr.Ref(List(pv))), _), _),
-            tag), _)
-          if st.pathVars.get(pv).exists(!_.varLength) =>
-        joinTagForNodes(pv, Seq(tag))
-      case Expr.Compr(v2,
-            Expr.FnCall("nodes", List(Expr.Ref(List(pv))), _), pred, map)
-          if st.pathVars.get(pv).exists(!_.varLength) =>
-        var tags = Set.empty[String]
-        (pred.toList ++ map.toList).foreach(Expr.collect(_) {
-          case Expr.Ref(List(`v2`, t, _)) => tags += t })
-        joinTagForNodes(pv, tags)
-      case Expr.Quant(_, v2,
-            Expr.FnCall("nodes", List(Expr.Ref(List(pv))), _), pred)
-          if st.pathVars.get(pv).exists(!_.varLength) =>
-        var tags = Set.empty[String]
-        Expr.collect(pred) { case Expr.Ref(List(`v2`, t, _)) => tags += t }
-        joinTagForNodes(pv, tags)
-      // whole-tag access `v.player` needs that tag joined AND the
-      // membership flag (NULL when the vertex lacks the tag)
-      case Expr.Ref(List(v, sub)) if st.vertexVars.contains(v) &&
-          st.knownTag(sub) =>
-        if (!st.boundTags.contains((v, sub))) {
-          binding = binding.join(tagFrame(g, sub, v), Seq(v), "left_outer")
-          st.boundTags += (v -> sub)
-        }
-        if (!binding.columns.contains(s"__lbl_${v}_$sub")) {
-          binding = binding.join(
-            g.vertexTable(sub).select(col("vid").as(v),
-              lit(true).as(s"__lbl_${v}_$sub")),
-            Seq(v), "left_outer")
-        }
-      // properties(v)[.p] needs every tag's props AND the membership
-      // flags (EMPTY-rank ordering) joined for the var
-      case Expr.FnCall("properties", List(Expr.Ref(List(v))), _)
-          if st.vertexVars.contains(v) =>
-        joinAllTags(g, st, v, b => binding = b, () => binding)
-      // a MAP literal capturing a bare vertex var compiles to a
-      // navigable per-tag struct (resolver MapLit case) — every tag's
-      // props + membership flags must be joined for that var
-      case Expr.MapLit(entries) =>
-        entries.foreach {
-          case (_, Expr.Ref(List(v))) if st.vertexVars.contains(v) =>
-            joinAllTags(g, st, v, b => binding = b, () => binding)
-          case _ => ()
-        }
-      case Expr.FnCall("labels" | "tags", List(Expr.Ref(List(v))), _)
-          if st.vertexVars.contains(v) && !st.labelsBound.contains(v) =>
-        // per-tag membership flags feed the labels() array
-        g.tagNames.foreach { t =>
-          binding = binding.join(
-            g.vertexTable(t).select(col("vid").as(v),
-              lit(true).as(s"__lbl_${v}_$t")),
-            Seq(v), "left_outer")
-        }
-        st.labelsBound += v
+            Expr.FnCall("nodes", List(Expr.Ref(List(pv))), _), _), tag), _)
+          if fixedPath(pv).isDefined =>
+        fixedPath(pv).get.nodes.foreach(join(_, Seq(tag)))
+      case Expr.Compr(v2, Expr.FnCall("nodes", List(Expr.Ref(List(pv))), _), pred, map)
+          if fixedPath(pv).isDefined =>
+        val tags = lambdaTags(v2, pred.toList ++ map.toList)
+        fixedPath(pv).get.nodes.foreach(join(_, tags))
+      case Expr.Quant(_, v2, Expr.FnCall("nodes", List(Expr.Ref(List(pv))), _), pred)
+          if fixedPath(pv).isDefined =>
+        val tags = lambdaTags(v2, Seq(pred))
+        fixedPath(pv).get.nodes.foreach(join(_, tags))
+      case Expr.FnCall(f @ ("properties" | "keys" | "labels" | "tags"), List(x), _)
+          if vertex(x).isDefined =>
+        join(vertex(x).get, st.tags)
+        if (f != "keys") st.presenceRead ++= st.tags.map(vertex(x).get -> _)
+      case Expr.MapLit(entries) => entries.flatMap(en => vertex(en._2)).foreach { v =>
+        join(v, st.tags); st.presenceRead ++= st.tags.map(v -> _) }
     })
     binding
   }
@@ -1149,10 +1099,6 @@ object MatchSeg {
     }
   }
 
-  /** Domain resolver over the binding frame. `render=true` (RETURN
-    * position): collect() over bare node/edge vars gathers RENDERED
-    * values for display; `render=false` (WITH / WHERE positions):
-    * raw vids, so the list can feed UNWIND back into patterns. */
   // ---------- pattern expressions as values ----------
   // `(v)-[:like]->()` in RETURN/WITH/UNWIND/aggregate position is the
   // reference's MatchPathPatternExpression, planned as a RollUpApply
@@ -1187,9 +1133,10 @@ object MatchSeg {
         if st.pathVars.contains(pv) => LEdgeRendered
     // fixed-length path: comprehensions over nodes(p) instantiate the
     // lambda body per NODE ALIAS (resolver static-subst case), so the
-    // anchor compares against a raw vid column, not a rendering
+    // anchor compares against the alias as that position resolves it
     case Expr.FnCall("nodes", List(Expr.Ref(List(pv))), _)
-        if st.pathVars.get(pv).exists(!_.varLength) => LNodeVid
+        if st.pathVars.get(pv).exists(!_.varLength) =>
+      if (render) LNodeRendered else LNodeVid
     case Expr.FnCall("nodes", List(Expr.Ref(List(pv))), _)
         if st.pathVars.contains(pv) => LNodeRendered
     case Expr.Ref(List(ev)) if st.vlEdgeVars.contains(ev) =>
@@ -1353,17 +1300,13 @@ object MatchSeg {
     val locals = anchors.values.filter(_.local.isDefined).toSeq
 
     val pathC = renderPath(st2, info, strVid)
-    def edgeRendered(a: String): Column =
-      Gql.renderEdge(col(s"${a}_etype"), col(s"${a}_src"),
-        col(s"${a}_dst"), col(s"${a}_rank"), strVid)
+    val rendered = entities(st2, frame, render = true).resolver
     val elem = struct((pathC.as("__path") +: locals.map { la =>
-      (if (la.isEdge) la.local.get match {
-        case LEdgeRendered => edgeRendered(la.name)
-        case _ => struct(col(s"${la.name}_etype").as("t"),
+      (la.local.get match {
+        case LEdgeRendered | LNodeRendered => rendered(Expr.Ref(List(la.name))).get
+        case _ if la.isEdge => struct(col(s"${la.name}_etype").as("t"),
           col(s"${la.name}_src").as("s"), col(s"${la.name}_dst").as("d"),
           col(s"${la.name}_rank").as("r"))
-      } else la.local.get match {
-        case LNodeRendered => Gql.renderNode(col(la.name), strVid)
         case _ => col(la.name)
       }).as(s"__a_${la.name}")
     }): _*)
@@ -1550,14 +1493,45 @@ object MatchSeg {
     }
   }
 
+  private def isStr(df: DataFrame, c: String): Boolean =
+    df.columns.contains(c) &&
+      df.schema(c).dataType == org.apache.spark.sql.types.StringType
+
+  /** The frame's vertex and edge vars as one [[Binding]]: whole vars
+    * rendered in RETURN position (`render`), raw in WHERE / WITH. */
+  private def entities(st: BState, binding: DataFrame, render: Boolean): Binding = {
+    val tags = st.tags.sorted
+    Binding(
+      vertices = st.vertexVars.map(v => v -> Binding.vertexVar(binding, v, tags)).toMap,
+      edges = st.edgeVars.map(ev => ev -> Binding.edgeVar(binding, ev,
+        st.edgeTypes.getOrElse(ev, st.g.edgeTypeNames).map(Binding.edgeType(st.g, _)))).toMap,
+      frame = Some(binding), render = render, declaredKeys = true)
+  }
+
+  /** Domain resolver over the binding frame: MATCH's own forms (paths,
+    * var-length edge lists, durations, CASE edge maps, mixed UNWIND
+    * values, plain struct columns, strict bare names), then every
+    * entity function of a vertex or edge var ([[entities]]). */
   private def resolver(st: BState, binding: DataFrame,
                        render: Boolean = false): Expr.Resolver = {
     val cols = binding.columns.toSet
-    val strVid = st.vertexVars.headOption.exists(v =>
-      cols(v) && binding.schema(v).dataType ==
-        org.apache.spark.sql.types.StringType)
-    def e(name: String): Option[Column] =
-      if (cols(name)) Some(col(name)) else Some(lit(null))
+    // a rendered node or edge list element quotes string vids
+    def strElem(c: String, field: String): Boolean =
+      cols(c) && (binding.schema(c).dataType match {
+        case org.apache.spark.sql.types.ArrayType(s2: org.apache.spark.sql.types.StructType, _) =>
+          s2.fieldNames.contains(field) &&
+            s2(field).dataType == org.apache.spark.sql.types.StringType
+        case org.apache.spark.sql.types.ArrayType(et, _) =>
+          et == org.apache.spark.sql.types.StringType
+        case _ => false
+      })
+    val ents = entities(st, binding, render)
+    // a node or edge var rendered whatever the position (path functions)
+    def rendered(n: String): Column =
+      ents.copy(render = true).resolver(Expr.Ref(List(n))).get
+    def pathStr(pv: String) =
+      if (st.spPaths(pv)) strElem(s"${pv}__spvids", "")
+      else st.pathVars.get(pv).exists(pi => isStr(binding, pi.nodes.head))
     def plainCol(x: String): Boolean =
       cols(x) && !st.vertexVars.contains(x) && !st.edgeVars.contains(x) &&
         !st.vlEdgeVars.contains(x)
@@ -1575,17 +1549,9 @@ object MatchSeg {
         None
       else {
         val rr = resolver(st, binding, render)
-        val meta = Set("src", "dst", "rank", "etype")
         def valMap(e2: Expr.E): Column = e2 match {
           case Expr.Ref(List(ev)) =>
-            val pre = s"${ev}_"
-            val fields = binding.schema.fields.filter { f2 =>
-              val pn = f2.name.stripPrefix(pre)
-              f2.name.startsWith(pre) && !meta.contains(pn) &&
-                !pn.startsWith("_")
-            }.toSeq
-            map(fields.flatMap(f2 =>
-              Seq(lit(f2.name.stripPrefix(pre)), col(f2.name))): _*)
+            map(ents.edges(ev).fields.flatMap(f => Seq(lit(f._1), f._2)): _*)
           case Expr.MapLit(entries) =>
             map(entries.flatMap { case (k, v) =>
               Seq(lit(k), Expr.compile(v, rr)) }: _*)
@@ -1604,7 +1570,7 @@ object MatchSeg {
       case Expr.Ref(List(ev, p)) if cols(s"${ev}_$p") => Some(s"${ev}_$p")
       case _ => None
     }).map(binding.schema(_).dataType)
-    val f: Expr.Resolver = {
+    val own: Expr.Resolver = {
       // IN over a non-list binding column (`x IN names` where WITH
       // bound names to a scalar / missing prop) is the reference's
       // BAD_TYPE → NULL; Spark's array_contains would fail analysis
@@ -1673,64 +1639,6 @@ object MatchSeg {
       case Expr.FnCall("__rawlist", List(Expr.Ref(List(ev))), _)
           if st.vlEdgeVars.contains(ev) && cols(s"${ev}__vl") =>
         Some(col(s"${ev}__vl"))
-      // a RETURN-position list literal renders its bare node/edge
-      // elements (`RETURN [v]` → [("Tim Duncan")], BoolCheckingInExpr)
-      case Expr.ListLit(items) if render && items.exists {
-          case Expr.Ref(List(n2)) =>
-            st.vertexVars.contains(n2) || st.edgeVars.contains(n2)
-          case _ => false } =>
-        val r2 = resolver(st, binding, render)
-        Some(array(items.map {
-          case Expr.Ref(List(v)) if st.vertexVars.contains(v) =>
-            Gql.renderNode(col(v), strVid)
-          case Expr.Ref(List(ev)) if st.edgeVars.contains(ev) =>
-            Gql.renderEdge(col(s"${ev}_etype"), col(s"${ev}_src"),
-              col(s"${ev}_dst"), col(s"${ev}_rank"), strVid)
-          case other => Expr.compile(other, r2)
-        }: _*))
-      // a MAP literal holding bare node/edge vars (`WITH {a: v} AS m
-      // ... m.a.player.age`, Base.feature:1571): the entry compiles to
-      // a NAVIGABLE struct — per-tag prop structs gated on the tag
-      // marker (missing tag → NULL, matching the reference's Vertex
-      // attribute semantics) — so downstream dotted access descends
-      // plain struct fields
-      case Expr.MapLit(entries) if entries.exists {
-          case (_, Expr.Ref(List(n2))) =>
-            st.vertexVars.contains(n2) || st.edgeVars.contains(n2)
-          case _ => false } =>
-        val r2 = resolver(st, binding, render)
-        def vertexNav(v: String): Column = {
-          val tagFields = st.tags.sorted.flatMap { t =>
-            val pre = s"${v}_${t}_"
-            val props = binding.schema.fields.filter { f2 =>
-              val pn = f2.name.stripPrefix(pre)
-              f2.name.startsWith(pre) && !pn.startsWith("_")
-            }.map(f2 => col(f2.name).as(f2.name.stripPrefix(pre))).toSeq
-            if (props.isEmpty) None
-            else {
-              val inner = struct(props: _*)
-              val mark = s"__lbl_${v}_$t"
-              Some((if (cols(mark)) when(col(mark), inner)
-                    else inner).as(t))
-            }
-          }
-          if (tagFields.isEmpty) col(v) else struct(tagFields: _*)
-        }
-        def edgeNav(ev: String): Column = {
-          val pre = s"${ev}_"
-          val fields = binding.schema.fields.filter { f2 =>
-            val pn = f2.name.stripPrefix(pre)
-            f2.name.startsWith(pre) && !pn.startsWith("_")
-          }.map(f2 => col(f2.name).as(f2.name.stripPrefix(pre))).toSeq
-          if (fields.isEmpty) col(s"${ev}_src") else struct(fields: _*)
-        }
-        Some(struct(entries.map {
-          case (k, Expr.Ref(List(v))) if st.vertexVars.contains(v) =>
-            vertexNav(v).as(k)
-          case (k, Expr.Ref(List(ev))) if st.edgeVars.contains(ev) =>
-            edgeNav(ev).as(k)
-          case (k, other) => Expr.compile(other, r2).as(k)
-        }: _*))
       // duration arithmetic/comparison (TimeComputation.feature).
       // Durations travel as (__dmon,__dsec,__dmic) structs (Expr
       // `duration` ctor); ordering them is the reference's BAD_TYPE
@@ -1751,17 +1659,6 @@ object MatchSeg {
           case "is_vertex" => st.vertexVars.contains(v)
           case _ => st.pathVars.contains(v)
         }))
-      // collect over a bare node/edge var gathers RENDERED values
-      // (goldens: COLLECT(v2) == [("Tim Duncan"), ...])
-      case Expr.FnCall(fn @ ("collect" | "collect_set"),
-          List(Expr.Ref(List(v))), _) if render && st.vertexVars.contains(v) =>
-        val r = Gql.renderNode(col(v), strVid)
-        Some(if (fn == "collect") collect_list(r) else collect_set(r))
-      case Expr.FnCall(fn @ ("collect" | "collect_set"),
-          List(Expr.Ref(List(ev))), _) if render && st.edgeVars.contains(ev) =>
-        val r = Gql.renderEdge(col(s"${ev}_etype"), col(s"${ev}_src"),
-          col(s"${ev}_dst"), col(s"${ev}_rank"), strVid)
-        Some(if (fn == "collect") collect_list(r) else collect_set(r))
       // dotted access over a WITH-bound map/struct column:
       // `WITH {a:1, b:{c:3}} AS x ... x.b.c` — descend fields, a
       // missing key is NULL (exists() sees false) (With.feature)
@@ -1782,57 +1679,13 @@ object MatchSeg {
           }
         }
         Some(if (ok) cur else lit(null))
-      // `n['name']` subscript prop access on bound vars (Predicate
-      // EXISTS scenarios) — same lookup as properties(n).name
-      case Expr.Subscript(Expr.Ref(List(v)), Expr.Lit(key: String))
-          if st.vertexVars.contains(v) =>
-        val having = st.tags.sorted.map(t => s"${v}_${t}_$key").filter(cols)
-        Some(if (having.isEmpty) lit(null)
-             else coalesce(having.map(col): _*))
-      case Expr.Subscript(Expr.Ref(List(ev)), Expr.Lit(key: String))
-          if st.edgeVars.contains(ev) =>
-        e(s"${ev}_$key")
-      case Expr.Ref(List(v, tag, prop)) if st.vertexVars.contains(v) =>
-        e(s"${v}_${tag}_$prop")
-      // `v.player` = that tag's prop map (NULL when the vertex lacks
-      // the tag); `v.notATag` = NULL (Base.feature:1442-1462)
-      case Expr.Ref(List(v, sub)) if st.vertexVars.contains(v) &&
-          st.knownTag(sub) =>
-        val pre = s"${v}_${sub}_"
-        val fields = binding.schema.fields.filter { f2 =>
-          val pn = f2.name.stripPrefix(pre)
-          f2.name.startsWith(pre) && !pn.startsWith("_")
-        }.map(f2 => (f2.name.stripPrefix(pre), col(f2.name), f2.dataType))
-          .toSeq
-        val mark = s"__lbl_${v}_$sub"
-        val rendered =
-          if (fields.isEmpty) lit(null)
-          else Gql.renderPropsMap(fields)
-        Some(if (cols(mark)) when(col(mark), rendered) else rendered)
-      case Expr.Ref(List(v, _)) if st.vertexVars.contains(v) =>
-        Some(lit(null))
-      case Expr.Ref(List(v)) if st.vertexVars.contains(v) => Some(col(v))
       // var-length edge list: rendered edge values in RETURN position,
       // raw structs in WHERE/WITH (subscript + lambda prop access)
       case Expr.Ref(List(ev)) if st.vlEdgeVars.contains(ev) =>
         val raw = col(s"${ev}__vl")
-        Some(if (render) transform(raw, x =>
-          Gql.renderEdge(x("__t"), x("__s"), x("__d"), x("__r"), strVid))
+        Some(if (render) transform(raw, x => Gql.renderEdge(x("__t"), x("__s"),
+          x("__d"), x("__r"), strElem(s"${ev}__vl", "__s")))
         else raw)
-      case Expr.Ref(List(ev, prop)) if st.edgeVars.contains(ev) =>
-        e(s"${ev}_$prop")
-      // bare edge var inside an expression (count(e), coalesce(e, ...)):
-      // rendered text in RETURN position, key struct elsewhere; NULL
-      // when an OPTIONAL MATCH left the edge unbound so count() skips it
-      case Expr.Ref(List(ev)) if st.edgeVars.contains(ev) =>
-        val bound = col(s"${ev}_src").isNotNull
-        Some(if (render)
-          when(bound, Gql.renderEdge(col(s"${ev}_etype"), col(s"${ev}_src"),
-            col(s"${ev}_dst"), col(s"${ev}_rank"), strVid))
-        else when(bound, struct(col(s"${ev}_etype"), col(s"${ev}_src"),
-          col(s"${ev}_dst"), col(s"${ev}_rank"))))
-      case Expr.FnCall("id", List(Expr.Ref(List(v))), _)
-          if st.vertexVars.contains(v) => Some(col(v))
       // id() over an alias the pattern never declared is the
       // reference's SemanticError (MatchValidator.cpp:987), not an
       // unsupported-surface skip (`WHERE id(x) == ...` with only v
@@ -1842,27 +1695,13 @@ object MatchSeg {
             !st.vlEdgeVars.contains(v) && !st.pathVars.contains(v) =>
         throw new IllegalArgumentException(
           s"SemanticError: Alias used but not defined: `$v'")
-      // none_direct_src/dst: the endpoints of the edge KEY the hop
-      // actually read — traversal orientation, negative etype and all
-      // (FunctionManager.cpp:2152,2202; a `<-` hop reads the reverse
-      // key, so its dst is the far node). On a vertex they return its
-      // vid; on an edge list the first/last element's endpoint.
+      // none_direct_src/dst on an edge list: the first/last element's
+      // endpoint (on a vertex or edge var: [[Binding]])
       case Expr.FnCall(fn2 @ ("none_direct_src" | "none_direct_dst"),
-          Expr.Ref(List(x)) :: _, _)
-          if st.edgeVars.contains(x) || st.vertexVars.contains(x) ||
-            st.vlEdgeVars.contains(x) =>
-        val dstSide = fn2.endsWith("dst")
-        Some(
-          if (st.vertexVars.contains(x)) col(x)
-          else if (st.edgeVars.contains(x)) {
-            val t = if (dstSide) s"${x}__tdst" else s"${x}__tsrc"
-            if (cols(t)) col(t)
-            else col(if (dstSide) s"${x}_dst" else s"${x}_src")
-          } else {
-            val l2 = col(s"${x}__vl")
-            if (dstSide) element_at(l2, -1).getField("__d")
-            else element_at(l2, 1).getField("__s")
-          })
+          Expr.Ref(List(x)) :: _, _) if st.vlEdgeVars.contains(x) =>
+        val l2 = col(s"${x}__vl")
+        Some(if (fn2.endsWith("dst")) element_at(l2, -1).getField("__d")
+          else element_at(l2, 1).getField("__s"))
       // none_direct_* over anything that isn't a vertex/edge value is
       // the validator's static type error (yield/return.feature:38)
       case Expr.FnCall(fn2 @ ("none_direct_src" | "none_direct_dst"),
@@ -1874,14 +1713,6 @@ object MatchSeg {
           }) =>
         throw new IllegalArgumentException(
           s"SemanticError: Type error `$fn2(${Expr.text(arg)})'")
-      case Expr.FnCall("type", List(Expr.Ref(List(ev))), _)
-          if st.edgeVars.contains(ev) => Some(col(s"${ev}_etype"))
-      case Expr.FnCall("rank", List(Expr.Ref(List(ev))), _)
-          if st.edgeVars.contains(ev) => Some(col(s"${ev}_rank"))
-      case Expr.FnCall("src", List(Expr.Ref(List(ev))), _)
-          if st.edgeVars.contains(ev) => Some(col(s"${ev}_src"))
-      case Expr.FnCall("dst", List(Expr.Ref(List(ev))), _)
-          if st.edgeVars.contains(ev) => Some(col(s"${ev}_dst"))
       // prop access on a subscripted relationship-list var (`e[0].p`
       // where e is a var-length edge var or a relationships(p) WITH
       // alias): the RETURN-visible value renders as strings, so read
@@ -1907,48 +1738,6 @@ object MatchSeg {
           case "src" => "__s"; case _ => "__d"
         }
         Some(elem.getField(field))
-      // properties(v).prop / properties(v): merged tag-prop view of a
-      // bound vertex var (PrunePropertiesRule.feature)
-      case Expr.Attr(Expr.FnCall("properties",
-          List(Expr.Ref(List(v))), _), prop)
-          if st.vertexVars.contains(v) =>
-        val having = st.tags.sorted
-          .map(t => s"${v}_${t}_$prop").filter(cols)
-        Some(if (having.isEmpty) lit(null)
-             else coalesce(having.map(col): _*))
-      case Expr.FnCall("properties", List(Expr.Ref(List(v))), _)
-          if st.vertexVars.contains(v) =>
-        val m = scala.collection.mutable.LinkedHashMap
-          .empty[String, (List[Column], org.apache.spark.sql.types.DataType)]
-        st.tags.sorted.foreach { t =>
-          val pre = s"${v}_${t}_"
-          binding.schema.fields.filter(f2 => f2.name.startsWith(pre))
-            .foreach { f2 =>
-              val pn = f2.name.stripPrefix(pre)
-              if (!pn.startsWith("_")) {
-                val cur = m.getOrElse(pn, (Nil, f2.dataType))
-                m(pn) = (cur._1 :+ col(f2.name), cur._2)
-              }
-            }
-        }
-        Some(Gql.renderPropsMap(m.toSeq.map { case (pn, (cs2, dt)) =>
-          (pn, coalesce(cs2: _*), dt) }))
-      // properties(e).prop / properties(e) on a single edge var
-      case Expr.Attr(Expr.FnCall("properties",
-          List(Expr.Ref(List(ev))), _), prop)
-          if st.edgeVars.contains(ev) =>
-        e(s"${ev}_$prop")
-      case Expr.FnCall("properties", List(Expr.Ref(List(ev))), _)
-          if st.edgeVars.contains(ev) =>
-        val meta = Set("src", "dst", "rank", "etype")
-        val pre = s"${ev}_"
-        val fields = binding.schema.fields.filter { f2 =>
-          val pn = f2.name.stripPrefix(pre)
-          f2.name.startsWith(pre) && !meta.contains(pn) &&
-            !pn.startsWith("_")
-        }.map(f2 => (f2.name.stripPrefix(pre), col(f2.name), f2.dataType))
-          .toSeq
-        Some(Gql.renderPropsMap(fields))
       // properties(e[i]).prop on a var-length edge list
       case Expr.Attr(Expr.FnCall("properties",
           List(Expr.Subscript(Expr.Ref(List(ev)), idx)), _), prop)
@@ -1967,41 +1756,6 @@ object MatchSeg {
           case _ => false
         }
         Some(if (hasField) elem.getField(prop) else lit(null))
-      case Expr.FnCall("labels" | "tags", List(Expr.Ref(List(v))), _)
-          if st.vertexVars.contains(v) =>
-        Some(array_compact(array(st.tags.sorted.map(t =>
-          when(col(s"__lbl_${v}_$t"), lit(t))): _*)))
-      // keys(vertex): sorted distinct prop names across the tags the
-      // vertex bears (FunctionManager.cpp:2363 — std::set over tag
-      // props); keys(edge): its prop names (meta fields excluded)
-      case Expr.FnCall("keys", List(Expr.Ref(List(v))), _)
-          if st.vertexVars.contains(v) =>
-        val empty = typedLit(Seq.empty[String])
-        val perTag = st.tags.sorted.flatMap { t =>
-          val pre = s"${v}_${t}_"
-          val props = binding.schema.fieldNames.toSeq
-            .filter(_.startsWith(pre)).map(_.stripPrefix(pre))
-            .filterNot(_.startsWith("_")).sorted
-          if (props.isEmpty) None
-          else {
-            val arr = array(props.map(lit): _*)
-            val mark = s"__lbl_${v}_$t"
-            Some(if (cols(mark)) when(col(mark), arr).otherwise(empty)
-                 else arr)
-          }
-        }
-        Some(if (perTag.isEmpty) empty
-             else array_sort(array_distinct(flatten(array(perTag: _*)))))
-      case Expr.FnCall("keys", List(Expr.Ref(List(ev))), _)
-          if st.edgeVars.contains(ev) =>
-        val meta = Set("src", "dst", "rank", "etype")
-        val pre = s"${ev}_"
-        val props = binding.schema.fieldNames.toSeq
-          .filter(_.startsWith(pre)).map(_.stripPrefix(pre))
-          .filterNot(pn => meta.contains(pn) || pn.startsWith("_"))
-          .sorted
-        Some(if (props.isEmpty) typedLit(Seq.empty[String])
-             else array(props.map(lit): _*))
       // edge accessors on a PLAIN struct var holding a var-length
       // list element (`UNWIND e AS x ... src(x)`): the element struct
       // carries __t/__s/__d/__r meta fields
@@ -2037,11 +1791,11 @@ object MatchSeg {
         Some(size(col(s"${pv}__spsteps")).cast("long"))
       case Expr.FnCall("nodes", List(Expr.Ref(List(pv))), _)
           if st.spPaths.contains(pv) =>
-        Some(transform(col(s"${pv}__spvids"), x => Gql.renderNode(x, strVid)))
+        Some(transform(col(s"${pv}__spvids"), x => Gql.renderNode(x, pathStr(pv))))
       case Expr.FnCall("relationships", List(Expr.Ref(List(pv))), _)
           if st.spPaths.contains(pv) =>
         Some(transform(col(s"${pv}__spsteps"), x =>
-          Gql.renderEdge(x("t"), x("s"), x("d"), x("r"), strVid)))
+          Gql.renderEdge(x("t"), x("s"), x("d"), x("r"), pathStr(pv))))
       // named-path functions over paths CONTAINING var-length rels:
       // length sums per-rel hop counts; relationships concatenates the
       // per-rel edge renderings (nodes/rendering stay unsupported —
@@ -2060,10 +1814,9 @@ object MatchSeg {
               st.vlEdgeVars.contains(ev) || st.edgeVars.contains(ev)) =>
         val parts2 = st.pathVars(pv).rels.map { ev =>
           if (st.vlEdgeVars.contains(ev))
-            transform(col(s"${ev}__vl"), x =>
-              Gql.renderEdge(x("__t"), x("__s"), x("__d"), x("__r"), strVid))
-          else array(Gql.renderEdge(col(s"${ev}_etype"), col(s"${ev}_src"),
-            col(s"${ev}_dst"), col(s"${ev}_rank"), strVid))
+            transform(col(s"${ev}__vl"), x => Gql.renderEdge(x("__t"), x("__s"),
+              x("__d"), x("__r"), pathStr(pv)))
+          else array(rendered(ev))
         }
         Some(if (parts2.size == 1) parts2.head else concat(parts2: _*))
       // nodes(p) over a path CONTAINING var-length rels: re-derive
@@ -2073,7 +1826,7 @@ object MatchSeg {
       case Expr.FnCall("nodes", List(Expr.Ref(List(pv))), _)
           if rawNodeChain(st, binding, pv).isDefined =>
         Some(transform(rawNodeChain(st, binding, pv).get,
-          x => Gql.renderNode(x, strVid)))
+          x => Gql.renderNode(x, pathStr(pv))))
       // nodes(p)[k].tag.prop over a FIXED-length path folds to the
       // k-th node alias statically (expression/Attribute TCK)
       case Expr.Attr(Expr.Attr(Expr.Subscript(
@@ -2101,7 +1854,7 @@ object MatchSeg {
             .getOrElse(lit(true))
           val value = map.map(m2 =>
             Expr.compile(Expr.substRefHead(m2, v2, n2), r2))
-            .getOrElse(Gql.renderNode(col(n2), strVid))
+            .getOrElse(rendered(n2))
           struct(coalesce(keep, lit(false)).as("k"), value.as("v"))
         }
         Some(transform(filter(array(elems: _*), x => x("k")),
@@ -2187,15 +1940,12 @@ object MatchSeg {
         Some(lit(st.pathVars(pv).rels.size.toLong))
       case Expr.FnCall("nodes", List(Expr.Ref(List(pv))), _)
           if st.pathVars.get(pv).exists(!_.varLength) =>
-        Some(array(st.pathVars(pv).nodes.map(n =>
-          Gql.renderNode(col(n), strVid)): _*))
+        Some(array(st.pathVars(pv).nodes.map(rendered): _*))
       case Expr.FnCall("relationships", List(Expr.Ref(List(pv))), _)
           if st.pathVars.get(pv).exists(!_.varLength) =>
-        Some(array(st.pathVars(pv).rels.map(ev =>
-          Gql.renderEdge(col(s"${ev}_etype"), col(s"${ev}_src"),
-            col(s"${ev}_dst"), col(s"${ev}_rank"), strVid)): _*))
+        Some(array(st.pathVars(pv).rels.map(rendered): _*))
       case Expr.Ref(List(pv)) if st.pathVars.contains(pv) =>
-        Some(renderPath(st, st.pathVars(pv), strVid))
+        Some(renderPath(st, st.pathVars(pv), pathStr(pv)))
       // plain struct column (a WITH-projected map literal): dotted
       // access is a field lookup
       case Expr.Ref(List(m, field))
@@ -2204,11 +1954,13 @@ object MatchSeg {
       // STRICT bare-name resolution: Spark's ResolveMissingReferences
       // would otherwise silently resolve an unknown name against a
       // hidden pre-rename attribute of the tag scan (e.g. `vid`)
-      case Expr.Ref(List(n)) if !cols(n) =>
+      case Expr.Ref(List(n))
+          if !cols(n) && !st.vertexVars.contains(n) && !st.edgeVars.contains(n) =>
         throw new IllegalArgumentException(s"unknown variable $n")
       case _ => None
     }
-    f
+    val entity = ents.resolver
+    x => own(x).orElse(entity(x))
   }
 
   def exec(g: GraphCatalog, m: MStmt): DataFrame = {
@@ -2665,7 +2417,7 @@ object MatchSeg {
       // WITH * keeps the whole binding; extra items append columns
       st.declOrder.foreach { n =>
         if (st.vertexVars.contains(n)) st2.addVertex(n)
-        else if (st.edgeVars.contains(n)) st2.addEdge(n)
+        else if (st.edgeVars.contains(n)) st2.addEdge(n, st.edgeTypes(n))
         else st2.addPlain(n)
       }
       w.items.foreach { i =>
@@ -2675,6 +2427,7 @@ object MatchSeg {
         if (i.e == Expr.Lit(null)) st2.nullLitVars += i.alias
       }
       st2.boundTags ++= st.boundTags
+      st2.presenceRead ++= st.presenceRead
       st2.scalarLitVars ++= st.scalarLitVars
       st2.nullLitVars ++= st.nullLitVars
     } else {
@@ -2687,7 +2440,7 @@ object MatchSeg {
           st2.addVertex(i.alias)
           Seq(col(v).as(i.alias) -> i.alias)
         case Expr.Ref(List(ev)) if st.edgeVars.contains(ev) =>
-          st2.addEdge(i.alias)
+          st2.addEdge(i.alias, st.edgeTypes(ev))
           binding.columns.filter(_.startsWith(s"${ev}_")).toSeq
             .map { c2 =>
               val n2 = i.alias + c2.stripPrefix(ev)
@@ -2867,15 +2620,7 @@ object MatchSeg {
     })
     val res = resolver(st, binding, render = true)
 
-    val strVid = st.vertexVars.headOption.exists(v =>
-      binding.schema(v).dataType == org.apache.spark.sql.types.StringType)
-    // whole-var RETURN items render in the reference serialization
     def compiled(it: Item): Column = it.e match {
-      case Expr.Ref(List(v)) if st.vertexVars.contains(v) && !v.startsWith("__") =>
-        Gql.renderNode(col(v), strVid).as(it.alias)
-      case Expr.Ref(List(ev)) if st.edgeVars.contains(ev) =>
-        Gql.renderEdge(col(s"${ev}_etype"), col(s"${ev}_src"),
-          col(s"${ev}_dst"), col(s"${ev}_rank"), strVid).as(it.alias)
       case Expr.Ref(List(n)) if st.nodeListCols.contains(n) =>
         // a WITH-collected node list renders element-wise for display
         val elemStr = binding.schema(n).dataType match {
@@ -2943,7 +2688,8 @@ object MatchSeg {
     // sorts LARGEST (Value.h type order: __EMPTY__=1, NULLVALUE=2^63).
     // At an ORDER BY+LIMIT cut the distinction decides membership, so
     // vertex-prop sort keys get a hidden (rank, value) twin computed
-    // from the binding's __lbl_ markers (PrunePropertiesRule.feature).
+    // from the tag markers of the tags whose presence the statement
+    // reads (PrunePropertiesRule.feature).
     val cutP = ret.skip > 0 || ret.limit >= 0
     val ordTwins: Map[String, Column] =
       if (!cutP || hasAgg || ret.distinct || ret.orderBy.isEmpty) Map.empty
@@ -2951,8 +2697,8 @@ object MatchSeg {
         val bcols = binding.columns.toSet
         def twin(v: String, contributingTags: Seq[String],
                  value: Column): Column = {
-          val marks = contributingTags.map(t => s"__lbl_${v}_$t")
-            .filter(bcols).map(col)
+          val marks = contributingTags.filter(t => st.presenceRead((v, t)))
+            .map(Binding.marker(v, _)).filter(bcols).map(col)
           val bound =
             if (marks.isEmpty) lit(true)
             else marks.reduce(_ || _)

@@ -71,4 +71,43 @@ class MatchSegSpec extends SparkSpec {
     assert(ids("n.t.age >= 12") == Set("b"))
     assert(ids("n.t.age < 25") == Set("a", "b"))
   }
+
+  // player(name, age) on a, b, c; team(name) on a and t; like and serve
+  // edges between them (GqlEntitySpec.str)
+  private lazy val nba = GqlEntitySpec.str(spark)
+  private def answer(q: String) = GqlEntitySpec.answer(nba, q)
+
+  test("v.tag and labels(v) in one RETURN join each tag once") {
+    val both = """vt:string, l:array<string> | (null, [player]) (null, [player]) ({name: "A-team"}, [player, team])"""
+    assert(answer("MATCH (v:player) RETURN v.team AS vt, labels(v) AS l") == both)
+    assert(answer("MATCH (v:player) WITH v RETURN v.team AS vt, labels(v) AS l") == both)
+    assert(answer("""MATCH (v) WHERE id(v) == "t" RETURN v.team AS vt, labels(v) AS l""") ==
+      """vt:string, l:array<string> | ({name: "Tea"}, [team])""")
+  }
+
+  test("keys(v) lists the props of every tag the vertex bears, whatever else is read") {
+    assert(answer("""MATCH (v) WHERE id(v) == "t" RETURN keys(v) AS k""") ==
+      """k:array<string> | ([name])""")
+    assert(answer("MATCH (v:team) RETURN id(v) AS i, keys(v) AS k") ==
+      """i:string, k:array<string> | (a, [age, name]) (t, [name])""")
+  }
+
+  test("an edge var renders its own vid type with no vertex var in scope") {
+    val es = """e:string | ([:like "a"->"b" @0]) ([:like "a"->"c" @1]) ([:like "b"->"c" @0])"""
+    assert(answer("MATCH (a)-[e:like]->(b) WITH e RETURN e AS e") == es)
+    assert(answer("MATCH p = (a)-[e:like]->(b) WITH p, e RETURN e AS e") == es)
+    assert(answer("MATCH (a)-[e:like]->(b) WITH e WHERE rank(e) == 1 RETURN [e] AS l, collect(e) AS c") ==
+      """l:array<string>, c:array<string> | ([[:like "a"->"c" @1]], [[:like "a"->"c" @1]])""")
+  }
+
+  test("RETURN collect(DISTINCT v) keeps one rendering per vertex") {
+    // like reaches b once and c twice
+    assert(answer("MATCH (a)-[:like]->(v) RETURN size(collect(DISTINCT v)) AS n") ==
+      "n:int | (2)")
+  }
+
+  test("keys(e) over several edge types lists the row's type's props") {
+    assert(answer("""MATCH (a)-[e:like|serve]->(b) WHERE id(a) == "a" RETURN type(e) AS t, keys(e) AS k""") ==
+      """t:string, k:array<string> | (like, [likeness]) (like, [likeness]) (serve, [start_year])""")
+  }
 }

@@ -91,6 +91,46 @@ class PlanSpec extends SparkSpec {
     assert(!big.contains("ResolvedHint"), s"oversized frontier hinted:\n$big")
   }
 
+  test("betweenness: per-level visited and dependency joins plan as broadcast hash joins") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false") // unwrapped plan tree
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // only a hint broadcasts
+    import s2.implicits._
+    val levels = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint" &&
+            qe.executedPlan.exists(_.isInstanceOf[BaseJoinExec]))
+          levels.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    s2.listenerManager.register(listener)
+    // a diamond a -> {b, c} -> d -> e: three BFS levels below the seed,
+    // two backward dependency rounds
+    val e = Seq(("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"), ("d", "e"))
+      .toDF("src", "dst")
+    val bc = graft.algo.GraphAlgos.betweenness(Seq("a").toDF("vid"), e, 4)
+      .as[(String, Double)].collect().toMap
+    assert(bc("d") == 1.0, s"betweenness changed: $bc")
+    // listener events arrive on the listener bus thread
+    def joins(keep: BaseJoinExec => Boolean) = levels.toArray(Array.empty[SparkPlan])
+      .toSeq.flatMap(_.collect { case j: BaseJoinExec if keep(j) => j })
+    def visited = joins(_.joinType == LeftAnti)
+    def dependency = joins(_.references.exists(_.name == "o2"))
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while ((visited.size < 4 || dependency.size < 2) && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    s2.listenerManager.unregister(listener)
+    assert(visited.size == 4 && dependency.size == 2,
+      s"expected 4 visited and 2 dependency joins, got ${visited.size} and ${dependency.size}")
+    (visited ++ dependency).foreach(j => assert(j.isInstanceOf[BroadcastHashJoinExec],
+      s"per-level join is not broadcast:\n$j"))
+  }
+
   test("shortestDistances: one message exchange per hop (distinct and anti-join share it)") {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
