@@ -381,7 +381,8 @@ private[nql] object Binding {
     Edge(types, typeCol, col("src"), col("dst"), col("rank"), col("src"), col("dst"),
       strVid)
 
-  private def isStr(df: DataFrame, c: String): Boolean =
+  /** Whether `df` carries column `c` as a string (quoted vids). */
+  def isStr(df: DataFrame, c: String): Boolean =
     df.columns.contains(c) && df.schema(c).dataType == StringType
   /** The fields of `df` named `pre + q`, as q; `_`-led q are hidden. */
   private def under(df: DataFrame, pre: String): Seq[StructField] =

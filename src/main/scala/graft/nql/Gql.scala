@@ -6,6 +6,7 @@ import graft.graph.GraphCatalog
 import graft.algo.PathFinder
 import graft.traverse.Traverse
 import graft.traverse.Traverse.{Both, Direction, In, Out}
+import Binding.isStr
 
 /** nGQL sentence front door (SURVEY.md §3 entry points 2/3; reference
   * grammar src/parser/parser.yy: GO :1424, LOOKUP :2201, FETCH :2312,
@@ -1757,9 +1758,6 @@ object Gql {
   private def withVidTwins(ys: Seq[Item]): Seq[Item] =
     ys ++ ys.collect { case Item(Expr.Ref(List("vertex")), a2) =>
       Item(Expr.FnCall("id", List(Expr.Ref(List("vertex")))), s"__vid_$a2") }
-
-  private def isStr(df: DataFrame, c: String): Boolean =
-    df.schema(c).dataType == org.apache.spark.sql.types.StringType
 
   /** A vertex fetch's binding over its `rows`. */
   private def fetchBinding(v: Binding.Vertex): Binding =

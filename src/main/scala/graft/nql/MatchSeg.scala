@@ -1493,10 +1493,6 @@ object MatchSeg {
     }
   }
 
-  private def isStr(df: DataFrame, c: String): Boolean =
-    df.columns.contains(c) &&
-      df.schema(c).dataType == org.apache.spark.sql.types.StringType
-
   /** The frame's vertex and edge vars as one [[Binding]]: whole vars
     * rendered in RETURN position (`render`), raw in WHERE / WITH. */
   private def entities(st: BState, binding: DataFrame, render: Boolean): Binding = {
@@ -1531,7 +1527,7 @@ object MatchSeg {
       ents.copy(render = true).resolver(Expr.Ref(List(n))).get
     def pathStr(pv: String) =
       if (st.spPaths(pv)) strElem(s"${pv}__spvids", "")
-      else st.pathVars.get(pv).exists(pi => isStr(binding, pi.nodes.head))
+      else st.pathVars.get(pv).exists(pi => Binding.isStr(binding, pi.nodes.head))
     def plainCol(x: String): Boolean =
       cols(x) && !st.vertexVars.contains(x) && !st.edgeVars.contains(x) &&
         !st.vlEdgeVars.contains(x)
